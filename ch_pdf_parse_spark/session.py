@@ -30,10 +30,11 @@ def get_spark(
 
     # JVM stability: this box's Xeon + OpenJDK 17 crashed the driver JVM with
     # SIGSEGV in StubRoutines::jlong_disjoint_arraycopy_avx3 under sustained
-    # 32-way Arrow/parquet load (hs_err_pid2594.log, round-6 driver bench at
-    # sf1.0 — 2 of 3 bench repeats + warmup died). That stub family is the
-    # AVX-512 arraycopy intrinsic; capping the JIT at AVX2 avoids it with
-    # negligible cost for this workload (measured: within run-to-run noise).
+    # 32-way Arrow/parquet load (round-6 bench at sf1.0 — 2 of 3 bench
+    # repeats + warmup died; VERDICT.md recounts the r6 crash). That stub
+    # family is the AVX-512 arraycopy intrinsic; capping the JIT at AVX2
+    # avoids it with negligible cost for this workload (measured: within
+    # run-to-run noise).
     # Applies at JVM launch (client mode passes driver extraJavaOptions to the
     # java command line); env-overridable for hosts without the erratum.
     java_opts = os.environ.get("SPARK_GRAFT_JAVA_OPTS", "-XX:UseAVX=2")
@@ -76,15 +77,16 @@ def get_spark(
         # also fix it but costs 2.4x wall (measured 1024 vs 4096 at 32 cores);
         # size the heap, keep the reader batch at its default.
         #
-        # r7: 16g -> 48g. BOTH JVM SIGSEGVs on this box (hs_err_pid2594 /
-        # 20929) struck arraycopy stubs at ~85-95% heap occupancy under GC
-        # storms (740 GCs at 186 s; 20 FULL GCs at 112 s), with the faulting
-        # address OUTSIDE the Java heap — an unmapped native/mmap region
-        # touched mid-copy, the classic near-OOM off-heap use-after-free
-        # window. The sf1.0 composable wire path holds 32 in-flight ~82 MB
-        # binary rows plus the full spans payload both directions; 16g sat
-        # permanently at the GC ceiling. 48g (of the 125 GiB box) keeps the
-        # same workload under ~40% occupancy; python workers use a few GiB.
+        # r7: 16g -> 48g. BOTH JVM SIGSEGVs on the 32-core bench host (the r6
+        # crash VERDICT.md recounts, and a later one) struck arraycopy stubs
+        # at ~85-95% heap occupancy under GC storms (740 GCs at 186 s; 20
+        # FULL GCs at 112 s), with the faulting address OUTSIDE the Java
+        # heap — an unmapped native/mmap region touched mid-copy, the classic
+        # near-OOM off-heap use-after-free window. The sf1.0 composable wire
+        # path holds 32 in-flight ~82 MB binary rows plus the full spans
+        # payload both directions; 16g sat permanently at the GC ceiling. 48g
+        # (of the 125 GiB box) keeps the same workload under ~40% occupancy;
+        # python workers use a few GiB.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

@@ -1,4 +1,4 @@
-"""Per-partition checkpoint/lineage with resume-without-recompute.
+"""Per-bucket checkpoint/lineage with resume-without-recompute.
 
 North-rule requirement (SURVEY.md §4 Q7): the reference checkpoints every
 5000 steps and resumes from the last checkpoint
@@ -7,12 +7,27 @@ retry but no built-in *job-level* resume. This module provides it:
 
 * the corpus is split into ``n_buckets`` deterministic doc_id hash buckets
   (same bucketing the Iceberg table would declare: ``bucket(doc_id, N)``);
-* each bucket is extracted and written as its own output partition, then a
-  lineage record ``(bucket, doc_count, span_count, wall_ms, status)`` is
-  appended;
-* on (re)start, completed buckets are removed via a **left_anti join**
-  against the lineage table — a killed run resumes exactly where it stopped,
-  never recomputing a completed partition.
+* each bucket is extracted and written as its own output partition
+  ``bucket=b``. Its ``doc_count``/``span_count`` come from an unnamed
+  ``Observation`` on that write (the write job's result stage, so a retried
+  task cannot double-count), not from re-reading the output;
+* once the bucket's data is committed, its lineage record ``(bucket,
+  doc_count, span_count, wall_ms, status)`` lands as its own one-row parquet
+  file: written under a dot-prefixed temp name, then ``os.replace``d into
+  ``_lineage/``, so a record is either whole or absent;
+* on (re)start, the buckets still to do are ``range(n_buckets)`` minus the
+  buckets with a ``done`` record, read on the driver with pyarrow — a killed
+  run resumes exactly where it stopped, never recomputing a completed
+  bucket and never recording one it did not finish.
+
+The bookkeeping runs no Spark job: the only jobs are the staging write and
+one extraction write per bucket. Spark, pyarrow and the resume set all skip
+dot- and underscore-prefixed names, so a leftover temp record and the
+``_SUCCESS`` marker of a ``_lineage`` written by an older Spark append are
+both ignored; such a directory still resumes.
+
+``out_dir`` must be a local (POSIX) path: the manifest and the lineage
+records are written with plain file I/O and an atomic rename.
 
 At cluster scale each bucket is a few thousand input files / many tasks, so
 the driver-side bucket loop adds negligible orchestration overhead relative
@@ -23,10 +38,11 @@ to bucket runtime; buckets could also be submitted concurrently from threads
 from __future__ import annotations
 
 import os
-import threading
 import time
+import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import (DataFrame, Observation, SparkSession,
+                         functions as F, types as T)
 
 LINEAGE_SCHEMA = T.StructType([
     T.StructField("bucket", T.IntegerType()),
@@ -49,6 +65,37 @@ def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
         return spark.createDataFrame([], LINEAGE_SCHEMA)
 
 
+def done_records(out_dir: str) -> list[dict]:
+    """The ``status == "done"`` lineage records, read on the driver with
+    pyarrow (no Spark job). Dot- and underscore-prefixed files are skipped,
+    as Spark skips them."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    p = lineage_path(out_dir)
+    if not os.path.isdir(p):
+        return []
+    rows = pq.read_table(p, schema=to_arrow_schema(LINEAGE_SCHEMA)).to_pylist()
+    return [r for r in rows if r["status"] == "done"]
+
+
+def _append_record(out_dir: str, rec: dict) -> None:
+    """Land one bucket's record as its own one-row parquet file: written
+    under a dot-prefixed name that every reader skips, then renamed into
+    ``_lineage/``, so a kill mid-write leaves no partial record."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    d = lineage_path(out_dir)
+    os.makedirs(d, exist_ok=True)
+    name = f"part-{rec['bucket']:05d}-{uuid.uuid4().hex}.parquet"
+    tmp = os.path.join(d, f".{name}.tmp")
+    pq.write_table(pa.Table.from_pylist(
+        [rec], schema=to_arrow_schema(LINEAGE_SCHEMA)), tmp)
+    os.replace(tmp, os.path.join(d, name))
+
+
 def with_bucket(docs: DataFrame, n_buckets: int) -> DataFrame:
     return docs.withColumn("bucket", F.pmod(F.hash("doc_id"), F.lit(n_buckets)).cast("int"))
 
@@ -64,8 +111,8 @@ def run_with_lineage(
     columns: tuple[str, ...] = ("spans", "markdown"),
 ) -> list[int]:
     """Extract ``docs`` bucket-by-bucket with lineage; returns the list of
-    buckets computed in THIS invocation (completed ones are skipped via
-    anti-join). ``fail_after`` aborts after k buckets — the kill/resume test
+    buckets computed in THIS invocation (buckets with a ``done`` record are
+    skipped). ``fail_after`` aborts after k buckets — the kill/resume test
     hook (SURVEY.md §5 property test 3).
 
     ``stage_input``: a per-bucket filter on hash(doc_id) cannot prune a plain
@@ -157,39 +204,27 @@ def run_with_lineage(
     else:
         bucketed = with_bucket(docs, n_buckets)
 
-    done = read_lineage(spark, out_dir).where(F.col("status") == "done") \
-        .select("bucket").distinct()
     # bucket ids are range(n_buckets) by construction — enumerating them from
     # the data would full-scan the corpus (a wasted pass at 10^12 rows)
-    all_buckets = spark.range(n_buckets).select(
-        F.col("id").cast("int").alias("bucket"))
-    remaining = all_buckets.join(done, "bucket", "left_anti").orderBy("bucket")
-    todo = [r["bucket"] for r in remaining.collect()]
-
-    lineage_lock = threading.Lock()
+    done = {r["bucket"] for r in done_records(out_dir)}
+    todo = sorted(set(range(n_buckets)) - done)
 
     def do_bucket(b: int) -> int:
         t0 = time.time()
         part = bucketed.where(F.col("bucket") == b).drop("bucket")
         out = extract_documents(part, columns=columns)
-        out.write.mode("overwrite").parquet(os.path.join(out_dir, f"bucket={b}"))
-        span_stat = (F.sum(F.size("spans")) if "spans" in columns
+        obs = Observation()
+        span_stat = (F.sum(F.size("spans")) if "spans" in out.columns
                      else F.lit(0))  # markdown-only runs carry no span count
-        stats = (
-            spark.read.parquet(os.path.join(out_dir, f"bucket={b}"))
-            .agg(F.count("*").alias("d"), span_stat.alias("s"))
-            .collect()[0]
-        )
-        rec = [(b, stats["d"], stats["s"] or 0,
-                int((time.time() - t0) * 1000), "done")]
-        # the bucket's data is fully committed before its lineage row lands,
-        # so a kill between the two re-extracts the bucket (idempotent
-        # overwrite), never records a bucket it didn't finish. The lock only
-        # serializes the tiny lineage append (concurrent parquet appends to
-        # one directory race in _temporary staging).
-        with lineage_lock:
-            spark.createDataFrame(rec, LINEAGE_SCHEMA).write.mode("append") \
-                .parquet(lineage_path(out_dir))
+        out.observe(obs, F.count(F.lit(1)).alias("d"), span_stat.alias("s")) \
+            .write.mode("overwrite").parquet(os.path.join(out_dir, f"bucket={b}"))
+        stats = obs.get
+        # the bucket's data is fully committed before its lineage record
+        # lands, so a kill between the two re-extracts the bucket (idempotent
+        # overwrite), never records a bucket it didn't finish
+        _append_record(out_dir, {
+            "bucket": b, "doc_count": stats["d"], "span_count": stats["s"] or 0,
+            "wall_ms": int((time.time() - t0) * 1000), "status": "done"})
         return b
 
     computed: list[int] = []

@@ -128,14 +128,12 @@ def main() -> None:
                                     stage_input=not args.no_stage_input,
                                     parallelism=args.parallelism,
                                     columns=cols)
-        # doc totals come from the lineage table (collected per bucket while
-        # extracting) — docs.count() here would be a full second input scan,
-        # i.e. another 10^12-row pass purely for a metrics line
-        from ch_pdf_parse_spark.sources.lineage import read_lineage
+        # doc totals come from the lineage records (observed per bucket while
+        # extracting), read on the driver — docs.count() here would be a full
+        # second input scan, i.e. another 10^12-row pass for a metrics line
+        from ch_pdf_parse_spark.sources.lineage import done_records
 
-        n_docs = (read_lineage(spark, args.output)
-                  .where("status = 'done'")
-                  .agg({"doc_count": "sum"}).collect()[0][0]) or 0
+        n_docs = sum(r["doc_count"] for r in done_records(args.output))
     wall = time.time() - t0
     out = {
         "input": args.input, "output": args.output,

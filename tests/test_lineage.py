@@ -2,6 +2,7 @@
 completed partitions and produces the identical output table (SURVEY.md §5)."""
 
 import os
+import shutil
 
 import pytest
 
@@ -137,3 +138,122 @@ def test_job_rejects_wrong_schema_before_staging(spark, tmp_path, monkeypatch):
         job.main()
     assert "spans" in str(e.value) and "expected the interleaved" in str(e.value)
     assert not os.path.exists(os.path.join(out, "_staged"))
+
+
+def _recount(spark, out, b, columns):
+    """The old engine's per-bucket count: re-read ``bucket=b`` and count."""
+    from pyspark.sql import functions as F
+
+    spans = F.sum(F.size("spans")) if "spans" in columns else F.lit(0)
+    r = (spark.read.parquet(os.path.join(out, f"bucket={b}"))
+         .agg(F.count("*").alias("d"), spans.alias("s")).collect()[0])
+    return r["d"], r["s"] or 0
+
+
+def _rows(records):
+    """Lineage records as sorted (bucket, doc_count, span_count, status)."""
+    return sorted((r["bucket"], r["doc_count"], r["span_count"], r["status"])
+                  for r in records)
+
+
+@pytest.mark.parametrize("columns,n_buckets,parallelism", [
+    (("spans", "markdown"), 4, 1),
+    (("markdown",), 4, 1),
+    (("spans", "markdown"), 16, 1),  # more buckets than docs: some empty
+    (("spans", "markdown"), 6, 3),
+], ids=["spans_markdown", "markdown_only", "empty_buckets", "parallel"])
+def test_observed_counts_match_recount(spark, docs_df, tmp_path, columns,
+                                       n_buckets, parallelism):
+    """Each bucket's observed counts equal a recount of what was written,
+    the driver-side reader agrees with Spark's, and a second run into a
+    fresh out_dir records the same rows (wall_ms aside)."""
+    runs = []
+    for i in range(2):
+        out = str(tmp_path / f"out{i}")
+        L.run_with_lineage(spark, docs_df, out, n_buckets=n_buckets,
+                           parallelism=parallelism, columns=columns)
+        rows = _rows(L.read_lineage(spark, out).collect())
+        assert [r[0] for r in rows] == list(range(n_buckets))
+        assert [(r[1], r[2]) for r in rows] == [
+            _recount(spark, out, b, columns) for b in range(n_buckets)]
+        assert _rows(L.done_records(out)) == rows
+        runs.append(rows)
+    assert runs[0] == runs[1]
+    assert sum(r[1] for r in rows) == docs_df.count()
+    if "spans" not in columns:
+        assert all(r[2] == 0 for r in rows)
+    if n_buckets > docs_df.count():
+        assert any((r[1], r[2]) == (0, 0) for r in rows)
+
+
+def test_crash_before_record_reextracts_that_bucket(spark, docs_df, tmp_path,
+                                                     monkeypatch):
+    """A kill between bucket k's data commit and its record: the rerun
+    re-extracts exactly bucket k and records it once."""
+    out = str(tmp_path / "out_crash")
+    k = 3  # the last bucket of four, so it is all the rerun has left
+    append = L._append_record
+
+    def killed_at_k(out_dir, rec):
+        if rec["bucket"] == k:
+            raise RuntimeError("killed before the record landed")
+        append(out_dir, rec)
+
+    monkeypatch.setattr(L, "_append_record", killed_at_k)
+    with pytest.raises(RuntimeError, match="killed before the record"):
+        L.run_with_lineage(spark, docs_df, out, n_buckets=4)
+    monkeypatch.undo()
+    assert os.path.exists(os.path.join(out, f"bucket={k}", "_SUCCESS"))
+    assert {r["bucket"] for r in L.done_records(out)} == {0, 1, 2}
+
+    assert L.run_with_lineage(spark, docs_df, out, n_buckets=4) == [k]
+    assert sorted(r["bucket"] for r in L.read_lineage(spark, out).collect()) \
+        == [0, 1, 2, 3]
+    assert _collect(L.read_output(spark, out)) == \
+        _collect(extract_documents(docs_df))
+
+
+def test_leftover_temp_record_is_ignored(spark, docs_df, tmp_path):
+    """A record written but never renamed into place, and a torn one, are
+    invisible to read_lineage and to the resume set."""
+    out = str(tmp_path / "out_tmp")
+    lin = L.lineage_path(out)
+    L._append_record(out, {"bucket": 0, "doc_count": 99, "span_count": 99,
+                           "wall_ms": 1, "status": "done"})
+    (done,) = os.listdir(lin)
+    os.rename(os.path.join(lin, done), os.path.join(lin, f".{done}.tmp"))
+    with open(os.path.join(lin, ".part-00001-torn.parquet.tmp"), "wb") as f:
+        f.write(b"PAR1 torn")
+    assert L.done_records(out) == []
+    assert L.read_lineage(spark, out).count() == 0
+
+    assert L.run_with_lineage(spark, docs_df, out, n_buckets=2) == [0, 1]
+    rows = L.read_lineage(spark, out).collect()
+    assert sorted(r["bucket"] for r in rows) == [0, 1]
+    assert sum(r["doc_count"] for r in rows) == docs_df.count()
+
+
+def test_resumes_from_spark_appended_lineage(spark, docs_df, tmp_path):
+    """An out_dir whose _lineage was written by the older Spark append
+    (one append per bucket, with _SUCCESS) resumes and skips its recorded
+    buckets; new records land beside the old ones."""
+    out = str(tmp_path / "out_old_lineage")
+    L.run_with_lineage(spark, docs_df, out, n_buckets=4)
+    recs = {r["bucket"]: r for r in L.done_records(out)}
+    shutil.rmtree(L.lineage_path(out))
+    for b in (0, 2):
+        r = recs[b]
+        spark.createDataFrame(
+            [(b, r["doc_count"], r["span_count"], r["wall_ms"], "done")],
+            L.LINEAGE_SCHEMA).write.mode("append").parquet(L.lineage_path(out))
+    assert os.path.exists(os.path.join(L.lineage_path(out), "_SUCCESS"))
+    mtimes = {b: os.stat(os.path.join(out, f"bucket={b}", "_SUCCESS")).st_mtime_ns
+              for b in (0, 2)}
+
+    assert L.run_with_lineage(spark, docs_df, out, n_buckets=4) == [1, 3]
+    for b in (0, 2):
+        assert os.stat(os.path.join(out, f"bucket={b}", "_SUCCESS")) \
+            .st_mtime_ns == mtimes[b]
+    assert _rows(L.read_lineage(spark, out).collect()) == _rows(recs.values())
+    total = {r["bucket"]: r for r in L.lineage_report(spark, out).collect()}
+    assert total["TOTAL"]["doc_count"] == docs_df.count()
