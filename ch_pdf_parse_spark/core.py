@@ -4,8 +4,9 @@ This module has **no Spark dependency**. It is used three ways:
 
 1. as the *golden oracle* for pytest (SURVEY.md §5: span-sequence equality
    ``(kind, text, media_ref, order)``),
-2. as the vectorized per-document kernel inside the flagship zero-shuffle
-   ``mapInPandas`` pipeline (``pipeline.py``),
+2. as the per-document fallback of the flagship zero-shuffle ``mapInArrow``
+   pipeline (``pipeline.py``) whenever the C kernel (``native.py``, its one
+   fast path) declines a batch, and as the salted path's per-page kernel,
 3. as the executable specification the relational (pure-DataFrame) pipeline is
    differentially tested against.
 
@@ -248,7 +249,7 @@ def is_new_line(
 
 
 # ---------------------------------------------------------------------------
-# end-to-end per-document extraction (the oracle / mapInPandas kernel)
+# end-to-end per-document extraction (the oracle / mapInArrow fallback)
 # ---------------------------------------------------------------------------
 
 

@@ -1,27 +1,32 @@
-"""Native (C, via ctypes) twin of ``kernel._xy_cut`` — the extraction
-kernel's hottest loop.
+"""Native (C, via ctypes) fast path of the extraction semantics, plus the
+wire-shard parser and the seeded-md5 minhash kernel.
 
-Profiling at 400k bench docs (round 7): ``kernel.extract_document`` costs
-~1.1 ms/doc single-thread, and 57% of it is ``_xy_cut`` — pure integer
-geometry (stable sorts + 1-D gap grouping + a band suffix scan) over ~60
-spans/page, dominated by CPython interpreter overhead (14M function calls
-per 3k docs), not by algorithmic work. That shape is exactly what a tiny C
-routine removes: no strings, no objects, fixed int64 arithmetic.
+``core.py`` is the one readable definition of the per-document semantics;
+this module is its one fast path. Profiling at 400k bench docs (round 7)
+showed the interpreted extraction dominated by CPython overhead in the
+XY-cut — pure integer geometry (stable sorts + 1-D gap grouping + a band
+suffix scan) over ~60 spans/page, 14M function calls per 3k docs — not by
+algorithmic work. That shape is exactly what a tiny C routine removes: no
+strings, no objects, fixed int64 arithmetic.
 
 Contract and safety:
 
-* ``xy_cut(x1s, y1s, x2s, y2s)`` returns the same ``[(idx, region_x0)...]``
-  as ``kernel._xy_cut`` BIT-FOR-BIT — same stable-sort tie-breaks (stable
-  merge sort in C mirrors ``sorted(key=...)``), same composite leaf key
-  (y1*KY + x1*KX + i), same band suffix-scan semantics. Differentially
-  fuzzed against the Python twin in tests/test_kernel.py.
+* ``xy_cut(x1s, y1s, x2s, y2s, gx, gy)`` returns the same
+  ``[(idx, region_x0)...]`` as ``core.xy_cut`` BIT-FOR-BIT — stable merge
+  sorts in C mirror ``sorted(key=...)``, the composite leaf key
+  (y1*KY + x1*KX + i) is the (y1, x1, idx) sort key, and the band
+  suffix scan is the same. ``extract_batch`` equals
+  ``core.extract_document`` per document. Both are differentially fuzzed
+  in tests/test_kernel.py, tests/test_property.py and
+  tests/test_extract_native.py, and run under ASan/UBSan in
+  tests/test_native_sanitize.py.
 * The C source is embedded here (ships inside the package zip to
   executors), compiled ON FIRST USE with the system cc into a /tmp cache
   keyed by the source sha256 (atomic rename — concurrent workers race
   benignly). Any failure — no compiler, no ctypes, sandboxed /tmp —
   degrades silently to the Python implementation; ``CHPDF_NATIVE=0``
   disables it explicitly. The engine never *requires* a compiler: the
-  native path is an optimization, the Python path is the semantics.
+  native path is an optimization, ``core`` is the semantics.
 """
 
 from __future__ import annotations
@@ -34,10 +39,11 @@ import tempfile
 
 _C_SOURCE = r"""
 #define _GNU_SOURCE  /* memmem */
+#include <stdio.h>
 #include <stdlib.h>
 #include <string.h>
 
-/* Mirrors ch_pdf_parse_spark.kernel._xy_cut exactly (see that docstring).
+/* Mirrors ch_pdf_parse_spark.core.xy_cut exactly (see that docstring).
    All index arrays hold page-local span indices; sorts are STABLE. */
 
 typedef struct {
@@ -73,7 +79,7 @@ static void sort_by(Ctx *c, int *idxs, int n, const long long *vals) {
 }
 
 /* groups over a sorted run: starts[g]..starts[g+1] slices of sorted_idx.
-   identical to kernel._groups_1d */
+   identical to core._groups_1d */
 static int groups_1d(const int *sorted_idx, int n, const long long *lo,
                      const long long *hi, long long min_gap, int *starts) {
     int ng = 0;
@@ -176,8 +182,8 @@ static void recurse(Ctx *c, int *idxs, int n, long long region_x0) {
     for (int b = 0; b < nb; b++)
         for (int k = bstarts[b]; k < bstarts[b + 1]; k++)
             c->band_of[yo[k]] = b;
-    /* decide split point BEFORE nested recursion (kernel comment applies:
-       band_standalone recursion reassigns band_of) */
+    /* decide split point BEFORE nested recursion: band_standalone's own
+       recursion reassigns band_of */
     int n_standalone = nb;
     int *split_rest = NULL;
     int split_n = 0;
@@ -230,8 +236,12 @@ static int xy_cut_core(const long long *x1, const long long *y1,
         free(c.band_of); free(c.scratch); free(c.keybuf); free(root);
         return -1;
     }
-    for (int i = 0; i < n; i++) root[i] = i;
-    recurse(&c, root, n, min_x1(&c, root, n));
+    long long x0 = x1[0];
+    for (int i = 0; i < n; i++) {
+        root[i] = i;
+        if (x1[i] < x0) x0 = x1[i];
+    }
+    recurse(&c, root, n, x0);
     free(c.band_of); free(c.scratch); free(c.keybuf); free(root);
     return c.out_n;
 }
@@ -340,11 +350,13 @@ static int col_reserve(StrCol *c, long long add_rows, long long add_bytes) {
     if (c->count + add_rows + 1 > c->cap) {
         long long nc = c->cap ? c->cap * 2 : 1024;
         while (nc < c->count + add_rows + 1) nc *= 2;
+        /* keep whichever realloc succeeded: the owner frees both */
         int *no = realloc(c->offs, (size_t)(nc + 1) * sizeof(int));
+        if (no) c->offs = no;
         unsigned char *nv = realloc(c->valid, (size_t)nc);
-        if (!no || !nv) { free(no ? no : c->offs); c->offs = no ? no : NULL;
-                          if (nv) c->valid = nv; return 0; }
-        c->offs = no; c->valid = nv; c->cap = nc;
+        if (nv) c->valid = nv;
+        if (!no || !nv) return 0;
+        c->cap = nc;
     }
     if (c->vlen + add_bytes > c->vcap) {
         long long nc = c->vcap ? c->vcap * 2 : 4096;
@@ -364,7 +376,7 @@ static int col_push(StrCol *c, const unsigned char *s, long long n,
         c->offs[c->count + 1] = (int)c->vlen;
         c->valid[c->count] = 0;
     } else {
-        memcpy(c->vals + c->vlen, s, (size_t)n);
+        if (n) memcpy(c->vals + c->vlen, s, (size_t)n);
         c->vlen += n;
         c->offs[c->count + 1] = (int)c->vlen;
         c->valid[c->count] = 1;
@@ -554,10 +566,10 @@ decide:
 
 
 /* ------------------------------------------------------------------ */
-/* Whole-batch extraction kernel — C twin of kernel.extract_document  */
+/* Whole-batch extraction kernel — fast path of core.extract_document */
 /* driven over the Arrow buffers directly (see that module's          */
 /* docstrings for the reference semantics; differentially pinned in   */
-/* tests/test_kernel.py / test_fuzz / test_golden via the dispatch).  */
+/* tests/test_kernel.py / test_property / test_extract_native).       */
 
 typedef struct {            /* one Arrow string column, zero-offset */
     const unsigned char *vals;
@@ -632,7 +644,7 @@ static Bytes BC(const unsigned char *s, long long n) {
     Bytes b; b.p = s; b.n = n; return b;
 }
 
-/* mirror of kernel._classify over UTF-8 bytes */
+/* mirror of core.classify_kind over UTF-8 bytes */
 static Bytes classify(const ExCfg *g, Bytes text, long long page,
                       long long y1) {
     if (beq(text, g->eq, g->eq_len)) return BC(K_EQ, 8);
@@ -665,14 +677,14 @@ static int buf_add(Buf *b, const unsigned char *s, long long n) {
         if (!np) return 0;
         b->p = np; b->cap = nc;
     }
-    memcpy(b->p + b->len, s, (size_t)n);
+    if (n) memcpy(b->p + b->len, s, (size_t)n);
     b->len += n;
     return 1;
 }
 
 static int col_append_last(StrCol *c, const unsigned char *s, long long n) {
     if (!col_reserve(c, 0, n)) return 0;
-    memcpy(c->vals + c->vlen, s, (size_t)n);
+    if (n) memcpy(c->vals + c->vlen, s, (size_t)n);
     c->vlen += n;
     c->offs[c->count] = (int)c->vlen;
     return 1;
@@ -1236,7 +1248,7 @@ long long minhash_text(const unsigned char *valid, const int *offs,
                 if (!nscr) { free(starts); free(scratch); return -1; }
                 scratch = nscr;
             }
-            memcpy(scratch + 3, data + sb, (size_t)slen);
+            if (slen) memcpy(scratch + 3, data + sb, (size_t)slen);
             for (i = 0; i < nh; i++) {
                 unsigned char *m0 = scratch + 3 - plen[i];
                 memcpy(m0, prefix[i], (size_t)plen[i]);
@@ -1305,8 +1317,9 @@ def available() -> bool:
 
 def xy_cut(x1s: list, y1s: list, x2s: list, y2s: list,
            gap_x: int, gap_y: int):
-    """C twin of kernel._xy_cut: [(local_idx, region_x0), ...] or None when
-    the native library is unavailable (caller falls back to Python)."""
+    """Fast path of ``core.xy_cut`` over (x1s, y1s, x2s, y2s) columns:
+    [(local_idx, region_x0), ...] or None when the native library is
+    unavailable (caller falls back to Python)."""
     lib = _lib()
     if lib is None:
         return None

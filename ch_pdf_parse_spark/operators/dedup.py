@@ -156,15 +156,12 @@ SHINGLES_SQL = """
 # ---------------------------------------------------------------------------
 
 
-def _minhash_aggs() -> list:
-    return [F.min(portable_hash(F.col("shingle"), str(i))).alias(f"m{i}")
-            for i in range(N_MINHASH)]
-
-
 def minhash_signatures(sh: DataFrame) -> DataFrame:
     """doc_id → m0..m{N-1}: min over shingles of salted portable hash.
     Partial (map-side) min aggregation — one narrow shuffle on doc_id."""
-    return sh.groupBy("doc_id").agg(*_minhash_aggs())
+    return sh.groupBy("doc_id").agg(
+        *[F.min(portable_hash(F.col("shingle"), str(i))).alias(f"m{i}")
+          for i in range(N_MINHASH)])
 
 
 def minhash_from_text(corpus: DataFrame, n: int = 3) -> DataFrame:
@@ -256,31 +253,6 @@ def minhash_from_text(corpus: DataFrame, n: int = 3) -> DataFrame:
     partials = corpus.select("doc_id", "text").mapInArrow(_mh, out_schema)
     return partials.groupBy("doc_id").agg(
         *[F.min(f"m{i}").alias(f"m{i}") for i in range(N_MINHASH)])
-
-
-def fused_doc_signatures(sh: DataFrame) -> DataFrame:
-    """doc_id → (m0..m15, s0..s59): the minhash mins AND the simhash bit
-    sums in ONE aggregation over the shared shingle table (round-6 verdict
-    item #3). Rationale, read off the executed union plan
-    (BENCH/clusters_head.finalplan.txt): in the 3-detector composition the
-    minhash and simhash doc-level aggregations each scan the persisted
-    shingle table separately AND each self-join's b-side recomputes its
-    whole signature pipeline — ReusedExchange does not fire across the
-    union (0 reuses in the final plan), so the shingle cache was walked
-    4× with an md5/bit-sum pass each time. Fusing the two aggregations and
-    PERSISTING the result (tiny: one 77-int row per doc) turns those four
-    pipeline executions into four scans of an n_docs-row cache. Values are
-    identical by construction — same agg expressions, grouped on the same
-    key. Caller owns the persist/unpersist lifecycle (same doctrine as the
-    ``sh`` parameter)."""
-    if "h" not in sh.columns:
-        sh = sh.withColumn("h", portable_hash(F.col("shingle")))
-    bit_sums = [  # textually identical to simhash()'s sums
-        F.sum(F.when(F.expr(f"(h >> {j}) & 1") == 1, 1)
-              .otherwise(-1)).alias(f"s{j}")
-        for j in range(SIMHASH_BITS)
-    ]
-    return sh.groupBy("doc_id").agg(*_minhash_aggs(), *bit_sums)
 
 
 def lsh_candidate_pairs(sig: DataFrame,
@@ -380,9 +352,9 @@ def simhash(sh: DataFrame) -> DataFrame:
     is consumed as-is instead of recomputing md5 per shingle — the
     detector-union composition (operators/cluster.py) persists the shared
     shingle table WITH the hash so the md5 pass over it runs once, not twice
-    (round-4 verdict #6; value-identical by construction — pinned in
-    tools/bench_detectors.py, which also measured the saving as within
-    noise at sf0.1: the aggregation, not the hash, dominates)."""
+    (round-4 verdict #6; value-identical by construction, since ``h`` is
+    the same ``portable_hash`` expression; at sf0.1 the saving was within
+    noise: the aggregation, not the hash, dominates)."""
     h = (F.col("h") if "h" in sh.columns
          else portable_hash(F.col("shingle"))).alias("h")
     withbits = sh.select("doc_id", h)
@@ -390,13 +362,7 @@ def simhash(sh: DataFrame) -> DataFrame:
         F.sum(F.when(F.expr(f"(h >> {j}) & 1") == 1, 1).otherwise(-1)).alias(f"s{j}")
         for j in range(SIMHASH_BITS)
     ]
-    return simhash_from_sums(withbits.groupBy("doc_id").agg(*bit_sums))
-
-
-def simhash_from_sums(agg: DataFrame) -> DataFrame:
-    """(doc_id, s0..s59, ...) → (doc_id, simhash): the sign-fold half of
-    ``simhash``, split out so ``fused_doc_signatures`` consumers can derive
-    the simhash value from the already-aggregated bit sums."""
+    agg = withbits.groupBy("doc_id").agg(*bit_sums)
     sim = sum(
         (F.when(F.col(f"s{j}") >= 0, F.lit(1)).otherwise(F.lit(0)).cast("bigint")
          * F.lit(1 << j).cast("bigint"))
@@ -413,8 +379,7 @@ def simhash_pairs(simdf: DataFrame, max_hamming: int = 10,
     chunk equal; larger radii are best-effort recall, exactly like production
     SimHash dedup. ``n_chunks`` is the scale knob (must divide SIMHASH_BITS):
     fewer, wider chunks shrink the explode and candidate volume at the cost
-    of the pigeonhole radius — measured at the bench corpus in
-    tools/bench_detectors.py; the registered queries keep the default.
+    of the pigeonhole radius; the registered queries keep the default.
 
     Hot-bucket guard: buckets wider than ``bucket_cap`` are dropped before
     the self-join (window count partitions by the same key the join shuffles

@@ -14,8 +14,9 @@ Output::
 Design for 10^12 documents:
 
 * Documents arrive **nested** (one row per doc), so the common case is a pure
-  ``mapInPandas`` — embarrassingly parallel, **no shuffle at all**. Arrow
-  batches many documents per Python call (no per-row Python).
+  ``mapInArrow`` — embarrassingly parallel, **no shuffle at all**. Arrow
+  batches many documents per Python call, and the C kernel
+  (``native.extract_batch``) reads their buffers directly.
 * The long tail of oversized documents (span count > SALT_SPAN_THRESHOLD) is
   **salted page-wise**: explode → per-(doc,page) partial extraction
   (``applyInPandas``) → per-doc stitch. This replaces the reference's
@@ -74,10 +75,6 @@ _PARTIAL_SCHEMA = T.StructType([
 ])
 
 
-def _spans_to_tuples(spans) -> list[tuple[str, str, str, int]]:
-    return [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in spans]
-
-
 def normalize_columns(columns) -> tuple[str, ...]:
     """Validate + canonicalize an output-column projection. One definition so
     job.py / run_with_lineage can fail fast BEFORE the staging copy (a typo'd
@@ -95,12 +92,14 @@ def normalize_columns(columns) -> tuple[str, ...]:
 
 
 def _extract_arrow(it, columns: tuple[str, ...] = ("spans", "markdown")):
-    """mapInArrow kernel: operate on the columnar batch directly — the nested
-    spans array is consumed as flat child arrays (no per-span dict or object
-    materialization, which costs more than the extraction itself). The
-    per-document semantics live in ``kernel.extract_document`` (optimized
-    twin of the golden oracle ``core.extract_document`` — differentially
-    tested in tests/test_kernel.py).
+    """mapInArrow kernel with exactly two paths per batch:
+
+    1. ``native.extract_batch``: the C kernel over the Arrow buffers
+       (classification, XY-cut and fold; bit-identical to the oracle,
+       differentially pinned in tests/test_extract_native.py);
+    2. when it declines (no library; sliced, dictionary-encoded or empty
+       input; OOM inside C), ``_extract_core``: ``core.extract_document``
+       per document, the semantics itself.
 
     ``columns`` is manual projection pushdown through the UDF barrier:
     Catalyst prunes columns up to the scan, but nothing inside a
@@ -108,91 +107,50 @@ def _extract_arrow(it, columns: tuple[str, ...] = ("spans", "markdown")):
     ``spans`` would still pay Arrow serialization for every markdown
     string (≈ the document's full text again) unless the kernel skips
     building the column entirely."""
-    import numpy as np
-    import pyarrow as pa
-
-    from . import kernel
     from . import native
 
-    def low_card_strs(arr):
-        # kind/media_ref are low-cardinality ("text", "", doc-local refs):
-        # decoding via dictionary indices reuses one Python str per distinct
-        # value instead of materializing one per span — ~8-15x faster than
-        # to_pylist on these columns (measured on the bench corpus).
-        enc = arr.fill_null("").dictionary_encode()
-        pool = np.array(enc.dictionary.to_pylist(), dtype=object)
-        return pool[enc.indices.to_numpy(zero_copy_only=False)].tolist()
-
-    use_native = native.available()
+    want_spans, want_md = "spans" in columns, "markdown" in columns
     for batch in it:
-        if use_native:
-            # whole-batch C kernel (classification + XY-cut + fold over the
-            # Arrow buffers directly — round 7; bit-identical, differential-
-            # pinned in tests/test_kernel.py); None → sliced/dictionary/
-            # empty/OOM edge, fall through to the Python twin
-            out = native.extract_batch(
-                batch, "spans" in columns, "markdown" in columns)
-            if out is not None:
-                yield out
-                continue
-        doc_ids = batch.column("doc_id")
-        spans = batch.column("spans")
-        if isinstance(spans, pa.ChunkedArray):  # normalize
-            spans = spans.combine_chunks()
-        lst = spans
-        offs = lst.offsets.to_numpy(zero_copy_only=False)
-        vals = lst.values
-        # `.values` ignores array slicing: on a sliced ListArray it returns the
-        # FULL child array, so converting it would do work proportional to the
-        # parent, not this batch (quadratic across batches). Spark's IPC
-        # batches arrive compacted, but trim anyway so any caller is safe.
-        if offs[0] > 0 or offs[-1] < len(vals):
-            vals = vals.slice(offs[0], offs[-1] - offs[0])
-            offs = offs - offs[0]
-        kinds = low_card_strs(vals.field("kind"))
-        texts = vals.field("text").to_pylist()
-        refs = low_card_strs(vals.field("media_ref"))
-        pages, y1s, x1s = kernel.decode_offsets(
-            vals.field("offset").fill_null(0)  # null geometry ≡ origin
-            .to_numpy(zero_copy_only=False))
-        want_spans = "spans" in columns
-        want_md = "markdown" in columns
-        # flat output columns + list offsets (built directly; no per-span dicts)
-        ok, ot, om = [], [], []
-        loffs = [0]
-        out_md = []
-        for i in range(len(batch)):
-            lo, hi = offs[i], offs[i + 1]  # absolute into the child arrays
-            recs, md = kernel.extract_document(
-                kinds, texts, refs, pages, y1s, x1s, lo, hi,
-                want_records=want_spans, want_markdown=want_md)
-            if want_spans:
-                for k, t, m in recs:
-                    ok.append(k)
-                    ot.append(t)
-                    om.append(m)
-                loffs.append(len(ok))
-            if want_md:
-                out_md.append(md)
-        out_cols = [doc_ids.combine_chunks()
-                    if isinstance(doc_ids, pa.ChunkedArray) else doc_ids]
-        out_names = ["doc_id"]
-        if want_spans:
-            # output span order == position within the doc's records list
-            orders = [o for i in range(len(batch))
-                      for o in range(loffs[i + 1] - loffs[i])]
-            struct = pa.StructArray.from_arrays(
-                [pa.array(ok, pa.string()), pa.array(ot, pa.string()),
-                 pa.array(om, pa.string()), pa.array(orders, pa.int32())],
-                names=["kind", "text", "media_ref", "offset"],
-            )
-            out_cols.append(
-                pa.ListArray.from_arrays(pa.array(loffs, pa.int32()), struct))
-            out_names.append("spans")
-        if want_md:
-            out_cols.append(pa.array(out_md, pa.string()))
-            out_names.append("markdown")
-        yield pa.RecordBatch.from_arrays(out_cols, names=out_names)
+        out = native.extract_batch(batch, want_spans, want_md)
+        yield out if out is not None else _extract_core(batch, columns)
+
+
+def _extract_core(batch, columns: tuple[str, ...]):
+    """The fallback: ``core.extract_document`` per document, with the same
+    output columns and Arrow types as the C kernel (int32 list offsets; the
+    span struct's ``offset`` holds the record's position). The spans are
+    decoded column-wise — one ``flatten()`` (which respects slicing) and
+    one ``to_pylist()`` per field — because a dict per span through
+    ``to_pylist`` costs more than the extraction."""
+    from itertools import accumulate
+
+    import pyarrow as pa
+
+    spans = batch.column("spans")
+    flat = spans.flatten()  # null rows contribute no spans → ([], "")
+    rows = list(zip(*(flat.field(k).to_pylist()
+                      for k in ("kind", "text", "media_ref", "offset"))))
+    ends = list(accumulate(spans.value_lengths().fill_null(0).to_pylist(),
+                           initial=0))
+    out = [core.extract_document(rows[a:b])
+           for a, b in zip(ends, ends[1:])]
+
+    out_cols, out_names = [batch.column("doc_id")], ["doc_id"]
+    if "spans" in columns:
+        recs = [r for rs, _ in out for r in rs]
+        k, t, m, o = zip(*recs) if recs else ((), (), (), ())
+        struct = pa.StructArray.from_arrays(
+            [pa.array(k, pa.string()), pa.array(t, pa.string()),
+             pa.array(m, pa.string()), pa.array(o, pa.int32())],
+            names=["kind", "text", "media_ref", "offset"])
+        loffs = accumulate((len(rs) for rs, _ in out), initial=0)
+        out_cols.append(pa.ListArray.from_arrays(
+            pa.array(list(loffs), pa.int32()), struct))
+        out_names.append("spans")
+    if "markdown" in columns:
+        out_cols.append(pa.array([md for _, md in out], pa.string()))
+        out_names.append("markdown")
+    return pa.RecordBatch.from_arrays(out_cols, names=out_names)
 
 
 # ---------------------------------------------------------------------------
@@ -255,7 +213,7 @@ def extract_documents(
     salt_threshold: int = C.SALT_SPAN_THRESHOLD,
     columns: tuple[str, ...] = ("spans", "markdown"),
 ) -> DataFrame:
-    """End-to-end extraction. Zero-shuffle ``mapInPandas`` for regular docs;
+    """End-to-end extraction. Zero-shuffle ``mapInArrow`` for regular docs;
     page-salted two-stage aggregation for the oversized long tail.
 
     ``columns`` selects which output columns the kernel builds AND ships

@@ -83,9 +83,9 @@ def _xy_cut_doc(tbl):
                 core.derive_box(kinds[j], texts[j], int(xs[j]), int(ys[j]))
                 for j in idx
             ]
-            # native (C) XY-cut when available — bit-identical
-            # (differential-fuzzed in tests/test_kernel.py); core.xy_cut
-            # remains the semantics and the live fallback
+            # native (C) XY-cut when available — bit-identical to
+            # core.xy_cut (differential-fuzzed in tests/test_kernel.py),
+            # which remains the semantics and the live fallback
             ordered = None
             if use_native:
                 ordered = native.xy_cut(

@@ -507,9 +507,15 @@ def write_wire_shards(docs: DataFrame, out_dir: str, n_shards: int = 8) -> int:
     Also publishes the ``_SPANSTATS`` sidecar (per-shard max ``n_spans`` —
     see ``_write_spanstats``). The driver-side collect behind it is one row
     per shard: the same O(n_shards) driver bound every file listing of the
-    directory already pays.
+    directory already pays. A sidecar left by an earlier write is removed
+    first, so a crash before the new one lands leaves no statistics (full
+    scan), never stale ones that prune away the new shards' oversized docs.
     """
     os.makedirs(out_dir, exist_ok=True)
+    try:
+        os.unlink(os.path.join(out_dir, SPANSTATS_NAME))
+    except FileNotFoundError:
+        pass
     sharded = docs.select(
         "doc_id", "spans",
         (F.crc32(F.coalesce(F.col("doc_id"), F.lit("\x00null")).cast("binary"))

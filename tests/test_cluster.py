@@ -120,30 +120,3 @@ def test_keeper_semantics_on_dup_corpus(spark):
     assert len(matched) >= 0.95 * len(injected), (len(matched), len(injected))
     for r in matched:
         assert not r.is_keeper
-
-
-def test_fused_signatures_equal_unfused(spark):
-    """fused_doc_signatures (round 6: one doc_id aggregation feeding both
-    minhash bands and simhash chunks in the union composition) must produce
-    exactly the per-doc minhash minima of minhash_signatures and exactly the
-    simhash values of simhash() — the fusion is a plan change, never a value
-    change."""
-    from pyspark.sql import functions as F
-
-    from ch_pdf_parse_spark.operators.dedup import (
-        N_MINHASH, fused_doc_signatures, minhash_signatures, portable_hash,
-        shingles, simhash, simhash_from_sums, with_dup_corpus)
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    sh = (shingles(with_dup_corpus(docs))
-          .withColumn("h", portable_hash(F.col("shingle"))).persist())
-    try:
-        fused = fused_doc_signatures(sh)
-        mcols = ["doc_id"] + [f"m{i}" for i in range(N_MINHASH)]
-        assert (fused.select(*mcols).exceptAll(minhash_signatures(sh)).isEmpty()
-                and minhash_signatures(sh).exceptAll(
-                    fused.select(*mcols)).isEmpty())
-        assert (simhash_from_sums(fused).exceptAll(simhash(sh)).isEmpty()
-                and simhash(sh).exceptAll(simhash_from_sums(fused)).isEmpty())
-    finally:
-        sh.unpersist()

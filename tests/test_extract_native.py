@@ -1,8 +1,9 @@
 """Differential tests: the C whole-batch extraction kernel
-(native.extract_batch) must emit RecordBatches EQUAL to the Python
-_extract_arrow path on arbitrary inputs — nulls at every level, unknown
-kinds, negative/extreme offsets, shuffled page order, CJK
-classification prefixes, caption/media mismatches, and merged lines.
+(native.extract_batch) must emit RecordBatches EQUAL to the core fallback
+(pipeline._extract_core: core.extract_document per document) on arbitrary
+inputs — nulls at every level, unknown kinds, negative/extreme offsets,
+shuffled page order, CJK classification prefixes, caption/media
+mismatches, and merged lines — for every ``columns`` projection.
 Skipped wholesale when no C toolchain is available."""
 
 import random
@@ -13,7 +14,7 @@ import pytest
 from ch_pdf_parse_spark import native, pipeline
 
 pytestmark = pytest.mark.skipif(
-    not native.available(), reason="no C toolchain: python kernel is used")
+    not native.available(), reason="no C toolchain: core is the only path")
 
 KINDS = [None, "", "text", "title", "equation", "figure", "table",
          "table_caption", "figure_caption", "unlabeled", "banana",
@@ -59,18 +60,6 @@ def _batch(rng, n_docs):
         ["doc_id", "spans"])
 
 
-def _python_path(batch, cols):
-    import os
-
-    os.environ["CHPDF_NATIVE"] = "0"
-    native._LIB, native._TRIED = None, True
-    try:
-        return list(pipeline._extract_arrow(iter([batch]), columns=cols))
-    finally:
-        del os.environ["CHPDF_NATIVE"]
-        native._LIB, native._TRIED = None, False
-
-
 def test_native_extract_differential_fuzz():
     rng = random.Random(20260821)
     for trial in range(120):
@@ -79,7 +68,7 @@ def test_native_extract_differential_fuzz():
             got = native.extract_batch(batch, "spans" in cols,
                                        "markdown" in cols)
             assert got is not None, trial
-            (want,) = _python_path(batch, cols)
+            want = pipeline._extract_core(batch, cols)
             assert got.equals(want), (
                 trial, cols, got.to_pydict(), want.to_pydict())
 
@@ -103,5 +92,5 @@ def test_native_extract_fixture_corpus():
         got = native.extract_batch(batch, "spans" in cols,
                                    "markdown" in cols)
         assert got is not None
-        (want,) = _python_path(batch, cols)
+        want = pipeline._extract_core(batch, cols)
         assert got.equals(want), cols

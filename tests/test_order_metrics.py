@@ -4,8 +4,10 @@ train/train_main.py:34-37)."""
 
 import random
 
-from ch_pdf_parse_spark import core, kernel
+from ch_pdf_parse_spark import core
 from ch_pdf_parse_spark.operators.order_metrics import rank_correlation
+
+from test_kernel import native_xy_cut
 
 
 def _corr(spark, rows):
@@ -44,8 +46,9 @@ def test_rank_correlation_duplicate_rows_deterministic(spark):
 
 
 def test_xycut_agreement_on_fuzz_corpus(spark):
-    """The metric in anger: kernel XY-cut order vs the core oracle order over
-    random dense layouts must correlate perfectly in every layout (they are
+    """The metric in anger: the fast-path XY-cut order (native, or core
+    when no C toolchain is available) vs the core oracle order over random
+    dense layouts must correlate perfectly in every layout (they are
     asserted equal element-wise elsewhere; this pins the METRIC path)."""
     rng = random.Random(123)
     rows = []
@@ -57,9 +60,8 @@ def test_xycut_agreement_on_fuzz_corpus(spark):
             y1 = rng.randint(0, 400)
             boxes.append((x1, y1, x1 + rng.randint(5, 120),
                           y1 + rng.choice([8, 12, 20, 40])))
-        k = kernel._xy_cut([b[0] for b in boxes], [b[1] for b in boxes],
-                           [b[2] for b in boxes], [b[3] for b in boxes])
         c = core.xy_cut(boxes)
+        k = native_xy_cut(boxes) or c  # None without a C toolchain
         kpos = {idx: p for p, (idx, _) in enumerate(k)}
         cpos = {idx: p for p, (idx, _) in enumerate(c)}
         rows.extend((layout, i, kpos[i], cpos[i]) for i in range(n))

@@ -240,3 +240,31 @@ def test_wire_sidecar_fallbacks(spark, docs_df, wire_dir, tmp_path):
     assert wf._wire_docs_over(spark, out, 1) is None
     assert _out_key(extract_documents(
         wf.read_wire(spark, out), salt_threshold=1).collect()) == want
+
+
+def test_crashed_rewrite_leaves_no_stale_sidecar(spark, tmp_path,
+                                                 monkeypatch):
+    """Rewriting a wire dir must invalidate its old ``_SPANSTATS`` first: a
+    crash before the new sidecar lands would otherwise leave the old bounds
+    (every shard under the threshold) over the new shards, and the
+    oversized doc would be pruned away silently."""
+    span_t = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+
+    def corpus(n_big):
+        rows = [(f"d{i}", [("text", f"t{i}", "", 0)]) for i in range(8)]
+        rows.append(("big", [("text", f"w{j}", "", j) for j in range(n_big)]))
+        return spark.createDataFrame(rows, f"doc_id string, spans {span_t}")
+
+    out = str(tmp_path / "wire")
+    wf.write_wire_shards(corpus(1), out, n_shards=2)
+    assert max(wf._read_spanstats(out).values()) == 1
+
+    def crash(*_):
+        raise RuntimeError("crash before the sidecar lands")
+
+    monkeypatch.setattr(wf, "_write_spanstats", crash)
+    with pytest.raises(RuntimeError):
+        wf.write_wire_shards(corpus(6), out, n_shards=2)
+    got = {r["doc_id"] for r in extract_documents(
+        wf.read_wire(spark, out), salt_threshold=3).collect()}
+    assert "big" in got and len(got) == 9
