@@ -77,7 +77,7 @@ _PARTIAL_SCHEMA = T.StructType([
 
 def normalize_columns(columns) -> tuple[str, ...]:
     """Validate + canonicalize an output-column projection. One definition so
-    job.py / run_with_lineage can fail fast BEFORE the staging copy (a typo'd
+    job.py / run_with_lineage can fail fast BEFORE any write (a typo'd
     --columns must not cost a full input pass) and duplicates can't reach the
     salted branch's select (where they'd surface as a confusing unionByName
     AnalysisException). Canonical order = OUTPUT_SCHEMA order, matching the
@@ -212,6 +212,7 @@ def extract_documents(
     docs: DataFrame,
     salt_threshold: int = C.SALT_SPAN_THRESHOLD,
     columns: tuple[str, ...] = ("spans", "markdown"),
+    max_spans: int | None = None,
 ) -> DataFrame:
     """End-to-end extraction. Zero-shuffle ``mapInArrow`` for regular docs;
     page-salted two-stage aggregation for the oversized long tail.
@@ -221,7 +222,15 @@ def extract_documents(
     barrier — a spans-only consumer (the driver's ``extract_spans``) skips
     Arrow-serializing every markdown string, a markdown-only consumer
     (``extract_markdown``) skips the span arrays. Catalyst cannot do this
-    pruning for a black-box mapInArrow."""
+    pruning for a black-box mapInArrow.
+
+    ``max_spans`` is an upper bound on the routing span count (``n_spans``)
+    that the caller has proved from statistics, e.g. the parquet footers of
+    the frame's files (``sources.lineage.footer_max_spans``). At or below
+    ``salt_threshold`` it proves the salted branch empty, and only the
+    ``mapInArrow`` branch is planned: ``PropagateEmptyRelation`` cannot fold
+    the empty ``FlatMapGroupsInPandas`` subtree, whose shuffle jobs would
+    otherwise still run."""
     from functools import partial
 
     from .packaging import ensure_on_executors
@@ -251,6 +260,8 @@ def extract_documents(
     # the small branch and extract to (empty spans, empty markdown)
     small = docs.where((n <= salt_threshold) | n.isNull())
     small_out = small.mapInArrow(partial(_extract_arrow, columns=cols), schema)
+    if max_spans is not None and max_spans <= salt_threshold:
+        return small_out
 
     big = None
     if wire_over is not None:

@@ -14,6 +14,27 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the driver heap's share of physical RAM: the rest stays for the Python
+# workers (a few GiB under load), the OS page cache and the JVM's off-heap
+DRIVER_MEM_FRACTION = 0.5
+DRIVER_MEM_CAP_MB = 48 * 1024
+
+
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """The driver heap to launch with: the smaller of 48g and
+    ``DRIVER_MEM_FRACTION`` of physical RAM (``phys_bytes``, read from the
+    OS when None), so the defaults also launch on a small host. 48g when
+    the OS does not report its memory."""
+    if phys_bytes is None:
+        try:
+            phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (AttributeError, OSError, ValueError):
+            phys_bytes = 0
+    if phys_bytes <= 0:
+        return f"{DRIVER_MEM_CAP_MB}m"
+    mb = int(phys_bytes * DRIVER_MEM_FRACTION) // (1024 * 1024)
+    return f"{max(1, min(DRIVER_MEM_CAP_MB, mb))}m"
+
 
 def get_spark(
     app_name: str = "ch-pdf-parse-spark",
@@ -86,8 +107,11 @@ def get_spark(
         # path holds 32 in-flight ~82 MB binary rows plus the full spans
         # payload both directions; 16g sat permanently at the GC ceiling. 48g
         # (of the 125 GiB box) keeps the same workload under ~40% occupancy;
-        # python workers use a few GiB.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # python workers use a few GiB. A smaller host gets half its RAM
+        # (default_driver_memory): with a 48g heap, a default session on a
+        # 15 GiB host was OOM-killed on a dedup workload.
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

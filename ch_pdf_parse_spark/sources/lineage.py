@@ -5,12 +5,21 @@ North-rule requirement (SURVEY.md §4 Q7): the reference checkpoints every
 (/root/reference/train/train_main.py:177-186,247); batch Spark has task-level
 retry but no built-in *job-level* resume. This module provides it:
 
-* the corpus is split into ``n_buckets`` deterministic doc_id hash buckets
-  (same bucketing the Iceberg table would declare: ``bucket(doc_id, N)``);
-* each bucket is extracted and written as its own output partition
-  ``bucket=b``. Its ``doc_count``/``span_count`` come from an unnamed
-  ``Observation`` on that write (the write job's result stage, so a retried
-  task cannot double-count), not from re-reading the output;
+* the input's files are split into ``n_buckets`` fixed **file groups**:
+  greedily by size, largest file first into the least-loaded bucket, never
+  splitting a file. The assignment is recorded in ``_manifest.json`` and a
+  resume reads it back, so ``bucket=b`` always means the same files;
+* each bucket reads only its own files (a ``_metadata.file_path`` filter,
+  which Spark evaluates at file-listing time, so no bucket scans another's
+  files and no copy of the input is made), is extracted, and is written as
+  its own output partition ``bucket=b``. Its ``doc_count``/``span_count``
+  come from an unnamed ``Observation`` on that write (the write job's result
+  stage, so a retried task cannot double-count), not from re-reading the
+  output;
+* each bucket passes ``pipeline.extract_documents`` an ``n_spans`` bound
+  proved from file statistics (parquet row-group max, or the wire
+  ``_SPANSTATS`` sidecar). When the bound is at or below the salt threshold
+  the salted oversized-doc branch, and its shuffle jobs, are not planned;
 * once the bucket's data is committed, its lineage record ``(bucket,
   doc_count, span_count, wall_ms, status)`` lands as its own one-row parquet
   file: written under a dot-prefixed temp name, then ``os.replace``d into
@@ -20,11 +29,11 @@ retry but no built-in *job-level* resume. This module provides it:
   run resumes exactly where it stopped, never recomputing a completed
   bucket and never recording one it did not finish.
 
-The bookkeeping runs no Spark job: the only jobs are the staging write and
-one extraction write per bucket. Spark, pyarrow and the resume set all skip
-dot- and underscore-prefixed names, so a leftover temp record and the
-``_SUCCESS`` marker of a ``_lineage`` written by an older Spark append are
-both ignored; such a directory still resumes.
+The bookkeeping runs no Spark job: the only jobs are one extraction write
+per bucket. Spark, pyarrow and the resume set all skip dot- and
+underscore-prefixed names, so a leftover temp record and the ``_SUCCESS``
+marker of a ``_lineage`` written by an older Spark append are both ignored;
+such a directory still resumes.
 
 ``out_dir`` must be a local (POSIX) path: the manifest and the lineage
 records are written with plain file I/O and an atomic rename.
@@ -37,9 +46,13 @@ to bucket runtime; buckets could also be submitted concurrently from threads
 
 from __future__ import annotations
 
+import heapq
 import os
 import time
 import uuid
+from dataclasses import dataclass
+from typing import Callable
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import (DataFrame, Observation, SparkSession,
                          functions as F, types as T)
@@ -51,6 +64,12 @@ LINEAGE_SCHEMA = T.StructType([
     T.StructField("wall_ms", T.LongType()),
     T.StructField("status", T.StringType()),
 ])
+
+# v1 hashed bare names; v2 adds [size, mtime_ns]; v3 adds the output column
+# projection (resuming with a different --columns would silently mix schemas
+# across buckets); v4 makes buckets file groups, whose assignment the
+# manifest records
+SIG_VERSION = 4
 
 
 def lineage_path(out_dir: str) -> str:
@@ -97,82 +116,175 @@ def _append_record(out_dir: str, rec: dict) -> None:
 
 
 def with_bucket(docs: DataFrame, n_buckets: int) -> DataFrame:
+    """``bucket = pmod(hash(doc_id), n_buckets)``: the doc_id hash bucketing
+    that ``run_with_lineage`` used before buckets became file groups. Nothing
+    in the package calls it; it is kept because the benchmark's
+    ``lineage.stage_s`` probe (perfbench/probes.py) imports it."""
     return docs.withColumn("bucket", F.pmod(F.hash("doc_id"), F.lit(n_buckets)).cast("int"))
 
 
-def run_with_lineage(
-    spark: SparkSession,
-    docs: DataFrame,
-    out_dir: str,
-    n_buckets: int = 16,
-    fail_after: int | None = None,
-    stage_input: bool = True,
-    parallelism: int = 1,
-    columns: tuple[str, ...] = ("spans", "markdown"),
-) -> list[int]:
-    """Extract ``docs`` bucket-by-bucket with lineage; returns the list of
-    buckets computed in THIS invocation (buckets with a ``done`` record are
-    skipped). ``fail_after`` aborts after k buckets — the kill/resume test
-    hook (SURVEY.md §5 property test 3).
+# ------------------------------------------------------------ file groups
 
-    ``stage_input``: a per-bucket filter on hash(doc_id) cannot prune a plain
-    parquet layout, so bucket-by-bucket extraction would re-scan the full
-    input once per bucket — N full passes at 10^12 rows. Staging writes the
-    input ONCE partitioned by bucket (the parquet stand-in for an Iceberg
-    ``bucket(doc_id, N)`` spec); every per-bucket read is then
-    directory-pruned. On an actually-bucketed Iceberg table pass False.
+def file_uri(path: str) -> str:
+    """One spelling per file. ``DataFrame.inputFiles()`` returns
+    ``file:///dir/a%20b`` while ``_metadata.file_path`` returns
+    ``file:/dir/a%20b`` (both percent-encoded the same way); compared raw,
+    nothing matches and every bucket silently reads nothing. Both sides go
+    through this function, which drops the empty authority."""
+    return "file:/" + path[len("file:///"):] if path.startswith("file:///") \
+        else path
 
-    Resume assumes the SAME input, bucketing AND output projection: a
-    manifest (n_buckets + input file list + columns) is recorded at staging
-    time; a later call into the same ``out_dir`` with a different input,
-    n_buckets or ``columns`` raises instead of silently extracting against
-    the stale snapshot (or writing mixed-schema buckets)."""
-    import hashlib
-    import json
 
-    from ..pipeline import extract_documents, normalize_columns
+def local_path(f: str) -> str | None:
+    """The local filesystem path of ``f`` (a ``file:`` URI or a plain
+    path), or None for a remote file (hdfs/s3/...)."""
+    u = urlsplit(f)
+    if not u.scheme:
+        return f
+    return unquote(u.path) if u.scheme == "file" else None
 
-    # fail fast (and canonicalize for the manifest signature) before any
-    # staging work — see pipeline.normalize_columns
-    columns = normalize_columns(columns)
 
-    os.makedirs(out_dir, exist_ok=True)
-    # input identity from file-level metadata only (no data scan): catches
-    # appended/replaced part-files, files overwritten IN PLACE under the same
-    # names (size+mtime for locally statable files), and a changed n_buckets
-    files = sorted(docs.inputFiles())
+def assign_groups(sizes: dict[str, int], n_buckets: int) -> list[list[str]]:
+    """Greedy size balancing: largest file first (ties by path) into the
+    least-loaded bucket (ties by bucket id). A file is never split; a bucket
+    may get no file. Each group is returned sorted."""
+    load = [(0, b) for b in range(n_buckets)]
+    groups: list[list[str]] = [[] for _ in range(n_buckets)]
+    for f in sorted(sizes, key=lambda f: (-sizes[f], f)):
+        size, b = heapq.heappop(load)
+        groups[b].append(f)
+        heapq.heappush(load, (size + sizes[f], b))
+    return [sorted(g) for g in groups]
+
+
+def footer_max_spans(files: list[str]) -> int | None:
+    """Upper bound on ``n_spans`` over ``files``, from the parquet footers'
+    row-group statistics (driver-side, no Spark job). None — no bound — when
+    a file is remote or unreadable, lacks the column, or has a non-empty row
+    group without min/max statistics (an all-null row group included)."""
+    import pyarrow.parquet as pq
+
+    best = 0
+    for f in files:
+        local = local_path(f)
+        if local is None:
+            return None
+        try:
+            md = pq.read_metadata(local)
+        except Exception:
+            return None
+        idx = [i for i in range(md.num_columns)
+               if md.schema.column(i).path == "n_spans"]
+        if not idx:
+            return None
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            if rg.num_rows == 0:
+                continue
+            st = rg.column(idx[0]).statistics
+            if st is None or not st.has_min_max or not isinstance(st.max, int):
+                return None
+            best = max(best, st.max)
+    return best
+
+
+def _is_stored_column(df: DataFrame, name: str) -> bool:
+    """True when ``df``'s column ``name`` is a file column passed through
+    unchanged: followed down the analyzed plan by expression id, it reaches
+    a file relation through single-child nodes only. A recomputed column
+    (``withColumn``, an alias) gets a new id; a join or union could mix in
+    rows the file statistics do not cover — both answer False."""
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        out = plan.output()
+        ids = {out.apply(i).exprId().id() for i in range(out.size())
+               if out.apply(i).name() == name}
+        if len(ids) != 1:
+            return False
+        (eid,) = ids
+        while True:
+            attrs = plan.output()
+            if not any(attrs.apply(i).exprId().id() == eid
+                       for i in range(attrs.size())):
+                return False
+            if plan.getClass().getSimpleName() == "LogicalRelation":
+                return True
+            kids = plan.children()
+            if kids.size() != 1:
+                return False
+            plan = kids.apply(0)
+    except Exception:
+        return False
+
+
+@dataclass(frozen=True)
+class FileInput:
+    """An input that is a fixed list of files, as ``run_with_lineage``
+    needs it: ``files`` (the identity and grouping unit), ``read(group)``
+    (the documents of exactly those files) and ``max_spans(group)`` (an
+    ``n_spans`` upper bound proved from statistics, or None)."""
+
+    files: list[str]
+    read: Callable[[list[str]], DataFrame]
+    max_spans: Callable[[list[str]], int | None]
+
+
+def table_input(docs: DataFrame) -> FileInput:
+    """The file-backed ``docs`` frame (parquet) as a ``FileInput``: a group
+    is read as ``docs`` restricted on ``_metadata.file_path``, and its bound
+    is the footers' ``n_spans`` max when ``docs``' ``n_spans`` is that
+    stored column."""
+    files = sorted({file_uri(f) for f in docs.inputFiles()})
     if not files:
         # createDataFrame/views have no backing files — their identity cannot
         # be established, so a reused out_dir would silently pass the guard
-        # and extract against a stale _staged snapshot
         raise ValueError(
             "input DataFrame has no backing files (inputFiles() is empty); "
             "resume identity cannot be established — write the input to "
             "parquet/a table first")
-    from urllib.parse import unquote, urlparse
+    from pyspark.errors import AnalysisException
 
-    file_meta = []
-    for f in files:
-        # inputFiles() returns percent-encoded URIs ("file:/data/my%20corpus/
-        # part-0"); decode before stat or paths with spaces/non-ASCII silently
-        # fall back to name-only identity
-        u = urlparse(f)
-        local = unquote(u.path) if u.scheme in ("file", "") else None
-        if local and os.path.exists(local):
-            st = os.stat(local)
-            # mtime_ns, not int(mtime): whole-second truncation misses
-            # same-size in-place overwrites within one second
-            file_meta.append([f, st.st_size, st.st_mtime_ns])
-        else:  # remote (hdfs/s3/...) — name-only identity
-            file_meta.append([f])
-    # v1 hashed bare names; v2 adds [size, mtime_ns]; v3 adds the output
-    # column projection — resuming with a different --columns would silently
-    # mix schemas across buckets (half with markdown, half without), which
-    # Spark's footer sampling then papers over as nulls
-    SIG_VERSION = 3
+    why = "a data column named _metadata shadows it"
+    if "_metadata" not in docs.columns:
+        try:
+            docs.select("_metadata.file_path")
+            why = None
+        except AnalysisException as e:
+            why = str(e).splitlines()[0]
+    if why is not None:
+        raise ValueError(
+            "cannot restrict the input to a file group: the file metadata "
+            "column _metadata.file_path does not resolve on this DataFrame "
+            f"(read it straight from parquet files): {why}")
+    path = F.col("_metadata.file_path")
+    bound = footer_max_spans if _is_stored_column(docs, "n_spans") \
+        else (lambda group: None)
+    return FileInput(files, lambda group: docs.where(path.isin(group)), bound)
+
+
+def _file_meta(f: str) -> list:
+    """Input identity of one file from metadata only (no data scan): its
+    name, plus size and mtime_ns when it is a local file (catches files
+    overwritten in place under the same name)."""
+    local = local_path(f)
+    if local and os.path.exists(local):
+        st = os.stat(local)
+        # mtime_ns, not int(mtime): whole-second truncation misses same-size
+        # in-place overwrites within one second
+        return [f, st.st_size, st.st_mtime_ns]
+    return [f]  # remote (hdfs/s3/...): name-only identity
+
+
+def _manifest_groups(out_dir: str, files: list[str], n_buckets: int,
+                     columns: tuple[str, ...]) -> list[list[str]]:
+    """Check ``out_dir``'s manifest against this input and return its file
+    groups, or write a fresh manifest with a new assignment."""
+    import hashlib
+    import json
+
+    meta = [_file_meta(f) for f in files]
     sig = hashlib.sha256(json.dumps(
-        {"n_buckets": n_buckets, "files": file_meta,
-         "columns": sorted(columns)}
+        {"n_buckets": n_buckets, "files": meta, "columns": sorted(columns)}
     ).encode()).hexdigest()[:16]
     manifest = os.path.join(out_dir, "_manifest.json")
     if os.path.exists(manifest):
@@ -186,23 +298,63 @@ def run_with_lineage(
                 "fresh out_dir (or delete the old one to recompute)")
         if prev.get("sig") != sig:
             raise ValueError(
-                f"{out_dir} holds lineage/staging for a different input or "
+                f"{out_dir} holds lineage for a different input or "
                 f"n_buckets (manifest sig {prev.get('sig')} != {sig}); "
                 "use a fresh out_dir or delete the old one")
-    else:
-        with open(manifest, "w") as f:
-            json.dump({"sig": sig, "n_buckets": n_buckets,
-                       "sig_version": SIG_VERSION}, f)
+        groups = prev["groups"]
+        if sorted(f for g in groups for f in g) != files:
+            raise ValueError(
+                f"{out_dir}/_manifest.json: its file groups do not cover "
+                "the input's files; delete the out_dir to recompute")
+        return groups
+    groups = assign_groups({m[0]: m[1] if len(m) > 1 else 1 for m in meta},
+                           n_buckets)
+    tmp = manifest + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump({"sig": sig, "n_buckets": n_buckets,
+                   "sig_version": SIG_VERSION, "groups": groups}, f)
+    os.replace(tmp, manifest)
+    return groups
 
-    if stage_input:
-        staged = os.path.join(out_dir, "_staged")
-        if not os.path.exists(os.path.join(staged, "_SUCCESS")):
-            # crash-safe: _SUCCESS lands last; a kill mid-staging restages
-            with_bucket(docs, n_buckets).write.mode("overwrite") \
-                .partitionBy("bucket").parquet(staged)
-        bucketed = spark.read.parquet(staged)
-    else:
-        bucketed = with_bucket(docs, n_buckets)
+
+def run_with_lineage(
+    spark: SparkSession,
+    docs: DataFrame | FileInput,
+    out_dir: str,
+    n_buckets: int = 16,
+    fail_after: int | None = None,
+    parallelism: int = 1,
+    columns: tuple[str, ...] = ("spans", "markdown"),
+) -> list[int]:
+    """Extract ``docs`` bucket-by-bucket with lineage; returns the list of
+    buckets computed in THIS invocation (buckets with a ``done`` record are
+    skipped). ``fail_after`` aborts after k buckets — the kill/resume test
+    hook (SURVEY.md §5 property test 3).
+
+    ``docs`` is a DataFrame read from parquet files (``table_input``) or a
+    ``FileInput`` (``wireformat.wire_input`` for a directory of wire
+    shards). Bucket b is a fixed group of its files (``assign_groups``),
+    read alone and extracted with the group's statistics-proved
+    ``max_spans`` bound. A bucket with no files writes an empty output and a
+    0/0 record.
+
+    Resume assumes the SAME input, bucketing AND output projection: a
+    manifest (n_buckets + input file list with size/mtime + columns, and the
+    bucket→files assignment) is recorded on the first call; a later call
+    into the same ``out_dir`` with a different input, n_buckets or
+    ``columns`` raises instead of silently extracting a different file set
+    (or writing mixed-schema buckets)."""
+    from ..pipeline import extract_documents, normalize_columns
+
+    # fail fast (and canonicalize for the manifest signature) before any
+    # write — see pipeline.normalize_columns
+    columns = normalize_columns(columns)
+    source = docs if isinstance(docs, FileInput) else table_input(docs)
+    if not source.files:
+        raise ValueError("the input has no files")
+
+    os.makedirs(out_dir, exist_ok=True)
+    groups = _manifest_groups(out_dir, source.files, n_buckets, columns)
 
     # bucket ids are range(n_buckets) by construction — enumerating them from
     # the data would full-scan the corpus (a wasted pass at 10^12 rows)
@@ -211,8 +363,9 @@ def run_with_lineage(
 
     def do_bucket(b: int) -> int:
         t0 = time.time()
-        part = bucketed.where(F.col("bucket") == b).drop("bucket")
-        out = extract_documents(part, columns=columns)
+        group = groups[b]
+        out = extract_documents(source.read(group), columns=columns,
+                                max_spans=source.max_spans(group))
         obs = Observation()
         span_stat = (F.sum(F.size("spans")) if "spans" in out.columns
                      else F.lit(0))  # markdown-only runs carry no span count

@@ -458,29 +458,59 @@ def _read_spanstats(dir_path: str) -> dict[str, int] | None:
         return None
 
 
-def _wire_docs_over(spark: SparkSession, path: str,
+def list_shards(path: str) -> list[str]:
+    """The ``.cpw`` shard paths directly under ``path``, sorted; names that
+    Spark's file listing hides (leading ``.`` or ``_``) are skipped, as the
+    ``binaryFile`` scan skips them."""
+    return sorted(os.path.join(path, f) for f in os.listdir(path)
+                  if f.endswith(".cpw") and not f.startswith((".", "_")))
+
+
+def _shard_spans(shards: list[str]) -> dict[str, int] | None:
+    """{shard path: sidecar max ``n_spans``} for every shard, or None when
+    some shard's directory has no (complete, valid) ``_SPANSTATS`` naming
+    it — foreign or hand-built dirs carry no statistics."""
+    sidecars: dict[str, dict[str, int] | None] = {}
+    out = {}
+    for shard in shards:
+        d, name = os.path.split(shard)
+        if d not in sidecars:
+            sidecars[d] = _read_spanstats(d)
+        stats = sidecars[d]
+        if stats is None or name not in stats:
+            return None
+        out[shard] = stats[name]
+    return out
+
+
+def wire_max_spans(shards: list[str]) -> int | None:
+    """Upper bound on ``n_spans`` over ``shards`` from the ``_SPANSTATS``
+    sidecar, or None without complete statistics."""
+    stats = _shard_spans(shards)
+    return None if stats is None else max(stats.values(), default=0)
+
+
+def _wire_docs_over(spark: SparkSession, path: str | list[str],
                     min_spans: int) -> DataFrame | None:
     """Parsed `documents` rows restricted to shards that can contain a
     record with ``n_spans > min_spans``, per the ``_SPANSTATS`` sidecar —
     the wire twin of parquet row-group pruning for the oversized-doc
     routing predicate (pipeline.extract_documents' salted branch).
 
-    Returns None when the sidecar is absent/invalid or does not cover
-    every ``.cpw`` file present (foreign or hand-built dirs): the caller
-    must fall back to the full scan + filter, which is always correct.
-    Rows with NULL ``n_spans`` never qualify (they route to the small
-    branch), matching a strict ``n_spans > min_spans`` filter exactly."""
-    stats = _read_spanstats(path)
-    if stats is None:
-        return None
+    ``path`` is a shard directory or a list of shard paths. Returns None
+    when the sidecar is absent/invalid or does not cover every shard: the
+    caller must fall back to the full scan + filter, which is always
+    correct. Rows with NULL ``n_spans`` never qualify (they route to the
+    small branch), matching a strict ``n_spans > min_spans`` filter
+    exactly."""
     try:
-        present = sorted(
-            f for f in os.listdir(path) if f.endswith(".cpw"))
+        shards = list_shards(path) if isinstance(path, str) else path
     except OSError:
         return None
-    if any(f not in stats for f in present):
+    stats = _shard_spans(shards)
+    if stats is None:
         return None
-    keep = [os.path.join(path, f) for f in present if stats[f] > min_spans]
+    keep = [s for s in shards if stats[s] > min_spans]
     if not keep:
         # no shard can hold a qualifying record: hand back a provably-empty
         # frame (empty LocalRelation via limit(0)) and SAY so — the marker
@@ -490,10 +520,18 @@ def _wire_docs_over(spark: SparkSession, path: str,
         empty = spark.createDataFrame([], DOC_SCHEMA).limit(0)
         empty._chpdf_known_empty = True
         return empty
-    binary = (spark.read.format("binaryFile")
-              .option("pathGlobFilter", "*.cpw").load(keep)
-              .select("path", "content"))
-    return parse_wire_binary(binary)
+    return parse_wire_binary(_binary_scan(spark, keep))
+
+
+def wire_input(spark: SparkSession, path: str):
+    """The shard directory ``path`` as a ``lineage.FileInput``: its shard
+    list, ``read_wire`` over a group of shards, and the group's sidecar
+    ``n_spans`` bound — what ``run_with_lineage`` needs to make each bucket
+    a fixed group of shards."""
+    from .lineage import FileInput
+
+    return FileInput(list_shards(path), lambda group: read_wire(spark, group),
+                     wire_max_spans)
 
 
 def write_wire_shards(docs: DataFrame, out_dir: str, n_shards: int = 8) -> int:
@@ -626,7 +664,7 @@ def _stats_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                                 "n_bytes": [len(content)]})
 
 
-def _binary_scan(spark: SparkSession, path: str) -> DataFrame:
+def _binary_scan(spark: SparkSession, path: str | list[str]) -> DataFrame:
     return (spark.read.format("binaryFile")
             .option("pathGlobFilter", "*.cpw").load(path)
             .select("path", "content"))
@@ -641,8 +679,11 @@ def parse_wire_binary(binary_df: DataFrame) -> DataFrame:
     return binary_df.mapInArrow(_parse_arrow, DOC_SCHEMA)
 
 
-def read_wire(spark: SparkSession, path: str) -> DataFrame:
+def read_wire(spark: SparkSession, path: str | list[str]) -> DataFrame:
     """``binaryFile`` scan → parsed `documents` rows (doc_id, spans, n_spans).
+
+    ``path`` is a shard directory or an explicit list of shard paths (a
+    lineage bucket's file group); an empty list reads as no rows.
 
     Drop-in replacement for the parquet `documents` source: feeding this into
     ``pipeline.extract_documents`` is the full raw-bytes S1 lifecycle.
@@ -661,6 +702,8 @@ def read_wire(spark: SparkSession, path: str) -> DataFrame:
     identical rows by construction, full-scan fallback whenever the sidecar
     is absent or incomplete. Any transformation on the frame drops the hook
     (it is valid only for these exact parsed rows)."""
+    if isinstance(path, list) and not path:
+        return spark.createDataFrame([], DOC_SCHEMA)
     df = parse_wire_binary(_binary_scan(spark, path))
     df._chpdf_wire_over = (
         lambda min_spans: _wire_docs_over(spark, path, min_spans))

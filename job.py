@@ -13,8 +13,11 @@ on wide nested rows (heap must cover concurrent scan tasks × reader-batch
 bytes — BENCH/BASELINE.md). On a real cluster the same rule applies to
 ``--executor-memory``.
 
-Runs the flagship extraction with per-partition lineage; re-running after a
-kill resumes without recomputing completed buckets (sources/lineage.py).
+Runs the flagship extraction with per-partition lineage: each bucket is a
+fixed group of input files (parquet part files, or ``.cpw`` shards with
+``--input-format wire``), read alone, extracted and written as its own
+output partition; re-running after a kill resumes without recomputing
+completed buckets (sources/lineage.py).
 """
 
 from __future__ import annotations
@@ -32,7 +35,9 @@ def main() -> None:
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--cores", type=int, default=None)
     ap.add_argument("--no-lineage", action="store_true",
-                    help="single-pass write, no checkpoint/resume")
+                    help="single-pass write, no checkpoint/resume (needed "
+                         "for an Iceberg table: lineage buckets are groups "
+                         "of parquet files or wire shards)")
     ap.add_argument("--parallelism", type=int, default=1,
                     help="buckets submitted concurrently (Spark scheduler "
                          "interleaves the jobs; use when one bucket's tasks "
@@ -42,10 +47,6 @@ def main() -> None:
                          "subset of spans,markdown): projection pushdown "
                          "through the extraction UDF — a spans-only job "
                          "skips Arrow-shipping every markdown string")
-    ap.add_argument("--no-stage-input", action="store_true",
-                    help="skip the bucket-partitioned staging copy (use when "
-                         "the input is already bucketed, e.g. an Iceberg "
-                         "table with a bucket(doc_id, N) spec)")
     ap.add_argument("--input-format", choices=("table", "wire"),
                     default="table",
                     help="'table' = parquet/Iceberg documents table; 'wire' "
@@ -86,9 +87,9 @@ def main() -> None:
         wire_corrupt = {r["shard_path"]: r["n_corrupt"] for r in bad}
     else:
         docs = read_table(spark, args.input)
-    # fail fast with a readable message BEFORE the staging copy: a wrong
-    # table (e.g. a text corpus without spans) otherwise surfaces as an
-    # unresolved-column plan dump after a full wasted input pass
+    # fail fast with a readable message BEFORE any write: a wrong table
+    # (e.g. a text corpus without spans) otherwise surfaces as an
+    # unresolved-column plan dump from inside the first bucket's job
     missing = {"doc_id", "spans"} - set(docs.columns)
     if missing:
         sys.exit(f"job.py: input {args.input} lacks required column(s) "
@@ -99,8 +100,8 @@ def main() -> None:
     from ch_pdf_parse_spark.pipeline import normalize_columns
 
     try:
-        # validate BEFORE the lineage manifest and the full staging copy —
-        # a typo'd --columns must fail here, not one input pass later
+        # validate BEFORE the lineage manifest — a typo'd --columns must
+        # fail here, not after a bucket's extraction
         cols = normalize_columns(
             tuple(c.strip() for c in args.columns.split(",") if c.strip()))
     except ValueError as e:
@@ -111,8 +112,8 @@ def main() -> None:
             # parse + kernel in one mapInArrow, 1.8× — parsed spans never
             # re-cross the JVM boundary; output pinned row-identical to
             # extract_documents(read_wire(...)) in tests/test_wire_fused).
-            # Lineage mode keeps the composable path: its bucket jobs
-            # filter the parsed documents rows by doc_id hash.
+            # Lineage mode keeps the composable path: each bucket parses
+            # its own group of shards (read_wire over a shard list).
             from ch_pdf_parse_spark.sources.wireformat import extract_wire
 
             write_table(extract_wire(spark, args.input, columns=cols),
@@ -123,9 +124,14 @@ def main() -> None:
         # parquet count() is footer-metadata only — no second data pass
         n_docs = read_table(spark, args.output).count()
     else:
+        if args.input_format == "wire":
+            # read_wire's frame lists no input files: hand the lineage
+            # runner the shard list and a per-group reader explicitly
+            from ch_pdf_parse_spark.sources.wireformat import wire_input
+
+            docs = wire_input(spark, args.input)
         computed = run_with_lineage(spark, docs, args.output,
                                     n_buckets=args.buckets,
-                                    stage_input=not args.no_stage_input,
                                     parallelism=args.parallelism,
                                     columns=cols)
         # doc totals come from the lineage records (observed per bucket while
