@@ -159,8 +159,12 @@ def run_extraction_wire(cores: int, corpus_path: str, runs: int = 2,
     kernel in ONE mapInArrow — only shard bytes in, records/markdown out;
     measured 1.8× at 40k docs, closing the wire path's gap to the parquet
     flagship)."""
+    from ch_pdf_parse_spark import constants as C
     from ch_pdf_parse_spark.pipeline import extract_documents
-    from ch_pdf_parse_spark.sources.wireformat import extract_wire, read_wire
+    from ch_pdf_parse_spark.sources.wireformat import (extract_wire,
+                                                       list_shards, read_wire,
+                                                       wire_docs_over,
+                                                       wire_max_spans)
 
     wire_dir = wire_shards_dir(corpus_path)
     # one ~8 MB shard per task: binaryFile packs whole files into partitions
@@ -175,9 +179,15 @@ def run_extraction_wire(cores: int, corpus_path: str, runs: int = 2,
             _run(extract_wire(spark, wire_dir).limit(2048))  # warmup
             return _best_stable(lambda: _run(extract_wire(spark, wire_dir)),
                                 runs_min=runs)
-        docs = read_wire(spark, wire_dir)
+        # both routing branches read one shard list, taken once; the
+        # sidecar bound drops the salted branch when no doc can reach it
+        shards = list_shards(wire_dir)
+        docs = read_wire(spark, shards)
+        route = {"max_spans": wire_max_spans(shards),
+                 "oversized": wire_docs_over(spark, shards,
+                                             C.SALT_SPAN_THRESHOLD)}
         _run(extract_documents(docs.limit(2048)))  # warmup
-        return _best_stable(lambda: _run(extract_documents(docs)),
+        return _best_stable(lambda: _run(extract_documents(docs, **route)),
                             runs_min=runs)
     finally:
         spark.stop()

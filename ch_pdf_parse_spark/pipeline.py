@@ -213,6 +213,7 @@ def extract_documents(
     salt_threshold: int = C.SALT_SPAN_THRESHOLD,
     columns: tuple[str, ...] = ("spans", "markdown"),
     max_spans: int | None = None,
+    oversized: DataFrame | None = None,
 ) -> DataFrame:
     """End-to-end extraction. Zero-shuffle ``mapInArrow`` for regular docs;
     page-salted two-stage aggregation for the oversized long tail.
@@ -230,7 +231,14 @@ def extract_documents(
     ``salt_threshold`` it proves the salted branch empty, and only the
     ``mapInArrow`` branch is planned: ``PropagateEmptyRelation`` cannot fold
     the empty ``FlatMapGroupsInPandas`` subtree, whose shuffle jobs would
-    otherwise still run."""
+    otherwise still run.
+
+    ``oversized`` is the salted branch's source: a frame that holds every
+    row of ``docs`` that may exceed ``salt_threshold`` (extra rows are
+    filtered out), such as ``sources.wireformat.wire_docs_over``, which
+    reads only the wire shards whose statistics allow such a row. Without
+    it the salted branch filters ``docs`` itself, which for a source that
+    Catalyst cannot prune (a wire parse) means a second full read."""
     from functools import partial
 
     from .packaging import ensure_on_executors
@@ -246,14 +254,6 @@ def extract_documents(
     # min/max row-group pruning makes the second pass near-free (at 10^12 docs
     # the salted long tail is <0.1% of files). Fallback: compute size(spans).
     n = F.col("n_spans") if "n_spans" in docs.columns else F.size("spans")
-    # Source-side routing pushdown (round 7): a source whose scan is opaque
-    # to Catalyst (the wire parse lives inside a mapInArrow) can offer the
-    # oversized predicate itself — `_chpdf_wire_over(threshold)` returns the
-    # parsed rows of only the shards whose sidecar max n_spans exceeds the
-    # threshold (sources/wireformat.py), or None to decline. Without it the
-    # big branch re-executes the FULL scan+parse to keep its (usually zero)
-    # rows. Identical rows either way; the hook only prunes the second pass.
-    wire_over = getattr(docs, "_chpdf_wire_over", None)
     docs = docs.select("doc_id", "spans")
     # null spans rows must route somewhere (n is null ⇒ BOTH branch
     # predicates are unknown and the doc would silently vanish): they take
@@ -263,19 +263,12 @@ def extract_documents(
     if max_spans is not None and max_spans <= salt_threshold:
         return small_out
 
-    big = None
-    if wire_over is not None:
-        pruned = wire_over(salt_threshold)
-        if pruned is not None:
-            if getattr(pruned, "_chpdf_known_empty", False):
-                # the source proved NO record can route big: the salted
-                # branch contributes zero rows, so the union is the small
-                # branch — skip planning the empty explode/groupBy subtree
-                return small_out
-            big = (pruned.where(F.col("n_spans") > salt_threshold)
-                   .select("doc_id", "spans"))
-    if big is None:
+    if oversized is None:
         big = docs.where(n > salt_threshold)
+    else:
+        n_big = (F.col("n_spans") if "n_spans" in oversized.columns
+                 else F.size("spans"))
+        big = oversized.where(n_big > salt_threshold).select("doc_id", "spans")
 
     off = F.coalesce(F.col("s.offset"), F.lit(0))  # null geometry ≡ origin
     exploded = (

@@ -21,9 +21,12 @@ retry but no built-in *job-level* resume. This module provides it:
   ``_SPANSTATS`` sidecar). When the bound is at or below the salt threshold
   the salted oversized-doc branch, and its shuffle jobs, are not planned;
 * once the bucket's data is committed, its lineage record ``(bucket,
-  doc_count, span_count, wall_ms, status)`` lands as its own one-row parquet
-  file: written under a dot-prefixed temp name, then ``os.replace``d into
-  ``_lineage/``, so a record is either whole or absent;
+  doc_count, span_count, wall_ms, status, corrupt)`` lands as its own
+  one-row parquet file: written under a dot-prefixed temp name, then
+  ``os.replace``d into ``_lineage/``, so a record is either whole or
+  absent. ``corrupt`` maps each of the bucket's wire shards with corrupt
+  records to their count, as the bucket's own parse counted them, so the
+  counts survive a resume;
 * on (re)start, the buckets still to do are ``range(n_buckets)`` minus the
   buckets with a ``done`` record, read on the driver with pyarrow — a killed
   run resumes exactly where it stopped, never recomputing a completed
@@ -63,13 +66,15 @@ LINEAGE_SCHEMA = T.StructType([
     T.StructField("span_count", T.LongType()),
     T.StructField("wall_ms", T.LongType()),
     T.StructField("status", T.StringType()),
+    # {shard path: corrupt records} for the bucket's wire shards with any
+    T.StructField("corrupt", T.MapType(T.StringType(), T.LongType())),
 ])
 
 # v1 hashed bare names; v2 adds [size, mtime_ns]; v3 adds the output column
 # projection (resuming with a different --columns would silently mix schemas
 # across buckets); v4 makes buckets file groups, whose assignment the
-# manifest records
-SIG_VERSION = 4
+# manifest records; v5 adds each bucket's corrupt counts to its record
+SIG_VERSION = 5
 
 
 def lineage_path(out_dir: str) -> str:
@@ -221,12 +226,17 @@ def _is_stored_column(df: DataFrame, name: str) -> bool:
 class FileInput:
     """An input that is a fixed list of files, as ``run_with_lineage``
     needs it: ``files`` (the identity and grouping unit), ``read(group)``
-    (the documents of exactly those files) and ``max_spans(group)`` (an
-    ``n_spans`` upper bound proved from statistics, or None)."""
+    (the documents of exactly those files), ``max_spans(group)`` (an
+    ``n_spans`` upper bound proved from statistics, or None),
+    ``oversized(group)`` (the salted branch's source, see
+    ``pipeline.extract_documents``, or None) and ``corrupt(group)`` (the
+    group's ``{file: corrupt records}``, read after its extraction ran)."""
 
     files: list[str]
     read: Callable[[list[str]], DataFrame]
     max_spans: Callable[[list[str]], int | None]
+    oversized: Callable[[list[str]], DataFrame | None] = lambda group: None
+    corrupt: Callable[[list[str]], dict[str, int]] = lambda group: {}
 
 
 def table_input(docs: DataFrame) -> FileInput:
@@ -365,7 +375,8 @@ def run_with_lineage(
         t0 = time.time()
         group = groups[b]
         out = extract_documents(source.read(group), columns=columns,
-                                max_spans=source.max_spans(group))
+                                max_spans=source.max_spans(group),
+                                oversized=source.oversized(group))
         obs = Observation()
         span_stat = (F.sum(F.size("spans")) if "spans" in out.columns
                      else F.lit(0))  # markdown-only runs carry no span count
@@ -377,7 +388,8 @@ def run_with_lineage(
         # overwrite), never records a bucket it didn't finish
         _append_record(out_dir, {
             "bucket": b, "doc_count": stats["d"], "span_count": stats["s"] or 0,
-            "wall_ms": int((time.time() - t0) * 1000), "status": "done"})
+            "wall_ms": int((time.time() - t0) * 1000), "status": "done",
+            "corrupt": list(source.corrupt(group).items())})
         return b
 
     computed: list[int] = []

@@ -43,24 +43,29 @@ Why this shape scales to 10^12 documents:
   identical shards (idempotent overwrite; tmp + atomic rename per file
   keeps retried/speculative tasks from publishing partial shards).
 * **Directory-level statistics (round 7).** The writer publishes a
-  ``_SPANSTATS`` sidecar (per-shard max non-null ``n_spans``,
+  ``_SPANSTATS`` sidecar (per-shard max non-null ``n_spans`` and byte size,
   crc32-footed, deterministic bytes) — the wire analog of parquet
-  row-group min/max stats. ``extract_documents``' oversized-doc routing
-  uses it to scan only the shards that can contain a doc above the salt
-  threshold (<0.1% of files at 10^12 docs) instead of re-parsing the
-  whole corpus; readers of dirs without a (complete, valid) sidecar fall
+  row-group min/max stats. A caller routing oversized docs
+  (``pipeline.extract_documents``' ``max_spans=``/``oversized=``) uses it
+  to scan only the shards that can contain a doc above the salt threshold
+  (<0.1% of files at 10^12 docs) instead of re-parsing the whole corpus;
+  readers of dirs without a (complete, valid, size-matching) sidecar fall
   back to the full scan.
-* **Decode cost is the honest floor.** Parsing is per-record Python over raw
-  bytes inside ``mapInArrow`` (the parser emits flat columns and builds the
-  Arrow batch directly — the pandas object-column variant measured ~2×
-  slower) — exactly the per-document decode any raw-PDF ingest pays (the
-  reference pays PyMuPDF per page); Spark-side batching is per-shard, and
-  everything downstream of the parse is the existing zero-shuffle Arrow
-  kernel. The per-shard audit (``wire_scan_stats``) is NOT a second decode:
-  it walks framing + CRC + structure only, skipping string materialization
-  (``scan_shard_stats``). The parsed rows carry ``n_spans`` so the
-  oversized-doc salting route (pipeline.extract_documents) still sees its
-  stored stats column.
+* **Decode once.** Each shard is parsed once, per-record, inside
+  ``mapInArrow``: by the C parser (``native.parse_shard_batch``) when it
+  loads, else by the Python semantics (``_parse_shard_columnar``, which
+  emits flat columns and builds the Arrow batch directly — the pandas
+  object-column variant measured ~2× slower). That is exactly the
+  per-document decode any raw-PDF ingest pays (the reference pays PyMuPDF
+  per page); everything downstream of the parse is the existing
+  zero-shuffle Arrow kernel. Corrupt records are counted by the same
+  parse: ``_parse_one`` returns the count with the batch, and the
+  ``mapInArrow`` bodies add ``{shard_path: n_corrupt}`` to an accumulator
+  the caller passes in (``corrupt_accumulator``, merged by max per shard,
+  so a retried task or a shard parsed by both routing branches cannot
+  double-count). No audit pass reads the shards a second time. The parsed
+  rows carry ``n_spans`` so the oversized-doc salting route still sees
+  its stored stats column.
 """
 
 from __future__ import annotations
@@ -68,9 +73,10 @@ from __future__ import annotations
 import os
 import struct
 import zlib
-from typing import Iterable, Iterator
+from typing import Iterable
 
 import pandas as pd
+from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -170,19 +176,21 @@ class _Columns:
 
 
 def _parse_shard_columnar(data: bytes) -> _Columns:
-    """Single-pass framing + payload decode into flat columns.
+    """Single-pass framing + payload decode into flat columns: the wire
+    format's one Python semantics. ``native.parse_shard_batch`` is its C
+    twin (same records, same ``corrupt`` count; differential-fuzzed in
+    tests/test_wire_native.py).
 
     Corruption contract: a record whose CRC or structure fails is skipped
     (its partial appends rolled back) by scanning to the next SYNC marker; a
     truncated tail / missing footer adds one corrupt count and stops. Never
-    raises on hostile bytes.
+    raises on hostile bytes. ``corrupt`` is the count the job reports per
+    shard.
 
     The span-field loop is unrolled (kind/text/media_ref written out
     instead of a `for lst in (kinds, texts, medias)` tuple loop) with
     `list.append` bound to locals: measured 1.06× single-thread over the
-    looped twin in a quiet window (tools/bench_wire_parse.py, which keeps
-    the looped variant as the pinned-identical baseline; a contended
-    window showed up to 1.5× but the quiet number is the honest one)."""
+    looped form in a quiet window."""
     out = _Columns()
     if data[:4] != MAGIC:
         out.corrupt = 1
@@ -303,127 +311,27 @@ def _parse_shard_columnar(data: bytes) -> _Columns:
     return out
 
 
-def scan_shard_stats(data: bytes) -> tuple[int, int]:
-    """(n_records, n_corrupt) via framing + CRC + structure walk ONLY.
-
-    The audit twin of `_parse_shard_columnar`: identical record acceptance
-    (same framing, CRC, length/structure checks, resync, footer rules) but
-    string bytes are bounds-checked and SKIPPED, never decoded — so the
-    per-shard audit pass costs length arithmetic instead of materializing
-    every document's text a second time (the full decode is the wire path's
-    dominant cost; doubling it at 10^12 docs doubles ingest).
-
-    One deliberate divergence: a CRC-valid payload whose strings are invalid
-    UTF-8 counts as valid here but corrupt in the full parser. Unreachable
-    from bit corruption (the CRC covers the payload, and our encoder writes
-    only valid UTF-8) — it needs a buggy foreign encoder. The agreement is
-    property-pinned on hostile bytes in tests/test_wire_codec.py."""
-    n_records = corrupt = 0
-    if data[:4] != MAGIC:
-        return 0, 1
-    u32 = _U32.unpack_from
-    find = data.find
-    end = len(data)
-    i = 4
-    while i < end:
-        head = data[i:i + 4]
-        if head == FOOTER_MAGIC:
-            if corrupt == 0 and (
-                    end - i < 8 or u32(data, i + 4)[0] != n_records):
-                corrupt += 1
-            return n_records, corrupt
-        if head == SYNC and end - i >= 8:
-            try:
-                plen = u32(data, i + 4)[0]
-                p0 = i + 8
-                pend = p0 + plen
-                if pend + 4 > end:
-                    raise ValueError("bad record length")
-                if u32(data, pend)[0] != zlib.crc32(data[p0:pend]):
-                    raise ValueError("crc mismatch")
-                pos = p0
-                # doc_id
-                if pos + 4 > pend:
-                    raise ValueError("truncated")
-                n = u32(data, pos)[0]
-                pos += 4
-                if n != NULL32:
-                    if pos + n > pend:
-                        raise ValueError("bad string length")
-                    pos += n
-                if pos + 4 > pend:
-                    raise ValueError("truncated")
-                n_spans = u32(data, pos)[0]
-                pos += 4
-                if n_spans != NULL32:
-                    if n_spans > plen:  # a span is ≥15 bytes; sanity bound
-                        raise ValueError("bad span count")
-                    for _ in range(n_spans):
-                        for _f in range(3):  # kind, text, media_ref
-                            if pos + 4 > pend:
-                                raise ValueError("truncated")
-                            n = u32(data, pos)[0]
-                            pos += 4
-                            if n != NULL32:
-                                if pos + n > pend:
-                                    raise ValueError("bad string length")
-                                pos += n
-                        if pos + 5 > pend:
-                            raise ValueError("truncated")
-                        pos += 5
-                if pos != pend:
-                    raise ValueError("trailing bytes in payload")
-                n_records += 1
-                i = pend + 4
-                continue
-            except ValueError:
-                pass
-        corrupt += 1
-        nxt = find(SYNC, i + (4 if head == SYNC else 1))
-        if nxt < 0:
-            return n_records, corrupt
-        i = nxt
-    return n_records, corrupt + 1  # ran off the end without a footer
-
-
-def parse_shard(data: bytes) -> tuple[list[tuple[str | None, list | None]], int]:
-    """Decode one shard → (records, n_corrupt) in row form (tests/tools).
-
-    Thin zip over the columnar parser — one framing/CRC/resync codepath."""
-    cols = _parse_shard_columnar(data)
-    records: list[tuple[str | None, list | None]] = []
-    j = 0
-    for d, c in zip(cols.doc_ids, cols.counts):
-        if c is None:
-            records.append((d, None))
-        else:
-            records.append((d, [
-                {"kind": cols.kinds[j + t], "text": cols.texts[j + t],
-                 "media_ref": cols.medias[j + t], "offset": cols.offs[j + t]}
-                for t in range(c)]))
-            j += c
-    return records, cols.corrupt
-
-
 # ---------------------------------------------------------------- Spark IO
 
 SPANSTATS_NAME = "_SPANSTATS"
-_SPANSTATS_MAGIC = b"CPWS1\n"
+_SPANSTATS_MAGIC = b"CPWS2\n"
 
 _WRITE_STATS_SCHEMA = T.StructType(
     STATS_SCHEMA.fields + [T.StructField("max_spans", T.IntegerType())])
 
 
 def _write_spanstats(out_dir: str, entries) -> None:
-    """Per-shard max ``n_spans`` sidecar (round 7, guide §6): the wire
-    format's analog of parquet column min/max statistics. ``entries`` is
-    [(shard filename, max non-null span count, -1 if none)]. Deterministic
-    bytes (sorted lines), crc32-footed so a corrupted sidecar degrades to
-    "no statistics" (full scan), never to wrong pruning."""
-    names = [n for n, _ in entries]
-    if any("\t" in n or "\n" in n for n in names):
+    """Per-shard ``n_spans`` sidecar (round 7, guide §6): the wire format's
+    analog of parquet column min/max statistics. ``entries`` is
+    [(shard filename, max non-null span count or -1 if none, shard byte
+    size)]. The size lets a reader detect a shard rewritten under an old
+    sidecar. Deterministic bytes (sorted lines), crc32-footed so a
+    corrupted sidecar degrades to "no statistics" (full scan), never to
+    wrong pruning."""
+    if any("\t" in n or "\n" in n for n, _, _ in entries):
         return  # un-encodable filenames: skip stats, readers fall back
-    body = "".join(f"{n}\t{mx}\n" for n, mx in sorted(entries)).encode("utf-8")
+    body = "".join(f"{n}\t{mx}\t{size}\n"
+                   for n, mx, size in sorted(entries)).encode("utf-8")
     data = _SPANSTATS_MAGIC + body + b"crc:%08x\n" % zlib.crc32(body)
     path = os.path.join(out_dir, SPANSTATS_NAME)
     tmp = path + ".tmp"
@@ -432,10 +340,11 @@ def _write_spanstats(out_dir: str, entries) -> None:
     os.replace(tmp, path)
 
 
-def _read_spanstats(dir_path: str) -> dict[str, int] | None:
-    """{shard filename: max n_spans} from the sidecar, or None when it is
-    absent, unreadable, or fails its crc — every failure means "no
-    statistics", so pruning silently degrades to the full scan."""
+def _read_spanstats(dir_path: str) -> dict[str, tuple[int, int]] | None:
+    """{shard filename: (max n_spans, n_bytes)} from the sidecar, or None
+    when it is absent, unreadable, of an older format, or fails its crc —
+    every failure means "no statistics", so pruning degrades to the full
+    scan."""
     try:
         with open(os.path.join(dir_path, SPANSTATS_NAME), "rb") as f:
             data = f.read()
@@ -447,12 +356,10 @@ def _read_spanstats(dir_path: str) -> dict[str, int] | None:
             return None
         if int(tail[:-1], 16) != zlib.crc32(body):
             return None
-        out: dict[str, int] = {}
+        out: dict[str, tuple[int, int]] = {}
         for line in body.decode("utf-8").splitlines():
-            name, sep2, mx = line.rpartition("\t")
-            if not sep2:
-                return None
-            out[name] = int(mx)
+            name, mx, size = line.split("\t")
+            out[name] = (int(mx), int(size))
         return out
     except (OSError, ValueError, UnicodeDecodeError):
         return None
@@ -469,8 +376,10 @@ def list_shards(path: str) -> list[str]:
 def _shard_spans(shards: list[str]) -> dict[str, int] | None:
     """{shard path: sidecar max ``n_spans``} for every shard, or None when
     some shard's directory has no (complete, valid) ``_SPANSTATS`` naming
-    it — foreign or hand-built dirs carry no statistics."""
-    sidecars: dict[str, dict[str, int] | None] = {}
+    it — foreign or hand-built dirs carry no statistics — or when a shard's
+    size differs from the one recorded: the shard was rewritten after the
+    sidecar, whose bound no longer covers it."""
+    sidecars: dict[str, dict[str, tuple[int, int]] | None] = {}
     out = {}
     for shard in shards:
         d, name = os.path.split(shard)
@@ -479,59 +388,70 @@ def _shard_spans(shards: list[str]) -> dict[str, int] | None:
         stats = sidecars[d]
         if stats is None or name not in stats:
             return None
-        out[shard] = stats[name]
+        mx, size = stats[name]
+        try:
+            if os.path.getsize(shard) != size:
+                return None
+        except OSError:
+            return None
+        out[shard] = mx
     return out
 
 
 def wire_max_spans(shards: list[str]) -> int | None:
     """Upper bound on ``n_spans`` over ``shards`` from the ``_SPANSTATS``
-    sidecar, or None without complete statistics."""
+    sidecar, or None without complete statistics. Pass it to
+    ``pipeline.extract_documents(max_spans=)``."""
     stats = _shard_spans(shards)
     return None if stats is None else max(stats.values(), default=0)
 
 
-def _wire_docs_over(spark: SparkSession, path: str | list[str],
-                    min_spans: int) -> DataFrame | None:
-    """Parsed `documents` rows restricted to shards that can contain a
-    record with ``n_spans > min_spans``, per the ``_SPANSTATS`` sidecar —
-    the wire twin of parquet row-group pruning for the oversized-doc
-    routing predicate (pipeline.extract_documents' salted branch).
+def wire_docs_over(spark: SparkSession, shards: list[str],
+                   min_spans: int) -> DataFrame | None:
+    """Parsed `documents` rows of the shards that can contain a record with
+    ``n_spans > min_spans``, per the ``_SPANSTATS`` sidecar: the wire twin of
+    parquet row-group pruning, for ``pipeline.extract_documents(oversized=)``
+    with ``salt_threshold=min_spans``. A mapInArrow parse is opaque to
+    Catalyst, so without it the salted branch re-scans and re-parses every
+    shard to find the (<0.1%, usually zero) oversized docs.
 
-    ``path`` is a shard directory or a list of shard paths. Returns None
-    when the sidecar is absent/invalid or does not cover every shard: the
-    caller must fall back to the full scan + filter, which is always
-    correct. Rows with NULL ``n_spans`` never qualify (they route to the
-    small branch), matching a strict ``n_spans > min_spans`` filter
-    exactly."""
-    try:
-        shards = list_shards(path) if isinstance(path, str) else path
-    except OSError:
-        return None
+    Returns None when the sidecar is absent, invalid, stale or does not
+    cover every shard: the caller then leaves ``oversized`` unset and the
+    salted branch filters the full read, which is always correct. Rows with
+    NULL ``n_spans`` never qualify (they route to the small branch),
+    matching a strict ``n_spans > min_spans`` filter exactly."""
     stats = _shard_spans(shards)
     if stats is None:
         return None
-    keep = [s for s in shards if stats[s] > min_spans]
-    if not keep:
-        # no shard can hold a qualifying record: hand back a provably-empty
-        # frame (empty LocalRelation via limit(0)) and SAY so — the marker
-        # lets extract_documents drop its salted branch and the union
-        # altogether instead of planning empty exchanges under the
-        # FlatMapGroupsInPandas nodes PropagateEmptyRelation cannot fold
-        empty = spark.createDataFrame([], DOC_SCHEMA).limit(0)
-        empty._chpdf_known_empty = True
-        return empty
-    return parse_wire_binary(_binary_scan(spark, keep))
+    return read_wire(spark, [s for s in shards if stats[s] > min_spans])
 
 
 def wire_input(spark: SparkSession, path: str):
     """The shard directory ``path`` as a ``lineage.FileInput``: its shard
-    list, ``read_wire`` over a group of shards, and the group's sidecar
-    ``n_spans`` bound — what ``run_with_lineage`` needs to make each bucket
-    a fixed group of shards."""
+    list (taken once), ``read_wire`` over a group of shards, the group's
+    sidecar ``n_spans`` bound and pruned oversized-doc source, and the
+    corrupt counts of the group's last read — what ``run_with_lineage``
+    needs to make each bucket a fixed group of shards and to record its
+    corrupt counts.
+
+    Each read of a group gets its own accumulator, so a bucket's counts are
+    exactly its own shards' without matching paths: ``binaryFile`` spells a
+    path as a ``file:`` URI that is not percent-encoded, which no plain-path
+    comparison gets right for every directory name."""
+    from .. import constants as C
     from .lineage import FileInput
 
-    return FileInput(list_shards(path), lambda group: read_wire(spark, group),
-                     wire_max_spans)
+    accs: dict[tuple[str, ...], object] = {}
+
+    def read(group: list[str]) -> DataFrame:
+        acc = accs[tuple(group)] = corrupt_accumulator(spark)
+        return read_wire(spark, group, corrupt=acc)
+
+    return FileInput(
+        list_shards(path), read, wire_max_spans,
+        oversized=lambda group: wire_docs_over(spark, group,
+                                               C.SALT_SPAN_THRESHOLD),
+        corrupt=lambda group: accs[tuple(group)].value)
 
 
 def write_wire_shards(docs: DataFrame, out_dir: str, n_shards: int = 8) -> int:
@@ -542,10 +462,10 @@ def write_wire_shards(docs: DataFrame, out_dir: str, n_shards: int = 8) -> int:
     cluster points this at shared storage — the tmp+rename publish keeps
     retried tasks idempotent either way).
 
-    Also publishes the ``_SPANSTATS`` sidecar (per-shard max ``n_spans`` —
-    see ``_write_spanstats``). The driver-side collect behind it is one row
-    per shard: the same O(n_shards) driver bound every file listing of the
-    directory already pays. A sidecar left by an earlier write is removed
+    Also publishes the ``_SPANSTATS`` sidecar (per-shard max ``n_spans``
+    and byte size — see ``_write_spanstats``). The driver-side collect
+    behind it is one row per shard: the same O(n_shards) driver bound every
+    file listing of the directory already pays. A sidecar left by an earlier write is removed
     first, so a crash before the new one lands leaves no statistics (full
     scan), never stale ones that prune away the new shards' oversized docs.
     """
@@ -595,7 +515,8 @@ def write_wire_shards(docs: DataFrame, out_dir: str, n_shards: int = 8) -> int:
     stats = sharded.groupBy("shard").applyInPandas(_write, _WRITE_STATS_SCHEMA)
     rows = stats.collect()
     _write_spanstats(out_dir, [(os.path.basename(r["shard_path"]),
-                                int(r["max_spans"])) for r in rows])
+                                int(r["max_spans"]), int(r["n_bytes"]))
+                               for r in rows])
     return len(rows)
 
 
@@ -635,33 +556,56 @@ def _doc_batch(cols: _Columns):
 
 
 def _parse_one(content: bytes):
-    """One shard → documents RecordBatch: native C parser when available
-    (round 7 — framing/CRC/UTF-8 walk + Arrow buffer build at C speed,
-    ~10× the Python walk; differential-fuzzed in tests/test_wire_native),
-    Python twin otherwise."""
+    """One shard → (documents RecordBatch, n_corrupt): native C parser when
+    available (round 7 — framing/CRC/UTF-8 walk + Arrow buffer build at C
+    speed, ~10× the Python walk; differential-fuzzed in
+    tests/test_wire_native), ``_parse_shard_columnar`` otherwise."""
     from .. import native
 
     got = native.parse_shard_batch(content)
     if got is not None:
-        return got[0]
-    return _doc_batch(_parse_shard_columnar(content))
+        return got
+    cols = _parse_shard_columnar(content)
+    return _doc_batch(cols), cols.corrupt
 
 
-def _parse_arrow(it):
+class _MaxDict(AccumulatorParam):
+    """Accumulator of {shard path: n_corrupt}, merged by max per key: a
+    retried or speculative task, or a shard parsed by both routing branches,
+    reports the same count again, and max makes that a no-op."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, a, b):
+        for k, v in b.items():
+            if v > a.get(k, 0):
+                a[k] = v
+        return a
+
+
+def corrupt_accumulator(spark: SparkSession):
+    """A fresh per-shard corrupt-record accumulator for ``read_wire`` /
+    ``extract_wire``'s ``corrupt=``. Its ``value`` is read on the driver
+    after an action: ``{shard path: n_corrupt}`` for every shard with at
+    least one corrupt record, the path spelled as ``binaryFile`` reports it
+    (a ``file:`` URI)."""
+    return spark.sparkContext.accumulator({}, _MaxDict())
+
+
+def _parse_batches(it, corrupt=None):
+    """(path, content) Arrow batches → one documents batch per shard. Each
+    shard's nonzero corrupt count is added to the ``corrupt`` accumulator,
+    when one is given."""
     for batch in it:
-        d = batch.to_pydict()
-        for content in d["content"]:
-            yield _parse_one(bytes(content))
-
-
-def _stats_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        for path, content in zip(pdf["path"], pdf["content"]):
-            n_records, n_corrupt = scan_shard_stats(bytes(content))
-            yield pd.DataFrame({"shard_path": [path],
-                                "n_records": [n_records],
-                                "n_corrupt": [n_corrupt],
-                                "n_bytes": [len(content)]})
+        contents = batch.column("content").to_pylist()
+        paths = (batch.column("path").to_pylist() if corrupt is not None
+                 else [None] * len(contents))
+        for path, content in zip(paths, contents):
+            docs, n_corrupt = _parse_one(content)
+            if n_corrupt and corrupt is not None:
+                corrupt.add({path: n_corrupt})
+            yield docs
 
 
 def _binary_scan(spark: SparkSession, path: str | list[str]) -> DataFrame:
@@ -670,16 +614,22 @@ def _binary_scan(spark: SparkSession, path: str | list[str]) -> DataFrame:
             .select("path", "content"))
 
 
-def parse_wire_binary(binary_df: DataFrame) -> DataFrame:
+def parse_wire_binary(binary_df: DataFrame, corrupt=None) -> DataFrame:
     """(path, content) binary rows → parsed `documents` rows.
 
     Works on any DataFrame with a ``content`` binary column — the batch
     ``binaryFile`` scan, a streaming ``readStream.format("binaryFile")``
-    micro-batch, or shard bytes landed through any other source."""
-    return binary_df.mapInArrow(_parse_arrow, DOC_SCHEMA)
+    micro-batch, or shard bytes landed through any other source. With a
+    ``corrupt`` accumulator (``corrupt_accumulator``) it also needs the
+    ``path`` column, which keys the per-shard counts."""
+    from functools import partial
+
+    return binary_df.mapInArrow(partial(_parse_batches, corrupt=corrupt),
+                                DOC_SCHEMA)
 
 
-def read_wire(spark: SparkSession, path: str | list[str]) -> DataFrame:
+def read_wire(spark: SparkSession, path: str | list[str],
+              corrupt=None) -> DataFrame:
     """``binaryFile`` scan → parsed `documents` rows (doc_id, spans, n_spans).
 
     ``path`` is a shard directory or an explicit list of shard paths (a
@@ -687,54 +637,57 @@ def read_wire(spark: SparkSession, path: str | list[str]) -> DataFrame:
 
     Drop-in replacement for the parquet `documents` source: feeding this into
     ``pipeline.extract_documents`` is the full raw-bytes S1 lifecycle.
-    Corrupt records are dropped per-record (see parse_shard); audit the drop
-    count with ``wire_scan_stats`` — same scan, stats projection.
+    Corrupt records are dropped per-record (see ``_parse_shard_columnar``);
+    the parse adds each shard's drop count to the ``corrupt`` accumulator
+    when one is passed (``corrupt_accumulator``).
 
-    Round 7: the returned frame carries a source-side routing-pushdown hook
-    (``_chpdf_wire_over``) that ``pipeline.extract_documents`` uses for its
-    oversized-doc branch: with the parquet source that branch's
-    ``n_spans > threshold`` predicate reaches the scan and row-group min/max
-    stats make the second pass near-free, but a mapInArrow parse is opaque
-    to Catalyst, so the wire source re-scanned and re-parsed EVERY shard to
-    find the (<0.1%, usually zero) oversized docs. The hook serves the same
-    predicate from the ``_SPANSTATS`` sidecar (``_wire_docs_over``),
-    scanning only shards whose max ``n_spans`` exceeds the threshold —
-    identical rows by construction, full-scan fallback whenever the sidecar
-    is absent or incomplete. Any transformation on the frame drops the hook
-    (it is valid only for these exact parsed rows)."""
+    A mapInArrow parse is opaque to Catalyst, so ``extract_documents`` over
+    this frame alone plans its salted branch as a second full scan and
+    parse. Take the shard list once (``list_shards``) and pass
+    ``max_spans=wire_max_spans(shards)`` and
+    ``oversized=wire_docs_over(spark, shards, salt_threshold)`` with
+    ``read_wire(spark, shards)``: the sidecar then drops the salted branch,
+    or limits its scan to the shards that can hold an oversized doc."""
     if isinstance(path, list) and not path:
         return spark.createDataFrame([], DOC_SCHEMA)
-    df = parse_wire_binary(_binary_scan(spark, path))
-    df._chpdf_wire_over = (
-        lambda min_spans: _wire_docs_over(spark, path, min_spans))
-    return df
+    return parse_wire_binary(_binary_scan(spark, path), corrupt=corrupt)
+
+
+def _stats_arrow(it):
+    import pyarrow as pa
+
+    for batch in it:
+        paths = batch.column("path").to_pylist()
+        for path, content in zip(paths, batch.column("content").to_pylist()):
+            docs, n_corrupt = _parse_one(content)
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([path], pa.string()),
+                 pa.array([docs.num_rows], pa.int32()),
+                 pa.array([n_corrupt], pa.int32()),
+                 pa.array([len(content)], pa.int64())],
+                STATS_SCHEMA.names)
 
 
 def wire_scan_stats(spark: SparkSession, path: str) -> DataFrame:
-    """Per-shard ingest audit: (shard_path, n_records, n_corrupt, n_bytes).
+    """Per-shard ingest stats: (shard_path, n_records, n_corrupt, n_bytes),
+    a projection of the same parse ``read_wire`` runs — it decodes every
+    shard in full. Jobs get the corrupt counts from their own read through
+    ``corrupt=`` instead; this is for a standalone look at a directory."""
+    return _binary_scan(spark, path).mapInArrow(_stats_arrow, STATS_SCHEMA)
 
-    The per-partition metrics row the north rule's lineage story wants for
-    ingest: a nonzero ``n_corrupt`` names the exact shard to re-fetch."""
-    return _binary_scan(spark, path).mapInPandas(_stats_batches, STATS_SCHEMA)
 
-
-def _fused_extract_arrow(it, columns):
+def _fused_extract_arrow(it, columns, corrupt=None):
     """binary (path, content) batches → extraction OUTPUT batches: the
     shard parse chains straight into the extraction kernel inside one
     Python worker pass."""
     from ..pipeline import _extract_arrow
 
-    def parsed(binary_it):
-        for batch in binary_it:
-            for content in batch.column("content").to_pylist():
-                yield _parse_one(bytes(content))
-
-    yield from _extract_arrow(parsed(it), columns=columns)
+    yield from _extract_arrow(_parse_batches(it, corrupt), columns=columns)
 
 
 def extract_wire_fused(binary_df: DataFrame,
-                       columns: tuple[str, ...] = ("spans", "markdown")
-                       ) -> DataFrame:
+                       columns: tuple[str, ...] = ("spans", "markdown"),
+                       corrupt=None) -> DataFrame:
     """Fused raw-bytes lifecycle: shard bytes → parse → extraction kernel in
     ONE ``mapInArrow`` stage.
 
@@ -746,18 +699,18 @@ def extract_wire_fused(binary_df: DataFrame,
     2× gap vs the parquet flagship (BENCH/BASELINE.md: the identity
     round-trip of the spans column alone costs more than the whole
     extraction job). Here the parser's columnar output feeds the kernel's
-    Arrow consumer directly in the same worker; only shard bytes cross in
-    and only (records, markdown) cross out — the decode-once shape a
-    100 TB raw-bytes ingest needs.
+    Arrow consumer directly in the same worker; only shard bytes and paths
+    cross in and only (records, markdown) cross out — the decode-once shape
+    a 100 TB raw-bytes ingest needs.
 
     Semantics: identical to ``extract_documents(read_wire(...))`` — pinned
     by test (including corrupt-shard per-record drops and null spans).
     Execution differences, by design: no oversized-doc salting (a document
     lives inside one wire record, so the salt path's cross-page shuffle
     cannot apply; a pathological multi-MB doc makes one long task — bound
-    oversized records at SHARD-WRITE time if that matters), and
-    ``wire_scan_stats`` remains the corruption audit (same scan, stats
-    projection)."""
+    oversized records at SHARD-WRITE time if that matters). Corrupt records
+    are counted by this same parse into the ``corrupt`` accumulator, when
+    one is passed (``corrupt_accumulator``)."""
     from functools import partial
 
     from ..packaging import ensure_on_executors
@@ -768,12 +721,13 @@ def extract_wire_fused(binary_df: DataFrame,
     schema = T.StructType(
         [T.StructField("doc_id", T.StringType())]
         + [f for f in OUTPUT_SCHEMA.fields if f.name in cols])
-    return binary_df.select("content").mapInArrow(
-        partial(_fused_extract_arrow, columns=cols), schema)
+    return binary_df.select("path", "content").mapInArrow(
+        partial(_fused_extract_arrow, columns=cols, corrupt=corrupt), schema)
 
 
 def extract_wire(spark: SparkSession, path: str,
-                 columns: tuple[str, ...] = ("spans", "markdown")
-                 ) -> DataFrame:
+                 columns: tuple[str, ...] = ("spans", "markdown"),
+                 corrupt=None) -> DataFrame:
     """``binaryFile`` scan → fused parse+extract (see extract_wire_fused)."""
-    return extract_wire_fused(_binary_scan(spark, path), columns=columns)
+    return extract_wire_fused(_binary_scan(spark, path), columns=columns,
+                              corrupt=corrupt)

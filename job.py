@@ -53,8 +53,9 @@ def main() -> None:
                          "= directory of packed binary .cpw shards "
                          "(sources/wireformat.py) read via binaryFile and "
                          "parsed per-record — the raw-bytes S1 lifecycle; "
-                         "corrupt records are dropped per-record and the "
-                         "per-shard drop count is reported")
+                         "corrupt records are dropped per-record, and the "
+                         "parse that drops them counts them per shard for "
+                         "the report (no extra pass over the shards)")
     args = ap.parse_args()
 
     try:
@@ -71,32 +72,19 @@ def main() -> None:
 
     spark = get_spark("ch-pdf-parse-extract", cores=args.cores)
     t0 = time.time()
-    wire_corrupt = None
-    if args.input_format == "wire":
-        from ch_pdf_parse_spark.sources.wireformat import (read_wire,
-                                                           wire_scan_stats)
-
-        docs = read_wire(spark, args.input)
-        # ingest audit: one extra pass over the shards, but framing+CRC walk
-        # only (scan_shard_stats — no string decode, so it does NOT double
-        # the ingest's dominant parse cost) so a silently-dropped corrupt
-        # record is reported, with the exact shard to re-fetch, instead of
-        # vanishing from the output
-        bad = (wire_scan_stats(spark, args.input)
-               .where("n_corrupt > 0").collect())
-        wire_corrupt = {r["shard_path"]: r["n_corrupt"] for r in bad}
-    else:
+    wire = args.input_format == "wire"
+    if not wire:  # a wire read always has the documents schema
         docs = read_table(spark, args.input)
-    # fail fast with a readable message BEFORE any write: a wrong table
-    # (e.g. a text corpus without spans) otherwise surfaces as an
-    # unresolved-column plan dump from inside the first bucket's job
-    missing = {"doc_id", "spans"} - set(docs.columns)
-    if missing:
-        sys.exit(f"job.py: input {args.input} lacks required column(s) "
-                 f"{sorted(missing)}; schema is "
-                 f"{docs.schema.simpleString()} — expected the interleaved "
-                 f"corpus (doc_id, spans array<struct<kind,text,media_ref,"
-                 f"offset>>)")
+        # fail fast with a readable message BEFORE any write: a wrong table
+        # (e.g. a text corpus without spans) otherwise surfaces as an
+        # unresolved-column plan dump from inside the first bucket's job
+        missing = {"doc_id", "spans"} - set(docs.columns)
+        if missing:
+            sys.exit(f"job.py: input {args.input} lacks required column(s) "
+                     f"{sorted(missing)}; schema is "
+                     f"{docs.schema.simpleString()} — expected the "
+                     f"interleaved corpus (doc_id, spans array<struct<kind,"
+                     f"text,media_ref,offset>>)")
     from ch_pdf_parse_spark.pipeline import normalize_columns
 
     try:
@@ -106,27 +94,33 @@ def main() -> None:
             tuple(c.strip() for c in args.columns.split(",") if c.strip()))
     except ValueError as e:
         sys.exit(f"job.py: {e}")
+    # {shard path: corrupt records}, counted by the extraction's own parse
+    # of each shard: no second pass over the input
+    wire_corrupt = None
     if args.no_lineage:
-        if args.input_format == "wire":
+        if wire:
             # single-pass wire mode takes the FUSED lifecycle (round 6:
             # parse + kernel in one mapInArrow, 1.8× — parsed spans never
             # re-cross the JVM boundary; output pinned row-identical to
             # extract_documents(read_wire(...)) in tests/test_wire_fused).
             # Lineage mode keeps the composable path: each bucket parses
             # its own group of shards (read_wire over a shard list).
-            from ch_pdf_parse_spark.sources.wireformat import extract_wire
+            from ch_pdf_parse_spark.sources.wireformat import (
+                corrupt_accumulator, extract_wire)
 
-            write_table(extract_wire(spark, args.input, columns=cols),
-                        args.output)
+            acc = corrupt_accumulator(spark)
+            write_table(extract_wire(spark, args.input, columns=cols,
+                                     corrupt=acc), args.output)
+            wire_corrupt = acc.value
         else:
             write_table(extract_documents(docs, columns=cols), args.output)
         computed = ["all"]
         # parquet count() is footer-metadata only — no second data pass
         n_docs = read_table(spark, args.output).count()
     else:
-        if args.input_format == "wire":
-            # read_wire's frame lists no input files: hand the lineage
-            # runner the shard list and a per-group reader explicitly
+        if wire:
+            # the shard list, a per-group reader and each group's corrupt
+            # counts, handed to the lineage runner explicitly
             from ch_pdf_parse_spark.sources.wireformat import wire_input
 
             docs = wire_input(spark, args.input)
@@ -134,12 +128,17 @@ def main() -> None:
                                     n_buckets=args.buckets,
                                     parallelism=args.parallelism,
                                     columns=cols)
-        # doc totals come from the lineage records (observed per bucket while
+        # totals come from the lineage records (observed per bucket while
         # extracting), read on the driver — docs.count() here would be a full
-        # second input scan, i.e. another 10^12-row pass for a metrics line
+        # second input scan, i.e. another 10^12-row pass for a metrics line;
+        # a resumed run gets the skipped buckets' counts from their records
         from ch_pdf_parse_spark.sources.lineage import done_records
 
-        n_docs = sum(r["doc_count"] for r in done_records(args.output))
+        records = done_records(args.output)
+        n_docs = sum(r["doc_count"] for r in records)
+        if wire:
+            wire_corrupt = dict(kv for r in records
+                                for kv in r["corrupt"] or ())
     wall = time.time() - t0
     out = {
         "input": args.input, "output": args.output,

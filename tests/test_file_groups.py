@@ -152,7 +152,7 @@ def test_manifest_records_groups_and_resume_reuses_them(
         L.run_with_lineage(spark, docs, out, n_buckets=3, fail_after=1)
     with open(os.path.join(out, "_manifest.json")) as f:
         man = json.load(f)
-    assert man["sig_version"] == L.SIG_VERSION == 4
+    assert man["sig_version"] == L.SIG_VERSION == 5
     files = sorted(L.file_uri(f) for f in docs.inputFiles())
     assert len(man["groups"]) == 3
     assert sorted(f for g in man["groups"] for f in g) == files

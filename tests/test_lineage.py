@@ -244,7 +244,7 @@ def test_resumes_from_spark_appended_lineage(spark, docs_df, tmp_path):
     for b in (0, 2):
         r = recs[b]
         spark.createDataFrame(
-            [(b, r["doc_count"], r["span_count"], r["wall_ms"], "done")],
+            [(b, r["doc_count"], r["span_count"], r["wall_ms"], "done", {})],
             L.LINEAGE_SCHEMA).write.mode("append").parquet(L.lineage_path(out))
     assert os.path.exists(os.path.join(L.lineage_path(out), "_SUCCESS"))
     mtimes = {b: os.stat(os.path.join(out, f"bucket={b}", "_SUCCESS")).st_mtime_ns

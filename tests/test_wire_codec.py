@@ -1,19 +1,40 @@
-"""Property tests (hypothesis) over the wire-format codec — pure Python, no
-Spark session: the codec is the part of the ingest path the adversarial
-oracle gate cannot reach (DuckDB has no .cpw reader), so the full input and
-corruption space is sampled here instead.
+"""Property tests (hypothesis) over the wire-format codec — no Spark
+session: the codec is the part of the ingest path the adversarial oracle
+gate cannot reach (DuckDB has no .cpw reader), so the full input and
+corruption space is sampled here instead. Every property is checked against
+both parsers: the Python semantics (``_parse_shard_columnar``) and, when it
+loads, the C parser (``native.parse_shard_batch``).
 
 1. **Round-trip identity**: encode→parse is the identity on arbitrary
    documents — any unicode (surrogates excluded: not encodable), NULL vs
    empty at every level, extreme offsets.
-2. **Corruption totality**: parse_shard never raises on arbitrary byte
-   mutations, never invents records that were not written, and loses at most
+2. **Corruption totality**: the parsers never raise on arbitrary byte
+   mutations, never invent records that were not written, and lose at most
    the mutated record(s) — every surviving record is byte-exact.
 """
 
 from hypothesis import given, settings, strategies as st
 
+from ch_pdf_parse_spark import native
 from ch_pdf_parse_spark.sources import wireformat as wf
+
+
+def _rows(batch):
+    """A documents batch → [(doc_id, spans as dicts or None)]."""
+    d = batch.to_pydict()
+    return list(zip(d["doc_id"], d["spans"]))
+
+
+def parse_rows(data: bytes) -> list[tuple[list, int]]:
+    """``(records, n_corrupt)`` from each parser: the Python semantics,
+    then the C parser when it loads."""
+    cols = wf._parse_shard_columnar(data)
+    out = [(_rows(wf._doc_batch(cols)), cols.corrupt)]
+    got = native.parse_shard_batch(data)
+    if got is not None:
+        out.append((_rows(got[0]), got[1]))
+    return out
+
 
 # valid-unicode text (no lone surrogates — they can't UTF-8 encode)
 _text = st.text(
@@ -35,9 +56,9 @@ _docs = st.lists(_doc, max_size=12)
 @settings(max_examples=200, deadline=None)
 @given(_docs)
 def test_roundtrip_identity(docs):
-    records, corrupt = wf.parse_shard(wf.encode_shard(docs))
-    assert corrupt == 0
-    assert records == docs
+    for records, corrupt in parse_rows(wf.encode_shard(docs)):
+        assert corrupt == 0
+        assert records == docs
 
 
 def test_empty_shard_arrow_batch():
@@ -59,43 +80,16 @@ def test_corruption_never_raises_never_invents(docs, pos_seed, xor, width):
     pos = pos_seed % max(1, len(data) - width)
     for k in range(width):
         data[pos + k] ^= xor
-    records, corrupt = wf.parse_shard(bytes(data))
     # never raises (we got here), and every surviving record was written:
     # resync may slice a record apart but must not fabricate a decodable one
     # that differs from a written record
     written = {wf.encode_record(d, s) for d, s in docs}
-    for rec in records:
-        assert wf.encode_record(*rec) in written
-    assert len(records) <= len(docs)
-    # the mutation is detected unless it landed in dead bytes (the footer
-    # count field is advisory-only when corruption was already seen)
-    if records != docs:
-        assert corrupt >= 1
-
-
-@settings(max_examples=200, deadline=None)
-@given(_docs,
-       st.integers(min_value=0, max_value=2**31),
-       st.integers(min_value=0, max_value=255),
-       st.integers(min_value=1, max_value=4))
-def test_stats_scan_agrees_with_full_parse(docs, pos_seed, xor, width):
-    """scan_shard_stats (framing+CRC walk, no string decode) must accept and
-    count exactly what the full parser does — on clean AND corrupted bytes.
-    (Known divergence, unreachable here: CRC-valid payloads carrying invalid
-    UTF-8, which only a foreign encoder could produce.)"""
-    data = bytearray(wf.encode_shard(docs))
-    records, corrupt = wf.parse_shard(bytes(data))
-    assert wf.scan_shard_stats(bytes(data)) == (len(records), corrupt)
-    if xor == 0:
-        xor = 0xFF
-    pos = pos_seed % max(1, len(data) - width)
-    for k in range(width):
-        data[pos + k] ^= xor
-    records, corrupt = wf.parse_shard(bytes(data))
-    got = wf.scan_shard_stats(bytes(data))
-    if got != (len(records), corrupt):
-        # the only permitted disagreement: the mutation produced a CRC-valid
-        # record whose strings no longer decode as UTF-8 — the stats scan
-        # counts it valid, the full parse counts it corrupt (documented)
-        assert got[0] >= len(records) and got[1] <= corrupt, (
-            got, len(records), corrupt)
+    for records, corrupt in parse_rows(bytes(data)):
+        for rec in records:
+            assert wf.encode_record(*rec) in written
+        assert len(records) <= len(docs)
+        # the mutation is detected unless it landed in dead bytes (the
+        # footer count field is advisory-only when corruption was already
+        # seen)
+        if records != docs:
+            assert corrupt >= 1

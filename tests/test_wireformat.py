@@ -12,6 +12,8 @@ import zlib
 
 import pytest
 
+from test_wire_codec import parse_rows
+
 from ch_pdf_parse_spark.pipeline import extract_documents
 from ch_pdf_parse_spark.sources import wireformat as wf
 
@@ -93,9 +95,9 @@ def test_null_hostile_roundtrip():
         ("d4", []),     # empty spans array — distinct from NULL
         ("", []),       # empty doc_id — distinct from NULL
     ]
-    records, corrupt = wf.parse_shard(wf.encode_shard(rows))
-    assert corrupt == 0
-    assert [(d, s) for d, s in records] == rows
+    for records, corrupt in parse_rows(wf.encode_shard(rows)):
+        assert corrupt == 0
+        assert records == rows
 
 
 def test_corrupt_record_degrades_per_record(spark, docs_df, wire_dir, tmp_path):
@@ -105,7 +107,7 @@ def test_corrupt_record_degrades_per_record(spark, docs_df, wire_dir, tmp_path):
     clean_total = 0
     for f in shards:
         data = open(os.path.join(wire_dir, f), "rb").read()
-        clean_total += wf.parse_shard(data)[0].__len__()
+        clean_total += len(wf._parse_shard_columnar(data).doc_ids)
     # flip bytes inside the SECOND record of the first shard (past its sync)
     data = bytearray(open(os.path.join(wire_dir, shards[0]), "rb").read())
     second = data.find(wf.SYNC, data.find(wf.SYNC, 4) + 4)
@@ -119,21 +121,27 @@ def test_corrupt_record_degrades_per_record(spark, docs_df, wire_dir, tmp_path):
              for r in wf.wire_scan_stats(spark, out).collect()}
     assert stats[shards[0]]["n_corrupt"] == 1
     assert sum(r["n_corrupt"] for r in stats.values()) == 1
-    docs = wf.read_wire(spark, out)
+    acc = wf.corrupt_accumulator(spark)
+    docs = wf.read_wire(spark, out, corrupt=acc)
     assert docs.count() == clean_total - 1  # exactly one record lost, job alive
+    # the read's own parse counted the loss, keyed like wire_scan_stats; a
+    # second parse of the same shard (another action) does not add to it
+    assert acc.value == {stats[shards[0]]["shard_path"]: 1}
+    assert docs.count() == clean_total - 1
+    assert acc.value == {stats[shards[0]]["shard_path"]: 1}
 
 
 def test_truncated_shard_counted_not_fatal(tmp_path):
     rows = [("a", []), ("b", None)]
     data = wf.encode_shard(rows)
-    records, corrupt = wf.parse_shard(data[:-6])  # rip the footer off
-    assert [d for d, _ in records] == ["a", "b"]
-    assert corrupt == 1
+    for records, corrupt in parse_rows(data[:-6]):  # rip the footer off
+        assert [d for d, _ in records] == ["a", "b"]
+        assert corrupt == 1
     # and a mid-record truncation loses only the tail record
     second = data.find(wf.SYNC, data.find(wf.SYNC, 4) + 4)
-    records, corrupt = wf.parse_shard(data[:second + 9])
-    assert [d for d, _ in records] == ["a"]
-    assert corrupt >= 1
+    for records, corrupt in parse_rows(data[:second + 9]):
+        assert [d for d, _ in records] == ["a"]
+        assert corrupt >= 1
 
 
 def test_wire_decode_plan_zero_exchange(spark, wire_dir):
@@ -155,8 +163,8 @@ def test_crc_catches_payload_tamper():
     body = bytearray(wf.MAGIC + rec + wf.FOOTER_MAGIC + b"\x01\x00\x00\x00")
     # tamper one payload byte, keep framing valid
     body[4 + 4 + 4 + 2] ^= 0x01
-    records, corrupt = wf.parse_shard(bytes(body))
-    assert records == [] and corrupt >= 1
+    for records, corrupt in parse_rows(bytes(body)):
+        assert records == [] and corrupt >= 1
     assert zlib.crc32(b"") == 0  # sanity: zlib present
 
 
@@ -175,39 +183,52 @@ def test_spanstats_sidecar_written_and_true_bound(spark, docs_df, wire_dir):
     assert stats is not None
     shards = sorted(f for f in os.listdir(wire_dir) if f.endswith(".cpw"))
     assert sorted(stats) == shards
-    # each entry is the exact max non-null span count of its shard
+    # each entry is the exact max non-null span count and size of its shard
     for f in shards:
-        records, _ = wf.parse_shard(
-            open(os.path.join(wire_dir, f), "rb").read())
-        want = max((len(s) for _, s in records if s is not None), default=-1)
-        assert stats[f] == want
+        data = open(os.path.join(wire_dir, f), "rb").read()
+        counts = wf._parse_shard_columnar(data).counts
+        want = max((c for c in counts if c is not None), default=-1)
+        assert stats[f] == (want, len(data))
+
+
+def _routed(spark, wire_dir, salt_threshold):
+    """``extract_documents`` over a wire dir with both routing branches
+    built from one shard list: the sidecar's bound and its pruned
+    oversized-doc source."""
+    shards = wf.list_shards(wire_dir)
+    return extract_documents(
+        wf.read_wire(spark, shards), salt_threshold=salt_threshold,
+        max_spans=wf.wire_max_spans(shards),
+        oversized=wf.wire_docs_over(spark, shards, salt_threshold))
 
 
 def test_wire_big_branch_pruned_by_sidecar(spark, docs_df, wire_dir):
     """extract_documents' oversized branch must NOT re-scan every shard when
     the sidecar proves none can qualify: exactly one binaryFile scan in the
     plan (the generic fallback has two), identical output."""
-    wired = wf.read_wire(spark, wire_dir)
-    plan = extract_documents(wired)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert plan.count("binaryFile") == 1, plan
-    got = _out_key(extract_documents(wf.read_wire(spark, wire_dir)).collect())
-    # stripping the hook (any transformation) falls back to the full
-    # double-scan route — the semantics yardstick
-    want = _out_key(extract_documents(
-        wf.read_wire(spark, wire_dir).select(
-            "doc_id", "spans", "n_spans")).collect())
+    from ch_pdf_parse_spark import constants as C
+
+    def scans(df):
+        return df._jdf.queryExecution().executedPlan().toString() \
+            .count("binaryFile")
+
+    assert scans(_routed(spark, wire_dir, C.SALT_SPAN_THRESHOLD)) == 1
+    assert scans(extract_documents(wf.read_wire(spark, wire_dir))) == 2
+    got = _out_key(_routed(spark, wire_dir, C.SALT_SPAN_THRESHOLD).collect())
+    # no routing arguments: the full double-scan route, the semantics
+    # yardstick
+    want = _out_key(extract_documents(wf.read_wire(spark, wire_dir)).collect())
     assert got == want
 
 
 def test_wire_pruned_salted_route_equal(spark, docs_df, wire_dir):
     """With a threshold that genuinely splits the corpus, the pruned big
     branch must feed the salted path the exact same oversized docs."""
-    got = _out_key(extract_documents(
-        wf.read_wire(spark, wire_dir), salt_threshold=1).collect())
+    shards = wf.list_shards(wire_dir)
+    assert wf.wire_docs_over(spark, shards, 1) is not None
+    got = _out_key(_routed(spark, wire_dir, 1).collect())
     want = _out_key(extract_documents(
-        wf.read_wire(spark, wire_dir).select("doc_id", "spans", "n_spans"),
-        salt_threshold=1).collect())
+        wf.read_wire(spark, wire_dir), salt_threshold=1).collect())
     assert got == want
 
 
@@ -220,26 +241,27 @@ def test_wire_sidecar_fallbacks(spark, docs_df, wire_dir, tmp_path):
     for f in shards:
         open(os.path.join(out, f), "wb").write(
             open(os.path.join(wire_dir, f), "rb").read())
+    sizes = {f: os.path.getsize(os.path.join(out, f)) for f in shards}
     want = _out_key(extract_documents(
         wf.read_wire(spark, wire_dir), salt_threshold=1).collect())
     # absent
     assert wf._read_spanstats(out) is None
-    assert _out_key(extract_documents(
-        wf.read_wire(spark, out), salt_threshold=1).collect()) == want
+    assert _out_key(_routed(spark, out, 1).collect()) == want
     # corrupted (one flipped byte -> crc rejects -> full scan)
-    wf._write_spanstats(out, [(f, 0) for f in shards])  # wrong bounds...
+    wf._write_spanstats(out, [(f, 0, sizes[f]) for f in shards])  # wrong...
     data = bytearray(
         open(os.path.join(out, wf.SPANSTATS_NAME), "rb").read())
     data[8] ^= 0xFF
     open(os.path.join(out, wf.SPANSTATS_NAME), "wb").write(bytes(data))
     assert wf._read_spanstats(out) is None  # ...never consulted: crc fails
-    assert _out_key(extract_documents(
-        wf.read_wire(spark, out), salt_threshold=1).collect()) == want
+    assert _out_key(_routed(spark, out, 1).collect()) == want
     # incomplete (valid sidecar missing one present shard -> fall back)
-    wf._write_spanstats(out, [(f, 10 ** 9) for f in shards[1:]])
-    assert wf._wire_docs_over(spark, out, 1) is None
-    assert _out_key(extract_documents(
-        wf.read_wire(spark, out), salt_threshold=1).collect()) == want
+    wf._write_spanstats(out, [(f, 10 ** 9, sizes[f]) for f in shards[1:]])
+    assert wf.wire_docs_over(spark, wf.list_shards(out), 1) is None
+    assert _out_key(_routed(spark, out, 1).collect()) == want
+
+
+_SPAN_T = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 
 
 def test_crashed_rewrite_leaves_no_stale_sidecar(spark, tmp_path,
@@ -248,16 +270,14 @@ def test_crashed_rewrite_leaves_no_stale_sidecar(spark, tmp_path,
     crash before the new sidecar lands would otherwise leave the old bounds
     (every shard under the threshold) over the new shards, and the
     oversized doc would be pruned away silently."""
-    span_t = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-
     def corpus(n_big):
         rows = [(f"d{i}", [("text", f"t{i}", "", 0)]) for i in range(8)]
         rows.append(("big", [("text", f"w{j}", "", j) for j in range(n_big)]))
-        return spark.createDataFrame(rows, f"doc_id string, spans {span_t}")
+        return spark.createDataFrame(rows, f"doc_id string, spans {_SPAN_T}")
 
     out = str(tmp_path / "wire")
     wf.write_wire_shards(corpus(1), out, n_shards=2)
-    assert max(wf._read_spanstats(out).values()) == 1
+    assert max(mx for mx, _ in wf._read_spanstats(out).values()) == 1
 
     def crash(*_):
         raise RuntimeError("crash before the sidecar lands")
@@ -265,6 +285,120 @@ def test_crashed_rewrite_leaves_no_stale_sidecar(spark, tmp_path,
     monkeypatch.setattr(wf, "_write_spanstats", crash)
     with pytest.raises(RuntimeError):
         wf.write_wire_shards(corpus(6), out, n_shards=2)
-    got = {r["doc_id"] for r in extract_documents(
-        wf.read_wire(spark, out), salt_threshold=3).collect()}
+    got = {r["doc_id"] for r in _routed(spark, out, 3).collect()}
     assert "big" in got and len(got) == 9
+
+
+def test_shard_rewritten_under_old_sidecar_is_not_pruned(spark, tmp_path):
+    """A shard overwritten after the sidecar was published (here with a
+    doc above the threshold) must not be judged by its old bound: its size
+    no longer matches the recorded one, so routing falls back to the full
+    scan and the doc is kept instead of silently dropped."""
+    rows = [(f"d{i}", [("text", f"t{i}", "", 0)]) for i in range(8)]
+    out = str(tmp_path / "wire")
+    wf.write_wire_shards(
+        spark.createDataFrame(rows, f"doc_id string, spans {_SPAN_T}"), out,
+        n_shards=2)
+    shards = wf.list_shards(out)
+    assert wf.wire_max_spans(shards) == 1
+    big = [{"kind": "text", "text": f"w{j}", "media_ref": "", "offset": j}
+           for j in range(3)]
+    with open(shards[0], "wb") as f:  # _SPANSTATS left as it was
+        f.write(wf.encode_shard([("big", big)]))
+    assert wf.wire_max_spans(shards) is None
+    assert wf.wire_docs_over(spark, shards, 1) is None
+    got = {r["doc_id"] for r in _routed(spark, out, 1).collect()}
+    assert "big" in got
+
+
+# ------------------------------------------------- corrupt-record counting
+
+
+def test_parse_one_counts_corruption_with_either_parser(wire_dir,
+                                                        monkeypatch):
+    """``_parse_one`` returns the corrupt count with the batch, and the
+    Python fallback counts exactly what the C parser counts."""
+    from ch_pdf_parse_spark import native
+
+    data = bytearray(open(wf.list_shards(wire_dir)[0], "rb").read())
+    second = data.find(wf.SYNC, data.find(wf.SYNC, 4) + 4)
+    data[second + 10] ^= 0xFF
+    data = bytes(data[:-6])  # and no footer: two corrupt counts
+    want = wf._parse_one(data)
+    monkeypatch.setattr(native, "parse_shard_batch", lambda _data: None)
+    got = wf._parse_one(data)
+    assert got[1] == want[1] == 2
+    assert got[0].equals(want[0])
+
+
+@pytest.fixture(scope="module")
+def flipped_dir(wire_dir, tmp_path_factory):
+    """The wire corpus with one byte flipped in one record of every shard,
+    and the last shard's footer ripped off too; returns the dir and the
+    per-shard corrupt counts as the job reports them. The directory name
+    carries a space, a ``%`` escape look-alike and a non-ASCII letter,
+    which ``binaryFile`` keeps verbatim in its ``file:`` paths."""
+    out = os.path.join(str(tmp_path_factory.mktemp("flipped")), "a%41 é+1")
+    os.makedirs(out)
+    want = {}
+    shards = wf.list_shards(wire_dir)
+    for k, src in enumerate(shards):
+        data = bytearray(open(src, "rb").read())
+        second = data.find(wf.SYNC, data.find(wf.SYNC, 4) + 4)
+        data[second + 10] ^= 0xFF
+        if k == len(shards) - 1:
+            data = data[:-6]
+        dst = os.path.join(out, os.path.basename(src))
+        open(dst, "wb").write(bytes(data))
+        want["file:" + os.path.abspath(dst)] = 2 if k == len(shards) - 1 else 1
+    return out, want
+
+
+def _job(monkeypatch, capsys, *argv):
+    import json
+    import sys
+
+    import job
+    from pyspark.sql import SparkSession
+
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    monkeypatch.setattr(sys, "argv", ["job.py", "--input-format", "wire",
+                                      *argv])
+    job.main()
+    return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+def _corrupt_of(report):
+    return report["wire_corrupt_records"], report["wire_corrupt_shards"]
+
+
+def test_job_reports_corruption_without_lineage(
+        spark, flipped_dir, tmp_path, monkeypatch, capsys):
+    d, want = flipped_dir
+    got = _job(monkeypatch, capsys, "--input", d, "--output",
+               str(tmp_path / "out"), "--no-lineage")
+    assert _corrupt_of(got) == (sum(want.values()), sorted(want))
+
+
+def test_job_reports_corruption_with_lineage_and_across_resume(
+        spark, flipped_dir, tmp_path, monkeypatch, capsys):
+    from ch_pdf_parse_spark.sources import lineage as L
+
+    d, want = flipped_dir
+    whole = _job(monkeypatch, capsys, "--input", d, "--output",
+                 str(tmp_path / "whole"), "--buckets", "3")
+    assert whole["buckets_computed"] == 3
+    assert _corrupt_of(whole) == (sum(want.values()), sorted(want))
+    # killed after one bucket, then resumed by the job: the first bucket's
+    # counts come back from its lineage record
+    out = str(tmp_path / "resumed")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        L.run_with_lineage(spark, wf.wire_input(spark, d), out, n_buckets=3,
+                           fail_after=1)
+    (first,) = L.done_records(out)
+    assert first["corrupt"]
+    resumed = _job(monkeypatch, capsys, "--input", d, "--output", out,
+                   "--buckets", "3")
+    assert resumed["buckets_computed"] == 2
+    assert _corrupt_of(resumed) == _corrupt_of(whole)
+    assert resumed["docs"] == whole["docs"]

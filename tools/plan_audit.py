@@ -318,7 +318,8 @@ def audit(spark, sf_dir: str) -> tuple[list[tuple[str, str, bool, str]], dict[st
     import tempfile
 
     from ch_pdf_parse_spark.pipeline import extract_documents
-    from ch_pdf_parse_spark.sources.wireformat import (read_wire,
+    from ch_pdf_parse_spark.sources.wireformat import (list_shards,
+                                                       read_wire,
                                                        write_wire_shards)
 
     from ch_pdf_parse_spark.registry import fixture_docs
@@ -326,16 +327,17 @@ def audit(spark, sf_dir: str) -> tuple[list[tuple[str, str, bool, str]], dict[st
     wire_tmp = tempfile.mkdtemp(prefix="plan_audit_wire_")
     docs = fixture_docs(spark, sf_dir).select("doc_id", "spans").limit(64)
     write_wire_shards(docs, wire_tmp, n_shards=4)
-    p = formatted_plan(read_wire(spark, wire_tmp))
+    shards = list_shards(wire_tmp)  # one listing for every read below
+    p = formatted_plan(read_wire(spark, shards))
     plans["wire_decode"] = p
     add("wire_decode", "binaryFile scan → MapInArrow parse, zero Exchange "
         "(shard count alone sets ingest parallelism)",
         "MapInArrow" in p and not re.search(r"\bExchange\b", p))
     # downstream extraction over parsed wire rows: the wire source must add
     # ZERO exchanges vs the parquet-fed flagship (parse kernel chains onto
-    # the scan; both extraction branches unchanged)
+    # the scan; both extraction branches unchanged, both reading `shards`)
     p = formatted_plan(extract_documents(
-        read_wire(spark, wire_tmp).select("doc_id", "spans")))
+        read_wire(spark, shards).select("doc_id", "spans")))
     plans["wire_ingest_extract"] = p
     p_parquet = formatted_plan(extract_documents(
         fixture_docs(spark, sf_dir).select("doc_id", "spans")))
