@@ -148,23 +148,12 @@ def wire_shards_dir(corpus_path: str, n_shards: int = 96) -> str:
     return out
 
 
-def run_extraction_wire(cores: int, corpus_path: str, runs: int = 2,
-                        fused: bool = False) -> float:
+def run_extraction_wire(cores: int, corpus_path: str, runs: int = 2) -> float:
     """Raw-bytes S1 lifecycle e2e: binaryFile scan → per-record parse →
-    extraction kernel. Same noop-write protocol as the parquet flagship.
-
-    ``fused=False`` times the composable path (read_wire → documents rows →
-    extract_documents: the full spans payload crosses the JVM↔Python
-    boundary twice); ``fused=True`` times extract_wire (round 6: parse +
-    kernel in ONE mapInArrow — only shard bytes in, records/markdown out;
-    measured 1.8× at 40k docs, closing the wire path's gap to the parquet
-    flagship)."""
-    from ch_pdf_parse_spark import constants as C
-    from ch_pdf_parse_spark.pipeline import extract_documents
-    from ch_pdf_parse_spark.sources.wireformat import (extract_wire,
-                                                       list_shards, read_wire,
-                                                       wire_docs_over,
-                                                       wire_max_spans)
+    extraction kernel, fused in ONE mapInArrow (``extract_wire``: only
+    shard bytes in, records/markdown out). Same noop-write protocol as the
+    parquet flagship."""
+    from ch_pdf_parse_spark.sources.wireformat import extract_wire
 
     wire_dir = wire_shards_dir(corpus_path)
     # one ~8 MB shard per task: binaryFile packs whole files into partitions
@@ -175,19 +164,8 @@ def run_extraction_wire(cores: int, corpus_path: str, runs: int = 2,
                       **{"spark.sql.files.maxPartitionBytes":
                          str(8 * 1024 * 1024)})
     try:
-        if fused:
-            _run(extract_wire(spark, wire_dir).limit(2048))  # warmup
-            return _best_stable(lambda: _run(extract_wire(spark, wire_dir)),
-                                runs_min=runs)
-        # both routing branches read one shard list, taken once; the
-        # sidecar bound drops the salted branch when no doc can reach it
-        shards = list_shards(wire_dir)
-        docs = read_wire(spark, shards)
-        route = {"max_spans": wire_max_spans(shards),
-                 "oversized": wire_docs_over(spark, shards,
-                                             C.SALT_SPAN_THRESHOLD)}
-        _run(extract_documents(docs.limit(2048)))  # warmup
-        return _best_stable(lambda: _run(extract_documents(docs, **route)),
+        _run(extract_wire(spark, wire_dir).limit(2048))  # warmup
+        return _best_stable(lambda: _run(extract_wire(spark, wire_dir)),
                             runs_min=runs)
     finally:
         spark.stop()
@@ -223,17 +201,11 @@ def main() -> None:
         run_extraction(CPUS, corpus_path, relational=True, runs=2,
                        doc_limit="doc_002000", shuffle_partitions=32), 3)
 
-    # raw wire-format lifecycle (round 5): packed binary shards → binaryFile
-    # → per-record parse → extraction; the decode is the honest per-doc
-    # ingest price a raw-PDF deployment pays before the kernel even runs
-    t_wire = run_extraction_wire(CPUS, corpus_path)
-    queries["q_extract_wire"] = round(t_wire, 3)
-    extras["wire_docs_per_sec"] = round(n_docs / t_wire, 1)
-
-    # fused wire lifecycle (round 6): parse + kernel in one mapInArrow —
-    # the decode-once shape; kept NEXT TO the composable number so the
-    # boundary-crossing cost stays visible round over round
-    t_wire_f = run_extraction_wire(CPUS, corpus_path, fused=True)
+    # raw wire-format lifecycle: packed binary shards → binaryFile →
+    # per-record parse → extraction, in one mapInArrow; the decode is the
+    # honest per-doc ingest price a raw-PDF deployment pays before the
+    # kernel even runs
+    t_wire_f = run_extraction_wire(CPUS, corpus_path)
     queries["q_extract_wire_fused"] = round(t_wire_f, 3)
     extras["wire_fused_docs_per_sec"] = round(n_docs / t_wire_f, 1)
 

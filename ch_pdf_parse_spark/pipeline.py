@@ -91,6 +91,13 @@ def normalize_columns(columns) -> tuple[str, ...]:
     return tuple(c for c in ("spans", "markdown") if c in cols)
 
 
+def output_schema(cols: tuple[str, ...]) -> T.StructType:
+    """``doc_id`` plus the normalized output columns ``cols``, in
+    ``OUTPUT_SCHEMA`` order: what every extraction route emits."""
+    return T.StructType([OUTPUT_SCHEMA["doc_id"]]
+                        + [f for f in OUTPUT_SCHEMA.fields if f.name in cols])
+
+
 def _extract_arrow(it, columns: tuple[str, ...] = ("spans", "markdown")):
     """mapInArrow kernel with exactly two paths per batch:
 
@@ -213,7 +220,6 @@ def extract_documents(
     salt_threshold: int = C.SALT_SPAN_THRESHOLD,
     columns: tuple[str, ...] = ("spans", "markdown"),
     max_spans: int | None = None,
-    oversized: DataFrame | None = None,
 ) -> DataFrame:
     """End-to-end extraction. Zero-shuffle ``mapInArrow`` for regular docs;
     page-salted two-stage aggregation for the oversized long tail.
@@ -231,22 +237,13 @@ def extract_documents(
     ``salt_threshold`` it proves the salted branch empty, and only the
     ``mapInArrow`` branch is planned: ``PropagateEmptyRelation`` cannot fold
     the empty ``FlatMapGroupsInPandas`` subtree, whose shuffle jobs would
-    otherwise still run.
-
-    ``oversized`` is the salted branch's source: a frame that holds every
-    row of ``docs`` that may exceed ``salt_threshold`` (extra rows are
-    filtered out), such as ``sources.wireformat.wire_docs_over``, which
-    reads only the wire shards whose statistics allow such a row. Without
-    it the salted branch filters ``docs`` itself, which for a source that
-    Catalyst cannot prune (a wire parse) means a second full read."""
+    otherwise still run."""
     from functools import partial
 
     from .packaging import ensure_on_executors
 
     cols = normalize_columns(columns)
-    schema = T.StructType(
-        [T.StructField("doc_id", T.StringType())]
-        + [f for f in OUTPUT_SCHEMA.fields if f.name in cols])
+    schema = output_schema(cols)
 
     ensure_on_executors(docs.sparkSession)
     # Route on a stored stats column when available: `n_spans` is written at
@@ -263,13 +260,7 @@ def extract_documents(
     if max_spans is not None and max_spans <= salt_threshold:
         return small_out
 
-    if oversized is None:
-        big = docs.where(n > salt_threshold)
-    else:
-        n_big = (F.col("n_spans") if "n_spans" in oversized.columns
-                 else F.size("spans"))
-        big = oversized.where(n_big > salt_threshold).select("doc_id", "spans")
-
+    big = docs.where(n > salt_threshold)
     off = F.coalesce(F.col("s.offset"), F.lit(0))  # null geometry ≡ origin
     exploded = (
         big.select("doc_id", F.posexplode("spans").alias("idx", "s"))

@@ -16,10 +16,11 @@ retry but no built-in *job-level* resume. This module provides it:
   come from an unnamed ``Observation`` on that write (the write job's result
   stage, so a retried task cannot double-count), not from re-reading the
   output;
-* each bucket passes ``pipeline.extract_documents`` an ``n_spans`` bound
-  proved from file statistics (parquet row-group max, or the wire
-  ``_SPANSTATS`` sidecar). When the bound is at or below the salt threshold
-  the salted oversized-doc branch, and its shuffle jobs, are not planned;
+* a parquet bucket passes ``pipeline.extract_documents`` an ``n_spans``
+  bound proved from its files' row-group statistics. When the bound is at
+  or below the salt threshold the salted oversized-doc branch, and its
+  shuffle jobs, are not planned. A wire bucket runs the fused parse and
+  extraction (``wireformat.extract_wire``), which has no salted branch;
 * once the bucket's data is committed, its lineage record ``(bucket,
   doc_count, span_count, wall_ms, status, corrupt)`` lands as its own
   one-row parquet file: written under a dot-prefixed temp name, then
@@ -225,25 +226,22 @@ def _is_stored_column(df: DataFrame, name: str) -> bool:
 @dataclass(frozen=True)
 class FileInput:
     """An input that is a fixed list of files, as ``run_with_lineage``
-    needs it: ``files`` (the identity and grouping unit), ``read(group)``
-    (the documents of exactly those files), ``max_spans(group)`` (an
-    ``n_spans`` upper bound proved from statistics, or None),
-    ``oversized(group)`` (the salted branch's source, see
-    ``pipeline.extract_documents``, or None) and ``corrupt(group)`` (the
-    group's ``{file: corrupt records}``, read after its extraction ran)."""
+    needs it: ``files`` (the identity and grouping unit),
+    ``extract(group, columns)`` (the extraction output of exactly those
+    files, with the normalized output ``columns``) and ``corrupt(group)``
+    (the group's ``{file: corrupt records}``, read after its extraction
+    ran)."""
 
     files: list[str]
-    read: Callable[[list[str]], DataFrame]
-    max_spans: Callable[[list[str]], int | None]
-    oversized: Callable[[list[str]], DataFrame | None] = lambda group: None
+    extract: Callable[[list[str], tuple[str, ...]], DataFrame]
     corrupt: Callable[[list[str]], dict[str, int]] = lambda group: {}
 
 
 def table_input(docs: DataFrame) -> FileInput:
     """The file-backed ``docs`` frame (parquet) as a ``FileInput``: a group
-    is read as ``docs`` restricted on ``_metadata.file_path``, and its bound
-    is the footers' ``n_spans`` max when ``docs``' ``n_spans`` is that
-    stored column."""
+    is ``pipeline.extract_documents`` over ``docs`` restricted on
+    ``_metadata.file_path``, with the footers' ``n_spans`` max as its
+    ``max_spans`` bound when ``docs``' ``n_spans`` is that stored column."""
     files = sorted({file_uri(f) for f in docs.inputFiles()})
     if not files:
         # createDataFrame/views have no backing files — their identity cannot
@@ -269,7 +267,15 @@ def table_input(docs: DataFrame) -> FileInput:
     path = F.col("_metadata.file_path")
     bound = footer_max_spans if _is_stored_column(docs, "n_spans") \
         else (lambda group: None)
-    return FileInput(files, lambda group: docs.where(path.isin(group)), bound)
+
+    def extract(group: list[str], columns: tuple[str, ...]) -> DataFrame:
+        from .. import pipeline
+
+        return pipeline.extract_documents(docs.where(path.isin(group)),
+                                          columns=columns,
+                                          max_spans=bound(group))
+
+    return FileInput(files, extract)
 
 
 def _file_meta(f: str) -> list:
@@ -344,9 +350,8 @@ def run_with_lineage(
     ``docs`` is a DataFrame read from parquet files (``table_input``) or a
     ``FileInput`` (``wireformat.wire_input`` for a directory of wire
     shards). Bucket b is a fixed group of its files (``assign_groups``),
-    read alone and extracted with the group's statistics-proved
-    ``max_spans`` bound. A bucket with no files writes an empty output and a
-    0/0 record.
+    extracted alone by the input's ``extract``. A bucket with no files
+    writes an empty output and a 0/0 record.
 
     Resume assumes the SAME input, bucketing AND output projection: a
     manifest (n_buckets + input file list with size/mtime + columns, and the
@@ -354,7 +359,7 @@ def run_with_lineage(
     into the same ``out_dir`` with a different input, n_buckets or
     ``columns`` raises instead of silently extracting a different file set
     (or writing mixed-schema buckets)."""
-    from ..pipeline import extract_documents, normalize_columns
+    from ..pipeline import normalize_columns
 
     # fail fast (and canonicalize for the manifest signature) before any
     # write — see pipeline.normalize_columns
@@ -374,9 +379,7 @@ def run_with_lineage(
     def do_bucket(b: int) -> int:
         t0 = time.time()
         group = groups[b]
-        out = extract_documents(source.read(group), columns=columns,
-                                max_spans=source.max_spans(group),
-                                oversized=source.oversized(group))
+        out = source.extract(group, columns)
         obs = Observation()
         span_stat = (F.sum(F.size("spans")) if "spans" in out.columns
                      else F.lit(0))  # markdown-only runs carry no span count

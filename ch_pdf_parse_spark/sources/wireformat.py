@@ -42,15 +42,6 @@ Why this shape scales to 10^12 documents:
   pure function of (corpus, n_shards) — resumable re-writes produce
   identical shards (idempotent overwrite; tmp + atomic rename per file
   keeps retried/speculative tasks from publishing partial shards).
-* **Directory-level statistics (round 7).** The writer publishes a
-  ``_SPANSTATS`` sidecar (per-shard max non-null ``n_spans`` and byte size,
-  crc32-footed, deterministic bytes) — the wire analog of parquet
-  row-group min/max stats. A caller routing oversized docs
-  (``pipeline.extract_documents``' ``max_spans=``/``oversized=``) uses it
-  to scan only the shards that can contain a doc above the salt threshold
-  (<0.1% of files at 10^12 docs) instead of re-parsing the whole corpus;
-  readers of dirs without a (complete, valid, size-matching) sidecar fall
-  back to the full scan.
 * **Decode once.** Each shard is parsed once, per-record, inside
   ``mapInArrow``: by the C parser (``native.parse_shard_batch``) when it
   loads, else by the Python semantics (``_parse_shard_columnar``, which
@@ -62,10 +53,10 @@ Why this shape scales to 10^12 documents:
   parse: ``_parse_one`` returns the count with the batch, and the
   ``mapInArrow`` bodies add ``{shard_path: n_corrupt}`` to an accumulator
   the caller passes in (``corrupt_accumulator``, merged by max per shard,
-  so a retried task or a shard parsed by both routing branches cannot
-  double-count). No audit pass reads the shards a second time. The parsed
-  rows carry ``n_spans`` so the oversized-doc salting route still sees
-  its stored stats column.
+  so a retried task or a second action cannot double-count). No audit
+  pass reads the shards a second time, and every extraction route (job.py
+  with or without lineage, the streaming drain) runs the parse and the
+  kernel in one ``mapInArrow`` (``extract_wire_fused``).
 """
 
 from __future__ import annotations
@@ -313,58 +304,6 @@ def _parse_shard_columnar(data: bytes) -> _Columns:
 
 # ---------------------------------------------------------------- Spark IO
 
-SPANSTATS_NAME = "_SPANSTATS"
-_SPANSTATS_MAGIC = b"CPWS2\n"
-
-_WRITE_STATS_SCHEMA = T.StructType(
-    STATS_SCHEMA.fields + [T.StructField("max_spans", T.IntegerType())])
-
-
-def _write_spanstats(out_dir: str, entries) -> None:
-    """Per-shard ``n_spans`` sidecar (round 7, guide §6): the wire format's
-    analog of parquet column min/max statistics. ``entries`` is
-    [(shard filename, max non-null span count or -1 if none, shard byte
-    size)]. The size lets a reader detect a shard rewritten under an old
-    sidecar. Deterministic bytes (sorted lines), crc32-footed so a
-    corrupted sidecar degrades to "no statistics" (full scan), never to
-    wrong pruning."""
-    if any("\t" in n or "\n" in n for n, _, _ in entries):
-        return  # un-encodable filenames: skip stats, readers fall back
-    body = "".join(f"{n}\t{mx}\t{size}\n"
-                   for n, mx, size in sorted(entries)).encode("utf-8")
-    data = _SPANSTATS_MAGIC + body + b"crc:%08x\n" % zlib.crc32(body)
-    path = os.path.join(out_dir, SPANSTATS_NAME)
-    tmp = path + ".tmp"
-    with open(tmp, "wb") as f:
-        f.write(data)
-    os.replace(tmp, path)
-
-
-def _read_spanstats(dir_path: str) -> dict[str, tuple[int, int]] | None:
-    """{shard filename: (max n_spans, n_bytes)} from the sidecar, or None
-    when it is absent, unreadable, of an older format, or fails its crc —
-    every failure means "no statistics", so pruning degrades to the full
-    scan."""
-    try:
-        with open(os.path.join(dir_path, SPANSTATS_NAME), "rb") as f:
-            data = f.read()
-        if not data.startswith(_SPANSTATS_MAGIC):
-            return None
-        rest = data[len(_SPANSTATS_MAGIC):]
-        body, sep, tail = rest.rpartition(b"crc:")
-        if not sep or not tail.endswith(b"\n"):
-            return None
-        if int(tail[:-1], 16) != zlib.crc32(body):
-            return None
-        out: dict[str, tuple[int, int]] = {}
-        for line in body.decode("utf-8").splitlines():
-            name, mx, size = line.split("\t")
-            out[name] = (int(mx), int(size))
-        return out
-    except (OSError, ValueError, UnicodeDecodeError):
-        return None
-
-
 def list_shards(path: str) -> list[str]:
     """The ``.cpw`` shard paths directly under ``path``, sorted; names that
     Spark's file listing hides (leading ``.`` or ``_``) are skipped, as the
@@ -373,85 +312,28 @@ def list_shards(path: str) -> list[str]:
                   if f.endswith(".cpw") and not f.startswith((".", "_")))
 
 
-def _shard_spans(shards: list[str]) -> dict[str, int] | None:
-    """{shard path: sidecar max ``n_spans``} for every shard, or None when
-    some shard's directory has no (complete, valid) ``_SPANSTATS`` naming
-    it — foreign or hand-built dirs carry no statistics — or when a shard's
-    size differs from the one recorded: the shard was rewritten after the
-    sidecar, whose bound no longer covers it."""
-    sidecars: dict[str, dict[str, tuple[int, int]] | None] = {}
-    out = {}
-    for shard in shards:
-        d, name = os.path.split(shard)
-        if d not in sidecars:
-            sidecars[d] = _read_spanstats(d)
-        stats = sidecars[d]
-        if stats is None or name not in stats:
-            return None
-        mx, size = stats[name]
-        try:
-            if os.path.getsize(shard) != size:
-                return None
-        except OSError:
-            return None
-        out[shard] = mx
-    return out
-
-
-def wire_max_spans(shards: list[str]) -> int | None:
-    """Upper bound on ``n_spans`` over ``shards`` from the ``_SPANSTATS``
-    sidecar, or None without complete statistics. Pass it to
-    ``pipeline.extract_documents(max_spans=)``."""
-    stats = _shard_spans(shards)
-    return None if stats is None else max(stats.values(), default=0)
-
-
-def wire_docs_over(spark: SparkSession, shards: list[str],
-                   min_spans: int) -> DataFrame | None:
-    """Parsed `documents` rows of the shards that can contain a record with
-    ``n_spans > min_spans``, per the ``_SPANSTATS`` sidecar: the wire twin of
-    parquet row-group pruning, for ``pipeline.extract_documents(oversized=)``
-    with ``salt_threshold=min_spans``. A mapInArrow parse is opaque to
-    Catalyst, so without it the salted branch re-scans and re-parses every
-    shard to find the (<0.1%, usually zero) oversized docs.
-
-    Returns None when the sidecar is absent, invalid, stale or does not
-    cover every shard: the caller then leaves ``oversized`` unset and the
-    salted branch filters the full read, which is always correct. Rows with
-    NULL ``n_spans`` never qualify (they route to the small branch),
-    matching a strict ``n_spans > min_spans`` filter exactly."""
-    stats = _shard_spans(shards)
-    if stats is None:
-        return None
-    return read_wire(spark, [s for s in shards if stats[s] > min_spans])
-
-
 def wire_input(spark: SparkSession, path: str):
     """The shard directory ``path`` as a ``lineage.FileInput``: its shard
-    list (taken once), ``read_wire`` over a group of shards, the group's
-    sidecar ``n_spans`` bound and pruned oversized-doc source, and the
-    corrupt counts of the group's last read — what ``run_with_lineage``
-    needs to make each bucket a fixed group of shards and to record its
-    corrupt counts.
+    list (taken once), ``extract_wire`` over a group of shards, and the
+    corrupt counts of the group's last extraction — what
+    ``run_with_lineage`` needs to make each bucket a fixed group of shards
+    and to record its corrupt counts.
 
-    Each read of a group gets its own accumulator, so a bucket's counts are
-    exactly its own shards' without matching paths: ``binaryFile`` spells a
-    path as a ``file:`` URI that is not percent-encoded, which no plain-path
-    comparison gets right for every directory name."""
-    from .. import constants as C
+    Each extraction of a group gets its own accumulator, so a bucket's
+    counts are exactly its own shards' without matching paths:
+    ``binaryFile`` spells a path as a ``file:`` URI that is not
+    percent-encoded, which no plain-path comparison gets right for every
+    directory name."""
     from .lineage import FileInput
 
     accs: dict[tuple[str, ...], object] = {}
 
-    def read(group: list[str]) -> DataFrame:
+    def extract(group: list[str], columns: tuple[str, ...]) -> DataFrame:
         acc = accs[tuple(group)] = corrupt_accumulator(spark)
-        return read_wire(spark, group, corrupt=acc)
+        return extract_wire(spark, group, columns=columns, corrupt=acc)
 
-    return FileInput(
-        list_shards(path), read, wire_max_spans,
-        oversized=lambda group: wire_docs_over(spark, group,
-                                               C.SALT_SPAN_THRESHOLD),
-        corrupt=lambda group: accs[tuple(group)].value)
+    return FileInput(list_shards(path), extract,
+                     corrupt=lambda group: accs[tuple(group)].value)
 
 
 def write_wire_shards(docs: DataFrame, out_dir: str, n_shards: int = 8) -> int:
@@ -461,19 +343,8 @@ def write_wire_shards(docs: DataFrame, out_dir: str, n_shards: int = 8) -> int:
     path visible to the executors (local-mode sandbox: any local dir; a real
     cluster points this at shared storage — the tmp+rename publish keeps
     retried tasks idempotent either way).
-
-    Also publishes the ``_SPANSTATS`` sidecar (per-shard max ``n_spans``
-    and byte size — see ``_write_spanstats``). The driver-side collect
-    behind it is one row per shard: the same O(n_shards) driver bound every
-    file listing of the directory already pays. A sidecar left by an earlier write is removed
-    first, so a crash before the new one lands leaves no statistics (full
-    scan), never stale ones that prune away the new shards' oversized docs.
     """
     os.makedirs(out_dir, exist_ok=True)
-    try:
-        os.unlink(os.path.join(out_dir, SPANSTATS_NAME))
-    except FileNotFoundError:
-        pass
     sharded = docs.select(
         "doc_id", "spans",
         (F.crc32(F.coalesce(F.col("doc_id"), F.lit("\x00null")).cast("binary"))
@@ -488,14 +359,11 @@ def write_wire_shards(docs: DataFrame, out_dir: str, n_shards: int = 8) -> int:
         # "bytes are a pure function of (corpus, n_shards)" contract this
         # writer documents. Tie-break on the encoded record bytes.
         recs = []
-        max_spans = -1  # max non-null span count (NULL spans never route big)
         for d, s in zip(pdf["doc_id"], pdf["spans"]):
             d = None if pd.isna(d) else d
             # a NULL array column reaches pandas as None (or NaN on some
             # Arrow paths) — both mean "spans is NULL", not "empty"
             s = None if s is None or isinstance(s, float) else s
-            if s is not None and len(s) > max_spans:
-                max_spans = len(s)
             recs.append((d is not None, d or "", encode_record(d, s)))
         recs.sort()
         # no _U32 here: a struct.Struct in the closure breaks cloudpickle
@@ -509,15 +377,10 @@ def write_wire_shards(docs: DataFrame, out_dir: str, n_shards: int = 8) -> int:
         return pd.DataFrame({"shard_path": [path],
                              "n_records": [len(pdf)],
                              "n_corrupt": [0],
-                             "n_bytes": [len(data)],
-                             "max_spans": [max_spans]})
+                             "n_bytes": [len(data)]})
 
-    stats = sharded.groupBy("shard").applyInPandas(_write, _WRITE_STATS_SCHEMA)
-    rows = stats.collect()
-    _write_spanstats(out_dir, [(os.path.basename(r["shard_path"]),
-                                int(r["max_spans"]), int(r["n_bytes"]))
-                               for r in rows])
-    return len(rows)
+    return len(sharded.groupBy("shard").applyInPandas(_write, STATS_SCHEMA)
+               .collect())
 
 
 _ARROW_SPAN = None  # built lazily: pa import stays off the module import path
@@ -571,7 +434,7 @@ def _parse_one(content: bytes):
 
 class _MaxDict(AccumulatorParam):
     """Accumulator of {shard path: n_corrupt}, merged by max per key: a
-    retried or speculative task, or a shard parsed by both routing branches,
+    retried or speculative task, or a second action over the same parse,
     reports the same count again, and max makes that a no-op."""
 
     def zero(self, value):
@@ -614,43 +477,25 @@ def _binary_scan(spark: SparkSession, path: str | list[str]) -> DataFrame:
             .select("path", "content"))
 
 
-def parse_wire_binary(binary_df: DataFrame, corrupt=None) -> DataFrame:
-    """(path, content) binary rows → parsed `documents` rows.
-
-    Works on any DataFrame with a ``content`` binary column — the batch
-    ``binaryFile`` scan, a streaming ``readStream.format("binaryFile")``
-    micro-batch, or shard bytes landed through any other source. With a
-    ``corrupt`` accumulator (``corrupt_accumulator``) it also needs the
-    ``path`` column, which keys the per-shard counts."""
-    from functools import partial
-
-    return binary_df.mapInArrow(partial(_parse_batches, corrupt=corrupt),
-                                DOC_SCHEMA)
-
-
 def read_wire(spark: SparkSession, path: str | list[str],
               corrupt=None) -> DataFrame:
     """``binaryFile`` scan → parsed `documents` rows (doc_id, spans, n_spans).
 
-    ``path`` is a shard directory or an explicit list of shard paths (a
-    lineage bucket's file group); an empty list reads as no rows.
+    ``path`` is a shard directory or a list of shard paths. Corrupt records
+    are dropped per-record (see ``_parse_shard_columnar``); the parse adds
+    each shard's drop count to the ``corrupt`` accumulator when one is
+    passed (``corrupt_accumulator``).
 
-    Drop-in replacement for the parquet `documents` source: feeding this into
-    ``pipeline.extract_documents`` is the full raw-bytes S1 lifecycle.
-    Corrupt records are dropped per-record (see ``_parse_shard_columnar``);
-    the parse adds each shard's drop count to the ``corrupt`` accumulator
-    when one is passed (``corrupt_accumulator``).
+    The decoded documents, for inspection and as the semantic yardstick:
+    ``extract_documents(read_wire(...))`` is what ``extract_wire`` must
+    equal. No job extracts this way: a mapInArrow parse is opaque to
+    Catalyst, so ``extract_documents`` would plan its salted branch as a
+    second full scan and parse, and the parsed spans would cross the JVM
+    boundary twice."""
+    from functools import partial
 
-    A mapInArrow parse is opaque to Catalyst, so ``extract_documents`` over
-    this frame alone plans its salted branch as a second full scan and
-    parse. Take the shard list once (``list_shards``) and pass
-    ``max_spans=wire_max_spans(shards)`` and
-    ``oversized=wire_docs_over(spark, shards, salt_threshold)`` with
-    ``read_wire(spark, shards)``: the sidecar then drops the salted branch,
-    or limits its scan to the shards that can hold an oversized doc."""
-    if isinstance(path, list) and not path:
-        return spark.createDataFrame([], DOC_SCHEMA)
-    return parse_wire_binary(_binary_scan(spark, path), corrupt=corrupt)
+    return _binary_scan(spark, path).mapInArrow(
+        partial(_parse_batches, corrupt=corrupt), DOC_SCHEMA)
 
 
 def _stats_arrow(it):
@@ -703,31 +548,42 @@ def extract_wire_fused(binary_df: DataFrame,
     cross in and only (records, markdown) cross out — the decode-once shape
     a 100 TB raw-bytes ingest needs.
 
+    ``binary_df`` is any frame with ``path`` and ``content`` columns: the
+    batch ``binaryFile`` scan or a streaming micro-batch of one.
+
     Semantics: identical to ``extract_documents(read_wire(...))`` — pinned
     by test (including corrupt-shard per-record drops and null spans).
-    Execution differences, by design: no oversized-doc salting (a document
-    lives inside one wire record, so the salt path's cross-page shuffle
-    cannot apply; a pathological multi-MB doc makes one long task — bound
-    oversized records at SHARD-WRITE time if that matters). Corrupt records
-    are counted by this same parse into the ``corrupt`` accumulator, when
-    one is passed (``corrupt_accumulator``)."""
+    Execution difference, by design: no oversized-doc salting. By the time
+    a salted branch could see a wire document, the shard parse has already
+    held the whole document in one task, so salting cannot lower per-task
+    memory, which is what ``SALT_SPAN_THRESHOLD`` is set by; it would only
+    spread kernel time, which costs less than the salted shuffle below ~2M
+    spans (see constants.py). Corrupt records are counted by this same parse
+    into the ``corrupt`` accumulator, when one is passed
+    (``corrupt_accumulator``)."""
     from functools import partial
 
     from ..packaging import ensure_on_executors
-    from ..pipeline import OUTPUT_SCHEMA, normalize_columns
+    from ..pipeline import normalize_columns, output_schema
 
     ensure_on_executors(binary_df.sparkSession)
     cols = normalize_columns(columns)
-    schema = T.StructType(
-        [T.StructField("doc_id", T.StringType())]
-        + [f for f in OUTPUT_SCHEMA.fields if f.name in cols])
     return binary_df.select("path", "content").mapInArrow(
-        partial(_fused_extract_arrow, columns=cols, corrupt=corrupt), schema)
+        partial(_fused_extract_arrow, columns=cols, corrupt=corrupt),
+        output_schema(cols))
 
 
-def extract_wire(spark: SparkSession, path: str,
+def extract_wire(spark: SparkSession, path: str | list[str],
                  columns: tuple[str, ...] = ("spans", "markdown"),
                  corrupt=None) -> DataFrame:
-    """``binaryFile`` scan → fused parse+extract (see extract_wire_fused)."""
+    """``binaryFile`` scan → fused parse+extract (see extract_wire_fused).
+    ``path`` is a shard directory or a list of shard paths (a lineage
+    bucket's file group); an empty list gives an empty frame in the output
+    schema."""
+    from ..pipeline import normalize_columns, output_schema
+
+    if isinstance(path, list) and not path:
+        return spark.createDataFrame(
+            [], output_schema(normalize_columns(columns)))
     return extract_wire_fused(_binary_scan(spark, path), columns=columns,
                               corrupt=corrupt)

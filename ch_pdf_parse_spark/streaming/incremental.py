@@ -54,8 +54,9 @@ def incremental_extract_wire(
     extracted exactly once per shard (availableNow drain; the checkpoint
     remembers which shard FILES were consumed, so the per-record parse never
     re-runs on old shards — at 10^12 docs re-listing is the only per-run
-    cost, and corrupt records still degrade per-record inside each shard)."""
-    from ..sources.wireformat import parse_wire_binary
+    cost, and corrupt records still degrade per-record inside each shard).
+    Each micro-batch is parsed once, by the fused parse+extract."""
+    from ..sources.wireformat import extract_wire_fused
 
     # file streaming sources need an explicit schema; binaryFile's is fixed
     stream = (spark.readStream.format("binaryFile")
@@ -68,8 +69,7 @@ def incremental_extract_wire(
               .select("path", "content"))
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        extract_documents(parse_wire_binary(batch_df)) \
-            .write.mode("append").parquet(output_dir)
+        extract_wire_fused(batch_df).write.mode("append").parquet(output_dir)
 
     (
         stream.writeStream.foreachBatch(process)

@@ -99,12 +99,6 @@ def main() -> None:
     wire_corrupt = None
     if args.no_lineage:
         if wire:
-            # single-pass wire mode takes the FUSED lifecycle (round 6:
-            # parse + kernel in one mapInArrow, 1.8× — parsed spans never
-            # re-cross the JVM boundary; output pinned row-identical to
-            # extract_documents(read_wire(...)) in tests/test_wire_fused).
-            # Lineage mode keeps the composable path: each bucket parses
-            # its own group of shards (read_wire over a shard list).
             from ch_pdf_parse_spark.sources.wireformat import (
                 corrupt_accumulator, extract_wire)
 
@@ -119,8 +113,6 @@ def main() -> None:
         n_docs = read_table(spark, args.output).count()
     else:
         if wire:
-            # the shard list, a per-group reader and each group's corrupt
-            # counts, handed to the lineage runner explicitly
             from ch_pdf_parse_spark.sources.wireformat import wire_input
 
             docs = wire_input(spark, args.input)

@@ -203,16 +203,21 @@ def test_footer_max_spans(tmp_path):
     assert L.footer_max_spans([nulls]) is None
 
 
-def test_bound_needs_the_stored_column(spark, docs_df):
-    files = L.table_input(docs_df).files
-    assert L.table_input(docs_df).max_spans(files) is not None
-    assert L.table_input(docs_df.where("n_spans > 0")).max_spans(files) \
-        is not None
+def test_bound_needs_the_stored_column(spark, docs_df, recorded):
+    calls = recorded()
+
+    def bound(df):
+        src = L.table_input(df)
+        src.extract(src.files, ("spans", "markdown"))
+        return calls[-1][1]
+
+    assert bound(docs_df) is not None
+    assert bound(docs_df.where("n_spans > 0")) is not None
     for derived in (docs_df.withColumn("n_spans", F.col("n_spans") * 1000),
                     docs_df.withColumnRenamed("n_spans", "n").withColumn(
                         "n_spans", F.col("n")),
                     docs_df.drop("n_spans")):
-        assert L.table_input(derived).max_spans(files) is None
+        assert bound(derived) is None
     # rows mixed in from another relation are not covered either
     assert L._is_stored_column(docs_df, "n_spans")
     assert not L._is_stored_column(docs_df.unionByName(docs_df), "n_spans")
@@ -255,10 +260,6 @@ def test_job_wire_mode_runs_with_lineage_and_resumes(
 
     wire = str(tmp_path / "wire")
     wf.write_wire_shards(docs_df, wire, n_shards=4)
-    shards = wf.list_shards(wire)
-    assert wf.wire_max_spans(shards) == \
-        docs_df.agg(F.max("n_spans")).collect()[0][0]
-    assert wf.wire_max_spans(shards + [wire + "/unlisted.cpw"]) is None
     out = str(tmp_path / "out")
     monkeypatch.setattr(SparkSession, "stop", lambda self: None)
     monkeypatch.setattr(sys, "argv", [
@@ -272,5 +273,37 @@ def test_job_wire_mode_runs_with_lineage_and_resumes(
     assert runs[0]["buckets_computed"] == 3
     assert runs[1]["buckets_computed"] == 0
     assert runs[0]["docs"] == runs[1]["docs"] == docs_df.count()
+    assert _collect(L.read_output(spark, out)) == \
+        _collect(wf.extract_wire(spark, wire))
+
+
+def test_job_wire_mode_more_buckets_than_shards(
+        spark, docs_df, tmp_path, monkeypatch, capsys):
+    """Buckets left without a shard write an empty output and a 0/0
+    record."""
+    import sys
+
+    import job
+    from ch_pdf_parse_spark.sources import wireformat as wf
+
+    wire = str(tmp_path / "wire")
+    n_shards = wf.write_wire_shards(docs_df, wire, n_shards=2)
+    out = str(tmp_path / "out")
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    monkeypatch.setattr(sys, "argv", [
+        "job.py", "--input", wire, "--input-format", "wire",
+        "--output", out, "--buckets", str(n_shards + 2)])
+    job.main()
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert report["buckets_computed"] == n_shards + 2
+    assert report["docs"] == docs_df.count()
+    recs = {r["bucket"]: r for r in L.done_records(out)}
+    empty = [b for b, r in recs.items() if r["doc_count"] == 0]
+    assert len(recs) == n_shards + 2 and len(empty) == 2
+    for b in empty:
+        assert recs[b]["span_count"] == 0
+        got = spark.read.parquet(os.path.join(out, f"bucket={b}"))
+        assert got.columns == ["doc_id", "spans", "markdown"]
+        assert got.count() == 0
     assert _collect(L.read_output(spark, out)) == \
         _collect(wf.extract_wire(spark, wire))

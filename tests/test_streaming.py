@@ -44,11 +44,26 @@ def test_incremental_extract_exactly_once(spark, corpus_dir, tmp_path):
     shutil.rmtree(ckpt)
 
 
-def test_incremental_wire_extract_exactly_once(spark, corpus_dir, tmp_path):
+def test_incremental_wire_extract_exactly_once(spark, corpus_dir, tmp_path,
+                                               monkeypatch):
     """Streaming twin of the raw-bytes lifecycle: .cpw shard drops are
-    decoded + extracted exactly once (checkpoint tracks shard files)."""
+    decoded + extracted exactly once (checkpoint tracks shard files), each
+    micro-batch by one binaryFile scan and one MapInArrow, no Exchange."""
+    from ch_pdf_parse_spark.sources import wireformat as wf
     from ch_pdf_parse_spark.sources.wireformat import write_wire_shards
     from ch_pdf_parse_spark.streaming.incremental import incremental_extract_wire
+
+    plans = []
+    fused = wf.extract_wire_fused
+
+    def recording(batch_df, **kw):
+        out = fused(batch_df, **kw)
+        qe = out._jdf.queryExecution()
+        plans.append((qe.executedPlan().toString(),
+                      qe.toRdd().toDebugString()))
+        return out
+
+    monkeypatch.setattr(wf, "extract_wire_fused", recording)
 
     src = str(tmp_path / "wire_incoming")
     out = str(tmp_path / "wire_out")
@@ -70,6 +85,14 @@ def test_incremental_wire_extract_exactly_once(spark, corpus_dir, tmp_path):
 
     incremental_extract_wire(spark, src, out, ckpt)  # nothing new: no-op
     assert spark.read.parquet(out).count() == full.count()
+    assert len(plans) == 2
+    # foreachBatch hands over the micro-batch as an RDD of binaryFile rows:
+    # one scan of it in the plan, one file scan in its lineage
+    for plan, lineage in plans:
+        assert plan.count("Scan ExistingRDD") == 1, plan
+        assert plan.count("MapInArrow") == 1, plan
+        assert "Exchange" not in plan, plan
+        assert lineage.count("FileScanRDD") == 1, lineage
 
     shutil.rmtree(ckpt)
 

@@ -1,10 +1,12 @@
-"""Every name that the scripts outside the package import from it exists.
+"""Every name imported from the package exists.
 
 The tools, the benchmark, ``bench.py``, ``job.py`` and ``__spark_entry__.py``
-import most package names inside functions, so a deleted or renamed name
-only fails when that code path runs, possibly long after the change. This
-test reads their imports with ``ast`` (nothing is executed) and checks each
-``from ch_pdf_parse_spark... import X`` against the package.
+import most package names inside functions, and so do the package's own
+modules (``from ..x import y``), so a deleted or renamed name only fails
+when that code path runs, possibly long after the change. This test reads
+the imports with ``ast`` (nothing is executed) and checks each
+``from ch_pdf_parse_spark... import X``, relative ones resolved against the
+importing module's package, against the package.
 """
 
 import ast
@@ -26,6 +28,20 @@ def _scripts() -> list[str]:
     return files
 
 
+def _package_files() -> list[str]:
+    return sorted(glob.glob(os.path.join(ROOT, PKG, "**", "*.py"),
+                            recursive=True))
+
+
+def _absolute(path: str, node: ast.ImportFrom) -> str | None:
+    """The absolute module an ``ImportFrom`` in ``path`` names."""
+    if not node.level:
+        return node.module
+    parts = os.path.relpath(os.path.dirname(path), ROOT).split(os.sep)
+    parts = parts[:len(parts) - node.level + 1]
+    return ".".join(parts + ([node.module] if node.module else []))
+
+
 def _package_imports(path: str) -> list[tuple[int, str, str | None]]:
     """(line, module, name) for each package import in ``path``; ``name``
     is None for a plain ``import module``."""
@@ -33,9 +49,10 @@ def _package_imports(path: str) -> list[tuple[int, str, str | None]]:
         tree = ast.parse(f.read(), path)
     out = []
     for node in ast.walk(tree):
-        if isinstance(node, ast.ImportFrom) and node.level == 0 and \
-                node.module and node.module.split(".")[0] == PKG:
-            out += [(node.lineno, node.module, a.name) for a in node.names]
+        if isinstance(node, ast.ImportFrom):
+            module = _absolute(path, node)
+            if module and module.split(".")[0] == PKG:
+                out += [(node.lineno, module, a.name) for a in node.names]
         elif isinstance(node, ast.Import):
             out += [(node.lineno, a.name, None) for a in node.names
                     if a.name.split(".")[0] == PKG]
@@ -66,6 +83,17 @@ def test_package_names_imported_by_scripts_exist(path):
     assert not missing, missing
 
 
+def test_package_internal_imports_exist():
+    missing = [f"{os.path.relpath(path, ROOT)}:{line}: {module}"
+               + (f".{name}" if name else "")
+               for path in _package_files()
+               for line, module, name in _package_imports(path)
+               if not _resolves(module, name)]
+    assert not missing, missing
+
+
 def test_scripts_import_the_package():
     # the scan is not vacuous: the scripts do import package names
     assert sum(len(_package_imports(p)) for p in _scripts()) > 20
+    # nor for the package's own modules, most of whose imports are relative
+    assert sum(len(_package_imports(p)) for p in _package_files()) > 100

@@ -168,147 +168,59 @@ def test_crc_catches_payload_tamper():
     assert zlib.crc32(b"") == 0  # sanity: zlib present
 
 
-# ------------------------------------------------------- _SPANSTATS sidecar
-
-
-def _out_key(rows):
-    return sorted((r["doc_id"],
-                   tuple(map(tuple, r["spans"])) if r["spans"] is not None
-                   else None,
-                   r["markdown"]) for r in rows)
-
-
-def test_spanstats_sidecar_written_and_true_bound(spark, docs_df, wire_dir):
-    stats = wf._read_spanstats(wire_dir)
-    assert stats is not None
-    shards = sorted(f for f in os.listdir(wire_dir) if f.endswith(".cpw"))
-    assert sorted(stats) == shards
-    # each entry is the exact max non-null span count and size of its shard
-    for f in shards:
-        data = open(os.path.join(wire_dir, f), "rb").read()
-        counts = wf._parse_shard_columnar(data).counts
-        want = max((c for c in counts if c is not None), default=-1)
-        assert stats[f] == (want, len(data))
-
-
-def _routed(spark, wire_dir, salt_threshold):
-    """``extract_documents`` over a wire dir with both routing branches
-    built from one shard list: the sidecar's bound and its pruned
-    oversized-doc source."""
-    shards = wf.list_shards(wire_dir)
-    return extract_documents(
-        wf.read_wire(spark, shards), salt_threshold=salt_threshold,
-        max_spans=wf.wire_max_spans(shards),
-        oversized=wf.wire_docs_over(spark, shards, salt_threshold))
-
-
-def test_wire_big_branch_pruned_by_sidecar(spark, docs_df, wire_dir):
-    """extract_documents' oversized branch must NOT re-scan every shard when
-    the sidecar proves none can qualify: exactly one binaryFile scan in the
-    plan (the generic fallback has two), identical output."""
-    from ch_pdf_parse_spark import constants as C
-
-    def scans(df):
-        return df._jdf.queryExecution().executedPlan().toString() \
-            .count("binaryFile")
-
-    assert scans(_routed(spark, wire_dir, C.SALT_SPAN_THRESHOLD)) == 1
-    assert scans(extract_documents(wf.read_wire(spark, wire_dir))) == 2
-    got = _out_key(_routed(spark, wire_dir, C.SALT_SPAN_THRESHOLD).collect())
-    # no routing arguments: the full double-scan route, the semantics
-    # yardstick
-    want = _out_key(extract_documents(wf.read_wire(spark, wire_dir)).collect())
-    assert got == want
-
-
-def test_wire_pruned_salted_route_equal(spark, docs_df, wire_dir):
-    """With a threshold that genuinely splits the corpus, the pruned big
-    branch must feed the salted path the exact same oversized docs."""
-    shards = wf.list_shards(wire_dir)
-    assert wf.wire_docs_over(spark, shards, 1) is not None
-    got = _out_key(_routed(spark, wire_dir, 1).collect())
-    want = _out_key(extract_documents(
-        wf.read_wire(spark, wire_dir), salt_threshold=1).collect())
-    assert got == want
-
-
-def test_wire_sidecar_fallbacks(spark, docs_df, wire_dir, tmp_path):
-    """Absent, corrupted, and incomplete sidecars all degrade to the full
-    scan (never to wrong pruning)."""
-    out = str(tmp_path / "nostats")
-    os.makedirs(out)
-    shards = sorted(f for f in os.listdir(wire_dir) if f.endswith(".cpw"))
-    for f in shards:
-        open(os.path.join(out, f), "wb").write(
-            open(os.path.join(wire_dir, f), "rb").read())
-    sizes = {f: os.path.getsize(os.path.join(out, f)) for f in shards}
-    want = _out_key(extract_documents(
-        wf.read_wire(spark, wire_dir), salt_threshold=1).collect())
-    # absent
-    assert wf._read_spanstats(out) is None
-    assert _out_key(_routed(spark, out, 1).collect()) == want
-    # corrupted (one flipped byte -> crc rejects -> full scan)
-    wf._write_spanstats(out, [(f, 0, sizes[f]) for f in shards])  # wrong...
-    data = bytearray(
-        open(os.path.join(out, wf.SPANSTATS_NAME), "rb").read())
-    data[8] ^= 0xFF
-    open(os.path.join(out, wf.SPANSTATS_NAME), "wb").write(bytes(data))
-    assert wf._read_spanstats(out) is None  # ...never consulted: crc fails
-    assert _out_key(_routed(spark, out, 1).collect()) == want
-    # incomplete (valid sidecar missing one present shard -> fall back)
-    wf._write_spanstats(out, [(f, 10 ** 9, sizes[f]) for f in shards[1:]])
-    assert wf.wire_docs_over(spark, wf.list_shards(out), 1) is None
-    assert _out_key(_routed(spark, out, 1).collect()) == want
+# ------------------------------------------------- lineage buckets
 
 
 _SPAN_T = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 
 
-def test_crashed_rewrite_leaves_no_stale_sidecar(spark, tmp_path,
-                                                 monkeypatch):
-    """Rewriting a wire dir must invalidate its old ``_SPANSTATS`` first: a
-    crash before the new sidecar lands would otherwise leave the old bounds
-    (every shard under the threshold) over the new shards, and the
-    oversized doc would be pruned away silently."""
-    def corpus(n_big):
-        rows = [(f"d{i}", [("text", f"t{i}", "", 0)]) for i in range(8)]
-        rows.append(("big", [("text", f"w{j}", "", j) for j in range(n_big)]))
-        return spark.createDataFrame(rows, f"doc_id string, spans {_SPAN_T}")
-
-    out = str(tmp_path / "wire")
-    wf.write_wire_shards(corpus(1), out, n_shards=2)
-    assert max(mx for mx, _ in wf._read_spanstats(out).values()) == 1
-
-    def crash(*_):
-        raise RuntimeError("crash before the sidecar lands")
-
-    monkeypatch.setattr(wf, "_write_spanstats", crash)
-    with pytest.raises(RuntimeError):
-        wf.write_wire_shards(corpus(6), out, n_shards=2)
-    got = {r["doc_id"] for r in _routed(spark, out, 3).collect()}
-    assert "big" in got and len(got) == 9
+def test_lineage_bucket_is_one_scan_one_python_stage(spark, wire_dir):
+    src = wf.wire_input(spark, wire_dir)
+    plan = src.extract(src.files[:2], ("spans", "markdown"))._jdf \
+        .queryExecution().executedPlan().toString()
+    assert plan.count("binaryFile") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "Exchange" not in plan, plan
 
 
-def test_shard_rewritten_under_old_sidecar_is_not_pruned(spark, tmp_path):
-    """A shard overwritten after the sidecar was published (here with a
-    doc above the threshold) must not be judged by its old bound: its size
-    no longer matches the recorded one, so routing falls back to the full
-    scan and the doc is kept instead of silently dropped."""
+def test_same_size_shard_rewrite_keeps_oversized_doc(spark, tmp_path,
+                                                      monkeypatch):
+    """A shard rewritten at exactly its old byte size with a document above
+    the salt threshold must still reach the output of a lineage run: no
+    statistics recorded at write time may decide which documents a bucket
+    extracts."""
+    from ch_pdf_parse_spark import pipeline
+    from ch_pdf_parse_spark.sources import lineage as L
+
     rows = [(f"d{i}", [("text", f"t{i}", "", 0)]) for i in range(8)]
-    out = str(tmp_path / "wire")
+    wire = str(tmp_path / "wire")
     wf.write_wire_shards(
-        spark.createDataFrame(rows, f"doc_id string, spans {_SPAN_T}"), out,
+        spark.createDataFrame(rows, f"doc_id string, spans {_SPAN_T}"), wire,
         n_shards=2)
-    shards = wf.list_shards(out)
-    assert wf.wire_max_spans(shards) == 1
+    shards = wf.list_shards(wire)
+    size = os.path.getsize(shards[0])
     big = [{"kind": "text", "text": f"w{j}", "media_ref": "", "offset": j}
            for j in range(3)]
-    with open(shards[0], "wb") as f:  # _SPANSTATS left as it was
-        f.write(wf.encode_shard([("big", big)]))
-    assert wf.wire_max_spans(shards) is None
-    assert wf.wire_docs_over(spark, shards, 1) is None
-    got = {r["doc_id"] for r in _routed(spark, out, 1).collect()}
-    assert "big" in got
+    pad = size - len(wf.encode_shard([("big", big)]))
+    assert pad >= 0
+    big_id = "big" + "x" * pad
+    with open(shards[0], "wb") as f:
+        f.write(wf.encode_shard([(big_id, big)]))
+    assert os.path.getsize(shards[0]) == size
+
+    orig = pipeline.extract_documents
+
+    def low_threshold(docs, **kw):
+        kw["salt_threshold"] = 1
+        return orig(docs, **kw)
+
+    monkeypatch.setattr(pipeline, "extract_documents", low_threshold)
+    out = str(tmp_path / "out")
+    L.run_with_lineage(spark, wf.wire_input(spark, wire), out, n_buckets=2)
+    got = {r["doc_id"] for r in L.read_output(spark, out).collect()}
+    assert big_id in got
+    assert got == {r["doc_id"] for r in wf.extract_wire(spark, wire)
+                   .collect()}
 
 
 # ------------------------------------------------- corrupt-record counting

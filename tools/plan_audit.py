@@ -317,8 +317,8 @@ def audit(spark, sf_dir: str) -> tuple[list[tuple[str, str, bool, str]], dict[st
     # kernel; shard count alone sets ingest parallelism (sources/wireformat.py)
     import tempfile
 
-    from ch_pdf_parse_spark.pipeline import extract_documents
-    from ch_pdf_parse_spark.sources.wireformat import (list_shards,
+    from ch_pdf_parse_spark.sources.wireformat import (extract_wire,
+                                                       list_shards,
                                                        read_wire,
                                                        write_wire_shards)
 
@@ -333,20 +333,16 @@ def audit(spark, sf_dir: str) -> tuple[list[tuple[str, str, bool, str]], dict[st
     add("wire_decode", "binaryFile scan → MapInArrow parse, zero Exchange "
         "(shard count alone sets ingest parallelism)",
         "MapInArrow" in p and not re.search(r"\bExchange\b", p))
-    # downstream extraction over parsed wire rows: the wire source must add
-    # ZERO exchanges vs the parquet-fed flagship (parse kernel chains onto
-    # the scan; both extraction branches unchanged, both reading `shards`)
-    p = formatted_plan(extract_documents(
-        read_wire(spark, shards).select("doc_id", "spans")))
+    # extraction of the wire shards: the parse and the kernel run in one
+    # MapInArrow over one binaryFile scan, with no Exchange
+    p = formatted_plan(extract_wire(spark, shards))
     plans["wire_ingest_extract"] = p
-    p_parquet = formatted_plan(extract_documents(
-        fixture_docs(spark, sf_dir).select("doc_id", "spans")))
-    n_wire = len(re.findall(r"\(\d+\) Exchange", p))
-    n_parq = len(re.findall(r"\(\d+\) Exchange", p_parquet))
-    add("wire_ingest_extract", "wire source adds zero exchanges vs the "
-        "parquet-fed flagship (parse chains onto the binary scan)",
-        p.count("MapInArrow") >= 2 and n_wire == n_parq,
-        f"{n_wire} exchanges (parquet path: {n_parq})")
+    n_py = len(re.findall(r"\(\d+\) MapInArrow", p))
+    n_scan = len(re.findall(r"\(\d+\) Scan binaryFile", p))
+    add("wire_ingest_extract", "one binaryFile scan → one MapInArrow "
+        "(parse + extraction), zero Exchange",
+        n_py == n_scan == 1 and not re.search(r"\bExchange\b", p),
+        f"{n_scan} scans, {n_py} MapInArrow")
 
     # --- r5: as-of join is union-merge, not a range join ------------------
     from ch_pdf_parse_spark.operators.asof import j_asof_join
