@@ -6,6 +6,15 @@
   corpus size; the bucket join is the only wide operation).
 * ``dedup_embedding_cosine`` — near-dup pairs by cosine over an inverted
   LSH-band index union'd with injected exact duplicates.
+* IVF (inverted-file) ANN: ``sim_ann_ivf`` (±1 codebook), ``ivf_kmeans_point``
+  and ``sim_ann_ivf_kmeans`` (sampled k-means codebook, one or two nprobe
+  operating points).
+
+One plan per technique: every IVF query is ``_ivf_plan(codebook,
+probe_points)`` with its one cell assigner (``_cell_assigner``) and one
+DuckDB twin (``_ivf_sql``); every LSH signature comes from
+``_lsh_buckets(df, planes)``. A variant changes the codebook, the planes or
+the probe points, never the plan.
 
 Cross-engine float determinism: bucket keys (LSH sign bits) and cosine
 scores are numpy (``einsum``/matmul) on the Spark side and DuckDB's native
@@ -25,8 +34,9 @@ left-to-right ``aggregate(zip_with(...))`` / ``list_aggregate`` fold; that
 made the margin argument trivial but inflated plans with 12×64-element
 literals and evaluated interpreted per element — it dominated the query's
 wall time on both engines and the margin makes it unnecessary.)
-Hyperplanes are ±1 vectors derived from md5 at module load (numpy matrix
-Spark-side, literals in the DuckDB SQL).
+Hyperplanes and the IVF ±1 codebook are ±1 vectors derived from md5 at
+module load (``_pm1_rows``: numpy matrix Spark-side, literals in the DuckDB
+SQL).
 """
 
 from __future__ import annotations
@@ -40,7 +50,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, DoubleType, IntegerType
 
-from ..registry import SQL, q_sql, quantize, register, _t
+from ..registry import DYNAMIC_SQL, SQL, q_sql, quantize, register, _t
 
 DIM = 64
 N_PLANES = 12
@@ -48,29 +58,30 @@ BAND_BITS = 3  # 4 bands x 3 bits
 TOPK = 5
 
 
-def _planes(n: int = N_PLANES) -> list[list[int]]:
-    out = []
-    for p in range(n):
-        row = []
-        for d in range(DIM):
-            h = hashlib.md5(f"plane:{p}:{d}".encode()).hexdigest()
-            row.append(1 if int(h[0], 16) >= 8 else -1)
-        out.append(row)
-    return out
-
-
-PLANES = _planes()
-
 # dedup_embedding_cosine uses a wider signature (8 bands × 3 bits) than the
 # top-k ANN: near-dup detection must RECALL essentially every cos>0.95 pair
 # (P[miss | cos=0.95] = (1-0.899³)⁴ ≈ 0.6% at 4 bands vs ≈ 3e-5 at 8), while
-# top-k only needs good-enough neighbors. First 12 planes coincide with PLANES.
+# top-k only needs good-enough neighbors. First 12 planes are the ANN planes.
 N_PLANES_DEDUP = 24
+
+
+def _pm1_rows(tag: str, n: int) -> np.ndarray:
+    """``n`` deterministic ±1 rows of DIM components, component ``d`` of row
+    ``i`` the sign picked by md5(f"{tag}:{i}:{d}"): the LSH hyperplanes and
+    the data-independent IVF codebook."""
+    def sign(i: int, d: int) -> float:  # the high bit of the first md5 byte
+        md5 = hashlib.md5(f"{tag}:{i}:{d}".encode()).digest()
+        return 1.0 if md5[0] & 0x80 else -1.0
+
+    return np.array([[sign(i, d) for d in range(DIM)] for i in range(n)])
+
+
+_PLANES_DEDUP_NP = _pm1_rows("plane", N_PLANES_DEDUP)
+_PLANES_NP = _PLANES_DEDUP_NP[:N_PLANES]
 
 # ---- shared expression builders (kept textually parallel across engines) --
 
 _SPARK_D = "transform({v}, x -> cast(x as double))"
-_SPARK_DOT = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
 
 
 # DataType object (not a DDL string): a string return type is parsed via the
@@ -99,9 +110,6 @@ def _duck_cos(a: str, b: str) -> str:
     return f"list_cosine_similarity({a}, {b})"
 
 
-_PLANES_NP = np.array(PLANES, dtype=np.float64)
-_PLANES_DEDUP_NP = np.array(_planes(N_PLANES_DEDUP), dtype=np.float64)
-
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, v: array<double>) corpus feed. Spread across cores before
     the cast (registry.spread_scan): the sf embeddings table is one
@@ -118,32 +126,10 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.expr(_SPARK_D.format(v="embedding")).alias("v"))
 
 
-
-def _sig_bits_impl(v: pd.Series, planes: np.ndarray) -> pd.Series:
-    if len(v) == 0:  # np.stack raises on an empty Arrow batch
-        return pd.Series([], dtype=object)
-    A = np.stack(v.to_numpy())
-    bits = (A @ planes.T >= 0).astype(np.int32)
-    return pd.Series(list(bits))
-
-
-@pandas_udf(ArrayType(IntegerType()))
-def _sig_bits(v: pd.Series) -> pd.Series:
-    """N_PLANES sign bits per vector — one numpy matmul per Arrow batch
-    (sign-margin analysis in the module docstring)."""
-    return _sig_bits_impl(v, _PLANES_NP)
-
-
-@pandas_udf(ArrayType(IntegerType()))
-def _sig_bits_dedup(v: pd.Series) -> pd.Series:
-    """N_PLANES_DEDUP sign bits — the high-recall signature for near-dup."""
-    return _sig_bits_impl(v, _PLANES_DEDUP_NP)
-
-
 def _duck_sig_bits(vcol: str) -> str:
     bits = []
-    for plane in PLANES:
-        lit = f"[{', '.join(f'{w}.0' for w in plane)}]::DOUBLE[]"
+    for plane in _PLANES_NP:
+        lit = f"[{', '.join(repr(float(w)) for w in plane)}]::DOUBLE[]"
         bits.append(f"CASE WHEN {_duck_dot(vcol, lit)} >= 0 THEN 1 ELSE 0 END")
     return f"[{', '.join(bits)}]"
 
@@ -163,12 +149,22 @@ def _bands_from_bits(bits_expr: str, engine: str,
     return bands
 
 
-def _lsh_buckets(df: DataFrame, sig_udf, n_planes: int) -> DataFrame:
-    """(vec_id, v) → one row per band membership: (vec_id, v, band, bkey).
-    Signature bits are one numpy matmul per Arrow batch; band keys are pure
-    column arithmetic, so bucketing never leaves the map side."""
-    s = df.withColumn("sig", sig_udf(F.col("v")))
-    bands = _bands_from_bits("sig", "spark", n_planes=n_planes)
+def _lsh_buckets(df: DataFrame, planes: np.ndarray) -> DataFrame:
+    """(vec_id, v) → one row per band membership: (vec_id, v, band, bkey),
+    with one band per BAND_BITS rows of ``planes``. Signature bits are one
+    numpy matmul per Arrow batch (sign-margin analysis in the module
+    docstring); band keys are pure column arithmetic, so bucketing never
+    leaves the map side."""
+
+    @pandas_udf(ArrayType(IntegerType()))
+    def sig_bits(v: pd.Series) -> pd.Series:
+        if len(v) == 0:  # np.stack raises on an empty Arrow batch
+            return pd.Series([], dtype=object)
+        bits = (np.stack(v.to_numpy()) @ planes.T >= 0).astype(np.int32)
+        return pd.Series(list(bits))
+
+    s = df.withColumn("sig", sig_bits(F.col("v")))
+    bands = _bands_from_bits("sig", "spark", n_planes=planes.shape[0])
     return s.select(
         "vec_id", "v",
         F.posexplode(F.array(*[F.expr(b) for b in bands])).alias("band", "bkey"),
@@ -440,7 +436,7 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = _emb(spark, sf_dir)
-    buckets = _lsh_buckets(e, _sig_bits, N_PLANES)
+    buckets = _lsh_buckets(e, _PLANES_NP)
     q = buckets.where(F.col("vec_id") % 97 == 0)
     cand = _banded_pair_scores(q, buckets, lambda ql, bl: ql != bl).select(
         F.col("id_l").alias("query_id"), F.col("id_r").alias("neighbor_id"), "c")
@@ -502,7 +498,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     PER CANDIDATE PAIR (measured 85 s → 3.5 s at a 20k-vector corpus;
     13.3 s → 0.97 s at sf0.1)."""
     corpus = _dedup_corpus(spark, sf_dir)
-    buckets = _lsh_buckets(corpus, _sig_bits_dedup, N_PLANES_DEDUP)
+    buckets = _lsh_buckets(corpus, _PLANES_DEDUP_NP)
     scored = _bucket_pair_scores(buckets, min_score=0.95)
     return scored.select(
         F.col("id_l").alias("vec_a"), F.col("id_r").alias("vec_b"),
@@ -528,48 +524,107 @@ def dedup_embedding_cosine_bruteforce(spark: SparkSession,
 
 N_CELLS = 16
 N_PROBE = 2
+N_PROBE_HI = 4
 IVF_TOPK = 3
 
-
-def _centroids() -> list[list[float]]:
-    """Deterministic ±1 codebook (a data-independent coarse quantizer — at
-    production scale you would k-means these on a sample; the PLAN below is
-    identical either way, only the literals change)."""
-    out = []
-    for c in range(N_CELLS):
-        row = []
-        for d in range(DIM):
-            h = hashlib.md5(f"centroid:{c}:{d}".encode()).hexdigest()
-            row.append(1.0 if int(h[0], 16) >= 8 else -1.0)
-        out.append(row)
-    return out
+# Deterministic ±1 codebook: a data-independent coarse quantizer. The sampled
+# k-means codebook below follows the corpus density; the plan is the same
+# either way, only the literals change.
+_CENTROIDS_NP = _pm1_rows("centroid", N_CELLS)
 
 
-_CENTROIDS_NP = np.array(_centroids(), dtype=np.float64)
+def _half_norms(codebook: np.ndarray) -> np.ndarray:
+    """‖C‖²/2 per cell, the bias of the nearest-centroid score. The Spark
+    assigner and the DuckDB literals share it, so both engines subtract the
+    same doubles (every ±1 centroid has exactly 32.0: a uniform shift that
+    leaves the dot order unchanged)."""
+    return np.linalg.norm(codebook, axis=1) ** 2 / 2.0
 
 
-@pandas_udf(ArrayType(IntegerType()))
-def _top_cells(v: pd.Series) -> pd.Series:
-    """Top-N_PROBE coarse-quantizer cells per vector, best first (one numpy
-    matmul + argsort per Arrow batch — the assignment never leaves the map
-    side, so vectors are never shuffled 16× under a ranking window).
-    Ties break by cell index (stable argsort), matching the oracle's
-    ``ORDER BY d DESC, cell``; cross-engine determinism is the module-
-    docstring margin argument (a flip needs two centroid dots within
-    float-accumulation distance ~1e-13)."""
-    if len(v) == 0:
-        return pd.Series([], dtype=object)
-    A = np.stack(v.to_numpy())
-    dots = A @ _CENTROIDS_NP.T
-    order = np.argsort(-dots, axis=1, kind="stable")[:, :N_PROBE].astype(np.int32)
-    return pd.Series(list(order))
+def _cell_assigner(codebook: np.ndarray, k: int):
+    """pandas_udf: the top-``k`` cells per vector, best first, scored
+    ``A @ C.T − ‖C‖²/2`` (one numpy matmul + argsort per Arrow batch — the
+    assignment never leaves the map side, so vectors are never shuffled
+    N_CELLS× under a ranking window). Ties break by cell index (stable
+    argsort), matching the oracle's ``ORDER BY d DESC, cell``; cross-engine
+    determinism is the module-docstring margin argument (a flip needs two
+    cell scores within float-accumulation distance ~1e-13)."""
+    half = _half_norms(codebook)
+
+    @pandas_udf(ArrayType(IntegerType()))
+    def top_cells(v: pd.Series) -> pd.Series:
+        if len(v) == 0:  # np.stack raises on an empty Arrow batch
+            return pd.Series([], dtype=object)
+        scores = np.stack(v.to_numpy()) @ codebook.T - half
+        order = np.argsort(-scores, axis=1, kind="stable")[:, :k]
+        return pd.Series(list(order.astype(np.int32)))
+
+    return top_cells
 
 
-def _ivf_sql() -> str:
-    dots = ", ".join(
-        _duck_dot("v", f"[{', '.join(str(w) for w in row)}]::DOUBLE[]")
-        for row in _centroids())
-    cells = ", ".join(str(i) for i in range(N_CELLS))
+def _ivf_plan(spark: SparkSession, sf_dir: str, codebook: np.ndarray,
+              probe_points: tuple[int, ...]) -> DataFrame:
+    """The IVF plan — assign, probe, cell equi-join, exact cosine re-rank —
+    as top-IVF_TOPK ``(query_id, neighbor_id, rank, nprobe)`` for each
+    operating point in ``probe_points``.
+
+    Every vector is assigned to its best cell; each query (vec_id % 97 == 0)
+    is assigned ONCE to its top-max(probe_points) cells, and posexplode keeps
+    each probed cell's 0-based rank ``pos``. A corpus vector lives in exactly
+    one cell, so each candidate has one ``pos``; it belongs to every point
+    ``p`` with ``pos < p``, and ONE window over (nprobe, query_id) ranks all
+    points: one assignment, one join, one shuffle whatever the number of
+    points. The equi-join on the scalar cell id is the only wide op, and the
+    candidate count is ∝ corpus/N_CELLS × nprobe — at 10^12 rows you
+    partition the corpus BY cell (Iceberg partition/bucket spec), so a probe
+    scans only its cells' files: partition pruning does the index lookup."""
+    from pyspark.sql import Window
+
+    top_cells = _cell_assigner(codebook, max(probe_points))
+    e = _emb(spark, sf_dir)
+    corpus = e.withColumn("cells", top_cells(F.col("v"))).select(
+        "vec_id", "v", F.element_at("cells", 1).alias("cell"))
+    # probe-side: filter BEFORE assignment so the %97 predicate reaches the
+    # scan and the UDF runs over O(queries) rows, not a second full corpus
+    # pass (r4; the assignment is per-row, so values are identical)
+    probes = (e.where(F.col("vec_id") % 97 == 0)
+              .withColumn("cells", top_cells(F.col("v")))
+              .select(F.col("vec_id").alias("query_id"),
+                      F.col("v").alias("qv"),
+                      F.posexplode("cells").alias("pos", "cell")))
+    cand = (
+        probes.join(corpus.alias("c"),
+                    (F.col("c.cell") == probes["cell"])
+                    & (F.col("c.vec_id") != F.col("query_id")))
+        .select("query_id", F.col("c.vec_id").alias("neighbor_id"),
+                cosine(F.col("qv"), F.col("c.v")).alias("c"), "pos")
+    )
+    # fan out AFTER scoring, so each candidate is scored once
+    pts = cand.select(
+        "query_id", "neighbor_id", "c", "pos",
+        F.explode(F.array(*map(F.lit, probe_points))).alias("nprobe"),
+    ).where(F.col("pos") < F.col("nprobe"))
+    w = Window.partitionBy("nprobe", "query_id").orderBy(
+        F.desc("c"), "neighbor_id")
+    return (
+        pts.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= IVF_TOPK)
+        .select("query_id", "neighbor_id", "rank", "nprobe")
+    )
+
+
+def _ivf_sql(codebook: np.ndarray, probe_points: tuple[int, ...]) -> str:
+    """DuckDB twin of ``_ivf_plan``. Codebook and half-norm literals are
+    rendered with ``repr``, which round-trips doubles exactly; ``rk`` is
+    1-based where Spark's posexplode ``pos`` is 0-based, so ``pos < p`` ↔
+    ``rk <= p``."""
+    def vec(row) -> str:
+        return f"[{', '.join(repr(float(x)) for x in row)}]::DOUBLE[]"
+
+    dots = ", ".join(f"({_duck_dot('v', vec(row))} - {repr(float(h))})"
+                     for row, h in zip(codebook, _half_norms(codebook)))
+    cells = ", ".join(str(i) for i in range(len(codebook)))
+    points = ", ".join(str(p) for p in probe_points)
     return f"""
     WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
          dotted AS MATERIALIZED (
@@ -581,55 +636,29 @@ def _ivf_sql() -> str:
                                      ORDER BY d DESC, cell) AS rk
            FROM dotted),
          corpus AS (SELECT vec_id, v, cell FROM ranked WHERE rk = 1),
-         probes AS (SELECT vec_id AS query_id, v AS qv, cell
-                    FROM ranked WHERE rk <= {N_PROBE} AND vec_id % 97 = 0),
+         probes AS (SELECT vec_id AS query_id, v AS qv, cell, rk
+                    FROM ranked
+                    WHERE rk <= {max(probe_points)} AND vec_id % 97 = 0),
          cand AS (SELECT p.query_id, c.vec_id AS neighbor_id,
-                         {_duck_cos('p.qv', 'c.v')} AS c
+                         {_duck_cos('p.qv', 'c.v')} AS c, p.rk,
+                         unnest([{points}]) AS nprobe
                   FROM probes p JOIN corpus c
                     ON c.cell = p.cell AND c.vec_id <> p.query_id),
-         out AS (SELECT query_id, neighbor_id,
-                        ROW_NUMBER() OVER (PARTITION BY query_id
+         out AS (SELECT query_id, neighbor_id, nprobe,
+                        ROW_NUMBER() OVER (PARTITION BY nprobe, query_id
                                            ORDER BY c DESC, neighbor_id) AS rank
-                 FROM cand)
-    SELECT query_id, neighbor_id, rank FROM out WHERE rank <= {IVF_TOPK}
+                 FROM cand WHERE rk <= nprobe)
+    SELECT query_id, neighbor_id, rank, nprobe
+    FROM out WHERE rank <= {IVF_TOPK}
     """
 
 
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN via an inverted-file index: every vector is assigned to its best
-    coarse-quantizer cell (argmax centroid dot); queries probe their top-
-    N_PROBE cells; candidates = corpus vectors in probed cells; exact cosine
-    re-rank top-k. Complement of sim_ann_lsh (the brief asks for "IVF or
-    LSH"): one equi-join on a scalar cell id is the only wide op, candidate
-    count ∝ corpus/N_CELLS × N_PROBE — at 10^12 rows you partition the
-    corpus BY cell (Iceberg partition/bucket spec), so a probe scans only
-    its cells' files: partition pruning does the index lookup."""
-    from pyspark.sql import Window
-
-    e = _emb(spark, sf_dir)
-    corpus = e.withColumn("cells", _top_cells(F.col("v"))).select(
-        "vec_id", "v", F.element_at("cells", 1).alias("cell"))
-    # probe-side: filter BEFORE assignment so the %97 predicate reaches the
-    # scan and the UDF runs over O(queries) rows, not a second full corpus
-    # pass (r4; the assignment is per-row, so values are identical)
-    probes = (e.where(F.col("vec_id") % 97 == 0)
-              .withColumn("cells", _top_cells(F.col("v")))
-              .select(F.col("vec_id").alias("query_id"),
-                      F.col("v").alias("qv"),
-                      F.explode("cells").alias("cell")))
-    cand = (
-        probes.join(corpus.alias("c"),
-                    (F.col("c.cell") == probes["cell"])
-                    & (F.col("c.vec_id") != F.col("query_id")))
-        .select("query_id", F.col("c.vec_id").alias("neighbor_id"),
-                cosine(F.col("qv"), F.col("c.v")).alias("c"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("c"), "neighbor_id")
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= IVF_TOPK)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    """ANN via an inverted-file index over the ±1 codebook: queries probe
+    their top-N_PROBE cells, candidates are the corpus vectors assigned to
+    those cells, exact cosine re-rank top-k (``_ivf_plan``). Complement of
+    sim_ann_lsh (the brief asks for "IVF or LSH")."""
+    return _ivf_plan(spark, sf_dir, _CENTROIDS_NP, (N_PROBE,)).drop("nprobe")
 
 
 @register("sim_ann_methods", None)
@@ -665,8 +694,8 @@ SQL["sim_ann_methods"] = f"""
     SELECT 'lsh' AS method, *, CAST(NULL AS DOUBLE) AS cos
     FROM ({_ann_sql()})
     UNION ALL
-    SELECT 'ivf' AS method, *, CAST(NULL AS DOUBLE) AS cos
-    FROM ({_ivf_sql()})
+    SELECT 'ivf' AS method, * EXCLUDE (nprobe), CAST(NULL AS DOUBLE) AS cos
+    FROM ({_ivf_sql(_CENTROIDS_NP, (N_PROBE,))})
     """
 
 
@@ -776,7 +805,7 @@ def _kmeans_codebook(sf_dir: str) -> np.ndarray:
     for _ in range(_KMEANS_ITERS):
         d = S @ C.T  # cosine-family assignment on normalized-ish data:
         # argmax dot, ties to the lower cell (argmax is first-max)
-        assign = np.argmax(d - np.linalg.norm(C, axis=1) ** 2 / 2.0, axis=1)
+        assign = np.argmax(d - _half_norms(C), axis=1)
         for c in range(N_CELLS):
             m = assign == c
             if m.any():  # empty cluster: keep previous centroid
@@ -806,172 +835,33 @@ def _codebook(sf_dir: str) -> np.ndarray:
     return _CODEBOOK_CACHE[key]
 
 
-def _ivf_plan(spark: SparkSession, sf_dir: str, centroids: np.ndarray,
-              n_probe: int = N_PROBE) -> DataFrame:
-    """The IVF plan (assign → probe → cell equi-join → exact re-rank) over an
-    arbitrary codebook; sim_ann_ivf/sim_ann_ivf_kmeans differ only in the
-    literals. Assignment score is the k-means objective's dot-minus-half-norm²
-    (equivalent to nearest-centroid for unit-norm centroids)."""
-    from pyspark.sql import Window
-
-    half_norms = (np.linalg.norm(centroids, axis=1) ** 2 / 2.0)
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def top_cells(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype=object)
-        A = np.stack(v.to_numpy())
-        dots = A @ centroids.T - half_norms
-        order = np.argsort(-dots, axis=1, kind="stable")[:, :n_probe]
-        return pd.Series(list(order.astype(np.int32)))
-
-    e = _emb(spark, sf_dir)
-    corpus = e.withColumn("cells", top_cells(F.col("v"))).select(
-        "vec_id", "v", F.element_at("cells", 1).alias("cell"))
-    # filter before assignment: probe-side UDF over O(queries) rows (r4)
-    probes = (e.where(F.col("vec_id") % 97 == 0)
-              .withColumn("cells", top_cells(F.col("v")))
-              .select(F.col("vec_id").alias("query_id"),
-                      F.col("v").alias("qv"),
-                      F.explode("cells").alias("cell")))
-    cand = (
-        probes.join(corpus.alias("c"),
-                    (F.col("c.cell") == probes["cell"])
-                    & (F.col("c.vec_id") != F.col("query_id")))
-        .select("query_id", F.col("c.vec_id").alias("neighbor_id"),
-                cosine(F.col("qv"), F.col("c.v")).alias("c"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("c"), "neighbor_id")
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= IVF_TOPK)
-        .select("query_id", "neighbor_id", "rank")
-    )
-
-
 def ivf_kmeans_point(spark: SparkSession, sf_dir: str,
                      n_probe: int = N_PROBE) -> DataFrame:
     """Single-operating-point IVF query over the sampled k-means codebook —
     the plan bench.py times and tools/ivf_recall.py sweeps (the registered
     driver query below unions two points and is not a recall-comparable
     top-k per query)."""
-    return _ivf_plan(spark, sf_dir, _codebook(sf_dir), n_probe=n_probe)
-
-
-N_PROBE_HI = 4
+    return _ivf_plan(spark, sf_dir, _codebook(sf_dir),
+                     (n_probe,)).drop("nprobe")
 
 
 @register("sim_ann_ivf_kmeans", None)
 def sim_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """sim_ann_ivf with a sampled k-means codebook instead of the
     data-independent ±1 quantizer (round-2 verdict item #6): cells follow the
-    corpus density, making the recall claim honest on clustered data. Same
-    shape — one scalar cell equi-join, vectors assigned map-side; the oracle
-    is regenerated per corpus with the identical centroid literals
+    corpus density, making the recall claim honest on clustered data. The
+    oracle is regenerated per corpus with the identical centroid literals
     (registry.DYNAMIC_SQL).
 
-    ``n_probe`` is the recall/cost knob (round-3 verdict item #3): candidate
-    count ∝ n_probe/N_CELLS of the corpus, recall rises with it (measured
+    ``nprobe`` is the recall/cost knob (round-3 verdict item #3): candidate
+    count ∝ nprobe/N_CELLS of the corpus, recall rises with it (measured
     curves in BENCH/BASELINE.md). This single registration hash-verifies BOTH
     operating points (nprobe=2 and nprobe=4, tagged by the ``nprobe``
-    column) — round 5 folded the former ``sim_ann_ivf_kmeans_np4`` entry in
-    here to free a roster slot under the driver's 50-query cap. The fold is
-    also the scale-correct plan: probes are assigned ONCE at the highest
-    nprobe (posexplode keeps each probed cell's rank), every candidate is
-    tagged with the probe rank that produced it (a corpus vector lives in
-    exactly one cell, so the tag is unique), and a candidate reached within
-    the top-``N_PROBE`` cells fans out to both operating points
-    (``explode([2, 4])``) before ONE window pass partitioned by (nprobe,
-    query_id) — one UDF assignment, one join, one shuffle for both points,
-    instead of running the pipeline twice. Cross-engine safety at nprobe=4
-    is pinned by the rank-4/5 cell-margin test (min gap 4.4e-6 across
-    testdata scales vs ~1e-13 float error)."""
-    from pyspark.sql import Window
-
-    centroids = _codebook(sf_dir)
-    half_norms = np.linalg.norm(centroids, axis=1) ** 2 / 2.0
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def top_cells(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype=object)
-        A = np.stack(v.to_numpy())
-        dots = A @ centroids.T - half_norms
-        order = np.argsort(-dots, axis=1, kind="stable")[:, :N_PROBE_HI]
-        return pd.Series(list(order.astype(np.int32)))
-
-    e = _emb(spark, sf_dir)
-    corpus = e.withColumn("cells", top_cells(F.col("v"))).select(
-        "vec_id", "v", F.element_at("cells", 1).alias("cell"))
-    probes = (e.where(F.col("vec_id") % 97 == 0)
-              .withColumn("cells", top_cells(F.col("v")))
-              .select(F.col("vec_id").alias("query_id"),
-                      F.col("v").alias("qv"),
-                      F.posexplode("cells").alias("pos", "cell")))
-    cand = (
-        probes.join(corpus.alias("c"),
-                    (F.col("c.cell") == probes["cell"])
-                    & (F.col("c.vec_id") != F.col("query_id")))
-        .select("query_id", F.col("c.vec_id").alias("neighbor_id"),
-                cosine(F.col("qv"), F.col("c.v")).alias("c"), "pos")
-    )
-    pts = cand.select(
-        "query_id", "neighbor_id", "c",
-        F.explode(
-            F.when(F.col("pos") < N_PROBE,
-                   F.array(F.lit(N_PROBE), F.lit(N_PROBE_HI)))
-            .otherwise(F.array(F.lit(N_PROBE_HI)))).alias("nprobe"))
-    w = Window.partitionBy("nprobe", "query_id").orderBy(
-        F.desc("c"), "neighbor_id")
-    return (
-        pts.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= IVF_TOPK)
-        .select("query_id", "neighbor_id", "rank", "nprobe")
-    )
+    column) from one ``_ivf_plan`` — one assignment, one join, one shuffle.
+    Cross-engine safety at nprobe=4 is pinned by the rank-4/5 cell-margin
+    test (min gap 4.4e-6 across testdata scales vs ~1e-13 float error)."""
+    return _ivf_plan(spark, sf_dir, _codebook(sf_dir), (N_PROBE, N_PROBE_HI))
 
 
-def _ivf_kmeans_dual_sql(sf_dir: str) -> str:
-    """DuckDB twin of the dual-operating-point query: probe ranks from the
-    same ranked CTE (rk is 1-based; Spark's posexplode pos is 0-based, so
-    ``pos < N_PROBE`` ↔ ``rk <= N_PROBE``)."""
-    C = _codebook(sf_dir)
-    dots = ", ".join(
-        f"({_duck_dot('v', '[' + ', '.join(repr(float(x)) for x in row) + ']::DOUBLE[]')}"
-        f" - {repr(float(np.linalg.norm(row) ** 2 / 2.0))})"
-        for row in C)
-    cells = ", ".join(str(i) for i in range(len(C)))
-    return f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-         dotted AS MATERIALIZED (
-           SELECT vec_id, v, unnest([{dots}]) AS d, unnest([{cells}]) AS cell
-           FROM e),
-         ranked AS (
-           SELECT vec_id, v, cell,
-                  ROW_NUMBER() OVER (PARTITION BY vec_id
-                                     ORDER BY d DESC, cell) AS rk
-           FROM dotted),
-         corpus AS (SELECT vec_id, v, cell FROM ranked WHERE rk = 1),
-         probes AS (SELECT vec_id AS query_id, v AS qv, cell, rk
-                    FROM ranked
-                    WHERE rk <= {N_PROBE_HI} AND vec_id % 97 = 0),
-         cand AS (SELECT p.query_id, c.vec_id AS neighbor_id,
-                         {_duck_cos('p.qv', 'c.v')} AS c, p.rk
-                  FROM probes p JOIN corpus c
-                    ON c.cell = p.cell AND c.vec_id <> p.query_id),
-         pts AS (SELECT query_id, neighbor_id, c,
-                        unnest(CASE WHEN rk <= {N_PROBE}
-                                    THEN [{N_PROBE}, {N_PROBE_HI}]
-                                    ELSE [{N_PROBE_HI}] END) AS nprobe
-                 FROM cand),
-         out AS (SELECT query_id, neighbor_id, nprobe,
-                        ROW_NUMBER() OVER (PARTITION BY nprobe, query_id
-                                           ORDER BY c DESC, neighbor_id) AS rank
-                 FROM pts)
-    SELECT query_id, neighbor_id, rank, nprobe
-    FROM out WHERE rank <= {IVF_TOPK}
-    """
-
-
-from ..registry import DYNAMIC_SQL  # noqa: E402
-
-DYNAMIC_SQL["sim_ann_ivf_kmeans"] = _ivf_kmeans_dual_sql
+DYNAMIC_SQL["sim_ann_ivf_kmeans"] = lambda sf_dir: _ivf_sql(
+    _codebook(sf_dir), (N_PROBE, N_PROBE_HI))

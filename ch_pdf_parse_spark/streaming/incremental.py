@@ -3,9 +3,10 @@
 The reference is strictly request/response batch (SURVEY.md §2.11) — this
 module is the *incremental arrival* story for the same job: new document
 files land in the corpus directory, a `readStream` + ``foreachBatch`` run
-extracts only the unseen ones (checkpoint = exactly-once), appending to the
-same output table the batch job writes. Also a watermarked windowed
-aggregation over the events table as the standard late-data pattern.
+extracts only the unseen ones into one ``batch=<id>`` partition per
+micro-batch (``_drain``: each document lands once, even across a replayed
+batch). Also a watermarked windowed aggregation over the events table as the
+standard late-data pattern.
 """
 
 from __future__ import annotations
@@ -23,24 +24,14 @@ def incremental_extract(
     checkpoint_dir: str,
     schema=None,
 ) -> None:
-    """Process newly-arrived document files exactly once (availableNow
-    trigger: drain whatever is new, then stop — the cron-style incremental
-    batch). State lives in the checkpoint; a rerun with no new files is a
-    no-op."""
+    """Extract newly-arrived document files (availableNow trigger: drain
+    whatever is new, then stop — the cron-style incremental batch) into
+    ``output_dir/batch=<id>`` (``_drain``). State lives in the checkpoint; a
+    rerun with no new files is a no-op."""
     if schema is None:
         schema = spark.read.parquet(input_dir).schema
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        extract_documents(batch_df).write.mode("append").parquet(output_dir)
-
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    _drain(spark.readStream.schema(schema).parquet(input_dir),
+           extract_documents, output_dir, checkpoint_dir)
 
 
 def incremental_extract_wire(
@@ -51,11 +42,12 @@ def incremental_extract_wire(
 ) -> None:
     """Streaming twin of the raw-bytes S1 lifecycle: packed ``.cpw`` shards
     landing in ``shard_dir`` (sources/wireformat.py) are decoded and
-    extracted exactly once per shard (availableNow drain; the checkpoint
-    remembers which shard FILES were consumed, so the per-record parse never
-    re-runs on old shards — at 10^12 docs re-listing is the only per-run
-    cost, and corrupt records still degrade per-record inside each shard).
-    Each micro-batch is parsed once, by the fused parse+extract."""
+    extracted into ``output_dir/batch=<id>`` (``_drain``; availableNow drain,
+    the checkpoint remembers which shard FILES were consumed, so the
+    per-record parse never re-runs on old shards — at 10^12 docs re-listing
+    is the only per-run cost, and corrupt records still degrade per-record
+    inside each shard). Each micro-batch is parsed once, by the fused
+    parse+extract."""
     from ..sources.wireformat import extract_wire_fused
 
     # file streaming sources need an explicit schema; binaryFile's is fixed
@@ -67,9 +59,22 @@ def incremental_extract_wire(
               # in production); each drop keeps its own shard numbering
               .option("recursiveFileLookup", "true").load(shard_dir)
               .select("path", "content"))
+    _drain(stream, extract_wire_fused, output_dir, checkpoint_dir)
+
+
+def _drain(stream: DataFrame, extract, output_dir: str,
+           checkpoint_dir: str) -> None:
+    """availableNow drain of ``stream``: micro-batch ``N`` is written through
+    ``extract`` to ``output_dir/batch=N``, read back as a ``batch`` partition
+    column. ``foreachBatch`` is at-least-once: a crash between the sink write
+    and the checkpoint's ``commits/N`` replays batch N on the next run. The
+    offset log fixes the files of batch N, so the replay overwrites its own
+    partition with the same rows instead of appending them a second time."""
+    import os
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        extract_wire_fused(batch_df).write.mode("append").parquet(output_dir)
+        extract(batch_df).write.mode("overwrite").parquet(
+            os.path.join(output_dir, f"batch={batch_id}"))
 
     (
         stream.writeStream.foreachBatch(process)

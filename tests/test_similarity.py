@@ -74,12 +74,11 @@ def test_dedup_bucket_matmul_equals_pairjoin(spark):
     from pyspark.sql import functions as F
 
     from ch_pdf_parse_spark.operators.similarity import (
-        N_PLANES_DEDUP, _banded_pair_scores, _bucket_pair_scores,
-        _dedup_corpus, _lsh_buckets, _sig_bits_dedup, quantize)
+        _PLANES_DEDUP_NP, _banded_pair_scores, _bucket_pair_scores,
+        _dedup_corpus, _lsh_buckets, quantize)
 
     for sf_dir in ("/root/testdata/sf0.001", "/root/testdata/sf0.01"):
-        buckets = _lsh_buckets(_dedup_corpus(spark, sf_dir),
-                               _sig_bits_dedup, N_PLANES_DEDUP)
+        buckets = _lsh_buckets(_dedup_corpus(spark, sf_dir), _PLANES_DEDUP_NP)
         old = _banded_pair_scores(buckets, buckets, lambda a, b: a < b,
                                   min_score=0.95)
         want = {(r.id_l, r.id_r, r.q) for r in old.select(
@@ -219,7 +218,7 @@ def test_kmeans_codebook_margins_every_testdata_scale():
         s = np.sort(scores, axis=1)[:, ::-1]
         assign_margin = float(np.min(s[:, 0] - s[:, 1]))
         probe_margin = float(np.min(s[:, N_PROBE - 1] - s[:, N_PROBE]))
-        # sim_ann_ivf_kmeans_np4's probe boundary (rank 4 vs 5) too
+        # the N_PROBE_HI probe boundary (rank 4 vs 5) of sim_ann_ivf_kmeans
         np4_margin = float(np.min(s[:, 3] - s[:, 4]))
         assert min(assign_margin, probe_margin, np4_margin) > 1e-6, (
             sf, assign_margin, probe_margin, np4_margin)
@@ -276,3 +275,33 @@ def test_codebook_sample_spark_equals_arrow_and_is_bounded(spark, monkeypatch):
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"))
     assert "TakeOrderedAndProject" in plan, plan
+
+
+def test_ivf_registrations_match_duckdb(spark):
+    """The IVF registrations equal their DuckDB SQL row for row on sf0.001:
+    the same row count, columns, canonical Arrow schema and order-insensitive
+    value hash that tools/check_queries.py compares. ``sim_ann_methods``
+    carries the ±1-codebook IVF branch (static SQL), ``sim_ann_ivf_kmeans``
+    the learned codebook at both operating points (SQL generated from the
+    corpus)."""
+    import duckdb
+
+    from ch_pdf_parse_spark.registry import DYNAMIC_SQL, SQL, queries
+    from tools.check_queries import (
+        canon_schema, duck_fetch, spark_arrow_schema, value_hash)
+
+    con = duckdb.connect()
+    con.execute("CREATE VIEW embeddings AS SELECT * FROM "
+                f"read_parquet('{SF_DIR}/embeddings.parquet')")
+    qs = queries()
+    for name, sql in (
+            ("sim_ann_methods", SQL["sim_ann_methods"]),
+            ("sim_ann_ivf_kmeans", DYNAMIC_SQL["sim_ann_ivf_kmeans"](SF_DIR))):
+        sdf = qs[name](spark, SF_DIR)
+        scols = sdf.columns
+        srows = [tuple(r) for r in sdf.collect()]
+        dcols, drows, dschema = duck_fetch(con, sql)
+        assert len(srows) == len(drows) > 0, name
+        assert sorted(scols) == sorted(dcols), name
+        assert canon_schema(spark_arrow_schema(sdf)) == dschema, name
+        assert value_hash(scols, srows) == value_hash(dcols, drows), name

@@ -1,5 +1,6 @@
-"""Incremental-ingest (Structured Streaming) tests: exactly-once extraction of
-newly arrived files; windowed agg equals its batch twin."""
+"""Incremental-ingest (Structured Streaming) tests: newly arrived files are
+extracted once, also when a crash replays a micro-batch; windowed agg equals
+its batch twin."""
 
 import os
 import shutil
@@ -95,6 +96,50 @@ def test_incremental_wire_extract_exactly_once(spark, corpus_dir, tmp_path,
         assert lineage.count("FileScanRDD") == 1, lineage
 
     shutil.rmtree(ckpt)
+
+
+def _uncommit_first_batch(ckpt):
+    """The checkpoint a crash between batch 0's sink write and its commit
+    log entry leaves: offsets/0 recorded, commits/0 missing."""
+    for name in ("0", ".0.crc"):
+        os.remove(os.path.join(ckpt, "commits", name))
+
+
+def _doc_ids(df):
+    return sorted(r.doc_id for r in df.select("doc_id").collect())
+
+
+def test_incremental_extract_crash_window_writes_once(spark, corpus_dir,
+                                                       tmp_path):
+    """foreachBatch is at-least-once: the rerun after such a crash replays
+    batch 0 over the same files, and every doc must still appear once."""
+    src = str(tmp_path / "incoming")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    full = spark.read.parquet(os.path.join(corpus_dir, "documents.parquet"))
+    full.write.parquet(os.path.join(src, "drop1"))
+
+    incremental_extract(spark, src + "/*", out, ckpt, schema=full.schema)
+    _uncommit_first_batch(ckpt)
+    incremental_extract(spark, src + "/*", out, ckpt, schema=full.schema)
+    assert _doc_ids(spark.read.parquet(out)) == _doc_ids(full)
+
+
+def test_incremental_wire_extract_crash_window_writes_once(spark, corpus_dir,
+                                                            tmp_path):
+    from ch_pdf_parse_spark.sources.wireformat import write_wire_shards
+    from ch_pdf_parse_spark.streaming.incremental import incremental_extract_wire
+
+    src = str(tmp_path / "wire_incoming")
+    out = str(tmp_path / "wire_out")
+    ckpt = str(tmp_path / "wire_ckpt")
+    full = spark.read.parquet(os.path.join(corpus_dir, "documents.parquet"))
+    write_wire_shards(full, os.path.join(src, "drop1"), n_shards=2)
+
+    incremental_extract_wire(spark, src, out, ckpt)
+    _uncommit_first_batch(ckpt)
+    incremental_extract_wire(spark, src, out, ckpt)
+    assert _doc_ids(spark.read.parquet(out)) == _doc_ids(full)
 
 
 def test_windowed_stats_match_batch(spark, tmp_path):

@@ -99,10 +99,8 @@ def main() -> int:
                                                   want)
     # recall/cost curve: nprobe sweep for the k-means codebook (candidates
     # scanned scale ~ nprobe/ncells of the corpus)
-    from ch_pdf_parse_spark.operators.similarity import _codebook, _ivf_plan
     for np_ in (4, 8):
-        rows = _ivf_plan(spark, sf_dir, _codebook(sf_dir),
-                         n_probe=np_).collect()
+        rows = ivf_kmeans_point(spark, sf_dir, n_probe=np_).collect()
         out[f"recall@{IVF_TOPK}_ivf_kmeans_nprobe{np_}"] = recall(rows, want)
     spark.stop()
     print(json.dumps(out))
