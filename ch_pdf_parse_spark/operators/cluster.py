@@ -244,24 +244,30 @@ def _clusters_sql() -> str:
     """
 
 
+def _neardup_clusters(spark: SparkSession, sf_dir: str):
+    """The dup corpus and its cluster labels (doc_id, cluster_id,
+    is_keeper) over the union of the three text detectors' candidate pairs.
+    r7 feed split (candidate_pairs_union docstring): persist ONE int64
+    (doc_id, h) distinct table shared by simhash + jaccard; minhash reads the
+    corpus text directly through the Python md5 kernel — shingle strings
+    never shuffle and never enter the cache."""
+    corpus = with_dup_corpus(_t(spark, sf_dir, "documents"))
+    nodes = corpus.select("doc_id").distinct()
+    shd = shingle_hashes(corpus).persist()
+    labels = resolve_clusters(
+        nodes, candidate_pairs_union(shd, minhash_from_text(corpus)))
+    # safe: resolve_clusters returns localCheckpoint-backed labels, which no
+    # longer reference the shingle-hash subtree
+    shd.unpersist()
+    return corpus, labels
+
+
 @register("dedup_clusters", None)
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster resolution over the union of the three text
     detectors' candidate pairs (module docstring): (doc_id, cluster_id,
     is_keeper), keeper = min doc_id per connected component."""
-    corpus = with_dup_corpus(_t(spark, sf_dir, "documents"))
-    nodes = corpus.select("doc_id").distinct()
-    # r7 feed split (candidate_pairs_union docstring): persist ONE int64
-    # (doc_id, h) distinct table shared by simhash + jaccard; minhash reads
-    # the corpus text directly through the Python md5 kernel — shingle
-    # strings never shuffle and never enter the cache.
-    shd = shingle_hashes(corpus).persist()
-    mh = minhash_from_text(corpus)
-    out = resolve_clusters(nodes, candidate_pairs_union(shd, mh))
-    # safe: resolve_clusters returns localCheckpoint-backed labels, which no
-    # longer reference the shingle-hash subtree
-    shd.unpersist()
-    return out
+    return _neardup_clusters(spark, sf_dir)[1]
 
 
 SQL["dedup_clusters"] = _clusters_sql()
@@ -274,13 +280,7 @@ def pipeline_neardup_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n_clusters, docs removed, kept-token totals per cluster size). The
     text column is consumed map-side for token counts and never enters the
     component loop or any exchange wider than (id, count)."""
-    corpus = with_dup_corpus(_t(spark, sf_dir, "documents"))
-    nodes = corpus.select("doc_id").distinct()
-    # same r7 feed split as dedup_clusters
-    shd = shingle_hashes(corpus).persist()
-    clusters = resolve_clusters(
-        nodes, candidate_pairs_union(shd, minhash_from_text(corpus)))
-    shd.unpersist()
+    corpus, clusters = _neardup_clusters(spark, sf_dir)
     tokens = corpus.select(
         "doc_id", F.size(F.split("text", " ")).alias("n_tokens"))
     per_cluster = clusters.groupBy("cluster_id").agg(

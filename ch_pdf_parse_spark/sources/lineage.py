@@ -28,10 +28,17 @@ retry but no built-in *job-level* resume. This module provides it:
   absent. ``corrupt`` maps each of the bucket's wire shards with corrupt
   records to their count, as the bucket's own parse counted them, so the
   counts survive a resume;
-* on (re)start, the buckets still to do are ``range(n_buckets)`` minus the
-  buckets with a ``done`` record, read on the driver with pyarrow — a killed
-  run resumes exactly where it stopped, never recomputing a completed
-  bucket and never recording one it did not finish.
+* on (re)start, the buckets still to do are the manifest's bucket ids minus
+  the buckets with a ``done`` record, read on the driver with pyarrow — a
+  killed run resumes exactly where it stopped, never recomputing a completed
+  bucket and never recording one it did not finish;
+* the input may **grow** between runs: files the manifest has not recorded
+  are grouped the same way (``assign_groups`` over the new files alone),
+  the groups that hold files are appended as new bucket ids, and the grown
+  manifest lands before any new bucket runs. A rerun over a grown input
+  therefore extracts only the new files — the incremental ingest of newly
+  arrived drops, with the same commit and the same per-bucket records as a
+  first run. A recorded file that is gone or changed (size/mtime) raises.
 
 The bookkeeping runs no Spark job: the only jobs are one extraction write
 per bucket. Spark, pyarrow and the resume set all skip dot- and
@@ -41,11 +48,6 @@ such a directory still resumes.
 
 ``out_dir`` must be a local (POSIX) path: the manifest and the lineage
 records are written with plain file I/O and an atomic rename.
-
-At cluster scale each bucket is a few thousand input files / many tasks, so
-the driver-side bucket loop adds negligible orchestration overhead relative
-to bucket runtime; buckets could also be submitted concurrently from threads
-(Spark scheduler pools) without changing the lineage protocol.
 """
 
 from __future__ import annotations
@@ -74,8 +76,11 @@ LINEAGE_SCHEMA = T.StructType([
 # v1 hashed bare names; v2 adds [size, mtime_ns]; v3 adds the output column
 # projection (resuming with a different --columns would silently mix schemas
 # across buckets); v4 makes buckets file groups, whose assignment the
-# manifest records; v5 adds each bucket's corrupt counts to its record
-SIG_VERSION = 5
+# manifest records; v5 adds each bucket's corrupt counts to its record; v6
+# records n_buckets, columns and every file's identity as fields instead of
+# one hash, so files not yet recorded can be told apart and appended as new
+# groups
+SIG_VERSION = 6
 
 
 def lineage_path(out_dir: str) -> str:
@@ -83,11 +88,12 @@ def lineage_path(out_dir: str) -> str:
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Every lineage record as a DataFrame; empty when ``_lineage`` does not
+    exist yet. An unreadable directory raises, as ``done_records`` does."""
     p = lineage_path(out_dir)
-    try:
-        return spark.read.schema(LINEAGE_SCHEMA).parquet(p)
-    except Exception:
+    if not os.path.isdir(p):
         return spark.createDataFrame([], LINEAGE_SCHEMA)
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(p)
 
 
 def done_records(out_dir: str) -> list[dict]:
@@ -294,16 +300,24 @@ def _file_meta(f: str) -> list:
 def _manifest_groups(out_dir: str, files: list[str], n_buckets: int,
                      columns: tuple[str, ...]) -> list[list[str]]:
     """Check ``out_dir``'s manifest against this input and return its file
-    groups, or write a fresh manifest with a new assignment."""
-    import hashlib
+    groups; bucket b reads ``groups[b]``.
+
+    The first run records ``n_buckets`` groups, empty ones included. A later
+    run must have the same ``n_buckets`` and ``columns``, and every recorded
+    file with its recorded size/mtime; files not yet recorded are grouped by
+    ``assign_groups`` and their non-empty groups appended as new bucket ids.
+    A new or grown manifest is written atomically before any bucket runs."""
     import json
 
-    meta = [_file_meta(f) for f in files]
-    sig = hashlib.sha256(json.dumps(
-        {"n_buckets": n_buckets, "files": meta, "columns": sorted(columns)}
-    ).encode()).hexdigest()[:16]
+    meta = {f: _file_meta(f) for f in files}
+
+    def sizes(fs: list[str]) -> dict[str, int]:
+        return {f: meta[f][1] if len(meta[f]) > 1 else 1 for f in fs}
+
     manifest = os.path.join(out_dir, "_manifest.json")
-    if os.path.exists(manifest):
+    if not os.path.exists(manifest):
+        groups = assign_groups(sizes(files), n_buckets)
+    else:
         with open(manifest) as f:
             prev = json.load(f)
         if prev.get("sig_version", 1) != SIG_VERSION:
@@ -312,23 +326,41 @@ def _manifest_groups(out_dir: str, files: list[str], n_buckets: int,
                 f"version (sig_version {prev.get('sig_version', 1)} != "
                 f"{SIG_VERSION}); its identity cannot be compared — use a "
                 "fresh out_dir (or delete the old one to recompute)")
-        if prev.get("sig") != sig:
-            raise ValueError(
+
+        def mismatch(why: str) -> ValueError:
+            return ValueError(
                 f"{out_dir} holds lineage for a different input or "
-                f"n_buckets (manifest sig {prev.get('sig')} != {sig}); "
-                "use a fresh out_dir or delete the old one")
+                f"n_buckets ({why}); use a fresh out_dir or delete the old "
+                "one")
+
+        if (prev["n_buckets"], prev["columns"]) != (n_buckets, sorted(columns)):
+            raise mismatch(
+                f"manifest n_buckets={prev['n_buckets']} columns="
+                f"{prev['columns']}, this run n_buckets={n_buckets} "
+                f"columns={sorted(columns)}")
+        recorded = {m[0]: m for m in prev["files"]}
+        for f, m in recorded.items():
+            if f not in meta:
+                raise mismatch(f"recorded input file {f} is gone")
+            if meta[f] != m:
+                raise mismatch(f"recorded input file {f} changed: "
+                               f"[size, mtime_ns] {m[1:]} -> {meta[f][1:]}")
         groups = prev["groups"]
-        if sorted(f for g in groups for f in g) != files:
+        if sorted(f for g in groups for f in g) != sorted(recorded):
             raise ValueError(
                 f"{out_dir}/_manifest.json: its file groups do not cover "
-                "the input's files; delete the out_dir to recompute")
-        return groups
-    groups = assign_groups({m[0]: m[1] if len(m) > 1 else 1 for m in meta},
-                           n_buckets)
+                "its recorded files; delete the out_dir to recompute")
+        new = [f for f in files if f not in recorded]
+        if not new:
+            return groups
+        # a growth run appends only the groups that hold files
+        groups = groups + [g for g in assign_groups(sizes(new), n_buckets)
+                           if g]
     tmp = manifest + ".tmp"
     with open(tmp, "w") as f:
-        json.dump({"sig": sig, "n_buckets": n_buckets,
-                   "sig_version": SIG_VERSION, "groups": groups}, f)
+        json.dump({"sig_version": SIG_VERSION, "n_buckets": n_buckets,
+                   "columns": sorted(columns),
+                   "files": [meta[f] for f in files], "groups": groups}, f)
     os.replace(tmp, manifest)
     return groups
 
@@ -353,12 +385,14 @@ def run_with_lineage(
     extracted alone by the input's ``extract``. A bucket with no files
     writes an empty output and a 0/0 record.
 
-    Resume assumes the SAME input, bucketing AND output projection: a
-    manifest (n_buckets + input file list with size/mtime + columns, and the
-    bucket→files assignment) is recorded on the first call; a later call
-    into the same ``out_dir`` with a different input, n_buckets or
-    ``columns`` raises instead of silently extracting a different file set
-    (or writing mixed-schema buckets)."""
+    A manifest (n_buckets, columns, each input file with its size/mtime, and
+    the bucket→files assignment) is recorded on the first call. A later call
+    into the same ``out_dir`` resumes: it must have the same n_buckets and
+    ``columns`` and every recorded file unchanged, or it raises instead of
+    silently extracting a different file set (or writing mixed-schema
+    buckets). Files added since are appended as new buckets
+    (``_manifest_groups``), so a rerun over a grown input extracts only the
+    new files."""
     from ..pipeline import normalize_columns
 
     # fail fast (and canonicalize for the manifest signature) before any
@@ -371,10 +405,10 @@ def run_with_lineage(
     os.makedirs(out_dir, exist_ok=True)
     groups = _manifest_groups(out_dir, source.files, n_buckets, columns)
 
-    # bucket ids are range(n_buckets) by construction — enumerating them from
-    # the data would full-scan the corpus (a wasted pass at 10^12 rows)
+    # bucket ids are the manifest's group indices — enumerating them from the
+    # data would full-scan the corpus (a wasted pass at 10^12 rows)
     done = {r["bucket"] for r in done_records(out_dir)}
-    todo = sorted(set(range(n_buckets)) - done)
+    todo = sorted(set(range(len(groups))) - done)
 
     def do_bucket(b: int) -> int:
         t0 = time.time()

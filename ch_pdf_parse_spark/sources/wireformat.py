@@ -54,9 +54,9 @@ Why this shape scales to 10^12 documents:
   ``mapInArrow`` bodies add ``{shard_path: n_corrupt}`` to an accumulator
   the caller passes in (``corrupt_accumulator``, merged by max per shard,
   so a retried task or a second action cannot double-count). No audit
-  pass reads the shards a second time, and every extraction route (job.py
-  with or without lineage, the streaming drain) runs the parse and the
-  kernel in one ``mapInArrow`` (``extract_wire_fused``).
+  pass reads the shards a second time, and both extraction routes (job.py
+  with or without lineage) run the parse and the kernel in one
+  ``mapInArrow`` (``extract_wire``).
 """
 
 from __future__ import annotations
@@ -304,18 +304,34 @@ def _parse_shard_columnar(data: bytes) -> _Columns:
 
 # ---------------------------------------------------------------- Spark IO
 
+def _listed(name: str, is_dir: bool) -> bool:
+    """Whether Spark's file listing keeps the file or directory ``name``:
+    it hides a name that starts with ``.``, or with ``_`` and holds no
+    ``=``; it also hides a directory ending in ``._COPYING_`` and keeps one
+    starting with ``_metadata`` or ``_common_metadata``."""
+    hidden = name.startswith(".") or (name.startswith("_") and "=" not in name)
+    if is_dir:
+        hidden = (hidden or name.endswith("._COPYING_")) and \
+            not name.startswith(("_metadata", "_common_metadata"))
+    return not hidden
+
+
 def list_shards(path: str) -> list[str]:
-    """The ``.cpw`` shard paths directly under ``path``, sorted; names that
-    Spark's file listing hides (leading ``.`` or ``_``) are skipped, as the
-    ``binaryFile`` scan skips them."""
-    return sorted(os.path.join(path, f) for f in os.listdir(path)
-                  if f.endswith(".cpw") and not f.startswith((".", "_")))
+    """The ``.cpw`` shard paths under ``path`` at any depth, sorted: the set
+    the ``binaryFile`` scan (``_binary_scan``, a recursive lookup) reads, so
+    shard drops that land as subdirectories are listed too."""
+    out = []
+    for root, dirs, files in os.walk(path, followlinks=True):
+        dirs[:] = [d for d in dirs if _listed(d, True)]
+        out += [os.path.join(root, f) for f in files
+                if f.endswith(".cpw") and _listed(f, False)]
+    return sorted(out)
 
 
 def wire_input(spark: SparkSession, path: str):
-    """The shard directory ``path`` as a ``lineage.FileInput``: its shard
-    list (taken once), ``extract_wire`` over a group of shards, and the
-    corrupt counts of the group's last extraction — what
+    """The shard directory ``path`` as a ``lineage.FileInput``: its shards at
+    any depth (``list_shards``, taken once), ``extract_wire`` over a group
+    of shards, and the corrupt counts of the group's last extraction — what
     ``run_with_lineage`` needs to make each bucket a fixed group of shards
     and to record its corrupt counts.
 
@@ -472,8 +488,11 @@ def _parse_batches(it, corrupt=None):
 
 
 def _binary_scan(spark: SparkSession, path: str | list[str]) -> DataFrame:
+    # recursive: shard drops land as subdirectories, each with its own
+    # shard numbering (``write_wire_shards``)
     return (spark.read.format("binaryFile")
-            .option("pathGlobFilter", "*.cpw").load(path)
+            .option("pathGlobFilter", "*.cpw")
+            .option("recursiveFileLookup", "true").load(path)
             .select("path", "content"))
 
 
@@ -530,11 +549,14 @@ def _fused_extract_arrow(it, columns, corrupt=None):
     yield from _extract_arrow(_parse_batches(it, corrupt), columns=columns)
 
 
-def extract_wire_fused(binary_df: DataFrame,
-                       columns: tuple[str, ...] = ("spans", "markdown"),
-                       corrupt=None) -> DataFrame:
-    """Fused raw-bytes lifecycle: shard bytes → parse → extraction kernel in
-    ONE ``mapInArrow`` stage.
+def extract_wire(spark: SparkSession, path: str | list[str],
+                 columns: tuple[str, ...] = ("spans", "markdown"),
+                 corrupt=None) -> DataFrame:
+    """Fused raw-bytes lifecycle: ``binaryFile`` scan → shard parse →
+    extraction kernel in ONE ``mapInArrow`` stage. ``path`` is a shard
+    directory (read at any depth) or a list of shard paths (a lineage
+    bucket's file group); an empty list gives an empty frame in the output
+    schema.
 
     The composable path (``extract_documents(read_wire(...))``) crosses the
     JVM↔Python boundary twice with the FULL spans payload: bytes cross into
@@ -547,9 +569,6 @@ def extract_wire_fused(binary_df: DataFrame,
     Arrow consumer directly in the same worker; only shard bytes and paths
     cross in and only (records, markdown) cross out — the decode-once shape
     a 100 TB raw-bytes ingest needs.
-
-    ``binary_df`` is any frame with ``path`` and ``content`` columns: the
-    batch ``binaryFile`` scan or a streaming micro-batch of one.
 
     Semantics: identical to ``extract_documents(read_wire(...))`` — pinned
     by test (including corrupt-shard per-record drops and null spans).
@@ -566,24 +585,10 @@ def extract_wire_fused(binary_df: DataFrame,
     from ..packaging import ensure_on_executors
     from ..pipeline import normalize_columns, output_schema
 
-    ensure_on_executors(binary_df.sparkSession)
     cols = normalize_columns(columns)
-    return binary_df.select("path", "content").mapInArrow(
+    if isinstance(path, list) and not path:
+        return spark.createDataFrame([], output_schema(cols))
+    ensure_on_executors(spark)
+    return _binary_scan(spark, path).mapInArrow(
         partial(_fused_extract_arrow, columns=cols, corrupt=corrupt),
         output_schema(cols))
-
-
-def extract_wire(spark: SparkSession, path: str | list[str],
-                 columns: tuple[str, ...] = ("spans", "markdown"),
-                 corrupt=None) -> DataFrame:
-    """``binaryFile`` scan → fused parse+extract (see extract_wire_fused).
-    ``path`` is a shard directory or a list of shard paths (a lineage
-    bucket's file group); an empty list gives an empty frame in the output
-    schema."""
-    from ..pipeline import normalize_columns, output_schema
-
-    if isinstance(path, list) and not path:
-        return spark.createDataFrame(
-            [], output_schema(normalize_columns(columns)))
-    return extract_wire_fused(_binary_scan(spark, path), columns=columns,
-                              corrupt=corrupt)

@@ -1,88 +1,25 @@
-"""Structured Streaming incremental ingest (optional demo).
+"""Structured Streaming demos over the events and changelog tables.
 
-The reference is strictly request/response batch (SURVEY.md §2.11) — this
-module is the *incremental arrival* story for the same job: new document
-files land in the corpus directory, a `readStream` + ``foreachBatch`` run
-extracts only the unseen ones into one ``batch=<id>`` partition per
-micro-batch (``_drain``: each document lands once, even across a replayed
-batch). Also a watermarked windowed aggregation over the events table as the
-standard late-data pattern.
+The reference is strictly request/response batch (SURVEY.md §2.11). This
+module holds the streaming shapes that have no batch commit of their own: a
+watermarked windowed aggregation (the standard late-data pattern), an
+incrementally maintained CDC state, gap sessionization and watermark-bounded
+dedup.
+
+Incremental *extraction* is not a stream: it is a lineage run
+(``sources.lineage.run_with_lineage``) re-run as new drops arrive — over
+``spark.read.parquet(src + "/*")`` for document parquet, or
+``wireformat.wire_input(spark, src)`` for ``.cpw`` shard drops. Files the
+manifest has not recorded become new buckets, so each rerun extracts only
+the new files, commits each bucket once and records its counts (the wire
+corrupt counts included).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..pipeline import extract_documents
 from ..registry import exact_sum, quantize
-
-
-def incremental_extract(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    schema=None,
-) -> None:
-    """Extract newly-arrived document files (availableNow trigger: drain
-    whatever is new, then stop — the cron-style incremental batch) into
-    ``output_dir/batch=<id>`` (``_drain``). State lives in the checkpoint; a
-    rerun with no new files is a no-op."""
-    if schema is None:
-        schema = spark.read.parquet(input_dir).schema
-    _drain(spark.readStream.schema(schema).parquet(input_dir),
-           extract_documents, output_dir, checkpoint_dir)
-
-
-def incremental_extract_wire(
-    spark: SparkSession,
-    shard_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-) -> None:
-    """Streaming twin of the raw-bytes S1 lifecycle: packed ``.cpw`` shards
-    landing in ``shard_dir`` (sources/wireformat.py) are decoded and
-    extracted into ``output_dir/batch=<id>`` (``_drain``; availableNow drain,
-    the checkpoint remembers which shard FILES were consumed, so the
-    per-record parse never re-runs on old shards — at 10^12 docs re-listing
-    is the only per-run cost, and corrupt records still degrade per-record
-    inside each shard). Each micro-batch is parsed once, by the fused
-    parse+extract."""
-    from ..sources.wireformat import extract_wire_fused
-
-    # file streaming sources need an explicit schema; binaryFile's is fixed
-    stream = (spark.readStream.format("binaryFile")
-              .schema("path string, modificationTime timestamp, "
-                      "length long, content binary")
-              .option("pathGlobFilter", "*.cpw")
-              # shard drops land as subdirectories (date/batch partitioned
-              # in production); each drop keeps its own shard numbering
-              .option("recursiveFileLookup", "true").load(shard_dir)
-              .select("path", "content"))
-    _drain(stream, extract_wire_fused, output_dir, checkpoint_dir)
-
-
-def _drain(stream: DataFrame, extract, output_dir: str,
-           checkpoint_dir: str) -> None:
-    """availableNow drain of ``stream``: micro-batch ``N`` is written through
-    ``extract`` to ``output_dir/batch=N``, read back as a ``batch`` partition
-    column. ``foreachBatch`` is at-least-once: a crash between the sink write
-    and the checkpoint's ``commits/N`` replays batch N on the next run. The
-    offset log fixes the files of batch N, so the replay overwrites its own
-    partition with the same rows instead of appending them a second time."""
-    import os
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        extract(batch_df).write.mode("overwrite").parquet(
-            os.path.join(output_dir, f"batch={batch_id}"))
-
-    (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
 
 
 def windowed_event_stats(events_stream: DataFrame,

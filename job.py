@@ -17,7 +17,8 @@ Runs the flagship extraction with per-partition lineage: each bucket is a
 fixed group of input files (parquet part files, or ``.cpw`` shards with
 ``--input-format wire``), read alone, extracted and written as its own
 output partition; re-running after a kill resumes without recomputing
-completed buckets (sources/lineage.py).
+completed buckets, and re-running over a grown input (new part files or new
+shard drops) extracts only the new files (sources/lineage.py).
 """
 
 from __future__ import annotations

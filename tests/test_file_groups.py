@@ -1,12 +1,14 @@
 """Lineage buckets as fixed groups of input files: the path spelling shared
 by ``inputFiles()`` and ``_metadata.file_path``, per-bucket file pruning,
-resume identity through the manifest's recorded assignment, the footer
-``n_spans`` bound that drops the salted branch, and job.py's wire mode."""
+resume identity through the manifest's recorded assignment, growth of the
+input by new files, the footer ``n_spans`` bound that drops the salted
+branch, and job.py's wire mode."""
 
 import json
 import os
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import SparkSession, functions as F
@@ -22,12 +24,17 @@ def _split_corpus(corpus_dir, out, n_files):
     parquet files (so the last file holds the largest documents)."""
     t = pq.read_table(os.path.join(corpus_dir, "documents.parquet"))
     t = t.sort_by("n_spans")
+    _write_files(t, out, n_files)
+    return t
+
+
+def _write_files(t, out, n_files):
+    """``t`` cut into ``n_files`` parquet part files under a new ``out``."""
     os.makedirs(out)
     step = -(-t.num_rows // n_files)
     for i in range(n_files):
         pq.write_table(t.slice(i * step, step),
                        os.path.join(out, f"part-{i:05d}.parquet"))
-    return t
 
 
 def _scanned_files(df) -> int:
@@ -120,7 +127,10 @@ def test_unresolvable_metadata_raises_before_any_write(spark, docs_df,
                            out, n_buckets=2)
 
 
-def test_appended_part_file_then_resume_raises(spark, corpus_dir, tmp_path):
+def test_appended_part_file_then_resume_extracts_it(spark, corpus_dir,
+                                                    tmp_path):
+    """A part file added before the resume joins as a new bucket: the resume
+    finishes the unfinished bucket and extracts the new file."""
     src = str(tmp_path / "src")
     t = _split_corpus(corpus_dir, src, 2)
     out = str(tmp_path / "out")
@@ -128,8 +138,12 @@ def test_appended_part_file_then_resume_raises(spark, corpus_dir, tmp_path):
         L.run_with_lineage(spark, spark.read.parquet(src), out, n_buckets=2,
                            fail_after=1)
     pq.write_table(t.slice(0, 1), os.path.join(src, "part-00009.parquet"))
-    with pytest.raises(ValueError, match="different input"):
-        L.run_with_lineage(spark, spark.read.parquet(src), out, n_buckets=2)
+    docs = spark.read.parquet(src)
+    assert L.run_with_lineage(spark, docs, out, n_buckets=2) == [1, 2]
+    assert _collect(L.read_output(spark, out)) == \
+        _collect(extract_documents(docs))
+    assert sum(r["doc_count"] for r in L.done_records(out)) == \
+        t.num_rows + 1
 
 
 def test_v3_manifest_rejected_as_older_version(spark, docs_df, tmp_path):
@@ -152,7 +166,7 @@ def test_manifest_records_groups_and_resume_reuses_them(
         L.run_with_lineage(spark, docs, out, n_buckets=3, fail_after=1)
     with open(os.path.join(out, "_manifest.json")) as f:
         man = json.load(f)
-    assert man["sig_version"] == L.SIG_VERSION == 5
+    assert man["sig_version"] == L.SIG_VERSION == 6
     files = sorted(L.file_uri(f) for f in docs.inputFiles())
     assert len(man["groups"]) == 3
     assert sorted(f for g in man["groups"] for f in g) == files
@@ -167,6 +181,127 @@ def test_manifest_records_groups_and_resume_reuses_them(
     for b, group in enumerate(man["groups"]):
         n = sum(pq.read_metadata(L.local_path(f)).num_rows for f in group)
         assert n == spark.read.parquet(os.path.join(out, f"bucket={b}")).count()
+
+
+# ------------------------------------------------------------ growth
+
+def _drops(corpus_dir):
+    """The fixture corpus as two arrivals: docs before ``doc_000006`` and
+    the rest."""
+    t = pq.read_table(os.path.join(corpus_dir, "documents.parquet"))
+    first = pc.less(t.column("doc_id"), "doc_000006")
+    return t.filter(first), t.filter(pc.invert(first))
+
+
+def _success_mtimes(out, buckets):
+    return {b: os.stat(os.path.join(out, f"bucket={b}", "_SUCCESS"))
+            .st_mtime_ns for b in buckets}
+
+
+def test_grown_table_input_extracts_only_the_new_files(spark, corpus_dir,
+                                                       tmp_path):
+    """A rerun over a directory that gained a drop extracts only the drop's
+    files, as new buckets, and leaves the first run's buckets untouched.
+    The first run keeps its empty bucket; the growth run adds none."""
+    src = str(tmp_path / "incoming")
+    out = str(tmp_path / "out")
+    drop1, drop2 = _drops(corpus_dir)
+    _write_files(drop1, os.path.join(src, "drop1"), 2)
+    assert L.run_with_lineage(spark, spark.read.parquet(src + "/*"), out,
+                              n_buckets=3) == [0, 1, 2]
+    before = _success_mtimes(out, range(3))
+
+    _write_files(drop2, os.path.join(src, "drop2"), 2)
+    docs = spark.read.parquet(src + "/*")
+    assert L.run_with_lineage(spark, docs, out, n_buckets=3) == [3, 4]
+    assert _success_mtimes(out, range(3)) == before
+    assert _collect(L.read_output(spark, out)) == \
+        _collect(extract_documents(docs))
+    recs = {r["bucket"]: r["doc_count"] for r in L.done_records(out)}
+    assert recs[3] + recs[4] == drop2.num_rows
+    assert sum(recs.values()) == drop1.num_rows + drop2.num_rows
+    assert L.run_with_lineage(spark, docs, out, n_buckets=3) == []
+
+
+def test_grown_wire_input_records_the_new_drops_corruption(
+        spark, docs_df, tmp_path, monkeypatch, capsys):
+    """Wire drops land as subdirectories with the same shard names. The
+    growth run's new bucket records the new drop's corrupt record, and
+    job.py reports it."""
+    import sys
+
+    import job
+    from ch_pdf_parse_spark.sources import wireformat as wf
+
+    wire = str(tmp_path / "wire")
+    out = str(tmp_path / "out")
+    early = F.col("doc_id") < "doc_000006"
+    drop1, drop2 = docs_df.where(early), docs_df.where(~early)
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    monkeypatch.setattr(sys, "argv", [
+        "job.py", "--input", wire, "--input-format", "wire",
+        "--output", out, "--buckets", "2"])
+
+    def run():
+        job.main()
+        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    wf.write_wire_shards(drop1, os.path.join(wire, "drop1"), n_shards=2)
+    first = run()
+    assert (first["buckets_computed"], first["wire_corrupt_records"]) == (2, 0)
+
+    wf.write_wire_shards(drop2, os.path.join(wire, "drop2"), n_shards=1)
+    (shard,) = wf.list_shards(os.path.join(wire, "drop2"))
+    data = bytearray(open(shard, "rb").read())
+    data[data.find(wf.SYNC, data.find(wf.SYNC, 4) + 4) + 10] ^= 0xFF
+    open(shard, "wb").write(bytes(data))
+    uri = "file:" + os.path.abspath(shard)
+
+    grown = run()
+    assert grown["buckets_computed"] == 1
+    assert (grown["wire_corrupt_records"], grown["wire_corrupt_shards"]) \
+        == (1, [uri])
+    recs = {r["bucket"]: r for r in L.done_records(out)}
+    assert dict(recs[2]["corrupt"]) == {uri: 1}
+    assert _collect(L.read_output(spark, out)) == \
+        _collect(wf.extract_wire(spark, wire))
+
+
+def test_growth_killed_after_manifest_resumes_new_buckets(
+        spark, corpus_dir, tmp_path, monkeypatch):
+    """A growth run killed after its grown manifest landed: the resume
+    finishes the new buckets from the recorded groups, without assigning
+    the new files again."""
+    src = str(tmp_path / "incoming")
+    out = str(tmp_path / "out")
+    drop1, drop2 = _drops(corpus_dir)
+    _write_files(drop1, os.path.join(src, "drop1"), 2)
+    assert L.run_with_lineage(spark, spark.read.parquet(src + "/*"), out,
+                              n_buckets=2) == [0, 1]
+    _write_files(drop2, os.path.join(src, "drop2"), 2)
+    docs = spark.read.parquet(src + "/*")
+    with pytest.raises(RuntimeError, match="injected failure"):
+        L.run_with_lineage(spark, docs, out, n_buckets=2, fail_after=1)
+    with open(os.path.join(out, "_manifest.json")) as f:
+        assert len(json.load(f)["groups"]) == 4
+
+    def no_reassignment(*_):
+        raise AssertionError("resume must reuse the recorded assignment")
+
+    monkeypatch.setattr(L, "assign_groups", no_reassignment)
+    assert L.run_with_lineage(spark, docs, out, n_buckets=2) == [3]
+    assert _collect(L.read_output(spark, out)) == \
+        _collect(extract_documents(docs))
+
+
+def test_removed_input_file_raises(spark, corpus_dir, tmp_path):
+    src = str(tmp_path / "src")
+    _split_corpus(corpus_dir, src, 3)
+    out = str(tmp_path / "out")
+    L.run_with_lineage(spark, spark.read.parquet(src), out, n_buckets=2)
+    os.remove(os.path.join(src, "part-00001.parquet"))
+    with pytest.raises(ValueError, match="different input or .* is gone"):
+        L.run_with_lineage(spark, spark.read.parquet(src), out, n_buckets=2)
 
 
 # ------------------------------------------------------------ the bound

@@ -89,8 +89,9 @@ def test_old_manifest_version_rejected_clearly(spark, docs_df, tmp_path):
 
 def test_inplace_overwrite_detected_via_stat(spark, tmp_path):
     """Input files rewritten IN PLACE under the same names (size/mtime
-    change) must flip the manifest signature — with a percent-encoded local
-    path (space in the directory), exercising the URI decode."""
+    change) must not match the manifest's recorded size/mtime — with a
+    percent-encoded local path (space in the directory), exercising the URI
+    decode."""
     src = str(tmp_path / "my corpus")
     docs = spark.createDataFrame(
         [(f"d{i}", None) for i in range(8)],

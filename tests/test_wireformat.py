@@ -314,3 +314,27 @@ def test_job_reports_corruption_with_lineage_and_across_resume(
     assert resumed["buckets_computed"] == 2
     assert _corrupt_of(resumed) == _corrupt_of(whole)
     assert resumed["docs"] == whole["docs"]
+
+
+def test_list_shards_matches_the_binary_scan(spark, tmp_path):
+    """The lineage route groups ``list_shards``; ``--no-lineage`` scans the
+    directory. Both must see the same shards, at every depth and through a
+    linked directory, with Spark's hidden-name rules for files and
+    directories."""
+    from ch_pdf_parse_spark.sources.lineage import local_path
+
+    d = str(tmp_path / "shards")
+    for rel in ("a.cpw", "_h.cpw", ".h.cpw", "_y=1.cpw", "_metadata.cpw",
+                "b.cpw.tmp", "drop1/shard-00000.cpw",
+                "drop2/deep/shard-00000.cpw", "drop2/deep/_i.cpw",
+                "_hid/c.cpw", ".hid/d.cpw", "d._COPYING_/e.cpw",
+                "_x=1/f.cpw", "_metadata_dir/g.cpw", "k=2/.r.cpw",
+                "sub.cpw/k.cpw"):
+        p = os.path.join(d, rel)
+        os.makedirs(os.path.dirname(p), exist_ok=True)
+        open(p, "wb").write(b"x")
+    os.symlink(os.path.join(d, "drop1"), os.path.join(d, "linked"))
+    scanned = {local_path(r.path)
+               for r in wf._binary_scan(spark, d).select("path").collect()}
+    assert wf.list_shards(d) == sorted(scanned)
+    assert os.path.join(d, "drop2/deep/shard-00000.cpw") in scanned
