@@ -32,7 +32,7 @@ Both paths reproduce the golden oracle (``core.extract_document``) bit-for-bit
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable
 
 import pandas as pd
 
@@ -215,6 +215,65 @@ def _stitch_doc(pdf: pd.DataFrame) -> pd.DataFrame:
     }])
 
 
+def extract_stages(
+    docs: DataFrame,
+    salt_threshold: int = C.SALT_SPAN_THRESHOLD,
+    columns: tuple[str, ...] = ("spans", "markdown"),
+    max_spans: int | None = None,
+) -> list[tuple[DataFrame, Callable | None]]:
+    """``extract_documents`` before its branches meet, as ``(frame,
+    kernel)`` stages. The first is the regular documents' ``(doc_id,
+    spans)`` with the Arrow kernel to run over their batches; the second,
+    unless ``max_spans`` proves it empty, is the salted branch's stitched
+    output, with kernel None (its rows are output rows already). The
+    output is the union over the stages of ``kernel`` run over the frame
+    (``mapInArrow``): ``extract_documents`` hands that union to Spark,
+    ``run_with_lineage`` chains each kernel into its tasks' parquet
+    writer."""
+    from functools import partial
+
+    from .packaging import ensure_on_executors
+
+    cols = normalize_columns(columns)
+    ensure_on_executors(docs.sparkSession)
+    # Route on a stored stats column when available: `n_spans` is written at
+    # ingest, so the oversized-branch predicate is pushed into the scan and
+    # min/max row-group pruning makes the second pass near-free (at 10^12 docs
+    # the salted long tail is <0.1% of files). Fallback: compute size(spans).
+    n = F.col("n_spans") if "n_spans" in docs.columns else F.size("spans")
+    docs = docs.select("doc_id", "spans")
+    # null spans rows must route somewhere (n is null ⇒ BOTH branch
+    # predicates are unknown and the doc would silently vanish): they take
+    # the small branch and extract to (empty spans, empty markdown)
+    small = (docs.where((n <= salt_threshold) | n.isNull()),
+             partial(_extract_arrow, columns=cols))
+    if max_spans is not None and max_spans <= salt_threshold:
+        return [small]
+
+    big = docs.where(n > salt_threshold)
+    off = F.coalesce(F.col("s.offset"), F.lit(0))  # null geometry ≡ origin
+    exploded = (
+        big.select("doc_id", F.posexplode("spans").alias("idx", "s"))
+        .select(
+            "doc_id", "idx",
+            F.col("s.kind").alias("kind"), F.col("s.text").alias("text"),
+            F.col("s.media_ref").alias("media_ref"), off.alias("offset"),
+            # floor, not cast-truncation: a (corrupt) negative offset must
+            # group under the same page that unpack_offset/np.divmod derive
+            F.floor(off / F.lit(C.OFFSET_PAGE)).cast("int").alias("page"),
+        )
+    )
+    partials = exploded.groupBy("doc_id", "page").applyInPandas(
+        _extract_page_partial, _PARTIAL_SCHEMA
+    )
+    # the salted long tail is <0.1% of docs — it always computes both columns
+    # (the stitch is the cheap half) and projects down to match
+    big_out = (partials.groupBy("doc_id")
+               .applyInPandas(_stitch_doc, OUTPUT_SCHEMA)
+               .select("doc_id", *cols))
+    return [small, (big_out, None)]
+
+
 def extract_documents(
     docs: DataFrame,
     salt_threshold: int = C.SALT_SPAN_THRESHOLD,
@@ -238,50 +297,11 @@ def extract_documents(
     ``mapInArrow`` branch is planned: ``PropagateEmptyRelation`` cannot fold
     the empty ``FlatMapGroupsInPandas`` subtree, whose shuffle jobs would
     otherwise still run."""
-    from functools import partial
-
-    from .packaging import ensure_on_executors
-
-    cols = normalize_columns(columns)
-    schema = output_schema(cols)
-
-    ensure_on_executors(docs.sparkSession)
-    # Route on a stored stats column when available: `n_spans` is written at
-    # ingest, so the oversized-branch predicate is pushed into the scan and
-    # min/max row-group pruning makes the second pass near-free (at 10^12 docs
-    # the salted long tail is <0.1% of files). Fallback: compute size(spans).
-    n = F.col("n_spans") if "n_spans" in docs.columns else F.size("spans")
-    docs = docs.select("doc_id", "spans")
-    # null spans rows must route somewhere (n is null ⇒ BOTH branch
-    # predicates are unknown and the doc would silently vanish): they take
-    # the small branch and extract to (empty spans, empty markdown)
-    small = docs.where((n <= salt_threshold) | n.isNull())
-    small_out = small.mapInArrow(partial(_extract_arrow, columns=cols), schema)
-    if max_spans is not None and max_spans <= salt_threshold:
-        return small_out
-
-    big = docs.where(n > salt_threshold)
-    off = F.coalesce(F.col("s.offset"), F.lit(0))  # null geometry ≡ origin
-    exploded = (
-        big.select("doc_id", F.posexplode("spans").alias("idx", "s"))
-        .select(
-            "doc_id", "idx",
-            F.col("s.kind").alias("kind"), F.col("s.text").alias("text"),
-            F.col("s.media_ref").alias("media_ref"), off.alias("offset"),
-            # floor, not cast-truncation: a (corrupt) negative offset must
-            # group under the same page that unpack_offset/np.divmod derive
-            F.floor(off / F.lit(C.OFFSET_PAGE)).cast("int").alias("page"),
-        )
-    )
-    partials = exploded.groupBy("doc_id", "page").applyInPandas(
-        _extract_page_partial, _PARTIAL_SCHEMA
-    )
-    # the salted long tail is <0.1% of docs — it always computes both columns
-    # (the stitch is the cheap half) and projects down to match
-    big_out = (partials.groupBy("doc_id")
-               .applyInPandas(_stitch_doc, OUTPUT_SCHEMA)
-               .select("doc_id", *cols))
-    return small_out.unionByName(big_out)
+    schema = output_schema(normalize_columns(columns))
+    (small, kernel), *big = extract_stages(docs, salt_threshold, columns,
+                                           max_spans)
+    out = small.mapInArrow(kernel, schema)
+    return out.unionByName(big[0][0]) if big else out
 
 
 def read_documents(spark, path: str) -> DataFrame:

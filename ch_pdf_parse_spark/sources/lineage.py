@@ -11,23 +11,32 @@ retry but no built-in *job-level* resume. This module provides it:
   resume reads it back, so ``bucket=b`` always means the same files;
 * each bucket reads only its own files (a ``_metadata.file_path`` filter,
   which Spark evaluates at file-listing time, so no bucket scans another's
-  files and no copy of the input is made), is extracted, and is written as
-  its own output partition ``bucket=b``. Its ``doc_count``/``span_count``
-  come from an unnamed ``Observation`` on that write (the write job's result
-  stage, so a retried task cannot double-count), not from re-reading the
-  output;
-* a parquet bucket passes ``pipeline.extract_documents`` an ``n_spans``
+  files and no copy of the input is made), and is extracted and written as
+  its own output partition ``bucket=b`` in one Spark job of one
+  ``mapInArrow`` per stage: each task chains the extraction kernel into a
+  ``pyarrow`` parquet writer, so the extracted spans never cross back to
+  the JVM and Spark's writer is not used. A task writes one file under
+  ``bucket=b/_tmp`` and returns one row: the file, its doc and span counts
+  and its shards' corrupt counts. The driver moves exactly the named files
+  into ``bucket=b`` (a failed or speculative attempt's file is never named,
+  so never committed), removes ``_tmp`` and writes ``_SUCCESS``. The
+  bucket's ``doc_count``/``span_count`` are the sums of the successful
+  attempts' rows, so a retried task cannot double-count, and nothing
+  re-reads the output;
+* a parquet bucket passes ``pipeline.extract_stages`` an ``n_spans``
   bound proved from its files' row-group statistics. When the bound is at
   or below the salt threshold the salted oversized-doc branch, and its
-  shuffle jobs, are not planned. A wire bucket runs the fused parse and
-  extraction (``wireformat.extract_wire``), which has no salted branch;
+  shuffle, are not planned; otherwise its stitched output goes through the
+  same writer, in a second ``mapInArrow`` unioned into the bucket's job. A
+  wire bucket runs the fused parse and extraction (the kernel of
+  ``wireformat.extract_wire``), which has no salted branch;
 * once the bucket's data is committed, its lineage record ``(bucket,
   doc_count, span_count, wall_ms, status, corrupt)`` lands as its own
   one-row parquet file: written under a dot-prefixed temp name, then
   ``os.replace``d into ``_lineage/``, so a record is either whole or
   absent. ``corrupt`` maps each of the bucket's wire shards with corrupt
-  records to their count, as the bucket's own parse counted them, so the
-  counts survive a resume;
+  records to their count, as the bucket's own parse counted them and its
+  tasks returned them, so the counts survive a resume;
 * on (re)start, the buckets still to do are the manifest's bucket ids minus
   the buckets with a ``done`` record, read on the driver with pyarrow — a
   killed run resumes exactly where it stopped, never recomputing a completed
@@ -40,28 +49,33 @@ retry but no built-in *job-level* resume. This module provides it:
   arrived drops, with the same commit and the same per-bucket records as a
   first run. A recorded file that is gone or changed (size/mtime) raises.
 
-The bookkeeping runs no Spark job: the only jobs are one extraction write
-per bucket. Spark, pyarrow and the resume set all skip dot- and
-underscore-prefixed names, so a leftover temp record and the ``_SUCCESS``
-marker of a ``_lineage`` written by an older Spark append are both ignored;
-such a directory still resumes.
+The bookkeeping runs no Spark job: the only jobs are one extraction job
+per bucket, whose tasks write the bucket's files. Spark, pyarrow and the
+resume set all skip dot- and underscore-prefixed names, so a leftover temp
+record and the ``_SUCCESS`` marker of a ``_lineage`` written by an older
+Spark append are both ignored; such a directory still resumes.
 
-``out_dir`` must be a local (POSIX) path: the manifest and the lineage
-records are written with plain file I/O and an atomic rename.
+``out_dir`` must be a POSIX path that the driver and every executor see
+(any local path in local mode): the tasks write the output files, and the
+driver commits them, the manifest and the lineage records with plain file
+I/O and an atomic rename.
 """
 
 from __future__ import annotations
 
 import heapq
 import os
+import shutil
 import time
 import uuid
 from dataclasses import dataclass
+from functools import partial, reduce
 from typing import Callable
 from urllib.parse import unquote, urlsplit
 
-from pyspark.sql import (DataFrame, Observation, SparkSession,
-                         functions as F, types as T)
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+
+from ..pipeline import extract_stages, normalize_columns, output_schema
 
 LINEAGE_SCHEMA = T.StructType([
     T.StructField("bucket", T.IntegerType()),
@@ -232,20 +246,28 @@ def _is_stored_column(df: DataFrame, name: str) -> bool:
 @dataclass(frozen=True)
 class FileInput:
     """An input that is a fixed list of files, as ``run_with_lineage``
-    needs it: ``files`` (the identity and grouping unit),
-    ``extract(group, columns)`` (the extraction output of exactly those
-    files, with the normalized output ``columns``) and ``corrupt(group)``
-    (the group's ``{file: corrupt records}``, read after its extraction
-    ran)."""
+    needs it: ``files`` (the identity and grouping unit) and
+    ``stages(group, columns)``, the extraction of exactly those files as
+    ``(frame, kernel)`` pairs. A bucket's output, in the normalized output
+    ``columns``, is the union over its stages of ``kernel(batches,
+    corrupt=sink)`` run over the frame's Arrow batches (``mapInArrow``); a
+    kernel that parses files reports ``{file: corrupt records}`` through
+    ``sink.add``, the interface of a Spark accumulator."""
 
     files: list[str]
-    extract: Callable[[list[str], tuple[str, ...]], DataFrame]
-    corrupt: Callable[[list[str]], dict[str, int]] = lambda group: {}
+    stages: Callable[[list[str], tuple[str, ...]],
+                     list[tuple[DataFrame, Callable]]]
+
+
+def _no_corrupt(kernel, it, corrupt):
+    """A table-route kernel in the ``FileInput`` form: parquet input has no
+    corrupt records, and a None kernel passes the frame's batches on."""
+    return it if kernel is None else kernel(it)
 
 
 def table_input(docs: DataFrame) -> FileInput:
     """The file-backed ``docs`` frame (parquet) as a ``FileInput``: a group
-    is ``pipeline.extract_documents`` over ``docs`` restricted on
+    is ``pipeline.extract_stages`` over ``docs`` restricted on
     ``_metadata.file_path``, with the footers' ``n_spans`` max as its
     ``max_spans`` bound when ``docs``' ``n_spans`` is that stored column."""
     files = sorted({file_uri(f) for f in docs.inputFiles()})
@@ -274,14 +296,13 @@ def table_input(docs: DataFrame) -> FileInput:
     bound = footer_max_spans if _is_stored_column(docs, "n_spans") \
         else (lambda group: None)
 
-    def extract(group: list[str], columns: tuple[str, ...]) -> DataFrame:
-        from .. import pipeline
+    def stages(group: list[str], columns: tuple[str, ...]):
+        return [(frame, partial(_no_corrupt, kernel))
+                for frame, kernel in extract_stages(
+                    docs.where(path.isin(group)), columns=columns,
+                    max_spans=bound(group))]
 
-        return pipeline.extract_documents(docs.where(path.isin(group)),
-                                          columns=columns,
-                                          max_spans=bound(group))
-
-    return FileInput(files, extract)
+    return FileInput(files, stages)
 
 
 def _file_meta(f: str) -> list:
@@ -365,6 +386,108 @@ def _manifest_groups(out_dir: str, files: list[str], n_buckets: int,
     return groups
 
 
+# one row per bucket task: the file it wrote (null when it had no output
+# rows), its counts, and {file: corrupt records} of the files it parsed
+_TASK_SCHEMA = T.StructType([
+    T.StructField("path", T.StringType()),
+    T.StructField("docs", T.LongType()),
+    T.StructField("spans", T.LongType()),
+    T.StructField("corrupt", T.MapType(T.StringType(), T.LongType())),
+])
+
+
+class _Corrupt(dict):
+    """One task's ``{file: corrupt records}``, filled through an
+    accumulator's ``add``. A task parses each of its files once, so a plain
+    update merges."""
+
+    add = dict.update
+
+
+def _write_task(it, kernel, tmp_dir, schema):
+    """``mapInArrow`` body of a lineage bucket: ``kernel`` over the task's
+    input batches, written straight to one parquet file in ``tmp_dir`` (the
+    extracted spans never cross back to the JVM). The file is named by a
+    fresh uuid, so no two attempts share one, and is closed even when the
+    kernel raises. Yields one ``_TASK_SCHEMA`` row, also when the task wrote
+    no file, so a task over an all-corrupt shard still reports its count."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    corrupt = _Corrupt()
+    path, writer, docs, spans = None, None, 0, 0
+    try:
+        for out in kernel(it, corrupt=corrupt):
+            if not out.num_rows:
+                continue
+            if writer is None:
+                path = os.path.join(tmp_dir,
+                                    f"part-{uuid.uuid4().hex}.parquet")
+                writer = pq.ParquetWriter(path, schema)
+            if not out.schema.equals(schema):
+                out = out.cast(schema)
+            writer.write_batch(out)
+            docs += out.num_rows
+            if "spans" in schema.names:
+                spans += pc.sum(pc.list_value_length(out["spans"])).as_py() or 0
+    finally:
+        if writer is not None:
+            writer.close()
+    yield pa.RecordBatch.from_pylist(
+        [{"path": path, "docs": docs, "spans": spans,
+          "corrupt": list(corrupt.items())}],
+        schema=to_arrow_schema(_TASK_SCHEMA))
+
+
+def _write_frame(source: FileInput, group: list[str],
+                 columns: tuple[str, ...], tmp_dir: str) -> DataFrame:
+    """A bucket's one Spark job: each of ``source``'s stages for ``group``
+    with its kernel chained into ``_write_task``, unioned."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    write = partial(_write_task, tmp_dir=tmp_dir,
+                    schema=to_arrow_schema(output_schema(columns)))
+    return reduce(DataFrame.union, [
+        frame.mapInArrow(partial(write, kernel=kernel), _TASK_SCHEMA)
+        for frame, kernel in source.stages(group, columns)])
+
+
+def _write_bucket(source: FileInput, group: list[str],
+                  columns: tuple[str, ...], final: str) -> dict:
+    """Extract ``group`` into the output partition ``final`` in one Spark
+    job, and return its record's counts. The directory is cleared first, so
+    a rerun is idempotent. The tasks write into ``final/_tmp``
+    (``_write_task``); the driver moves in exactly the files their rows
+    name, so the file of a failed or speculative attempt is never
+    committed, and then removes ``_tmp``. A bucket with no output rows gets
+    a schema-only file. ``_SUCCESS`` marks the partition complete."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    tmp = os.path.join(final, "_tmp")
+    shutil.rmtree(final, ignore_errors=True)
+    os.makedirs(tmp)
+    rows = _write_frame(source, group, columns, tmp).collect() if group \
+        else []
+    written = [r["path"] for r in rows if r["path"]]
+    for p in written:
+        os.replace(p, os.path.join(final, os.path.basename(p)))
+    shutil.rmtree(tmp)
+    if not written:
+        pq.write_table(to_arrow_schema(output_schema(columns)).empty_table(),
+                       os.path.join(final, "part-empty.parquet"))
+    open(os.path.join(final, "_SUCCESS"), "w").close()
+    corrupt: dict[str, int] = {}
+    for r in rows:
+        for f, n in (r["corrupt"] or {}).items():
+            corrupt[f] = max(n, corrupt.get(f, 0))
+    return {"doc_count": sum(r["docs"] for r in rows),
+            "span_count": sum(r["spans"] for r in rows),
+            "corrupt": list(corrupt.items())}
+
+
 def run_with_lineage(
     spark: SparkSession,
     docs: DataFrame | FileInput,
@@ -382,8 +505,9 @@ def run_with_lineage(
     ``docs`` is a DataFrame read from parquet files (``table_input``) or a
     ``FileInput`` (``wireformat.wire_input`` for a directory of wire
     shards). Bucket b is a fixed group of its files (``assign_groups``),
-    extracted alone by the input's ``extract``. A bucket with no files
-    writes an empty output and a 0/0 record.
+    extracted and written alone by the input's ``stages``
+    (``_write_bucket``). A bucket with no files runs no job, and writes a
+    schema-only output and a 0/0 record.
 
     A manifest (n_buckets, columns, each input file with its size/mtime, and
     the bucket→files assignment) is recorded on the first call. A later call
@@ -393,14 +517,15 @@ def run_with_lineage(
     buckets). Files added since are appended as new buckets
     (``_manifest_groups``), so a rerun over a grown input extracts only the
     new files."""
-    from ..pipeline import normalize_columns
-
     # fail fast (and canonicalize for the manifest signature) before any
     # write — see pipeline.normalize_columns
     columns = normalize_columns(columns)
     source = docs if isinstance(docs, FileInput) else table_input(docs)
     if not source.files:
         raise ValueError("the input has no files")
+    from ..packaging import ensure_on_executors
+
+    ensure_on_executors(spark)  # the bucket tasks run this package's writer
 
     os.makedirs(out_dir, exist_ok=True)
     groups = _manifest_groups(out_dir, source.files, n_buckets, columns)
@@ -412,21 +537,14 @@ def run_with_lineage(
 
     def do_bucket(b: int) -> int:
         t0 = time.time()
-        group = groups[b]
-        out = source.extract(group, columns)
-        obs = Observation()
-        span_stat = (F.sum(F.size("spans")) if "spans" in out.columns
-                     else F.lit(0))  # markdown-only runs carry no span count
-        out.observe(obs, F.count(F.lit(1)).alias("d"), span_stat.alias("s")) \
-            .write.mode("overwrite").parquet(os.path.join(out_dir, f"bucket={b}"))
-        stats = obs.get
+        counts = _write_bucket(source, groups[b], columns,
+                               os.path.join(out_dir, f"bucket={b}"))
         # the bucket's data is fully committed before its lineage record
         # lands, so a kill between the two re-extracts the bucket (idempotent
         # overwrite), never records a bucket it didn't finish
         _append_record(out_dir, {
-            "bucket": b, "doc_count": stats["d"], "span_count": stats["s"] or 0,
-            "wall_ms": int((time.time() - t0) * 1000), "status": "done",
-            "corrupt": list(source.corrupt(group).items())})
+            "bucket": b, **counts, "wall_ms": int((time.time() - t0) * 1000),
+            "status": "done"})
         return b
 
     computed: list[int] = []

@@ -53,10 +53,11 @@ Why this shape scales to 10^12 documents:
   parse: ``_parse_one`` returns the count with the batch, and the
   ``mapInArrow`` bodies add ``{shard_path: n_corrupt}`` to an accumulator
   the caller passes in (``corrupt_accumulator``, merged by max per shard,
-  so a retried task or a second action cannot double-count). No audit
-  pass reads the shards a second time, and both extraction routes (job.py
-  with or without lineage) run the parse and the kernel in one
-  ``mapInArrow`` (``extract_wire``).
+  so a retried task or a second action cannot double-count), or, in a
+  lineage bucket, to the task's own sink, which the task returns with the
+  file it wrote. No audit pass reads the shards a second time, and both
+  extraction routes (job.py with or without lineage) run the parse and the
+  kernel in one ``mapInArrow`` (``_fused_extract_arrow``).
 """
 
 from __future__ import annotations
@@ -330,26 +331,25 @@ def list_shards(path: str) -> list[str]:
 
 def wire_input(spark: SparkSession, path: str):
     """The shard directory ``path`` as a ``lineage.FileInput``: its shards at
-    any depth (``list_shards``, taken once), ``extract_wire`` over a group
-    of shards, and the corrupt counts of the group's last extraction — what
-    ``run_with_lineage`` needs to make each bucket a fixed group of shards
-    and to record its corrupt counts.
+    any depth (``list_shards``, taken once), and a group's one stage, the
+    ``binaryFile`` scan of exactly those shards with the fused parse and
+    extraction kernel (``_fused_extract_arrow``) — what ``run_with_lineage``
+    needs to make each bucket a fixed group of shards.
 
-    Each extraction of a group gets its own accumulator, so a bucket's
-    counts are exactly its own shards' without matching paths:
-    ``binaryFile`` spells a path as a ``file:`` URI that is not
-    percent-encoded, which no plain-path comparison gets right for every
-    directory name."""
+    The kernel adds each parsed shard's corrupt count to the sink its task
+    passes in, so a bucket's counts are exactly its own shards' without
+    matching paths: ``binaryFile`` spells a path as a ``file:`` URI that is
+    not percent-encoded, which no plain-path comparison gets right for
+    every directory name."""
+    from functools import partial
+
     from .lineage import FileInput
 
-    accs: dict[tuple[str, ...], object] = {}
+    def stages(group: list[str], columns: tuple[str, ...]):
+        return [(_binary_scan(spark, group),
+                 partial(_fused_extract_arrow, columns=columns))]
 
-    def extract(group: list[str], columns: tuple[str, ...]) -> DataFrame:
-        acc = accs[tuple(group)] = corrupt_accumulator(spark)
-        return extract_wire(spark, group, columns=columns, corrupt=acc)
-
-    return FileInput(list_shards(path), extract,
-                     corrupt=lambda group: accs[tuple(group)].value)
+    return FileInput(list_shards(path), stages)
 
 
 def write_wire_shards(docs: DataFrame, out_dir: str, n_shards: int = 8) -> int:
@@ -474,8 +474,8 @@ def corrupt_accumulator(spark: SparkSession):
 
 def _parse_batches(it, corrupt=None):
     """(path, content) Arrow batches → one documents batch per shard. Each
-    shard's nonzero corrupt count is added to the ``corrupt`` accumulator,
-    when one is given."""
+    shard's nonzero corrupt count is added to ``corrupt``, when one is
+    given: an accumulator, or a lineage bucket task's sink (``add``)."""
     for batch in it:
         contents = batch.column("content").to_pylist()
         paths = (batch.column("path").to_pylist() if corrupt is not None
@@ -554,9 +554,7 @@ def extract_wire(spark: SparkSession, path: str | list[str],
                  corrupt=None) -> DataFrame:
     """Fused raw-bytes lifecycle: ``binaryFile`` scan → shard parse →
     extraction kernel in ONE ``mapInArrow`` stage. ``path`` is a shard
-    directory (read at any depth) or a list of shard paths (a lineage
-    bucket's file group); an empty list gives an empty frame in the output
-    schema.
+    directory (read at any depth) or a non-empty list of shard paths.
 
     The composable path (``extract_documents(read_wire(...))``) crosses the
     JVM↔Python boundary twice with the FULL spans payload: bytes cross into
@@ -586,8 +584,6 @@ def extract_wire(spark: SparkSession, path: str | list[str],
     from ..pipeline import normalize_columns, output_schema
 
     cols = normalize_columns(columns)
-    if isinstance(path, list) and not path:
-        return spark.createDataFrame([], output_schema(cols))
     ensure_on_executors(spark)
     return _binary_scan(spark, path).mapInArrow(
         partial(_fused_extract_arrow, columns=cols, corrupt=corrupt),

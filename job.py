@@ -16,9 +16,12 @@ bytes — BENCH/BASELINE.md). On a real cluster the same rule applies to
 Runs the flagship extraction with per-partition lineage: each bucket is a
 fixed group of input files (parquet part files, or ``.cpw`` shards with
 ``--input-format wire``), read alone, extracted and written as its own
-output partition; re-running after a kill resumes without recomputing
-completed buckets, and re-running over a grown input (new part files or new
-shard drops) extracts only the new files (sources/lineage.py).
+output partition. A bucket's tasks write its parquet files themselves,
+inside the extraction's ``mapInArrow``, and the driver commits the files
+they name; re-running after a kill resumes without recomputing completed
+buckets, and re-running over a grown input (new part files or new shard
+drops) extracts only the new files (sources/lineage.py). ``--no-lineage``
+(which an Iceberg table needs) extracts in one pass through Spark's writer.
 """
 
 from __future__ import annotations

@@ -13,7 +13,6 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import SparkSession, functions as F
 
-from ch_pdf_parse_spark import pipeline
 from ch_pdf_parse_spark.pipeline import extract_documents
 from ch_pdf_parse_spark.sources import lineage as L
 from tests.test_pipeline import _collect
@@ -50,20 +49,22 @@ def _scanned_files(df) -> int:
 
 @pytest.fixture
 def recorded(monkeypatch):
-    """Record each bucket's input frame and extraction plan (optionally at
-    a lowered salt threshold)."""
+    """Record each bucket's input frame, its ``max_spans`` bound and the
+    plans of its extraction stages (optionally at a lowered salt
+    threshold)."""
     calls = []
-    orig = pipeline.extract_documents
+    orig = L.extract_stages
 
     def install(salt_threshold=None):
         def wrapped(docs, **kw):
             if salt_threshold is not None:
                 kw["salt_threshold"] = salt_threshold
-            out = orig(docs, **kw)
-            calls.append((docs, kw.get("max_spans"), out._jdf
-                          .queryExecution().optimizedPlan().toString()))
-            return out
-        monkeypatch.setattr(pipeline, "extract_documents", wrapped)
+            stages = orig(docs, **kw)
+            calls.append((docs, kw.get("max_spans"), "\n".join(
+                frame._jdf.queryExecution().optimizedPlan().toString()
+                for frame, _ in stages)))
+            return stages
+        monkeypatch.setattr(L, "extract_stages", wrapped)
         return calls
     return install
 
@@ -343,7 +344,7 @@ def test_bound_needs_the_stored_column(spark, docs_df, recorded):
 
     def bound(df):
         src = L.table_input(df)
-        src.extract(src.files, ("spans", "markdown"))
+        src.stages(src.files, ("spans", "markdown"))
         return calls[-1][1]
 
     assert bound(docs_df) is not None
@@ -382,6 +383,19 @@ def test_bound_drops_the_salted_branch_but_one_bucket(
                for b, (_, bound, _) in enumerate(calls))
     assert _collect(L.read_output(spark, str(tmp_path / "out"))) == \
         _collect(extract_documents(docs, salt_threshold=T))
+
+
+def test_table_bucket_is_one_scan_one_python_stage(spark, docs_df, tmp_path):
+    """When the footer bound rules out the salted branch, a table bucket's
+    one job is the parquet scan of its files and one ``MapInArrow`` that
+    extracts and writes parquet."""
+    src = L.table_input(docs_df)
+    plan = L._write_frame(src, src.files, ("spans", "markdown"),
+                          str(tmp_path))._jdf \
+        .queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1, plan
+    assert plan.count("MapInArrow") == 1, plan
+    assert "Exchange" not in plan, plan
 
 
 # ------------------------------------------------------------ job.py, wire

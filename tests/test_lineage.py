@@ -258,3 +258,85 @@ def test_resumes_from_spark_appended_lineage(spark, docs_df, tmp_path):
     assert _rows(L.read_lineage(spark, out).collect()) == _rows(recs.values())
     total = {r["bucket"]: r for r in L.lineage_report(spark, out).collect()}
     assert total["TOTAL"]["doc_count"] == docs_df.count()
+
+
+_RETRY_SCRIPT = r"""
+import json, os, shutil, sys
+from functools import partial
+
+import pyarrow.parquet as pq
+
+sys.path.insert(0, sys.argv[1])
+from pyspark import TaskContext
+from ch_pdf_parse_spark.session import get_spark
+from ch_pdf_parse_spark.sources import lineage as L
+
+src_dir, out = sys.argv[2:4]
+spark = get_spark("lineage-retry")  # local[2,2]: a failed task runs again
+src = L.table_input(spark.read.parquet(src_dir))
+
+
+def fails_first(kernel, it, corrupt):
+    yield from kernel(it, corrupt=corrupt)
+    if TaskContext.get().attemptNumber() == 0:
+        raise RuntimeError("the first attempt fails after its output")
+
+
+def stages(group, columns):
+    return [(f, partial(fails_first, k)) for f, k in src.stages(group, columns)]
+
+
+left = []  # {file: rows} still in each bucket's _tmp when it is removed
+rmtree = shutil.rmtree
+
+
+def rmtree_listing(path, *a, **kw):
+    if os.path.basename(path) == "_tmp":
+        left.append({n: pq.read_metadata(os.path.join(path, n)).num_rows
+                     for n in os.listdir(path)})
+    rmtree(path, *a, **kw)
+
+
+shutil.rmtree = rmtree_listing
+L.run_with_lineage(spark, L.FileInput(src.files, stages), out, n_buckets=2)
+ids = [r.doc_id for r in L.read_output(spark, out).select("doc_id").collect()]
+print(json.dumps({"left": left, "ids": ids}))
+"""
+
+
+def test_retried_task_commits_only_its_last_attempt(corpus_dir, tmp_path):
+    """Every bucket task's first attempt fails after its parquet file is
+    closed, and Spark runs the task again. Only the files the successful
+    attempts name are committed: each doc once, no ``_tmp`` left."""
+    import json
+    import subprocess
+    import sys
+
+    import pyarrow.parquet as pq
+
+    src = tmp_path / "src"
+    src.mkdir()
+    t = pq.read_table(os.path.join(corpus_dir, "documents.parquet"))
+    half = t.num_rows // 2
+    pq.write_table(t.slice(0, half), str(src / "part-0.parquet"))
+    pq.write_table(t.slice(half), str(src / "part-1.parquet"))
+    out = str(tmp_path / "out")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", _RETRY_SCRIPT, repo, str(src), out],
+        env={**os.environ, "SPARK_GRAFT_CPUS": "2,2"}, cwd=tmp_path,
+        capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+
+    assert sorted(got["ids"]) == sorted(t.column("doc_id").to_pylist())
+    # each bucket's failed attempts left closed, readable files with rows
+    # behind in _tmp
+    assert len(got["left"]) == 2, got["left"]
+    assert all(left and all(left.values()) for left in got["left"])
+    for b in range(2):
+        names = os.listdir(os.path.join(out, f"bucket={b}"))
+        assert "_SUCCESS" in names and "_tmp" not in names
+        parts = [n for n in names if n != "_SUCCESS"]
+        assert parts and all(n.startswith("part-") for n in parts)
+        assert not set(parts) & set(got["left"][b])

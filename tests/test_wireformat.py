@@ -174,9 +174,15 @@ def test_crc_catches_payload_tamper():
 _SPAN_T = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
 
 
-def test_lineage_bucket_is_one_scan_one_python_stage(spark, wire_dir):
+def test_lineage_bucket_is_one_scan_one_python_stage(spark, wire_dir,
+                                                      tmp_path):
+    """A wire bucket's one job: the ``binaryFile`` scan of its shards and
+    one ``MapInArrow`` that parses, extracts and writes parquet."""
+    from ch_pdf_parse_spark.sources import lineage as L
+
     src = wf.wire_input(spark, wire_dir)
-    plan = src.extract(src.files[:2], ("spans", "markdown"))._jdf \
+    plan = L._write_frame(src, src.files[:2], ("spans", "markdown"),
+                          str(tmp_path))._jdf \
         .queryExecution().executedPlan().toString()
     assert plan.count("binaryFile") == 1, plan
     assert plan.count("MapInArrow") == 1, plan
@@ -221,6 +227,40 @@ def test_same_size_shard_rewrite_keeps_oversized_doc(spark, tmp_path,
     assert big_id in got
     assert got == {r["doc_id"] for r in wf.extract_wire(spark, wire)
                    .collect()}
+
+
+def test_all_corrupt_shard_bucket_records_its_count(spark, wire_dir,
+                                                     tmp_path):
+    """A bucket whose one shard has every record corrupt writes no rows: its
+    record says 0 docs and carries the shard's corrupt count, and its output
+    is a readable schema-only file."""
+    from ch_pdf_parse_spark.sources import lineage as L
+
+    src = wf.list_shards(wire_dir)[0]
+    data = bytearray(open(src, "rb").read())
+    pos = data.find(wf.SYNC)
+    n = 0
+    while pos >= 0:  # break every record's CRC
+        data[pos + 9] ^= 0xFF
+        n += 1
+        pos = data.find(wf.SYNC, pos + 4)
+    d = str(tmp_path / "wire")
+    os.makedirs(d)
+    shard = os.path.join(d, os.path.basename(src))
+    open(shard, "wb").write(bytes(data))
+    assert wf._parse_one(bytes(data))[0].num_rows == 0
+
+    out = str(tmp_path / "out")
+    assert L.run_with_lineage(spark, wf.wire_input(spark, d), out,
+                              n_buckets=1) == [0]
+    (rec,) = L.done_records(out)
+    assert (rec["doc_count"], rec["span_count"]) == (0, 0)
+    assert dict(rec["corrupt"]) == {"file:" + shard: n}
+    got = spark.read.parquet(os.path.join(out, "bucket=0"))
+    assert got.columns == ["doc_id", "spans", "markdown"]
+    assert got.count() == 0
+    assert sorted(os.listdir(os.path.join(out, "bucket=0"))) == \
+        ["_SUCCESS", "part-empty.parquet"]
 
 
 # ------------------------------------------------- corrupt-record counting

@@ -399,9 +399,13 @@ def audit(spark, sf_dir: str) -> tuple[list[tuple[str, str, bool, str]], dict[st
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    from ch_pdf_parse_spark.packaging import ensure_on_executors
     from ch_pdf_parse_spark.session import get_spark
 
     spark = get_spark("plan-audit", cores=4, shuffle_partitions=8)
+    # the audited queries' UDFs pickle package functions by reference, so
+    # the workers must import the package from any cwd
+    ensure_on_executors(spark)
     checks, plans = audit(spark, sf_dir)
 
     lines = [
