@@ -27,9 +27,15 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
+def is_iceberg(spark: SparkSession, ref: str) -> bool:
+    """``ref`` names an Iceberg table: no ``/`` in it and the runtime is
+    loaded. Any other ref is a parquet path."""
+    return "/" not in ref and iceberg_available(spark)
+
+
 def read_table(spark: SparkSession, ref: str) -> DataFrame:
     """``ref`` is either an Iceberg table name (``catalog.db.tbl``) or a path."""
-    if "/" not in ref and iceberg_available(spark):
+    if is_iceberg(spark, ref):
         return spark.read.format("iceberg").load(ref)
     return spark.read.parquet(ref)
 
@@ -42,8 +48,7 @@ def write_table(df: DataFrame, ref: str, mode: str = "overwrite",
     fallback we approximate co-location with ``repartition(N, bucket_by)`` so
     downstream per-doc groupings read pre-clustered files.
     """
-    spark = df.sparkSession
-    if "/" not in ref and iceberg_available(spark):
+    if is_iceberg(df.sparkSession, ref):
         df.writeTo(ref).using("iceberg").createOrReplace()
         return
     if bucket_by and bucket_by in df.columns:

@@ -41,6 +41,11 @@ retry but no built-in *job-level* resume. This module provides it:
   the buckets with a ``done`` record, read on the driver with pyarrow — a
   killed run resumes exactly where it stopped, never recomputing a completed
   bucket and never recording one it did not finish;
+* the buckets still to do run concurrently, up to the session's core count
+  (``defaultParallelism``) at a time: each bucket's job has at least one
+  task, so more concurrent jobs could not add throughput. The first
+  failure stops new submissions; buckets already running still commit and
+  record, so a rerun skips them;
 * the input may **grow** between runs: files the manifest has not recorded
   are grouped the same way (``assign_groups`` over the new files alone),
   the groups that hold files are appended as new bucket ids, and the grown
@@ -68,11 +73,13 @@ import os
 import shutil
 import time
 import uuid
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from dataclasses import dataclass
 from functools import partial, reduce
 from typing import Callable
 from urllib.parse import unquote, urlsplit
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..pipeline import extract_stages, normalize_columns, output_schema
@@ -494,13 +501,14 @@ def run_with_lineage(
     out_dir: str,
     n_buckets: int = 16,
     fail_after: int | None = None,
-    parallelism: int = 1,
     columns: tuple[str, ...] = ("spans", "markdown"),
 ) -> list[int]:
     """Extract ``docs`` bucket-by-bucket with lineage; returns the list of
-    buckets computed in THIS invocation (buckets with a ``done`` record are
-    skipped). ``fail_after`` aborts after k buckets — the kill/resume test
-    hook (SURVEY.md §5 property test 3).
+    buckets computed in THIS invocation, in bucket order (buckets with a
+    ``done`` record are skipped). ``n_buckets`` must be at least 1.
+    ``fail_after=k`` runs only the first k buckets still to do and raises
+    when any are left — the kill/resume test hook (SURVEY.md §5 property
+    test 3).
 
     ``docs`` is a DataFrame read from parquet files (``table_input``) or a
     ``FileInput`` (``wireformat.wire_input`` for a directory of wire
@@ -519,6 +527,8 @@ def run_with_lineage(
     new files."""
     # fail fast (and canonicalize for the manifest signature) before any
     # write — see pipeline.normalize_columns
+    if n_buckets < 1:
+        raise ValueError(f"n_buckets must be at least 1, got {n_buckets}")
     columns = normalize_columns(columns)
     source = docs if isinstance(docs, FileInput) else table_input(docs)
     if not source.files:
@@ -547,22 +557,23 @@ def run_with_lineage(
             "status": "done"})
         return b
 
+    # the pool threads keep the caller's job group, local properties and
+    # job tags (inheritable_thread_target, as pyspark.ml.tuning uses it)
+    run = todo if fail_after is None else todo[:fail_after]
     computed: list[int] = []
-    if parallelism <= 1:
-        for i, b in enumerate(todo):
-            if fail_after is not None and i >= fail_after:
-                raise RuntimeError(
-                    f"injected failure after {fail_after} buckets")
-            computed.append(do_bucket(b))
-        return computed
-    # concurrent bucket submission (Spark scheduler interleaves the jobs):
-    # keeps a large cluster busy when single buckets don't fill it.
-    if fail_after is not None:
-        raise ValueError("fail_after is a serial-mode test hook")
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=parallelism) as pool:
-        computed = list(pool.map(do_bucket, todo))
+    if run:
+        target = inheritable_thread_target(spark)(do_bucket)
+        workers = min(len(run), spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(workers) as pool:
+            futures = [pool.submit(target, b) for b in run]
+            # the first failure cancels the buckets not yet started; the
+            # pool's exit waits for the running ones, which still commit
+            wait(futures, return_when=FIRST_EXCEPTION)
+            for f in futures:
+                f.cancel()
+            computed = [f.result() for f in futures]
+    if len(run) < len(todo):
+        raise RuntimeError(f"injected failure after {fail_after} buckets")
     return computed
 
 

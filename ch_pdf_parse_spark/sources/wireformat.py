@@ -50,14 +50,12 @@ Why this shape scales to 10^12 documents:
   per-document decode any raw-PDF ingest pays (the reference pays PyMuPDF
   per page); everything downstream of the parse is the existing
   zero-shuffle Arrow kernel. Corrupt records are counted by the same
-  parse: ``_parse_one`` returns the count with the batch, and the
-  ``mapInArrow`` bodies add ``{shard_path: n_corrupt}`` to an accumulator
-  the caller passes in (``corrupt_accumulator``, merged by max per shard,
-  so a retried task or a second action cannot double-count), or, in a
-  lineage bucket, to the task's own sink, which the task returns with the
-  file it wrote. No audit pass reads the shards a second time, and both
-  extraction routes (job.py with or without lineage) run the parse and the
-  kernel in one ``mapInArrow`` (``_fused_extract_arrow``).
+  parse: ``_parse_one`` returns the count with the batch, and in a lineage
+  bucket (job.py's one wire route) the ``mapInArrow`` body adds
+  ``{shard_path: n_corrupt}`` to the task's own sink, which the task
+  returns with the file it wrote, so only a successful attempt's count is
+  kept. No audit pass reads the shards a second time, and the bucket runs
+  the parse and the kernel in one ``mapInArrow`` (``_fused_extract_arrow``).
 """
 
 from __future__ import annotations
@@ -68,7 +66,6 @@ import zlib
 from typing import Iterable
 
 import pandas as pd
-from pyspark.accumulators import AccumulatorParam
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -448,34 +445,10 @@ def _parse_one(content: bytes):
     return _doc_batch(cols), cols.corrupt
 
 
-class _MaxDict(AccumulatorParam):
-    """Accumulator of {shard path: n_corrupt}, merged by max per key: a
-    retried or speculative task, or a second action over the same parse,
-    reports the same count again, and max makes that a no-op."""
-
-    def zero(self, value):
-        return {}
-
-    def addInPlace(self, a, b):
-        for k, v in b.items():
-            if v > a.get(k, 0):
-                a[k] = v
-        return a
-
-
-def corrupt_accumulator(spark: SparkSession):
-    """A fresh per-shard corrupt-record accumulator for ``read_wire`` /
-    ``extract_wire``'s ``corrupt=``. Its ``value`` is read on the driver
-    after an action: ``{shard path: n_corrupt}`` for every shard with at
-    least one corrupt record, the path spelled as ``binaryFile`` reports it
-    (a ``file:`` URI)."""
-    return spark.sparkContext.accumulator({}, _MaxDict())
-
-
 def _parse_batches(it, corrupt=None):
     """(path, content) Arrow batches → one documents batch per shard. Each
-    shard's nonzero corrupt count is added to ``corrupt``, when one is
-    given: an accumulator, or a lineage bucket task's sink (``add``)."""
+    shard's nonzero corrupt count is added to ``corrupt``, a lineage bucket
+    task's sink (``add``), when one is given."""
     for batch in it:
         contents = batch.column("content").to_pylist()
         paths = (batch.column("path").to_pylist() if corrupt is not None
@@ -496,14 +469,12 @@ def _binary_scan(spark: SparkSession, path: str | list[str]) -> DataFrame:
             .select("path", "content"))
 
 
-def read_wire(spark: SparkSession, path: str | list[str],
-              corrupt=None) -> DataFrame:
+def read_wire(spark: SparkSession, path: str | list[str]) -> DataFrame:
     """``binaryFile`` scan → parsed `documents` rows (doc_id, spans, n_spans).
 
     ``path`` is a shard directory or a list of shard paths. Corrupt records
-    are dropped per-record (see ``_parse_shard_columnar``); the parse adds
-    each shard's drop count to the ``corrupt`` accumulator when one is
-    passed (``corrupt_accumulator``).
+    are dropped per-record (see ``_parse_shard_columnar``) and not counted:
+    ``wire_scan_stats`` reports the counts.
 
     The decoded documents, for inspection and as the semantic yardstick:
     ``extract_documents(read_wire(...))`` is what ``extract_wire`` must
@@ -511,10 +482,7 @@ def read_wire(spark: SparkSession, path: str | list[str],
     Catalyst, so ``extract_documents`` would plan its salted branch as a
     second full scan and parse, and the parsed spans would cross the JVM
     boundary twice."""
-    from functools import partial
-
-    return _binary_scan(spark, path).mapInArrow(
-        partial(_parse_batches, corrupt=corrupt), DOC_SCHEMA)
+    return _binary_scan(spark, path).mapInArrow(_parse_batches, DOC_SCHEMA)
 
 
 def _stats_arrow(it):
@@ -535,8 +503,8 @@ def _stats_arrow(it):
 def wire_scan_stats(spark: SparkSession, path: str) -> DataFrame:
     """Per-shard ingest stats: (shard_path, n_records, n_corrupt, n_bytes),
     a projection of the same parse ``read_wire`` runs — it decodes every
-    shard in full. Jobs get the corrupt counts from their own read through
-    ``corrupt=`` instead; this is for a standalone look at a directory."""
+    shard in full. A lineage bucket gets its counts from its own parse
+    instead; this is for a standalone look at a directory."""
     return _binary_scan(spark, path).mapInArrow(_stats_arrow, STATS_SCHEMA)
 
 
@@ -550,8 +518,8 @@ def _fused_extract_arrow(it, columns, corrupt=None):
 
 
 def extract_wire(spark: SparkSession, path: str | list[str],
-                 columns: tuple[str, ...] = ("spans", "markdown"),
-                 corrupt=None) -> DataFrame:
+                 columns: tuple[str, ...] = ("spans", "markdown")
+                 ) -> DataFrame:
     """Fused raw-bytes lifecycle: ``binaryFile`` scan → shard parse →
     extraction kernel in ONE ``mapInArrow`` stage. ``path`` is a shard
     directory (read at any depth) or a non-empty list of shard paths.
@@ -575,9 +543,9 @@ def extract_wire(spark: SparkSession, path: str | list[str],
     held the whole document in one task, so salting cannot lower per-task
     memory, which is what ``SALT_SPAN_THRESHOLD`` is set by; it would only
     spread kernel time, which costs less than the salted shuffle below ~2M
-    spans (see constants.py). Corrupt records are counted by this same parse
-    into the ``corrupt`` accumulator, when one is passed
-    (``corrupt_accumulator``)."""
+    spans (see constants.py). Corrupt records are dropped, not counted: a
+    lineage bucket (``wire_input``) runs the same kernel with a sink that
+    counts them."""
     from functools import partial
 
     from ..packaging import ensure_on_executors
@@ -586,5 +554,5 @@ def extract_wire(spark: SparkSession, path: str | list[str],
     cols = normalize_columns(columns)
     ensure_on_executors(spark)
     return _binary_scan(spark, path).mapInArrow(
-        partial(_fused_extract_arrow, columns=cols, corrupt=corrupt),
+        partial(_fused_extract_arrow, columns=cols),
         output_schema(cols))

@@ -4,7 +4,7 @@
     spark-submit --driver-memory 16g \
         --py-files /tmp/ch_pdf_parse_spark.zip job.py \
         --input <documents parquet/iceberg ref> \
-        --output <output dir> [--buckets 64] [--cores N] [--parallelism 8]
+        --output <output dir> [--buckets 64] [--cores N]
 
 ``--driver-memory 16g`` is required in local mode: spark-submit creates the
 JVM BEFORE get_spark's config can apply, so the session's heap sizing is
@@ -16,12 +16,17 @@ bytes — BENCH/BASELINE.md). On a real cluster the same rule applies to
 Runs the flagship extraction with per-partition lineage: each bucket is a
 fixed group of input files (parquet part files, or ``.cpw`` shards with
 ``--input-format wire``), read alone, extracted and written as its own
-output partition. A bucket's tasks write its parquet files themselves,
-inside the extraction's ``mapInArrow``, and the driver commits the files
-they name; re-running after a kill resumes without recomputing completed
-buckets, and re-running over a grown input (new part files or new shard
-drops) extracts only the new files (sources/lineage.py). ``--no-lineage``
-(which an Iceberg table needs) extracts in one pass through Spark's writer.
+output partition, and the buckets run concurrently. A bucket's tasks write
+its parquet files themselves, inside the extraction's ``mapInArrow``, and
+the driver commits the files they name; re-running after a kill resumes
+without recomputing completed buckets, and re-running over a grown input
+(new part files or new shard drops) extracts only the new files
+(sources/lineage.py). ``--buckets 1`` is a one-job run.
+
+An Iceberg table as ``--input`` or ``--output`` has no files to group or no
+output directory to commit into, so it is extracted in one pass through
+Spark's writer instead, without resume; wire input cannot be written to an
+Iceberg table.
 """
 
 from __future__ import annotations
@@ -38,14 +43,6 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--cores", type=int, default=None)
-    ap.add_argument("--no-lineage", action="store_true",
-                    help="single-pass write, no checkpoint/resume (needed "
-                         "for an Iceberg table: lineage buckets are groups "
-                         "of parquet files or wire shards)")
-    ap.add_argument("--parallelism", type=int, default=1,
-                    help="buckets submitted concurrently (Spark scheduler "
-                         "interleaves the jobs; use when one bucket's tasks "
-                         "don't fill the cluster)")
     ap.add_argument("--columns", default="spans,markdown",
                     help="output columns to build and ship (comma-separated "
                          "subset of spans,markdown): projection pushdown "
@@ -71,12 +68,18 @@ def main() -> None:
         from ch_pdf_parse_spark.session import get_spark
 
     from ch_pdf_parse_spark.pipeline import extract_documents
-    from ch_pdf_parse_spark.sources.catalog import read_table, write_table
-    from ch_pdf_parse_spark.sources.lineage import run_with_lineage
+    from ch_pdf_parse_spark.sources.catalog import (is_iceberg, read_table,
+                                                    write_table)
+    from ch_pdf_parse_spark.sources.lineage import (done_records,
+                                                    run_with_lineage)
 
     spark = get_spark("ch-pdf-parse-extract", cores=args.cores)
     t0 = time.time()
     wire = args.input_format == "wire"
+    iceberg_out = is_iceberg(spark, args.output)
+    if wire and iceberg_out:
+        sys.exit(f"job.py: --input-format wire writes lineage buckets into "
+                 f"an output directory; {args.output} is an Iceberg table")
     if not wire:  # a wire read always has the documents schema
         docs = read_table(spark, args.input)
         # fail fast with a readable message BEFORE any write: a wrong table
@@ -98,20 +101,9 @@ def main() -> None:
             tuple(c.strip() for c in args.columns.split(",") if c.strip()))
     except ValueError as e:
         sys.exit(f"job.py: {e}")
-    # {shard path: corrupt records}, counted by the extraction's own parse
-    # of each shard: no second pass over the input
     wire_corrupt = None
-    if args.no_lineage:
-        if wire:
-            from ch_pdf_parse_spark.sources.wireformat import (
-                corrupt_accumulator, extract_wire)
-
-            acc = corrupt_accumulator(spark)
-            write_table(extract_wire(spark, args.input, columns=cols,
-                                     corrupt=acc), args.output)
-            wire_corrupt = acc.value
-        else:
-            write_table(extract_documents(docs, columns=cols), args.output)
+    if iceberg_out or (not wire and is_iceberg(spark, args.input)):
+        write_table(extract_documents(docs, columns=cols), args.output)
         computed = ["all"]
         # parquet count() is footer-metadata only — no second data pass
         n_docs = read_table(spark, args.output).count()
@@ -121,18 +113,16 @@ def main() -> None:
 
             docs = wire_input(spark, args.input)
         computed = run_with_lineage(spark, docs, args.output,
-                                    n_buckets=args.buckets,
-                                    parallelism=args.parallelism,
-                                    columns=cols)
+                                    n_buckets=args.buckets, columns=cols)
         # totals come from the lineage records (observed per bucket while
         # extracting), read on the driver — docs.count() here would be a full
         # second input scan, i.e. another 10^12-row pass for a metrics line;
         # a resumed run gets the skipped buckets' counts from their records
-        from ch_pdf_parse_spark.sources.lineage import done_records
-
         records = done_records(args.output)
         n_docs = sum(r["doc_count"] for r in records)
         if wire:
+            # {shard path: corrupt records}, counted by each bucket's own
+            # parse of its shards: no second pass over the input
             wire_corrupt = dict(kv for r in records
                                 for kv in r["corrupt"] or ())
     wall = time.time() - t0

@@ -104,15 +104,18 @@ def test_space_and_non_ascii_dir_matches_extract_documents(
         _collect(extract_documents(docs))
     recs = {r["bucket"]: r for r in L.done_records(out)}
     assert all(recs[b]["doc_count"] > 0 for b in (0, 1))
-    # each bucket's frame scans only its own files
+    # each bucket's frame scans only its own files (the buckets run
+    # concurrently, so the frames are recorded in no fixed order)
     with open(os.path.join(out, "_manifest.json")) as f:
         groups = json.load(f)["groups"]
     assert len(calls) == 2
-    for (frame, _, _), group in zip(calls, groups):
-        assert _scanned_files(frame) == len(group)
-        got = {L.file_uri(r[0]) for r in
-               frame.select("_metadata.file_path").distinct().collect()}
-        assert got == set(group)
+    read = []
+    for frame, _, _ in calls:
+        got = sorted({L.file_uri(r[0]) for r in
+                      frame.select("_metadata.file_path").distinct().collect()})
+        assert _scanned_files(frame) == len(got)
+        read.append(got)
+    assert sorted(read) == sorted(groups)
 
 
 def test_unresolvable_metadata_raises_before_any_write(spark, docs_df,

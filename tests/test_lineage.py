@@ -7,6 +7,7 @@ import shutil
 import pytest
 
 from ch_pdf_parse_spark.sources import lineage as L
+from tests.test_file_groups import _split_corpus
 from tests.test_pipeline import _collect
 from ch_pdf_parse_spark.pipeline import extract_documents
 
@@ -59,19 +60,6 @@ def test_mismatched_input_or_buckets_raises(spark, docs_df, tmp_path):
     other_df = spark.read.parquet(other_path)
     with pytest.raises(ValueError, match="different input or"):
         L.run_with_lineage(spark, other_df, out, n_buckets=4)
-
-
-def test_parallel_buckets_match_serial(spark, docs_df, tmp_path):
-    """Concurrent bucket submission produces the identical output table and
-    a complete lineage manifest."""
-    out_s = str(tmp_path / "out_serial")
-    out_p = str(tmp_path / "out_parallel")
-    L.run_with_lineage(spark, docs_df, out_s, n_buckets=6)
-    L.run_with_lineage(spark, docs_df, out_p, n_buckets=6, parallelism=3)
-    assert _collect(L.read_output(spark, out_p)) == _collect(L.read_output(spark, out_s))
-    lin = L.read_lineage(spark, out_p).collect()
-    assert {r["bucket"] for r in lin} == set(range(6))
-    assert sum(r["doc_count"] for r in lin) == docs_df.count()
 
 
 def test_old_manifest_version_rejected_clearly(spark, docs_df, tmp_path):
@@ -141,6 +129,130 @@ def test_job_rejects_wrong_schema_before_staging(spark, tmp_path, monkeypatch):
     assert not os.path.exists(os.path.join(out, "_staged"))
 
 
+def _job_ids(spark, group, fn):
+    """The ids of the jobs ``fn()`` ran in job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _run_job(monkeypatch, capsys, *argv):
+    """``job.main()`` on ``argv``, with the session kept open; its report."""
+    import json
+    import sys
+
+    import job
+    from pyspark.sql import SparkSession
+
+    monkeypatch.setattr(SparkSession, "stop", lambda self: None)
+    monkeypatch.setattr(sys, "argv", ["job.py", *argv])
+    job.main()
+    return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+def test_buckets_run_in_the_callers_job_group(spark, corpus_dir, tmp_path):
+    """The threads that submit the buckets keep the caller's job group, so
+    a caller that counts its jobs by group sees one job per bucket that
+    holds files (a bucket without files runs none)."""
+    import json
+
+    src = str(tmp_path / "src")
+    _split_corpus(corpus_dir, src, 3)
+    docs, out = spark.read.parquet(src), str(tmp_path / "out")
+    jobs = _job_ids(spark, "lineage-buckets", lambda: L.run_with_lineage(
+        spark, docs, out, n_buckets=4))
+    with open(os.path.join(out, "_manifest.json")) as f:
+        groups = json.load(f)["groups"]
+    assert sum(1 for g in groups if g) == 3
+    assert len(jobs) == 3
+
+
+@pytest.mark.parametrize("n", [0, -1])
+def test_bucket_count_below_one_rejected_before_any_write(
+        spark, docs_df, corpus_dir, tmp_path, monkeypatch, capsys, n):
+    out = str(tmp_path / "out")
+    with pytest.raises(ValueError, match="n_buckets must be at least 1"):
+        L.run_with_lineage(spark, docs_df, out, n_buckets=n)
+    assert not os.path.exists(out)
+    with pytest.raises(ValueError, match="n_buckets must be at least 1"):
+        _run_job(monkeypatch, capsys, "--input",
+                 os.path.join(corpus_dir, "documents.parquet"),
+                 "--output", out, "--buckets", str(n))
+    assert not os.path.exists(out)
+
+
+def test_job_writes_an_iceberg_output_in_one_pass(
+        spark, docs_df, corpus_dir, tmp_path, monkeypatch, capsys):
+    """An Iceberg output has no directory to commit buckets into: job.py
+    extracts in one pass through ``write_table``, and writes no lineage."""
+    from ch_pdf_parse_spark.sources import catalog
+
+    table, stored = "cat.db.out", str(tmp_path / "stored")
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setattr(catalog, "is_iceberg", lambda s, ref: ref == table)
+    read = catalog.read_table
+    monkeypatch.setattr(catalog, "read_table", lambda s, ref: read(
+        s, stored if ref == table else ref))
+
+    def write_table(df, ref):
+        assert ref == table
+        df.write.parquet(stored)
+
+    monkeypatch.setattr(catalog, "write_table", write_table)
+    got = _run_job(monkeypatch, capsys, "--input",
+                   os.path.join(corpus_dir, "documents.parquet"),
+                   "--output", table)
+    assert (got["buckets_computed"], got["docs"]) == (1, docs_df.count())
+    assert not os.path.exists(table)
+    assert _collect(spark.read.parquet(stored)) == \
+        _collect(extract_documents(docs_df))
+
+
+def test_job_path_to_path_runs_lineage(spark, docs_df, corpus_dir, tmp_path,
+                                       monkeypatch, capsys):
+    from ch_pdf_parse_spark.sources import catalog
+
+    def write_table(df, ref):
+        raise AssertionError("a path output must not take the single pass")
+
+    monkeypatch.setattr(catalog, "is_iceberg", lambda s, ref: False)
+    monkeypatch.setattr(catalog, "write_table", write_table)
+    src, out = str(tmp_path / "src"), str(tmp_path / "out")
+    _split_corpus(corpus_dir, src, 2)
+    got = _run_job(monkeypatch, capsys, "--input", src, "--output", out,
+                   "--buckets", "2")
+    assert (got["buckets_computed"], got["docs"]) == (2, docs_df.count())
+    assert sorted(r["bucket"] for r in L.done_records(out)) == [0, 1]
+
+
+def test_job_rejects_wire_into_iceberg_before_any_spark_job(
+        spark, docs_df, tmp_path, monkeypatch):
+    import sys
+
+    import job
+    from ch_pdf_parse_spark.sources import catalog
+    from ch_pdf_parse_spark.sources.wireformat import write_wire_shards
+
+    wire, table = str(tmp_path / "wire"), "cat.db.out"
+    write_wire_shards(docs_df, wire, n_shards=2)
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.setattr(catalog, "is_iceberg", lambda s, ref: ref == table)
+    monkeypatch.setattr(sys, "argv", [
+        "job.py", "--input-format", "wire", "--input", wire,
+        "--output", table])
+
+    def run():
+        with pytest.raises(SystemExit, match="is an Iceberg table"):
+            job.main()
+
+    assert _job_ids(spark, "wire-into-iceberg", run) == []
+    assert not os.path.exists(table)
+
+
 def _recount(spark, out, b, columns):
     """The old engine's per-bucket count: re-read ``bucket=b`` and count."""
     from pyspark.sql import functions as F
@@ -157,14 +269,13 @@ def _rows(records):
                   for r in records)
 
 
-@pytest.mark.parametrize("columns,n_buckets,parallelism", [
-    (("spans", "markdown"), 4, 1),
-    (("markdown",), 4, 1),
-    (("spans", "markdown"), 16, 1),  # more buckets than docs: some empty
-    (("spans", "markdown"), 6, 3),
-], ids=["spans_markdown", "markdown_only", "empty_buckets", "parallel"])
+@pytest.mark.parametrize("columns,n_buckets", [
+    (("spans", "markdown"), 4),
+    (("markdown",), 4),
+    (("spans", "markdown"), 16),  # more buckets than docs: some empty
+], ids=["spans_markdown", "markdown_only", "empty_buckets"])
 def test_observed_counts_match_recount(spark, docs_df, tmp_path, columns,
-                                       n_buckets, parallelism):
+                                       n_buckets):
     """Each bucket's observed counts equal a recount of what was written,
     the driver-side reader agrees with Spark's, and a second run into a
     fresh out_dir records the same rows (wall_ms aside)."""
@@ -172,7 +283,7 @@ def test_observed_counts_match_recount(spark, docs_df, tmp_path, columns,
     for i in range(2):
         out = str(tmp_path / f"out{i}")
         L.run_with_lineage(spark, docs_df, out, n_buckets=n_buckets,
-                           parallelism=parallelism, columns=columns)
+                           columns=columns)
         rows = _rows(L.read_lineage(spark, out).collect())
         assert [r[0] for r in rows] == list(range(n_buckets))
         assert [(r[1], r[2]) for r in rows] == [

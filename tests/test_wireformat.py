@@ -121,14 +121,8 @@ def test_corrupt_record_degrades_per_record(spark, docs_df, wire_dir, tmp_path):
              for r in wf.wire_scan_stats(spark, out).collect()}
     assert stats[shards[0]]["n_corrupt"] == 1
     assert sum(r["n_corrupt"] for r in stats.values()) == 1
-    acc = wf.corrupt_accumulator(spark)
-    docs = wf.read_wire(spark, out, corrupt=acc)
+    docs = wf.read_wire(spark, out)
     assert docs.count() == clean_total - 1  # exactly one record lost, job alive
-    # the read's own parse counted the loss, keyed like wire_scan_stats; a
-    # second parse of the same shard (another action) does not add to it
-    assert acc.value == {stats[shards[0]]["shard_path"]: 1}
-    assert docs.count() == clean_total - 1
-    assert acc.value == {stats[shards[0]]["shard_path"]: 1}
 
 
 def test_truncated_shard_counted_not_fatal(tmp_path):
@@ -324,14 +318,6 @@ def _corrupt_of(report):
     return report["wire_corrupt_records"], report["wire_corrupt_shards"]
 
 
-def test_job_reports_corruption_without_lineage(
-        spark, flipped_dir, tmp_path, monkeypatch, capsys):
-    d, want = flipped_dir
-    got = _job(monkeypatch, capsys, "--input", d, "--output",
-               str(tmp_path / "out"), "--no-lineage")
-    assert _corrupt_of(got) == (sum(want.values()), sorted(want))
-
-
 def test_job_reports_corruption_with_lineage_and_across_resume(
         spark, flipped_dir, tmp_path, monkeypatch, capsys):
     from ch_pdf_parse_spark.sources import lineage as L
@@ -357,10 +343,10 @@ def test_job_reports_corruption_with_lineage_and_across_resume(
 
 
 def test_list_shards_matches_the_binary_scan(spark, tmp_path):
-    """The lineage route groups ``list_shards``; ``--no-lineage`` scans the
-    directory. Both must see the same shards, at every depth and through a
-    linked directory, with Spark's hidden-name rules for files and
-    directories."""
+    """The lineage route groups ``list_shards``; ``extract_wire`` and
+    ``wire_scan_stats`` scan the directory. Both must see the same shards,
+    at every depth and through a linked directory, with Spark's hidden-name
+    rules for files and directories."""
     from ch_pdf_parse_spark.sources.lineage import local_path
 
     d = str(tmp_path / "shards")

@@ -315,6 +315,7 @@ def audit(spark, sf_dir: str) -> tuple[list[tuple[str, str, bool, str]], dict[st
     # --- r5: raw wire-format lifecycle is shuffle-free end-to-end ---------
     # packed .cpw shards → binaryFile scan → MapInArrow parse → extraction
     # kernel; shard count alone sets ingest parallelism (sources/wireformat.py)
+    import shutil
     import tempfile
 
     from ch_pdf_parse_spark.sources.wireformat import (extract_wire,
@@ -325,24 +326,27 @@ def audit(spark, sf_dir: str) -> tuple[list[tuple[str, str, bool, str]], dict[st
     from ch_pdf_parse_spark.registry import fixture_docs
 
     wire_tmp = tempfile.mkdtemp(prefix="plan_audit_wire_")
-    docs = fixture_docs(spark, sf_dir).select("doc_id", "spans").limit(64)
-    write_wire_shards(docs, wire_tmp, n_shards=4)
-    shards = list_shards(wire_tmp)  # one listing for every read below
-    p = formatted_plan(read_wire(spark, shards))
-    plans["wire_decode"] = p
-    add("wire_decode", "binaryFile scan → MapInArrow parse, zero Exchange "
-        "(shard count alone sets ingest parallelism)",
-        "MapInArrow" in p and not re.search(r"\bExchange\b", p))
-    # extraction of the wire shards: the parse and the kernel run in one
-    # MapInArrow over one binaryFile scan, with no Exchange
-    p = formatted_plan(extract_wire(spark, shards))
-    plans["wire_ingest_extract"] = p
-    n_py = len(re.findall(r"\(\d+\) MapInArrow", p))
-    n_scan = len(re.findall(r"\(\d+\) Scan binaryFile", p))
-    add("wire_ingest_extract", "one binaryFile scan → one MapInArrow "
-        "(parse + extraction), zero Exchange",
-        n_py == n_scan == 1 and not re.search(r"\bExchange\b", p),
-        f"{n_scan} scans, {n_py} MapInArrow")
+    try:
+        docs = fixture_docs(spark, sf_dir).select("doc_id", "spans").limit(64)
+        write_wire_shards(docs, wire_tmp, n_shards=4)
+        shards = list_shards(wire_tmp)  # one listing for every read below
+        p = formatted_plan(read_wire(spark, shards))
+        plans["wire_decode"] = p
+        add("wire_decode", "binaryFile scan → MapInArrow parse, zero "
+            "Exchange (shard count alone sets ingest parallelism)",
+            "MapInArrow" in p and not re.search(r"\bExchange\b", p))
+        # extraction of the wire shards: the parse and the kernel run in one
+        # MapInArrow over one binaryFile scan, with no Exchange
+        p = formatted_plan(extract_wire(spark, shards))
+        plans["wire_ingest_extract"] = p
+        n_py = len(re.findall(r"\(\d+\) MapInArrow", p))
+        n_scan = len(re.findall(r"\(\d+\) Scan binaryFile", p))
+        add("wire_ingest_extract", "one binaryFile scan → one MapInArrow "
+            "(parse + extraction), zero Exchange",
+            n_py == n_scan == 1 and not re.search(r"\bExchange\b", p),
+            f"{n_scan} scans, {n_py} MapInArrow")
+    finally:
+        shutil.rmtree(wire_tmp, ignore_errors=True)
 
     # --- r5: as-of join is union-merge, not a range join ------------------
     from ch_pdf_parse_spark.operators.asof import j_asof_join
