@@ -20,7 +20,6 @@ OFFSET_PAGE = 10_000_000
 OFFSET_Y = 10_000
 
 # page geometry (1024-normalized space, y usable range [0, 999])
-PAGE_W = 1024
 LINE_H = 12          # rendered text-line height
 LINE_PITCH = 14      # y1 delta between consecutive lines of one paragraph
 BLOCK_GAP = 26       # y1 delta between the last line of a block and the next block

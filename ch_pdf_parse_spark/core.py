@@ -106,18 +106,6 @@ def classify_kind(text: str, page: int, y1: int) -> str:
 # ---------------------------------------------------------------------------
 
 
-def _gaps(intervals: list[tuple[int, int]], min_gap: int) -> list[int]:
-    """Split points of the merged interval union where a gap >= min_gap opens."""
-    ivs = sorted(intervals)
-    cuts: list[int] = []
-    hi = ivs[0][1]
-    for a, b in ivs[1:]:
-        if a - hi >= min_gap:
-            cuts.append(hi)
-        hi = max(hi, b)
-    return cuts
-
-
 def _groups_1d(idxs: list[int], lo, hi, min_gap: int) -> list[list[int]]:
     """Maximal runs of ``idxs`` (pre-sorted by lo) whose interval union has no
     gap >= min_gap; adjacent runs are separated by such a gap."""

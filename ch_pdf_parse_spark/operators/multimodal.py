@@ -21,19 +21,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..registry import fixture_docs, register
 
-MEDIA_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.StringType()),
-    T.StructField("media_ref", T.StringType()),
-    T.StructField("media_type", T.StringType()),   # image | audio | video
-    T.StructField("payload", T.BinaryType()),
-    T.StructField("meta", T.StructType([
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("n_frames", T.IntegerType()),
-        T.StructField("codec", T.StringType()),
-    ])),
-])
-
 FEATURE_SCHEMA = T.StructType([
     T.StructField("doc_id", T.StringType()),
     T.StructField("media_ref", T.StringType()),

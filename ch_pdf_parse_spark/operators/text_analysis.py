@@ -87,17 +87,6 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token counting: whitespace tokens + a BPE-ish regex tokenizer. Driver
-    surface: folded into ``text_profile`` (see text_lang_id)."""
-    d = _t(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.size(F.split("text", " ")).alias("ws_tokens"),
-        F.size(F.expr(f"regexp_extract_all(text, '{_BPE_RE}', 0)")).alias("bpe_tokens"),
-    )
-
-
 def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprinting: exact content hash + bottom-1 shingle sketch
     (the building block of winnowing/rolling-hash fingerprints). Driver

@@ -22,7 +22,8 @@ _LOCK = threading.Lock()
 
 
 def build_zip(dest: str | None = None) -> str:
-    """Zip this package (pure-python, no data) for --py-files / addPyFile."""
+    """Zip this package (its ``.py`` modules plus ``native.c``, the C source
+    workers compile on first use) for --py-files / addPyFile."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     dest = dest or os.path.join(tempfile.gettempdir(), "ch_pdf_parse_spark.zip")
     # unique tmp per call: concurrent builders (e.g. the lineage runner's
@@ -34,7 +35,7 @@ def build_zip(dest: str | None = None) -> str:
             if "__pycache__" in root:
                 continue
             for f in files:
-                if not f.endswith(".py"):
+                if not f.endswith((".py", ".c")):
                     continue
                 full = os.path.join(root, f)
                 rel = os.path.join("ch_pdf_parse_spark",

@@ -302,10 +302,3 @@ def extract_documents(
                                            max_spans)
     out = small.mapInArrow(kernel, schema)
     return out.unionByName(big[0][0]) if big else out
-
-
-def read_documents(spark, path: str) -> DataFrame:
-    """Read the input corpus (parquet file or Iceberg table, sources.catalog)."""
-    from .sources.catalog import read_table
-
-    return read_table(spark, path)

@@ -31,7 +31,7 @@ retry but no built-in *job-level* resume. This module provides it:
   wire bucket runs the fused parse and extraction (the kernel of
   ``wireformat.extract_wire``), which has no salted branch;
 * once the bucket's data is committed, its lineage record ``(bucket,
-  doc_count, span_count, wall_ms, status, corrupt)`` lands as its own
+  doc_count, span_count, wall_ms, status, corrupt, started_ms)`` lands as its own
   one-row parquet file: written under a dot-prefixed temp name, then
   ``os.replace``d into ``_lineage/``, so a record is either whole or
   absent. ``corrupt`` maps each of the bucket's wire shards with corrupt
@@ -92,6 +92,8 @@ LINEAGE_SCHEMA = T.StructType([
     T.StructField("status", T.StringType()),
     # {shard path: corrupt records} for the bucket's wire shards with any
     T.StructField("corrupt", T.MapType(T.StringType(), T.LongType())),
+    # epoch ms when the bucket started; null in records written before it
+    T.StructField("started_ms", T.LongType()),
 ])
 
 # v1 hashed bare names; v2 adds [size, mtime_ns]; v3 adds the output column
@@ -400,6 +402,8 @@ _TASK_SCHEMA = T.StructType([
     T.StructField("docs", T.LongType()),
     T.StructField("spans", T.LongType()),
     T.StructField("corrupt", T.MapType(T.StringType(), T.LongType())),
+    # epoch ms when the bucket started; null in records written before it
+    T.StructField("started_ms", T.LongType()),
 ])
 
 
@@ -554,7 +558,7 @@ def run_with_lineage(
         # overwrite), never records a bucket it didn't finish
         _append_record(out_dir, {
             "bucket": b, **counts, "wall_ms": int((time.time() - t0) * 1000),
-            "status": "done"})
+            "status": "done", "started_ms": int(t0 * 1000)})
         return b
 
     # the pool threads keep the caller's job group, local properties and
@@ -580,8 +584,22 @@ def run_with_lineage(
 def lineage_report(spark: SparkSession, out_dir: str) -> DataFrame:
     """Per-partition metrics (north_rule: 'per-partition lineage + metrics'):
     docs/sec and spans/sec per bucket plus a TOTAL row — the operational view
-    of a run (skew shows up as a bucket whose docs_per_sec lags its peers)."""
+    of a run (skew shows up as a bucket whose docs_per_sec lags its peers).
+
+    TOTAL ``wall_ms`` is the length of the union of the buckets'
+    ``[started_ms, started_ms + wall_ms]`` intervals: concurrent buckets
+    count once, and the gap between a killed run and its resume counts
+    zero. It and TOTAL ``docs_per_sec`` are null when any record predates
+    ``started_ms``."""
+    from pyspark.sql import Window
+
     lin = read_lineage(spark, out_dir).where(F.col("status") == "done")
+    end = F.col("started_ms") + F.col("wall_ms")
+    # the part of a bucket's interval that no earlier-starting bucket covers
+    covered = F.max(end).over(Window.orderBy("started_ms", "bucket")
+                              .rowsBetween(Window.unboundedPreceding, -1))
+    lin = lin.withColumn("new_ms", F.greatest(F.lit(0), end - F.greatest(
+        "started_ms", F.coalesce(covered, F.col("started_ms")))))
     per = lin.select(
         F.col("bucket").cast("string").alias("bucket"),
         "doc_count", "span_count", "wall_ms",
@@ -592,11 +610,13 @@ def lineage_report(spark: SparkSession, out_dir: str) -> DataFrame:
         F.lit("TOTAL").alias("bucket"),
         F.sum("doc_count").alias("doc_count"),
         F.sum("span_count").alias("span_count"),
-        F.sum("wall_ms").alias("wall_ms"),
-        F.round(F.sum("doc_count") * 1000.0
-                / F.greatest(F.sum("wall_ms"), F.lit(1)), 1)
-        .alias("docs_per_sec"),
+        F.when(F.count("started_ms") == F.count("*"), F.sum("new_ms"))
+        .alias("wall_ms"),
     )
+    # greatest() skips nulls, so a null wall_ms must be kept null explicitly
+    total = total.withColumn("docs_per_sec", F.when(
+        F.col("wall_ms").isNotNull(), F.round(
+            F.col("doc_count") * 1000.0 / F.greatest("wall_ms", F.lit(1)), 1)))
     return per.unionByName(total)
 
 

@@ -356,7 +356,8 @@ def test_resumes_from_spark_appended_lineage(spark, docs_df, tmp_path):
     for b in (0, 2):
         r = recs[b]
         spark.createDataFrame(
-            [(b, r["doc_count"], r["span_count"], r["wall_ms"], "done", {})],
+            [(b, r["doc_count"], r["span_count"], r["wall_ms"], "done", {},
+              r["started_ms"])],
             L.LINEAGE_SCHEMA).write.mode("append").parquet(L.lineage_path(out))
     assert os.path.exists(os.path.join(L.lineage_path(out), "_SUCCESS"))
     mtimes = {b: os.stat(os.path.join(out, f"bucket={b}", "_SUCCESS")).st_mtime_ns
@@ -369,6 +370,69 @@ def test_resumes_from_spark_appended_lineage(spark, docs_df, tmp_path):
     assert _rows(L.read_lineage(spark, out).collect()) == _rows(recs.values())
     total = {r["bucket"]: r for r in L.lineage_report(spark, out).collect()}
     assert total["TOTAL"]["doc_count"] == docs_df.count()
+
+
+def test_report_total_wall_is_the_runs_span(spark, corpus_dir, tmp_path):
+    """Buckets run concurrently, so the TOTAL row's wall_ms is the span
+    the buckets covered together, not the sum of their walls: it cannot
+    exceed the wall time of the run that wrote them."""
+    import time
+
+    src = str(tmp_path / "src")
+    _split_corpus(corpus_dir, src, 4)
+    docs, out = spark.read.parquet(src), str(tmp_path / "out")
+    t0 = time.time()
+    assert len(L.run_with_lineage(spark, docs, out, n_buckets=4)) == 4
+    run_ms = (time.time() - t0) * 1000
+    rows = {r["bucket"]: r for r in L.lineage_report(spark, out).collect()}
+    total = rows.pop("TOTAL")
+    assert max(r["wall_ms"] for r in rows.values()) <= total["wall_ms"] \
+        <= run_ms
+    assert total["docs_per_sec"] == round(
+        docs.count() * 1000.0 / total["wall_ms"], 1)
+
+
+def _records(out, recs, started=True):
+    """Land hand-made done records (bucket, started_ms, wall_ms); without
+    ``started``, in the record schema that predates ``started_ms``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(L.LINEAGE_SCHEMA)
+    if not started:
+        schema = schema.remove(schema.get_field_index("started_ms"))
+    rows = [{"bucket": b, "doc_count": 10, "span_count": 20, "wall_ms": w,
+             "status": "done", "corrupt": [], "started_ms": t}
+            for b, t, w in recs]
+    os.makedirs(L.lineage_path(out))
+    pq.write_table(pa.Table.from_pylist(rows, schema=schema),
+                   os.path.join(L.lineage_path(out), "part-0.parquet"))
+
+
+def test_report_total_counts_overlaps_once_and_gaps_not_at_all(
+        spark, tmp_path):
+    out = str(tmp_path / "out")
+    # two overlapping buckets, one nested in them, then a resume 10 s later
+    _records(out, [(0, 1000, 100), (1, 1050, 100), (2, 1060, 20),
+                   (3, 11000, 30)])
+    total = {r["bucket"]: r for r in
+             L.lineage_report(spark, out).collect()}["TOTAL"]
+    assert (total["doc_count"], total["wall_ms"]) == (40, 180)
+    assert total["docs_per_sec"] == round(40 * 1000.0 / 180, 1)
+
+
+def test_report_total_wall_is_null_without_start_times(spark, tmp_path):
+    """Records written before ``started_ms`` existed read it as null; the
+    run's span is then unknown, so TOTAL wall_ms and docs_per_sec are
+    null while the counts still add up."""
+    out = str(tmp_path / "out")
+    _records(out, [(0, None, 100), (1, None, 50)], started=False)
+    rows = {r["bucket"]: r for r in L.lineage_report(spark, out).collect()}
+    assert rows["0"]["docs_per_sec"] == 100.0
+    assert (rows["TOTAL"]["doc_count"], rows["TOTAL"]["wall_ms"],
+            rows["TOTAL"]["docs_per_sec"]) == (20, None, None)
+    assert {r["bucket"] for r in L.done_records(out)} == {0, 1}
 
 
 _RETRY_SCRIPT = r"""

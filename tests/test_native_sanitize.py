@@ -1,5 +1,6 @@
-"""The embedded C source must build warning-free and run clean under
-AddressSanitizer + UndefinedBehaviorSanitizer.
+"""``native.c`` must build warning-free and run clean under
+AddressSanitizer + UndefinedBehaviorSanitizer. Both builds go through
+``native._compile``, the production build recipe, with their own flags.
 
 The sanitized library is installed as ``native._LIB`` in a child
 interpreter (libasan/libubsan preloaded, since CPython itself is not
@@ -26,19 +27,14 @@ pytestmark = pytest.mark.skipif(shutil.which("cc") is None,
 
 
 def _compile(tmp_path, name, flags):
-    src = tmp_path / "native.c"
-    src.write_text(native._C_SOURCE)
     out = tmp_path / name
-    proc = subprocess.run(
-        ["cc", *flags, "-shared", "-fPIC", "-o", str(out), str(src)],
-        capture_output=True, text=True, timeout=300)
-    return proc, out
+    return native._compile(str(out), flags), out
 
 
 def test_builds_clean_with_warnings_as_errors(tmp_path):
     proc, _ = _compile(tmp_path, "warn.so",
                        ["-O2", "-Wall", "-Wextra", "-Werror"])
-    assert proc.returncode == 0, proc.stderr
+    assert proc.returncode == 0, proc.stderr.decode()
 
 
 _CHILD_SCRIPT = textwrap.dedent("""
@@ -53,13 +49,7 @@ _CHILD_SCRIPT = textwrap.dedent("""
     from ch_pdf_parse_spark import native
 
     lib = ctypes.CDLL(SO)
-    LL = ctypes.POINTER(ctypes.c_longlong)
-    lib.xy_cut.argtypes = [LL, ctypes.c_int, ctypes.c_longlong,
-                           ctypes.c_longlong, LL]
-    lib.xy_cut.restype = ctypes.c_int
-    native._wire_protos(lib)
-    native._ex_protos(lib)
-    native._mh_protos(lib)
+    native._protos(lib)
     native._LIB, native._TRIED = lib, True
 
     from tests import test_extract_native as ten
@@ -92,7 +82,7 @@ _CHILD_SCRIPT = textwrap.dedent("""
     emit = np.zeros(5, np.uint8)
     assert lib.minhash_text(
         None, offs.ctypes.data_as(ctypes.POINTER(ctypes.c_int)), None, 5, 1,
-        16, mins.ctypes.data_as(LL),
+        16, mins.ctypes.data_as(ctypes.POINTER(ctypes.c_longlong)),
         emit.ctypes.data_as(ctypes.POINTER(ctypes.c_ubyte))) == 5
     assert emit.all()
     assert native._LIB is lib  # every call above ran the sanitized build
@@ -113,7 +103,7 @@ def test_fuzz_inputs_clean_under_asan_ubsan(tmp_path):
     proc, so = _compile(tmp_path, "san.so", [
         "-O1", "-g", "-fno-omit-frame-pointer",
         "-fsanitize=address,undefined", "-fno-sanitize-recover=undefined"])
-    assert proc.returncode == 0, proc.stderr
+    assert proc.returncode == 0, proc.stderr.decode()
     env = dict(os.environ, LD_PRELOAD=f"{asan}:{ubsan}",
                ASAN_OPTIONS="detect_leaks=0",
                UBSAN_OPTIONS="print_stacktrace=1")
