@@ -8,24 +8,36 @@ CLUSTERS and drop all but one document per cluster (A~B, B~C ⇒ keep one of
 three; naïve per-pair dropping over-deletes chains). This module adds that
 final stage (round-3 verdict item #1):
 
-* ``resolve_clusters`` — distributed connected components by ALTERNATING
-  LARGE-STAR/SMALL-STAR edge rewriting (Kiveris et al., "Connected
-  Components in MapReduce and Beyond", SoCC'14): each round every node
-  reconnects its larger neighbors (large-star) and then its smaller-or-equal
-  neighbors (small-star) to the minimum of its known neighborhood, REWRITING
-  THE EDGE SET until every component is a star centered at its minimum id.
-  Rewriting edges is what makes this logarithmic: a fixed-edge label
-  propagation — even with pointer jumping over the labels — must still carry
-  the component min across the ORIGINAL graph's diameter (measured on a
-  100k-node random functional graph: 300 rounds for label+jump vs 10 for
-  LS/SS; a 512-chain needs 10 LS/SS rounds). Each round shuffles only int64
-  edge pairs — document text never enters the loop. Convergence = edge-set
-  fixpoint, checked exactly (count + exceptAll, no hash-collision early
-  stop); ``max_iters`` (default 48; the worst-case bound is O(log² n)
-  rounds, observed ≈log n) is a loud RuntimeError backstop, never a silent
-  truncation. At 100 TB the same loop runs with a reliable
-  ``spark.sparkContext.setCheckpointDir`` target instead of
-  ``localCheckpoint`` (the lineage-truncation point is identical).
+* ``resolve_clusters`` — connected components, by one of two routes
+  chosen from the materialized edge count. The candidate detectors run
+  once, inside the edge set's ``localCheckpoint`` (under AQE that is where
+  their query stages execute), and the count that follows is the one job
+  that pays for them; both routes then read the checkpointed edges.
+
+  - Up to ``CC_DRIVER_EDGES`` symmetric edges, the edges are collected and
+    labelled by union-find on the driver, and the labels come back as one
+    small DataFrame. Below the cap the distributed loop costs more in
+    per-job fixed cost (a round plus the fixpoint check is several Spark
+    jobs) than the driver spends on the whole graph.
+  - Above it, distributed connected components by ALTERNATING
+    LARGE-STAR/SMALL-STAR edge rewriting (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14), because a driver cannot
+    hold billions of edges: each round every node reconnects its larger
+    neighbors (large-star) and then its smaller-or-equal neighbors
+    (small-star) to the minimum of its known neighborhood, REWRITING THE
+    EDGE SET until every component is a star centered at its minimum id.
+    Rewriting edges is what makes this logarithmic: a fixed-edge label
+    propagation — even with pointer jumping over the labels — must still
+    carry the component min across the ORIGINAL graph's diameter (measured
+    on a 100k-node random functional graph: 300 rounds for label+jump vs 10
+    for LS/SS; a 512-chain needs 10 LS/SS rounds). Each round shuffles only
+    edge pairs — document text never enters the loop. Convergence =
+    edge-set fixpoint, checked exactly (count + exceptAll, no
+    hash-collision early stop); ``max_iters`` (default 48; the worst-case
+    bound is O(log² n) rounds, observed ≈log n) is a loud RuntimeError
+    backstop, never a silent truncation. At 100 TB the same loop runs with
+    a reliable ``spark.sparkContext.setCheckpointDir`` target instead of
+    ``localCheckpoint`` (the lineage-truncation point is identical).
 
 * ``dedup_clusters`` — the driver query: clusters over the UNION of the three
   text detectors' candidate pairs on the shared dup corpus, emitting
@@ -38,13 +50,16 @@ final stage (round-3 verdict item #1):
   histogram with kept-token totals (the ``pipeline_training_corpus`` analog
   for NEAR-duplicates; that pipeline's dedup stage is exact-hash only).
 
-Cross-engine determinism is trivial here by design: everything is exact
-int64 arithmetic (min over ids), no floats anywhere in the loop.
+Cross-engine determinism is trivial here by design: everything is a min
+over ids, no floats anywhere in either route. The driver route takes its
+min in Python's order, which equals Spark's for the id types it accepts
+(integers, and UTF-8 binary strings, whose byte order is code-point
+order); any other id type takes the Spark route.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from ..registry import SQL, register, _t
 from .dedup import (
@@ -63,6 +78,9 @@ from .dedup import (
 )
 
 MAX_CC_ITERS = 48
+# symmetric edges up to which resolve_clusters labels on the driver (~160 MB
+# of driver memory at the cap; measurement in its docstring)
+CC_DRIVER_EDGES = 2_000_000
 # ~50 B/edge row → ~1M rows ≈ the 64 MB AQE advisory partition size; the
 # checkpointed-edge coalesce target in resolve_clusters derives from it
 _EDGE_ROWS_PER_PART = 1_000_000
@@ -118,16 +136,28 @@ def resolve_clusters(nodes: DataFrame, pairs: DataFrame,
     is_keeper) where cluster_id = min doc_id reachable and is_keeper ⇔
     doc_id == cluster_id (deterministic min-id keeper).
 
-    Alternating large-star/small-star (module docstring): per round, with
-    m(u) = min of u's closed neighborhood,
-      * large-star reconnects every neighbor v > u to m(u);
-      * small-star reconnects every neighbor v ≤ u (and u itself) to the min
-        of the ≤-neighborhood —
-    until the edge set is a fixpoint (then every component is a star around
-    its min id, so the label is ``least(id, min neighbor)``). NULL doc_ids
-    can never appear in a detector pair, take a NULL label from the left
-    join, and emit (NULL, NULL, NULL) — identical to the oracle's recursive
-    CTE."""
+    The symmetric edge set is materialized once (``localCheckpoint`` +
+    count); the detectors that produce ``pairs`` run there. Then:
+
+    * up to ``CC_DRIVER_EDGES`` edges (and an integer or string id), the
+      edges are collected with ``toArrow`` — a read of the checkpoint, so
+      the detectors do not run again — and ``_union_find`` labels them on
+      the driver. The cap bounds driver memory, not time: on
+      ``tools/bench_clusters.py``'s hostile mix (4 cores) the driver route
+      took 4.4 s against 30.4 s for the Spark loop at 0.4M edges, and 13.1 s
+      against 83.1 s at 2.0M edges, where it grew the driver's peak RSS by
+      156 MB;
+    * above the cap, alternating large-star/small-star (module docstring):
+      per round, with m(u) = min of u's closed neighborhood,
+        - large-star reconnects every neighbor v > u to m(u);
+        - small-star reconnects every neighbor v ≤ u (and u itself) to the
+          min of the ≤-neighborhood —
+      until the edge set is a fixpoint (then every component is a star
+      around its min id, so the label is ``least(id, min neighbor)``).
+
+    Both routes end in ``_keepers``. NULL doc_ids can never appear in a
+    detector pair, take a NULL label from its left join, and emit
+    (NULL, NULL, NULL) — identical to the oracle's recursive CTE."""
     edges = _symmetrize(
         pairs.select(F.col("doc_a").alias("src"),
                      F.col("doc_b").alias("dst"))
@@ -136,6 +166,10 @@ def resolve_clusters(nodes: DataFrame, pairs: DataFrame,
     # produce `pairs` are the expensive part, and a lazy handle would re-run
     # them inside the first round's (multi-branch) plan
     n_edges = edges.count()
+    id_type = edges.schema["src"].dataType
+    if n_edges <= CC_DRIVER_EDGES and (
+            isinstance(id_type, T.IntegralType) or id_type == T.StringType()):
+        return _keepers(nodes, _union_find(edges))
 
     def _sized(e: DataFrame, n: int) -> DataFrame:
         # Size the checkpointed edge set's partitioning to its ROW COUNT
@@ -193,9 +227,46 @@ def resolve_clusters(nodes: DataFrame, pairs: DataFrame,
                 f"connected components did not converge in {max_iters} "
                 "large-star/small-star rounds — worst case is O(log² n), "
                 "observed ~log n; check for a rewrite bug")
-    starmin = edges.groupBy("src").agg(F.min("dst").alias("mnd"))
+    return _keepers(nodes, edges.groupBy("src").agg(F.min("dst").alias("mnd")))
+
+
+def _union_find(edges: DataFrame) -> DataFrame:
+    """(src, mnd): every node of the symmetric ``edges`` with the min id of
+    its component, by union-find on the driver (min root, path splitting).
+    One direction of each edge is enough, so only ``src < dst`` is
+    collected. The frame keeps the edges' id type."""
+    import pyarrow as pa
+
+    tbl = edges.where(F.col("src") < F.col("dst")).toArrow()
+    parent: dict = {}
+
+    def find(x):
+        p = parent.setdefault(x, x)
+        while p != x:
+            parent[x] = g = parent[p]
+            x, p = p, g
+        return x
+
+    for a, b in zip(tbl.column("src").to_pylist(),
+                    tbl.column("dst").to_pylist()):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    ids = list(parent)
+    arrow_type = tbl.schema.field("src").type
+    labels = pa.table({"src": pa.array(ids, arrow_type),
+                       "mnd": pa.array([find(x) for x in ids], arrow_type)})
+    id_type = edges.schema["src"].dataType
+    return edges.sparkSession.createDataFrame(labels, T.StructType([
+        T.StructField("src", id_type), T.StructField("mnd", id_type)]))
+
+
+def _keepers(nodes: DataFrame, mins: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id, is_keeper) from ``mins`` (src, mnd), where mnd
+    is a node's least known component member: a node absent from ``mins``
+    is its own cluster."""
     return (
-        nodes.join(starmin, nodes["doc_id"] == starmin["src"], "left")
+        nodes.join(mins, nodes["doc_id"] == mins["src"], "left")
         .select(
             nodes["doc_id"],
             F.least("doc_id", F.coalesce("mnd", "doc_id")).alias("cluster_id"),
@@ -256,8 +327,8 @@ def _neardup_clusters(spark: SparkSession, sf_dir: str):
     shd = shingle_hashes(corpus).persist()
     labels = resolve_clusters(
         nodes, candidate_pairs_union(shd, minhash_from_text(corpus)))
-    # safe: resolve_clusters returns localCheckpoint-backed labels, which no
-    # longer reference the shingle-hash subtree
+    # safe: resolve_clusters returns labels backed by a localCheckpoint or
+    # by driver-built rows, neither of which references the shingle hashes
     shd.unpersist()
     return corpus, labels
 

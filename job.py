@@ -67,6 +67,7 @@ def main() -> None:
         sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
         from ch_pdf_parse_spark.session import get_spark
 
+    from ch_pdf_parse_spark import native
     from ch_pdf_parse_spark.pipeline import extract_documents
     from ch_pdf_parse_spark.sources.catalog import (is_iceberg, read_table,
                                                     write_table)
@@ -74,6 +75,10 @@ def main() -> None:
                                                     run_with_lineage)
 
     spark = get_spark("ch-pdf-parse-extract", cores=args.cores)
+    # build (or load) the native library on the driver before any task
+    # starts: local Python workers share its TMPDIR cache and load that
+    # build, where each cold worker would otherwise run its own compile
+    native.available()
     t0 = time.time()
     wire = args.input_format == "wire"
     iceberg_out = is_iceberg(spark, args.output)

@@ -1,11 +1,33 @@
-"""Connected-components cluster resolution (operators/cluster.py)."""
+"""Connected-components cluster resolution (operators/cluster.py).
+
+``resolve_clusters`` has two routes, picked by the symmetric edge count:
+union-find on the driver up to ``CC_DRIVER_EDGES``, large-star/small-star
+in Spark above it. The label tests run each route by setting the cap to
+its default and to -1 (below any edge count, the empty set included)."""
 
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
+from ch_pdf_parse_spark.operators import cluster as cl
 from ch_pdf_parse_spark.operators.cluster import resolve_clusters
+
+SF_DIR = "/root/testdata/sf0.001"
+ROUTES = (("driver", cl.CC_DRIVER_EDGES), ("spark", -1))
+
+
+def _each_route(monkeypatch):
+    """Yield each route's name with ``CC_DRIVER_EDGES`` set to force it,
+    then check that the driver's union-find ran on that route only."""
+    for name, cap in ROUTES:
+        calls = []
+        union_find = cl._union_find
+        with monkeypatch.context() as m:
+            m.setattr(cl, "CC_DRIVER_EDGES", cap)
+            m.setattr(cl, "_union_find",
+                      lambda e: calls.append(e) or union_find(e))
+            yield name
+        assert bool(calls) == (name == "driver"), name
 
 
 def _uf_components(n_ids, pairs):
@@ -25,59 +47,100 @@ def _uf_components(n_ids, pairs):
     return {i: find(i) for i in n_ids}
 
 
-def _run(spark, ids, pairs, **kw):
-    nodes = spark.createDataFrame([(i,) for i in ids], "doc_id: long")
-    if pairs:
-        pdf = spark.createDataFrame(pairs, "doc_a: long, doc_b: long")
-    else:
-        pdf = spark.createDataFrame([], "doc_a: long, doc_b: long")
+def _run(spark, ids, pairs, id_type="long", **kw):
+    nodes = spark.createDataFrame([(i,) for i in ids], f"doc_id: {id_type}")
+    pdf = spark.createDataFrame(pairs,
+                                f"doc_a: {id_type}, doc_b: {id_type}")
     out = resolve_clusters(nodes, pdf, **kw).collect()
     return {r.doc_id: (r.cluster_id, r.is_keeper) for r in out}
 
 
-def test_matches_union_find_on_random_graph(spark):
+def test_matches_union_find_on_random_graph(spark, monkeypatch):
     rng = random.Random(4)
     ids = list(range(200))
     pairs = [(rng.randrange(200), rng.randrange(200)) for _ in range(150)]
     pairs = [(a, b) for a, b in pairs if a != b]
     want = _uf_components(ids, pairs)
-    got = _run(spark, ids, pairs)
-    assert len(got) == len(ids)
-    for i in ids:
-        assert got[i] == (want[i], i == want[i]), i
+    for route in _each_route(monkeypatch):
+        got = _run(spark, ids, pairs)
+        assert len(got) == len(ids), route
+        for i in ids:
+            assert got[i] == (want[i], i == want[i]), (route, i)
 
 
-def test_path_graph_converges_logarithmically(spark):
+def test_path_graph_converges_logarithmically(spark, monkeypatch):
     """A 128-node path is the diameter worst case: plain label relaxation
     needs 127 rounds, the large-star/small-star rewrite must stay
     logarithmic. The max_iters=12 bound (~1.7·log2 n) doubles as the
-    regression pin — if a change degrades convergence to linear, this
-    raises RuntimeError."""
+    regression pin of the Spark route — if a change degrades convergence to
+    linear, this raises RuntimeError."""
     n = 128
     ids = list(range(n))
     pairs = [(i, i + 1) for i in range(n - 1)]
-    got = _run(spark, ids, pairs, max_iters=12)
-    assert all(got[i] == (0, i == 0) for i in ids)
+    for route in _each_route(monkeypatch):
+        got = _run(spark, ids, pairs, max_iters=12)
+        assert all(got[i] == (0, i == 0) for i in ids), route
 
 
-def test_non_convergence_raises(spark):
+def test_non_convergence_raises(spark, monkeypatch):
+    monkeypatch.setattr(cl, "CC_DRIVER_EDGES", dict(ROUTES)["spark"])
     ids = list(range(16))
     pairs = [(i, i + 1) for i in range(15)]
     with pytest.raises(RuntimeError, match="did not converge"):
         _run(spark, ids, pairs, max_iters=1)
 
 
-def test_singletons_and_empty_pairs(spark):
-    got = _run(spark, [5, 9], [])
-    assert got == {5: (5, True), 9: (9, True)}
+def test_singletons_and_empty_pairs(spark, monkeypatch):
+    for route in _each_route(monkeypatch):
+        got = _run(spark, [5, 9], [])
+        assert got == {5: (5, True), 9: (9, True)}, route
 
 
-def test_null_doc_id_passes_through_as_null(spark):
+def test_null_doc_id_passes_through_as_null(spark, monkeypatch):
     nodes = spark.createDataFrame([(1,), (2,), (None,)], "doc_id: long")
     pairs = spark.createDataFrame([(1, 2)], "doc_a: long, doc_b: long")
-    rows = {(r.doc_id, r.cluster_id, r.is_keeper)
-            for r in resolve_clusters(nodes, pairs).collect()}
-    assert rows == {(1, 1, True), (2, 1, False), (None, None, None)}
+    for route in _each_route(monkeypatch):
+        rows = {(r.doc_id, r.cluster_id, r.is_keeper)
+                for r in resolve_clusters(nodes, pairs).collect()}
+        assert rows == {(1, 1, True), (2, 1, False), (None, None, None)}, \
+            route
+
+
+def test_string_ids_label_alike_on_both_routes(spark, monkeypatch):
+    """String doc_ids, non-ASCII included: the driver's min (Python's
+    code-point order) must pick the same id as Spark's (UTF-8 byte order).
+    U+FF5E and U+1F600 are ordered the other way in UTF-16, so a
+    UTF-16 comparison anywhere would split the routes."""
+    ids = ["b", "Z", "é", "e\u0301", "日本", "\uff5e", "\U0001f600", "ß",
+           "a b", "", "zz", "Ω"]
+    pairs = [("\U0001f600", "\uff5e"), ("日本", "Ω"), ("é", "ß"),
+             ("ß", "e\u0301"), ("Z", "zz"), ("zz", "b"), ("", "a b")]
+    labels = {}
+    for route in _each_route(monkeypatch):
+        labels[route] = _run(spark, ids, pairs, id_type="string")
+    assert labels["driver"] == labels["spark"]
+    want = _uf_components(ids, pairs)
+    assert labels["driver"] == {i: (want[i], i == want[i]) for i in ids}
+    assert labels["driver"]["\U0001f600"] == ("\uff5e", False)
+
+
+def test_dedup_clusters_matches_duckdb_on_both_routes(spark, monkeypatch):
+    """``dedup_clusters`` equals the DuckDB recursive CTE row for row on
+    sf0.001, through either route."""
+    import duckdb
+
+    from ch_pdf_parse_spark.operators.cluster import dedup_clusters
+    from ch_pdf_parse_spark.registry import SQL
+
+    con = duckdb.connect()
+    con.execute("CREATE VIEW documents AS SELECT * FROM "
+                f"read_parquet('{SF_DIR}/documents.parquet')")
+    want = sorted(con.execute(SQL["dedup_clusters"]).fetchall())
+    con.close()
+    assert any(not k for _, _, k in want)  # some doc is clustered away
+    for route in _each_route(monkeypatch):
+        got = sorted(tuple(r) for r in dedup_clusters(spark, SF_DIR).collect())
+        assert got == want, route
 
 
 def test_keeper_semantics_on_dup_corpus(spark):
@@ -89,7 +152,7 @@ def test_keeper_semantics_on_dup_corpus(spark):
     from ch_pdf_parse_spark.operators.dedup import (
         minhash_from_text, shingle_hashes)
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     corpus = with_dup_corpus(docs)
     # own the shingle-hash persist lifecycle: a leaked cache entry
     # substitutes into OTHER tests' plans (cache substitution defeated the

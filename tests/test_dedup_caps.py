@@ -157,6 +157,26 @@ def test_shingle_hashes_equals_hashed_distinct(spark):
         assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
 
 
+def test_simhash_equals_python_majority_vote(spark):
+    """``simhash`` over the shingle hashes of the sf0.001 dup corpus equals
+    a pure-Python simhash of the same (doc_id, h) rows: bit j is set iff
+    the sum of +1 (bit j set) and -1 (bit j clear) over the doc's hashes
+    is >= 0."""
+    corpus = dedup.with_dup_corpus(
+        spark.read.parquet("/root/testdata/sf0.001/documents.parquet"))
+    shd = dedup.shingle_hashes(corpus)
+    sums = {}
+    for doc_id, h in shd.collect():
+        acc = sums.setdefault(doc_id, [0] * dedup.SIMHASH_BITS)
+        for j in range(dedup.SIMHASH_BITS):
+            acc[j] += 1 if (h >> j) & 1 else -1
+    want = {d: sum(1 << j for j, v in enumerate(acc) if v >= 0)
+            for d, acc in sums.items()}
+    got = dict(dedup.simhash(shd).collect())
+    assert len(want) > 100
+    assert got == want
+
+
 def test_jaccard_prefix_filter_equals_naive(spark):
     """The r7 prefix-filtered jaccard (AllPairs candidate generation +
     array_intersect verification) must emit exactly the pairs and scores

@@ -1,10 +1,12 @@
-"""Building the native library: cold workers racing on one cache, and a
-worker that imports the package from the ``--py-files`` zip.
+"""Building the native library: cold workers racing on one cache, a
+worker that imports the package from the ``--py-files`` zip, and a cold
+``job.py`` run that must compile once.
 
-Both drive child interpreters on a fresh ``TMPDIR``, so every child starts
+All drive child interpreters on a fresh ``TMPDIR``, so every child starts
 with an empty build cache. Skipped without ``cc``."""
 
 import os
+import shlex
 import shutil
 import subprocess
 import sys
@@ -115,3 +117,45 @@ def test_worker_builds_native_from_submit_zip(tmp_path):
                          timeout=300)
     assert run.returncode == 0 and "ZIP-OK" in run.stdout, (
         run.stdout[-2000:], run.stderr[-4000:])
+
+
+def test_job_compiles_native_once(corpus_dir, tmp_path):
+    """A cold ``job.py`` run (empty build cache) compiles ``native.c``
+    exactly once: the driver builds it before the first bucket, and every
+    Python worker loads that build. ``cc`` is a wrapper first on ``PATH``
+    that logs each call and runs the real compiler."""
+    import json
+
+    import pyarrow.parquet as pq
+
+    bindir = tmp_path / "bin"
+    bindir.mkdir()
+    log = tmp_path / "cc.log"
+    wrapper = bindir / "cc"
+    wrapper.write_text(f'#!/bin/sh\necho "$*" >> {shlex.quote(str(log))}\n'
+                       f'exec {shlex.quote(shutil.which("cc"))} "$@"\n')
+    wrapper.chmod(0o755)
+    cache = tmp_path / "tmp"
+    cache.mkdir()
+    env = dict(os.environ, TMPDIR=str(cache),
+               PATH=f"{bindir}{os.pathsep}{os.environ['PATH']}")
+    env.pop("CHPDF_NATIVE", None)
+    # four files in four buckets: four tasks, so four cold Python workers
+    # start together
+    docs = pq.read_table(os.path.join(corpus_dir, "documents.parquet"))
+    src = tmp_path / "src"
+    src.mkdir()
+    step = -(-docs.num_rows // 4)
+    for i in range(4):
+        pq.write_table(docs.slice(i * step, step),
+                       str(src / f"part-{i}.parquet"))
+    run = subprocess.run(
+        [sys.executable, os.path.join(REPO, "job.py"), "--input", str(src),
+         "--output", str(tmp_path / "out"), "--buckets", "4",
+         "--cores", "4"],
+        env=env, cwd=tmp_path, capture_output=True, text=True, timeout=600)
+    assert run.returncode == 0, run.stderr[-4000:]
+    got = json.loads(run.stdout.strip().splitlines()[-1])
+    assert got["docs"] == docs.num_rows > 0
+    calls = log.read_text().splitlines()
+    assert len(calls) == 1, calls

@@ -1,12 +1,16 @@
-"""Scale evidence for connected-components cluster resolution.
+"""Scale evidence for connected-components cluster resolution, on both of
+``resolve_clusters``' routes.
 
 The driver corpus exercises tiny components (pairs/stars). This synthesizes a
-deliberately hostile million-edge graph — a mix of random pair edges, heavy
-star components (one hub, many leaves: the mass-duplication shape), and LONG
+deliberately hostile graph — a mix of random pair edges, heavy star
+components (one hub, many leaves: the mass-duplication shape), and LONG
 CHAINS (the diameter worst case that breaks plain relaxation) — then runs
-``resolve_clusters`` and reports wall, rounds to convergence, and the
-theoretical round bound. Ground truth per component class is checked by
-construction (chain/star members must label to their component min).
+``resolve_clusters`` twice: once forced onto the driver's union-find, once
+forced onto Spark's large-star/small-star loop (``CC_DRIVER_EDGES`` set to
+0). It reports each route's wall, the driver's peak-RSS growth, the
+theoretical round bound, and checks ground truth per component class by
+construction (chain/star members must label to their component min) and
+that the two routes' labels are equal.
 
 Usage: python tools/bench_clusters.py [n_nodes] [chain_len]  # default 200000 512
 Prints one JSON line.
@@ -17,6 +21,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import resource
 import sys
 import time
 
@@ -66,38 +71,55 @@ def main() -> None:
         pairs = chain.unionByName(star).unionByName(rand)
 
         rounds_bound = 2 * math.ceil(math.log2(max(chain_len, 2))) + 4
-        t0 = time.time()
-        out = cl.resolve_clusters(ids, pairs, max_iters=rounds_bound)
-        rows = out.persist()
-        n_out = rows.count()
-        wall = time.time() - t0
+        n_sym = cl._symmetrize(pairs.select(
+            F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))).count()
+        labels, walls = {}, {}
+        rss0 = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
+        for route, cap in (("driver", math.inf), ("spark", 0)):
+            cl.CC_DRIVER_EDGES = cap
+            t0 = time.time()
+            rows = cl.resolve_clusters(ids, pairs, max_iters=rounds_bound)
+            rows = rows.persist()
+            n_out = rows.count()
+            walls[route] = time.time() - t0
+            labels[route] = rows
+            if route == "driver":
+                rss_mb = (resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
+                          - rss0) / 1024
 
-        # ground truth for the constructed regimes
-        bad_chain = rows.where(
-            (F.col("doc_id") < n4)
-            & (F.col("cluster_id") !=
-               F.col("doc_id") - (F.col("doc_id") % chain_len))).count()
-        bad_star = rows.where(
-            (F.col("doc_id") >= n4) & (F.col("doc_id") < n2)
-            & (F.col("cluster_id") !=
-               F.lit(n4) + ((F.col("doc_id") - n4)
-                            - ((F.col("doc_id") - n4) % 1000)))).count()
-        n_keepers = rows.where("is_keeper").count()
-        n_clusters = rows.select("cluster_id").distinct().count()
-        assert bad_chain == 0 and bad_star == 0, (bad_chain, bad_star)
-        assert n_keepers == n_clusters, (n_keepers, n_clusters)
+        for route, rows in labels.items():
+            # ground truth for the constructed regimes
+            bad_chain = rows.where(
+                (F.col("doc_id") < n4)
+                & (F.col("cluster_id") !=
+                   F.col("doc_id") - (F.col("doc_id") % chain_len))).count()
+            bad_star = rows.where(
+                (F.col("doc_id") >= n4) & (F.col("doc_id") < n2)
+                & (F.col("cluster_id") !=
+                   F.lit(n4) + ((F.col("doc_id") - n4)
+                                - ((F.col("doc_id") - n4) % 1000)))).count()
+            n_keepers = rows.where("is_keeper").count()
+            n_clusters = rows.select("cluster_id").distinct().count()
+            assert bad_chain == 0 and bad_star == 0, (route, bad_chain,
+                                                      bad_star)
+            assert n_keepers == n_clusters, (route, n_keepers, n_clusters)
+        d, s = labels["driver"], labels["spark"]
+        assert d.exceptAll(s).isEmpty() and s.exceptAll(d).isEmpty(), \
+            "the two routes' labels differ"
 
         print(json.dumps({
             "metric": "cc_nodes_per_sec",
-            "value": round(n / wall, 1),
+            "value": round(n / walls["driver"], 1),
             "unit": "nodes/sec",
             "n_nodes": n_out,
             "n_edges": pairs.count(),
+            "symmetric_edges": n_sym,
             "chain_len": chain_len,
             "rounds_bound": rounds_bound,
-            "wall_sec": round(wall, 3),
+            "driver_wall_sec": round(walls["driver"], 3),
+            "spark_wall_sec": round(walls["spark"], 3),
+            "driver_rss_growth_mb": round(rss_mb, 1),
             "n_clusters": n_clusters,
-            "chain_star_mislabels": bad_chain + bad_star,
         }))
     finally:
         spark.stop()
