@@ -42,8 +42,12 @@ final stage (round-3 verdict item #1):
 * ``dedup_clusters`` — the driver query: clusters over the UNION of the three
   text detectors' candidate pairs on the shared dup corpus, emitting
   ``(doc_id, cluster_id, is_keeper)`` with the deterministic min-doc_id
-  keeper. Oracle: DuckDB recursive CTE (min reachable id per node) over the
-  same three detector SQL bodies.
+  keeper. The int64 shingle table that simhash and jaccard share is
+  materialized once by ``localCheckpoint`` (not a cache entry, so AQE
+  reuses each self-join's exchange); as for the edges, at cluster scale
+  this point takes a reliable ``setCheckpointDir`` checkpoint instead.
+  Oracle: DuckDB recursive CTE (min reachable id per node) over the same
+  three detector SQL bodies.
 
 * ``pipeline_neardup_corpus`` — the end-to-end composition: corpus →
   candidate pairs → clusters → keep one doc per cluster → cluster-size
@@ -90,23 +94,24 @@ def candidate_pairs_union(shd: DataFrame, mh: DataFrame) -> DataFrame:
     """(doc_a, doc_b) — union of the three text detectors' candidate pairs.
 
     Round-7 feed split (the r6 verdict's named lever): ``shd`` is the
-    int64 DISTINCT (doc_id, h) table (``shingle_hashes``, persisted by the
-    caller — shingle STRINGS never shuffle or cache) feeding simhash bit
+    int64 DISTINCT (doc_id, h) table (``shingle_hashes``, checkpointed by
+    the caller — shingle STRINGS never shuffle) feeding simhash bit
     sums and the jaccard inverted index; ``mh`` is the Python-kernel
     minhash signature table (``minhash_from_text`` — min() is dedup-
     invariant, so it needs no distinct at all and reads the corpus text
     directly). The r6 fused-signature aggregation is superseded: minhash
     no longer scans any shingle table (its md5 work runs in the text
     kernel at C speed), and the only remaining shingle-keyed consumers
-    share the one int64 cache.
+    share the one int64 table.
 
-    The caller owns the ``shd`` persist/unpersist lifecycle: an internal
-    persist leaked one cache entry per call, and Spark's cache manager
-    silently substitutes a leaked cached subtree into OTHER queries'
-    plans, defeating their AQE exchange reuse (test_cluster.py pinned
-    exactly that failure; round-4 advice). ``mh`` needs no persist: each
-    detector self-join's b-side collapses to a ReusedExchange of the
-    band/chunk window exchange (merge hint, pinned in tests/test_plans)."""
+    The caller shares ``shd`` between simhash and jaccard by checkpoint
+    (``_neardup_clusters``), never by cache: under a cached relation AQE
+    reused neither self-join's exchange, so each b side re-ran its chain
+    from the cache, and a leaked cache entry is silently substituted into
+    OTHER queries' plans (round-4 advice). ``mh`` needs no sharing at all.
+    Each of the three detector self-joins then reads its b side from a
+    ReusedExchange of its a side (merge hint; pinned in tests/test_plans,
+    three in this union)."""
     p_min = lsh_candidate_pairs(
         mh.select("doc_id", *[f"m{i}" for i in range(N_MINHASH)]))
     p_sim = simhash_pairs(simhash(shd)).select("doc_a", "doc_b")
@@ -318,18 +323,19 @@ def _clusters_sql() -> str:
 def _neardup_clusters(spark: SparkSession, sf_dir: str):
     """The dup corpus and its cluster labels (doc_id, cluster_id,
     is_keeper) over the union of the three text detectors' candidate pairs.
-    r7 feed split (candidate_pairs_union docstring): persist ONE int64
-    (doc_id, h) distinct table shared by simhash + jaccard; minhash reads the
-    corpus text directly through the Python md5 kernel — shingle strings
-    never shuffle and never enter the cache."""
+    r7 feed split (candidate_pairs_union docstring): ONE int64 (doc_id, h)
+    distinct table, materialized once by ``localCheckpoint``, is shared by
+    simhash + jaccard; minhash reads the corpus text directly through the
+    Python md5 kernel — shingle strings never shuffle. Nothing enters the
+    cache manager, so there is no lifecycle to release."""
     corpus = with_dup_corpus(_t(spark, sf_dir, "documents"))
     nodes = corpus.select("doc_id").distinct()
-    shd = shingle_hashes(corpus).persist()
+    # a checkpoint, not persist(): over a cached relation AQE reused no
+    # exchange of either self-join (each b side re-ran its chain from the
+    # cache); over the checkpoint's scan each b side is a ReusedExchange
+    shd = shingle_hashes(corpus).localCheckpoint(eager=True)
     labels = resolve_clusters(
         nodes, candidate_pairs_union(shd, minhash_from_text(corpus)))
-    # safe: resolve_clusters returns labels backed by a localCheckpoint or
-    # by driver-built rows, neither of which references the shingle hashes
-    shd.unpersist()
     return corpus, labels
 
 

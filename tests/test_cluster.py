@@ -143,25 +143,21 @@ def test_dedup_clusters_matches_duckdb_on_both_routes(spark, monkeypatch):
         assert got == want, route
 
 
+def test_neardup_queries_leave_no_cache_entry(spark):
+    """The shared shingle table is a checkpoint, not a cache entry: a
+    leaked entry would be substituted into other queries' plans and defeat
+    their exchange reuse."""
+    spark.catalog.clearCache()  # entries other tests' operators hold
+    cl.dedup_clusters(spark, SF_DIR).collect()
+    cl.pipeline_neardup_corpus(spark, SF_DIR).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_keeper_semantics_on_dup_corpus(spark):
     """On the shared dup corpus every injected near-dup (doc_id+100000) must
     land in its source doc's cluster with the source as keeper — chains
     resolved transitively, exactly one keeper per cluster."""
-    from ch_pdf_parse_spark.operators.cluster import (
-        candidate_pairs_union, with_dup_corpus)
-    from ch_pdf_parse_spark.operators.dedup import (
-        minhash_from_text, shingle_hashes)
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    corpus = with_dup_corpus(docs)
-    # own the shingle-hash persist lifecycle: a leaked cache entry
-    # substitutes into OTHER tests' plans (cache substitution defeated the
-    # simhash exchange-reuse pin in test_plans when this test ran first)
-    shd = shingle_hashes(corpus).persist()
-    clusters = resolve_clusters(
-        corpus.select("doc_id").distinct(),
-        candidate_pairs_union(shd, minhash_from_text(corpus))).collect()
-    shd.unpersist()
+    clusters = cl._neardup_clusters(spark, SF_DIR)[1].collect()
     by_cluster = {}
     for r in clusters:
         by_cluster.setdefault(r.cluster_id, []).append(r)

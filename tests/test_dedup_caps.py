@@ -115,6 +115,15 @@ def test_minhash_bucket_cap(spark, tmp_path):
     assert deflt == wide and deflt
 
 
+def test_dup_corpus_is_one_wave(spark):
+    """``with_dup_corpus`` spreads the docs ∪ dups union, not the docs
+    before it: over a one-file table the corpus has one partition per core,
+    so the Python minhash kernel runs one wave of tasks, not two."""
+    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    n = spark.sparkContext.defaultParallelism
+    assert dedup.with_dup_corpus(docs).rdd.getNumPartitions() <= max(2, n)
+
+
 def test_minhash_from_text_equals_expression_kernel(spark):
     """The r7 Python md5 minhash kernel must produce exactly the signatures
     of the Catalyst-expression aggregation (salted portable hashes are

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from ch_pdf_parse_spark import constants as C
 from ch_pdf_parse_spark.pipeline import OUTPUT_SCHEMA, _extract_arrow
+from tools.plan_audit import final_plan as _final_plan
 
 
 def _formatted(df) -> str:
@@ -292,15 +293,6 @@ def test_text_repetition_is_map_only(spark):
     assert not re.search(r"\bExchange\b", plan), plan
 
 
-def _final_plan(df):
-    """Execute and render the AQE FINAL plan — exchange reuse is a runtime
-    (stage-level) decision under AQE, invisible in the static plan."""
-    df.collect()
-    jvm = df.sparkSession._jvm
-    return df._jdf.queryExecution().explainString(
-        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
-
-
 def test_minhash_self_join_reuses_signature_pipeline(spark):
     """r3 driver regression root cause: a broadcast flip on the band-bucket
     self-join destroyed exchange reuse and ran the shingle→minhash→window
@@ -319,6 +311,28 @@ def test_simhash_self_join_reuses_signature_pipeline(spark):
     plan = _final_plan(dedup_simhash(spark, "/root/testdata/sf0.001"))
     assert "isFinalPlan=true" in plan, plan
     assert "ReusedExchange" in plan, plan
+
+
+def test_candidate_union_reuses_each_self_join_exchange(spark, monkeypatch):
+    """Inside ``dedup_clusters`` each of the three detector self-joins
+    reads its b side from a ReusedExchange of its a side. The shingle table
+    that simhash and jaccard share must not be a cache entry: under a
+    cached relation AQE reused no exchange of either."""
+    from ch_pdf_parse_spark.operators import cluster
+
+    plans = []
+    resolve = cluster.resolve_clusters
+
+    def wrapped(nodes, pairs, *args, **kwargs):
+        plans.append(_final_plan(pairs))
+        return resolve(nodes, pairs, *args, **kwargs)
+
+    monkeypatch.setattr(cluster, "resolve_clusters", wrapped)
+    cluster.dedup_clusters(spark, "/root/testdata/sf0.001")
+    (plan,) = plans
+    assert "isFinalPlan=true" in plan, plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("ReusedExchange") >= 3, plan
 
 
 def test_source_mix_broadcasts_thresholds_and_prunes_scan(spark):

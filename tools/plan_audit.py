@@ -13,7 +13,9 @@ Checked properties (each also pinned by tests/test_plans.py):
 * `agg_pricing_summary`: map-side partial aggregation before the exchange
   (two HashAggregate levels);
 * `dedup_minhash_lsh`: shuffles only at the band-bucket self-join + final
-  distinct (LSH's point: candidates, not all pairs).
+  distinct (LSH's point: candidates, not all pairs);
+* `dedup_clusters`: in the AQE final plan of the candidate-pair union, each
+  of the three detector self-joins reads its b side from a ReusedExchange.
 
 Usage: python tools/plan_audit.py [sf_dir] (default /root/testdata/sf0.01)
 """
@@ -73,6 +75,15 @@ def formatted_plan(df) -> str:
     jvm = df.sparkSession._jvm
     return df._jdf.queryExecution().explainString(
         jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+
+
+def final_plan(df) -> str:
+    """Execute ``df`` and render its AQE final plan: exchange reuse is a
+    stage-level decision under AQE, invisible in the static plan."""
+    df.collect()
+    jvm = df.sparkSession._jvm
+    return df._jdf.queryExecution().explainString(
+        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
 
 
 def small_path_df(spark, sf_dir: str):
@@ -273,16 +284,30 @@ def audit(spark, sf_dir: str) -> tuple[list[tuple[str, str, bool, str]], dict[st
         and not re.search(r"Exchange hashpartitioning\(event_type", p))
 
     # --- r4: minhash self-join reuses the signature pipeline (RUNTIME) ----
-    # exchange reuse is an AQE stage-level decision — invisible statically,
-    # so execute and inspect the final plan
-    df = q["dedup_minhash_lsh"](spark, sf_dir)
-    df.collect()
-    jvm = df.sparkSession._jvm
-    fp = df._jdf.queryExecution().explainString(
-        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple"))
+    fp = final_plan(q["dedup_minhash_lsh"](spark, sf_dir))
     add("dedup_minhash_lsh", "AQE final plan reuses the (band,sig) exchange "
         "(signature pipeline computed once)",
         "isFinalPlan=true" in fp and "ReusedExchange" in fp)
+
+    # --- the composed union reuses every detector self-join's exchange ----
+    # dedup_clusters hands the union straight to resolve_clusters: wrap it
+    # to read the union's final plan there
+    from ch_pdf_parse_spark.operators import cluster
+
+    union_plans = []
+    resolve = cluster.resolve_clusters
+    cluster.resolve_clusters = lambda nodes, pairs: (
+        union_plans.append(final_plan(pairs)) or resolve(nodes, pairs))
+    try:
+        q["dedup_clusters"](spark, sf_dir)
+    finally:
+        cluster.resolve_clusters = resolve
+    n_reused = union_plans[0].split("== Initial Plan ==")[0].count(
+        "ReusedExchange")
+    add("dedup_clusters", "AQE final plan of the candidate-pair union "
+        "reuses one exchange per detector self-join (shared shingle table "
+        "is a checkpoint, not a cache entry)",
+        n_reused >= 3, f"{n_reused} reused exchanges")
 
     # --- r4: corpus mixing ------------------------------------------------
     p = formatted_plan(q["pipeline_source_mix"](spark, sf_dir))
