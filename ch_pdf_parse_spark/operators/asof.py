@@ -236,10 +236,11 @@ def j_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SESSION_GAP_MINUTES = 30
-# one constant, three dialects: Spark interval expr (batch operator), DuckDB
-# interval literal (oracle SQL below), and the streaming twin's
-# session_window gap (+1us bridges built-in >= to the batch strict >) —
-# they must move together or the oracle hash / stream-agreement tests break
+# one constant, three dialects: Spark interval expr (the operator), DuckDB
+# interval literal (oracle SQL below), and the gap of the built-in
+# session_window that tests/test_asof.py checks the operator against (+1us
+# bridges the built-in's >= to the operator's strict >) — they must move
+# together or the oracle hash / session_window reference test breaks
 SESSION_GAP = f"INTERVAL {SESSION_GAP_MINUTES} MINUTES"
 SESSION_GAP_DUCK = f"INTERVAL {SESSION_GAP_MINUTES} MINUTE"
 SESSION_GAP_STREAM = f"{SESSION_GAP_MINUTES} minutes 1 microseconds"

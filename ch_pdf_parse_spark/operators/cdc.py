@@ -48,20 +48,6 @@ _NEG = -1.0e308  # below any real double in the corpus; NULL-value sentinel
 def compact_changelog(ch: DataFrame) -> DataFrame:
     """(key, seq, op, value, event_type) changelog → current state.
     One aggregate, map-side combined; see module docstring."""
-    return (
-        compact_keep_tombstones(ch)
-        .where(F.col("op") != "D")
-        .select("key", F.col("seq").alias("last_seq"), "value", "event_type")
-    )
-
-
-def compact_keep_tombstones(ch: DataFrame) -> DataFrame:
-    """The compaction's inner form: per-key winning change INCLUDING delete
-    tombstones (op column retained). This is what incremental maintenance
-    must persist between batches — dropping tombstones would let a later
-    batch's lower-seq update resurrect a deleted key (the winner must keep
-    outranking stragglers across batches, so its op travels with it).
-    compact_changelog is this plus the public delete filter."""
     ord_ = F.struct(
         F.col("seq").isNotNull().cast("int").alias("s1n"),
         F.coalesce(F.col("seq"), F.lit(-1)).alias("s1"),
@@ -74,16 +60,12 @@ def compact_keep_tombstones(ch: DataFrame) -> DataFrame:
     payload = F.struct(
         F.col("op"), F.col("seq"),
         (F.col("value") + F.lit(0.0)).alias("value"), F.col("event_type"))
-    # output keeps the CHANGELOG schema (seq, not last_seq) so compaction is
-    # closed under composition: compact(state ∪ batch) needs state rows to
-    # look like changes
-    last = ch.groupBy("key").agg(F.max_by(payload, ord_).alias("p"))
-    return last.select(
-        "key",
-        F.col("p.seq").alias("seq"),
-        F.col("p.op").alias("op"),
-        F.col("p.value").alias("value"),
-        F.col("p.event_type").alias("event_type"),
+    return (
+        ch.groupBy("key").agg(F.max_by(payload, ord_).alias("p"))
+        .where(F.col("p.op") != "D")
+        .select("key", F.col("p.seq").alias("last_seq"),
+                F.col("p.value").alias("value"),
+                F.col("p.event_type").alias("event_type"))
     )
 
 

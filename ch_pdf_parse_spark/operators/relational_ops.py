@@ -379,11 +379,9 @@ def m_need_info_gate(spark, sf_dir):
     """,
 )
 def a_windowed_events(spark, sf_dir):
-    """Tumbling-window aggregation over the events table — the exact batch
-    twin of streaming/incremental.windowed_event_stats (same agg shape the
-    watermarked stream runs; asserted equal in tests/test_streaming.py).
-    Epoch-aligned 1-hour windows == date_trunc('hour'), so the oracle is
-    plain SQL."""
+    """Tumbling-window aggregation over the events table. Epoch-aligned
+    1-hour windows == date_trunc('hour'), so the DuckDB oracle that checks
+    it is plain SQL."""
     e = (_t(spark, sf_dir, "events")
          .withColumn("ts", F.col("ts").cast("timestamp"))
          # explicit: F.window would drop null-ts rows anyway; the oracle

@@ -130,15 +130,14 @@ def encode_record(doc_id: str | None, spans) -> bytes:
         _U32.pack(zlib.crc32(bytes(payload)))
 
 
+def _frame_shard(records: list[bytes]) -> bytes:
+    """Encoded records → full shard bytes with header + footer."""
+    return MAGIC + b"".join(records) + FOOTER_MAGIC + _U32.pack(len(records))
+
+
 def encode_shard(rows: Iterable[tuple[str | None, object]]) -> bytes:
     """(doc_id, spans) rows → full shard bytes with header + footer."""
-    out = bytearray(MAGIC)
-    n = 0
-    for doc_id, spans in rows:
-        out += encode_record(doc_id, spans)
-        n += 1
-    out += FOOTER_MAGIC + _U32.pack(n)
-    return bytes(out)
+    return _frame_shard([encode_record(d, s) for d, s in rows])
 
 
 # ---------------------------------------------------------------- decoding
@@ -379,9 +378,7 @@ def write_wire_shards(docs: DataFrame, out_dir: str, n_shards: int = 8) -> int:
             s = None if s is None or isinstance(s, float) else s
             recs.append((d is not None, d or "", encode_record(d, s)))
         recs.sort()
-        # no _U32 here: a struct.Struct in the closure breaks cloudpickle
-        data = bytes(MAGIC + b"".join(r[2] for r in recs)
-                     + FOOTER_MAGIC + len(recs).to_bytes(4, "little"))
+        data = _frame_shard([r[2] for r in recs])
         path = os.path.join(out_dir, f"shard-{shard:05d}.cpw")
         tmp = path + ".tmp"
         with open(tmp, "wb") as f:

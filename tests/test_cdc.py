@@ -111,64 +111,6 @@ def test_null_never_ties_its_sentinel(spark):
     assert out == {2: (None, 1.0, "")}
 
 
-def test_incremental_state_equals_batch_compaction(spark, tmp_path):
-    """The streaming maintenance loop (drop files → fold into persisted
-    state exactly once) must end at exactly the state the BATCH compaction
-    of the full changelog produces — including the cross-batch tombstone
-    case: key 7 is deleted at seq 50 in drop 1 and a straggler update with
-    seq 10 arrives in drop 2; without persisted tombstones it would
-    resurrect."""
-    import os
-
-    from ch_pdf_parse_spark.operators.cdc import compact_changelog
-    from ch_pdf_parse_spark.streaming.incremental import incremental_cdc_state
-
-    schema = ("key long, seq long, op string, value double, "
-              "event_type string")
-    drop1 = [(1, 10, "U", 1.0, "a"), (7, 50, "D", None, None),
-             (2, 5, "U", 2.0, "b")]
-    drop2 = [(7, 10, "U", 9.0, "ghost"),   # straggler after delete
-             (1, 20, "U", 1.5, "a2"),      # later update wins
-             (3, 1, "U", 3.0, "c")]
-    drop3 = [(2, 6, "D", None, None)]      # delete in the last batch
-
-    src = str(tmp_path / "cdc_in")
-    state = str(tmp_path / "cdc_state")
-    ckpt = str(tmp_path / "cdc_ckpt")
-    os.makedirs(src)
-
-    def run_drop(name, rows):
-        spark.createDataFrame(rows, schema).write.parquet(
-            os.path.join(src, name))
-        incremental_cdc_state(spark, src + "/*", state, ckpt,
-                              schema=spark.createDataFrame([], schema).schema)
-
-    run_drop("drop1", drop1)
-    mid = {r.key: r.seq for r in spark.read.parquet(state).collect()}
-    assert mid == {1: 10, 7: 50, 2: 5}  # tombstone for 7 persisted
-
-    run_drop("drop2", drop2)
-    run_drop("drop3", drop3)
-
-    got = {(r.key, r.seq, r.value, r.event_type)
-           for r in spark.read.parquet(state)
-           .where("op <> 'D'").collect()}
-    want = {(r.key, r.last_seq, r.value, r.event_type)
-            for r in compact_changelog(
-                spark.createDataFrame(drop1 + drop2 + drop3, schema))
-            .collect()}
-    assert got == want
-    assert (7,) not in {(k,) for k, *_ in got}  # ghost stayed dead
-
-    # rerun with nothing new: a no-op
-    incremental_cdc_state(spark, src + "/*", state, ckpt,
-                          schema=spark.createDataFrame([], schema).schema)
-    again = {(r.key, r.seq, r.value, r.event_type)
-             for r in spark.read.parquet(state)
-             .where("op <> 'D'").collect()}
-    assert again == want
-
-
 def test_duplicate_max_rows_are_deterministic(spark):
     # two rows tie on (seq, value, event_type, op) -> identical payloads,
     # any winner yields the same output row
@@ -177,53 +119,3 @@ def test_duplicate_max_rows_are_deterministic(spark):
         (1, 5, "U", 1.5, "a"),
     ])
     assert out == {1: (5, 1.5, "a")}
-
-
-def test_crash_between_swap_renames_recovers_prior_state(spark, tmp_path):
-    """Simulate a driver kill in the swap's crash window — state renamed
-    away to `.old`, replacement not yet promoted — and prove the retried
-    batch restores the backup instead of silently rebuilding from one batch
-    (which would also rmtree the sole surviving copy; review finding r6).
-    The checkpoint replays the not-yet-committed batch, so after recovery
-    the state must equal the uninterrupted run's."""
-    import os
-    import shutil
-
-    from ch_pdf_parse_spark.streaming.incremental import incremental_cdc_state
-
-    schema = ("key long, seq long, op string, value double, "
-              "event_type string")
-    drop1 = [(1, 10, "U", 1.0, "a"), (7, 50, "D", None, None)]
-    drop2 = [(7, 10, "U", 9.0, "ghost"), (2, 5, "U", 2.0, "b")]
-
-    src = str(tmp_path / "cdc_in")
-    state = str(tmp_path / "cdc_state")
-    ckpt = str(tmp_path / "cdc_ckpt")
-    os.makedirs(src)
-
-    sch = spark.createDataFrame([], schema).schema
-
-    spark.createDataFrame(drop1, schema).write.parquet(src + "/drop1")
-    incremental_cdc_state(spark, src + "/*", state, ckpt, schema=sch)
-
-    # crash window: drop2's files are visible but its batch never
-    # committed (we snapshot the checkpoint BEFORE running it), and the
-    # previous state sits parked at `.old` with state_dir gone
-    ckpt_snapshot = str(tmp_path / "ckpt_snap")
-    shutil.copytree(ckpt, ckpt_snapshot)
-    spark.createDataFrame(drop2, schema).write.parquet(src + "/drop2")
-    os.rename(state, state + ".old")
-
-    # the retry (fresh run against the snapshotted checkpoint) must first
-    # restore `.old` -> state, then fold drop2 into it
-    shutil.rmtree(ckpt)
-    shutil.copytree(ckpt_snapshot, ckpt)
-    incremental_cdc_state(spark, src + "/*", state, ckpt, schema=sch)
-
-    got = {r.key: (r.seq, r.op) for r in spark.read.parquet(state).collect()}
-    # key 1 survived the crash; key 7's tombstone survived (ghost stayed
-    # dead — impossible if the retry had rebuilt from drop2 alone)
-    assert got[1] == (10, "U")
-    assert got[7] == (50, "D")
-    assert got[2] == (5, "U")
-    assert not os.path.exists(state + ".old")

@@ -84,6 +84,15 @@ def test_deterministic_bytes_with_duplicate_and_null_ids(spark, docs_df,
     for f in names:
         assert open(os.path.join(a, f), "rb").read() == \
             open(os.path.join(b, f), "rb").read()
+    # the writer frames a shard exactly as encode_shard does, over the rows
+    # in the writer's total order
+    one = str(tmp_path / "one")
+    wf.write_wire_shards(hostile, one, n_shards=1)
+    rows = sorted(((r.doc_id, r.spans) for r in hostile.collect()),
+                  key=lambda r: (r[0] is not None, r[0] or "",
+                                 wf.encode_record(*r)))
+    assert open(os.path.join(one, "shard-00000.cpw"), "rb").read() == \
+        wf.encode_shard(rows)
 
 
 def test_null_hostile_roundtrip():
